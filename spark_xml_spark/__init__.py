@@ -8,6 +8,7 @@ XSD tooling, and the LLM-data-pipeline operator suite (dedup, similarity
 search, text analysis, multimodal columns) — all designed for 100 TB scale.
 """
 
+from spark_xml_spark import _worker  # noqa: F401  (worker import-cache fix)
 from spark_xml_spark.options import XmlOptions
 
 __all__ = ["XmlOptions"]

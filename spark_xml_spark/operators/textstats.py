@@ -37,6 +37,9 @@ def token_count_col(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(TOKEN_REGEX), 0))
 
 
+# the most bytes a pa.utf8() array's int32 offsets can address
+_UTF8_MAX_BYTES = 2**31 - 1
+
 # byte-class table for the vectorized tokenizer: 0 = ASCII whitespace
 # (exactly Java/RE2 `\s` = [ \t\n\x0B\f\r]), 1 = [A-Za-z], 2 = [0-9],
 # 3 = token-starting "other" byte (any other ASCII symbol or a UTF-8
@@ -122,14 +125,16 @@ def _tokenize_string_array(arr):
     rpos = rpos[(rpos < row_start_c[1:]) ]
     starts[rpos] |= ck[rpos] != 4
     tstart = np.nonzero(starts)[0]
+    # int32 offsets would wrap past 2 GiB of token bytes: widen instead
+    large = len(cdata) > _UTF8_MAX_BYTES
     offsets_out = np.concatenate(
         [tstart, [len(cdata)]]
-    ).astype(np.int32)
+    ).astype(np.int64 if large else np.int32)
     doc_idx = np.searchsorted(
         row_start_c[:-1], tstart, side="right"
     ) - 1
     terms = pa.Array.from_buffers(
-        pa.utf8(),
+        pa.large_utf8() if large else pa.utf8(),
         len(tstart),
         [None, pa.py_buffer(offsets_out), pa.py_buffer(cdata)],
     )

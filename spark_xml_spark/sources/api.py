@@ -17,6 +17,7 @@ in SURVEY.md §2 S5).
 
 from __future__ import annotations
 
+import weakref
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +27,8 @@ from spark_xml_spark.options import XmlOptions
 from spark_xml_spark.sources.datasource import FORMAT_NAME, XmlDataSource
 from spark_xml_spark.xmlcore import infer, tokenizer
 
-_REGISTERED_SESSIONS = set()
+# keyed on the live session, not id(): a new session may get a dead one's id
+_REGISTERED_SESSIONS = weakref.WeakSet()
 
 _SPLIT_SCHEMA = (
     "path string, start long, end long, compression string, whole_file boolean"
@@ -35,10 +37,9 @@ _SPLIT_SCHEMA = (
 
 def register(spark: SparkSession) -> None:
     """Idempotently register the data source for this session."""
-    key = id(spark)
-    if key not in _REGISTERED_SESSIONS:
+    if spark not in _REGISTERED_SESSIONS:
         spark.dataSource.register(XmlDataSource)
-        _REGISTERED_SESSIONS.add(key)
+        _REGISTERED_SESSIONS.add(spark)
 
 
 def _inject_session_timezone(spark: SparkSession, options: dict) -> dict:

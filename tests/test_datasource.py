@@ -144,6 +144,36 @@ def test_sql_ddl_using_format(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS cars_xml")
 
 
+def test_register_keys_live_sessions_not_ids():
+    """A new session that gets a dead session's id() is still registered,
+    and a dead session leaves the registry."""
+    from types import SimpleNamespace
+
+    from spark_xml_spark.sources import api
+
+    calls = []
+
+    class Session:  # register() touches only .dataSource
+        dataSource = SimpleNamespace(register=calls.append)
+
+    before = len(api._REGISTERED_SESSIONS)
+    for _ in range(100):
+        dead = Session()
+        register(dead)
+        register(dead)
+        dead_id = id(dead)
+        del dead
+        fresh = Session()
+        if id(fresh) == dead_id:
+            break
+    assert id(fresh) == dead_id  # CPython reused the freed address
+    assert len(api._REGISTERED_SESSIONS) == before
+    n = len(calls)
+    register(fresh)
+    assert len(calls) == n + 1
+    assert len(api._REGISTERED_SESSIONS) == before + 1
+
+
 def test_catalog_tables_with_identical_schemas_disambiguate(spark, tmp_path):
     """Two catalog tables with byte-identical column layouts but different
     data must each read THEIR OWN rows: the schema-identity metadata

@@ -4856,6 +4856,29 @@ def test_arrow_tokenizer_matches_regex_bytewise():
             )
 
 
+def test_tokenize_string_array_widens_offsets_past_int32(monkeypatch):
+    # token bytes beyond what int32 offsets address come back as
+    # large_utf8 with the same tokens; the limit is lowered, not the input
+    # raised to 2 GiB
+    import pyarrow as pa
+
+    from spark_xml_spark.operators import textstats
+
+    arr = pa.array(["hello world 42", None, "a!b", "x" * 40])
+    doc_small, terms_small = textstats._tokenize_string_array(arr)
+    assert terms_small.type == pa.string()
+    monkeypatch.setattr(textstats, "_UTF8_MAX_BYTES", 16)
+    doc_large, terms_large = textstats._tokenize_string_array(arr)
+    assert terms_large.type == pa.large_string()
+    terms_large.validate(full=True)
+    assert doc_large.tolist() == doc_small.tolist() == [0, 0, 0, 2, 2, 2, 3]
+    assert terms_large.to_pylist() == terms_small.to_pylist() == [
+        "hello", "world", "42", "a", "!", "b", "x" * 40
+    ]
+    monkeypatch.setattr(textstats, "_UTF8_MAX_BYTES", 55)  # == bytes kept
+    assert textstats._tokenize_string_array(arr)[1].type == pa.string()
+
+
 def test_token_tf_arrow_partials_sum_to_counts(spark):
     # sum of per-batch partials == explode+count, and keep_terms
     # filtering inside the worker == filtering after
