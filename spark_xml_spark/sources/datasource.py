@@ -18,8 +18,8 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 
 Scale notes: split planning is O(#files) driver metadata only; tasks never
 materialize more than one record + a chunk buffer; no shuffle anywhere on
-the read path; parsed rows flow straight into Tungsten via Spark's tuple
-conversion.
+the read path; parsed rows reach Spark as Arrow record batches (tuples only
+for a schema Arrow cannot map).
 """
 
 from __future__ import annotations
@@ -63,9 +63,10 @@ _CATALOG_STASH: dict = {}
 # Which parse tier actually served each record is invisible from the plan
 # (the fallbacks are per-batch, inside the Python reader). When
 # SPARK_XML_TIER_STATS_DIR names a directory, every read task appends one
-# JSON line per (tier, phase-time) tally on exhaustion; bench.py aggregates
-# them into BENCH_r{N}'s tier_adoption counters. Local-diagnostics only: on
-# a real cluster the env var is unset and none of this code runs.
+# JSON line per (tier, phase-time) tally on exhaustion; perfbench's traced
+# run (``--trace 1``) sums them into its ``datasource.tier_rows.*``
+# metrics. Local-diagnostics only: on a real cluster the env var is unset
+# and none of this code runs.
 _TIER_STATS_ENV = "SPARK_XML_TIER_STATS_DIR"
 
 
@@ -464,7 +465,12 @@ def _struct_fixer(dt: T.DataType):
     return None
 
 
-def _rows_to_arrow_batches(rows, schema: T.StructType, batch_size: int):
+# Rows per Arrow batch: fewer IPC batches and JVM per-batch setups than 4096.
+_BATCH_SIZE = 8192
+
+
+def _rows_to_arrow_batches(rows, schema: T.StructType,
+                           batch_size: int = _BATCH_SIZE):
     """Yield pyarrow.RecordBatch objects from row tuples. Raises on the
     FIRST batch if the schema/value shapes don't map — callers fall back to
     tuple mode before anything has been emitted."""
@@ -579,7 +585,7 @@ def _py_cast_column(vals, caster, target_type):
 
 
 def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
-                 is_attr=False, vt=False):
+                 is_attr=False):
     """One column of raw strings -> Arrow array. C casts when provably
     equivalent; Python casters otherwise. Raises (ValueError /
     parser fallback) only from the Python casters — the caller then
@@ -588,9 +594,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
     set; pass _cast_guards(xopts) for the option-aware set. ``is_attr``
     columns carry ATTRIBUTE cell semantics: an empty value is NOT
     null-coerced (plain cast_to — raises for non-string scalars, which
-    must surface through the row path's parse policy). ``vt`` columns are
-    an attribute-only element's body: an empty body is an END event, so
-    it nulls even for strings."""
+    must surface through the row path's parse policy)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -599,10 +603,6 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
         return _py_cast_column(vals, caster, target_type)
     arr = pa.array(vals, pa.string())
     if tname == "string":
-        if vt:
-            empties = pc.equal(arr, "")
-            if pc.any(empties).as_py():
-                arr = pc.if_else(empties, pa.scalar(None, pa.string()), arr)
         return arr  # defaults only (see _columnar_ok): "" stays "", no nullValue
     empties = pc.equal(arr, "")
     if pc.any(empties).as_py():
@@ -612,8 +612,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
             # caster so the caller re-runs the batch on the row path
             return _py_cast_column(vals, caster, target_type)
         # empty element -> null for every non-string scalar (row-path END
-        # branch, and the END semantics of an attribute-only element's
-        # body); whitespace-only is NOT empty and falls to the casters
+        # branch); whitespace-only is NOT empty and falls to the casters
         arr = pc.if_else(empties, pa.scalar(None, pa.string()), arr)
     guard = (guards if guards is not None else _C_CAST_GUARDS).get(tname)
     if guard is not None:
@@ -647,6 +646,19 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
         return _py_cast_column(vals, caster, target_type)
 
 
+def _group_columns(groups, group_map, ncols, nrec):
+    """Transpose per-record capture tuples into one raw-string column per
+    schema field (all-None for fields the pattern does not capture)."""
+    gcols = list(zip(*groups))  # C-speed transpose: one tuple per group
+    cols: List[list] = [None] * ncols  # type: ignore[list-item]
+    for g, i, _is_attr in group_map:
+        cols[i] = list(gcols[g - 1])
+    for i in range(ncols):
+        if cols[i] is None:
+            cols[i] = [None] * nrec
+    return cols
+
+
 def _collect_columns(batch, pat, group_map, ncols, strict=None):
     """Match every record against the learned whole-record pattern and
     transpose the captured field strings into columns. None when any
@@ -670,208 +682,53 @@ def _collect_columns(batch, pat, group_map, ncols, strict=None):
             groups = [m.groups() for m in map(pat.match, batch)]
         except AttributeError:
             return None
-    gcols = list(zip(*groups))  # C-speed transpose: one tuple per group
-    nrec = len(batch)
-    cols: List[list] = [None] * ncols  # type: ignore[list-item]
-    mapped = set()
-    for g, i, _is_attr in group_map:
-        cols[i] = list(gcols[g - 1])
-        mapped.add(i)
-    for i in range(ncols):
-        if i not in mapped:
-            cols[i] = [None] * nrec
-    return cols
+    return _group_columns(groups, group_map, ncols, len(batch))
 
 
-def _collect_group_columns(batch, pat, ngroups):
-    """Match every record against a learned whole-record pattern and
-    transpose ALL capture groups into columns (struct mode: groups map to
-    fields OR struct subfields via the 4-tuple gmap). None when any
-    record needs the real parser."""
-    for rec in batch:
-        if "&" in rec:
-            return None
-    try:
-        groups = [m.groups() for m in map(pat.match, batch)]
-    except AttributeError:  # a None match: whole batch to the row path
-        return None
-    return [list(c) for c in zip(*groups)]
-
-
-def _struct_gmap_columnar_ok(gmap) -> bool:
-    """The columnar assembler needs each (field, sub, kind) target fed by
-    at most ONE group: duplicated tags in the learning record (last-wins
-    row semantics) or a field captured as both element and root attribute
-    can't be expressed as independent columns — those batches take the
-    row path."""
-    seen = set()
-    targets = set()
-    for _g, i, sub, kind in gmap:
-        key = (i, sub, kind)
-        if key in seen:
-            return False
-        seen.add(key)
-        if kind in ("elem", "rootattr"):
-            if i in targets:
-                return False
-            targets.add(i)
-    return True
-
-
-def _assemble_struct_arrays(cols, fast, schema, arrow_schema, guards, nrec):
-    """Capture-group columns -> one Arrow array per schema field, building
-    StructArrays (validity = the vt presence group) for simple-struct
-    fields. Raises like _cast_column on anything unprovable — the caller
-    re-runs the batch through the exact row path."""
+def _cast_ladder(cols, fast, arrow_schema, guards):
+    """Raw-string columns -> one Arrow record batch, each column through
+    _cast_column with the field's element or root-attribute caster. None
+    when a Python caster rejected a value (malformed / whitespace-only) —
+    the caller re-runs the batch through the exact row path so the
+    parse-mode policy applies."""
     import pyarrow as pa
 
-    by_field: dict = {}
-    for k, (_g, i, sub, kind) in enumerate(fast.struct_gmap):
-        by_field.setdefault(i, {})[(sub, kind)] = cols[k]
-    arrays = []
-    for i, f in enumerate(schema.fields):
-        at = arrow_schema.field(i).type
-        srcs = by_field.get(i)
-        if isinstance(f.dataType, T.StructType):
-            _nsub, _vt_sub, _attr_sub, subcast = fast.simple_structs[i]
-            vt_raw = None
-            sub_raw = {}
-            if srcs:
-                for (sub, kind), raw in srcs.items():
-                    if kind == "vt":
-                        vt_raw = raw
-                        if sub >= 0:
-                            sub_raw[sub] = ("vt", raw)
-                    elif kind == "attr":
-                        sub_raw[sub] = ("attr", raw)
-            if vt_raw is None:  # struct element not in the learned shape
-                arrays.append(pa.nulls(nrec, at))
-                continue
-            children = []
-            for j, sf in enumerate(f.dataType.fields):
-                sat = at.field(j).type
-                src = sub_raw.get(j)
-                if src is None:
-                    children.append(pa.nulls(nrec, sat))
-                    continue
-                skind, raw = src
-                children.append(
-                    _cast_column(
-                        raw, sf.dataType, subcast[j], sat, guards,
-                        is_attr=skind == "attr", vt=skind == "vt",
-                    )
-                )
-            mask = pa.array([v is None for v in vt_raw], pa.bool_())
-            arrays.append(
-                pa.StructArray.from_arrays(children, fields=list(at), mask=mask)
-            )
-        elif srcs is None:
-            arrays.append(pa.nulls(nrec, at))
-        else:
-            (sub, kind), raw = next(iter(srcs.items()))
-            arrays.append(
-                _cast_column(
-                    raw, f.dataType,
-                    (fast.attr_casters if kind == "rootattr" else fast.casters)[i],
-                    at, guards, is_attr=kind == "rootattr",
-                )
-            )
-    return arrays
-
-
-def _columnar_struct_batches(
-    records: Iterator[str], schema: T.StructType, xopts: XmlOptions,
-    batch_size: int, fast, tally=None,
-):
-    """Struct-mode columnar scan: the generic-verified learned pattern
-    (parser.FastFlatParser struct mode) feeds the Arrow transpose; any
-    batch the pattern or casts can't prove equivalent re-runs through the
-    exact row path."""
-    import itertools
-
-    import pyarrow as pa
-
-    fields = schema.fields
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
-    )
-    fix = _tz_fixer(schema)
-    guards = _cast_guards(xopts)
-
-    def row_path(batch):
-        rows = parser.parse_records(iter(batch), schema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        yield from _rows_to_arrow_batches(rows, schema, batch_size)
-
-    records = iter(records)
-    timer = __import__("time").perf_counter if tally is not None else None
-    while True:
-        batch = list(itertools.islice(records, batch_size))
-        if not batch:
-            return
-        t0 = timer() if timer else 0.0
-        if fast.struct_pattern is None and fast._struct_learn_attempts < 16:
-            probe = next((r for r in batch if "&" not in r), None)
-            if probe is not None:
-                fast._learn_struct_pattern(probe)
-        pat = fast.struct_pattern
-        cols = None
-        if pat is not None and _struct_gmap_columnar_ok(fast.struct_gmap):
-            cols = _collect_group_columns(batch, pat, len(fast.struct_gmap))
-        if cols is None:
-            if tally is not None:
-                out = list(row_path(batch))
-                tally.add("row_fallback", len(batch), timer() - t0)
-                yield from out
-            else:
-                yield from row_path(batch)
-            continue
-        try:
-            arrays = _assemble_struct_arrays(
-                cols, fast, schema, arrow_schema, guards, len(batch)
-            )
-        except Exception:
-            if tally is not None:
-                out = list(row_path(batch))
-                tally.add("row_fallback", len(batch), timer() - t0)
-                yield from out
-            else:
-                yield from row_path(batch)
-            continue
-        if tally is not None:
-            tally.add("columnar_struct", len(batch), timer() - t0)
-        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-
-def _cast_ladder(cols, fast, fields, arrow_schema, guards, attr_cols):
-    """The shared column-cast step of every flat columnar path: one Arrow
-    array per schema field via _cast_column with attribute-caster
-    dispatch. None when a Python caster rejected a value (malformed /
-    whitespace-only) — the caller re-runs the batch through the exact row
-    path so the parse-mode policy applies."""
+    attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
     try:
-        return [
+        arrays = [
             _cast_column(
                 cols[i],
-                fields[i].dataType,
+                f.dataType,
                 (fast.attr_casters if i in attr_cols else fast.casters)[i],
                 arrow_schema.field(i).type,
                 guards,
                 is_attr=i in attr_cols,
             )
-            for i in range(len(fields))
+            for i, f in enumerate(fast.schema.fields)
         ]
     except Exception:
         return None
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
+def _parsed_rows(records, schema: T.StructType, xopts: XmlOptions):
+    """The generic row path: exact per-record parse, timestamps UTC-tagged."""
+    fix = _tz_fixer(schema)
+    rows = parser.parse_records(records, schema, xopts)
+    return rows if fix is None else (fix(row) for row in rows)
 
 
 def _columnar_window_batches(
-    witer, schema: T.StructType, xopts: XmlOptions, batch_size: int, tally=None
+    witer, schema: T.StructType, xopts: XmlOptions,
+    batch_size: int = _BATCH_SIZE, tally=None,
 ):
-    """Fused window scan: consume tokenizer.scan_split_windows items and run
-    the learned STRICT whole-record pattern's findall straight over each
-    clean window — no per-record slicing, decoding, or match objects.
+    """The columnar scan (schemas _columnar_ok accepts). Consumes
+    tokenizer.scan_split_windows items: a clean ``("win", text, spans)``
+    window runs the learned STRICT whole-record pattern's findall straight
+    over the text — no per-record slicing, decoding, or match objects; a
+    ``("rec", record)`` item (a dirty window's record, or every record of
+    a pushed-filter scan) takes the per-record ladder: strict, then
+    optional whole-record match, then the row path.
 
     Soundness: a window is already proven clean by _batch_scan_window (no
     quotes/comments/PIs, aligned starts/ends, no nested same-name rows), a
@@ -884,48 +741,31 @@ def _columnar_window_batches(
     ineligibility (entities in the window, unlearned pattern, duplicate
     group targets, cast failure) falls back to the exact per-record
     machinery with nothing lost."""
-    import itertools
-
     import pyarrow as pa
 
     fast = parser.FastFlatParser.try_build(schema, xopts)
-    if fast.simple_structs:
-        def _recs():
-            for item in witer:
-                if item[0] == "rec":
-                    yield item[1]
-                else:
-                    text, spans = item[1], item[2]
-                    for s, e in spans:
-                        yield text[s:e]
-
-        yield from _columnar_struct_batches(
-            _recs(), schema, xopts, batch_size, fast, tally=tally
-        )
-        return
     fields = schema.fields
     ncols = len(fields)
     arrow_schema = pa.schema(
         [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
     )
-    fix = _tz_fixer(schema)
     guards = _cast_guards(xopts)
-    attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
     timer = __import__("time").perf_counter if tally is not None else None
 
-    def row_path(batch):
-        rows = parser.parse_records(iter(batch), schema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        yield from _rows_to_arrow_batches(rows, schema, batch_size)
+    def transposable():
+        # a field fed by several groups (root attr + same-named element,
+        # or a duplicated tag) parses correctly on the row tiers via
+        # in-order overwrite, but the columnar transpose would
+        # double-append its column — those batches stay on the row path
+        targets = [i for _g, i, _a in fast.group_map]
+        return len(targets) == len(set(targets))
 
     def emit_records(batch):
-        """Per-record path for a list of records (strict/optional match,
-        row fallback) — the same ladder as _columnar_flat_batches,
-        INCLUDING pattern learning: on corpora whose windows are all
-        dirty (attributes or apostrophes make every window quote-bearing)
-        all records arrive here, so this must be able to learn the
-        pattern or the scan would silently run the row tier forever."""
+        """Per-record ladder for a list of records, INCLUDING pattern
+        learning: on corpora whose windows are all dirty (attributes or
+        apostrophes make every window quote-bearing) all records arrive
+        here, so this must be able to learn the pattern or the scan would
+        silently run the row tier forever."""
         t0 = timer() if timer else 0.0
         if fast.seq_pattern is None:
             probe = next((r for r in batch if "&" not in r), None)
@@ -934,21 +774,20 @@ def _columnar_window_batches(
                     fast._parse_regex(probe)  # compiles pattern on success
                 except Exception:
                     pass
-        cols = None
-        targets = [i for _g, i, _a in fast.group_map]
-        if fast.seq_pattern is not None and len(targets) == len(set(targets)):
+        if fast.seq_pattern is not None and transposable():
             cols = _collect_columns(
                 batch, fast.seq_pattern, fast.group_map, ncols,
                 strict=fast.strict_seq_pattern,
             )
-        if cols is not None:
-            arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards,
-                                  attr_cols)
-            if arrays is not None:
+            out = None if cols is None else _cast_ladder(
+                cols, fast, arrow_schema, guards
+            )
+            if out is not None:
                 if tally is not None:
                     tally.add("columnar_flat", len(batch), timer() - t0)
-                return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
-        out = list(row_path(batch))
+                return [out]
+        rows = _parsed_rows(iter(batch), schema, xopts)
+        out = list(_rows_to_arrow_batches(rows, schema, batch_size))
         if tally is not None:
             tally.add("row_fallback", len(batch), timer() - t0)
         return out
@@ -957,29 +796,20 @@ def _columnar_window_batches(
         """Group tuples (strict window captures) -> one arrow batch; cast
         failure re-slices the records and uses the per-record ladder."""
         t0 = timer() if timer else 0.0
-        gcols = list(zip(*groups))
-        cols: List = [None] * ncols
-        mapped = set()
-        for g, i, _a in fast.group_map:
-            cols[i] = list(gcols[g - 1])
-            mapped.add(i)
-        n = len(groups)
-        for i in range(ncols):
-            if i not in mapped:
-                cols[i] = [None] * n
-        arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards,
-                              attr_cols)
-        if arrays is None:
+        out = _cast_ladder(
+            _group_columns(groups, fast.group_map, ncols, len(groups)),
+            fast, arrow_schema, guards,
+        )
+        if out is None:
             return emit_records([t[s:e] for t, s, e in refs])
         if tally is not None:
-            tally.add("columnar_window", n, timer() - t0)
-        return [pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)]
+            tally.add("columnar_window", len(groups), timer() - t0)
+        return [out]
 
     pending_groups: List[tuple] = []
     pending_refs: List[tuple] = []
     rec_buf: List[str] = []
     learn_attempts = 0
-    ngroups = None
 
     for item in witer:
         if item[0] == "win":
@@ -994,21 +824,14 @@ def _columnar_window_batches(
                     except Exception:
                         pass
             wp = fast.strict_window_pattern
-            targets = [i for _g, i, _a in fast.group_map]
-            if (
-                wp is not None
-                and len(targets) == len(set(targets))
-                and "&" not in text
-            ):
+            if wp is not None and "&" not in text and transposable():
                 t0 = timer() if timer else 0.0
                 found = wp.findall(text)
                 if len(found) == len(spans):
                     if rec_buf:
                         yield from emit_records(rec_buf)
                         rec_buf = []
-                    if ngroups is None:
-                        ngroups = wp.groups
-                    if ngroups == 1:
+                    if wp.groups == 1:
                         found = [(v,) for v in found]
                     pending_groups.extend(found)
                     pending_refs.extend((text, s, e) for s, e in spans)
@@ -1040,76 +863,6 @@ def _columnar_window_batches(
         yield from emit_groups(pending_groups, pending_refs)
     if rec_buf:
         yield from emit_records(rec_buf)
-
-
-def _columnar_flat_batches(
-    records: Iterator[str], schema: T.StructType, xopts: XmlOptions,
-    batch_size: int, tally=None,
-):
-    import itertools
-
-    import pyarrow as pa
-
-    fast = parser.FastFlatParser.try_build(schema, xopts)
-    if fast.simple_structs:
-        yield from _columnar_struct_batches(
-            records, schema, xopts, batch_size, fast, tally=tally
-        )
-        return
-    fields = schema.fields
-    ncols = len(fields)
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
-    )
-    fix = _tz_fixer(schema)
-    guards = _cast_guards(xopts)
-
-    def row_path(batch):
-        rows = parser.parse_records(iter(batch), schema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
-        yield from _rows_to_arrow_batches(rows, schema, batch_size)
-
-    records = iter(records)
-    timer = __import__("time").perf_counter if tally is not None else None
-    while True:
-        batch = list(itertools.islice(records, batch_size))
-        if not batch:
-            return
-        t0 = timer() if timer else 0.0
-        if fast.seq_pattern is None:
-            probe = next((r for r in batch if "&" not in r), None)
-            if probe is not None:
-                try:
-                    fast._parse_regex(probe)  # compiles the pattern on success
-                except Exception:
-                    pass
-        cols = None
-        targets = [i for _g, i, _a in fast.group_map]
-        if fast.seq_pattern is not None and len(targets) == len(set(targets)):
-            # a field fed by several groups (root attr + same-named element,
-            # or a duplicated tag) parses correctly on the row tiers via
-            # in-order overwrite, but the columnar transpose would
-            # double-append its column — those scans stay on the row path
-            cols = _collect_columns(
-                batch, fast.seq_pattern, fast.group_map, ncols,
-                strict=fast.strict_seq_pattern,
-            )
-        if cols is not None:
-            attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
-            arrays = _cast_ladder(cols, fast, fields, arrow_schema, guards,
-                                  attr_cols)
-            if arrays is not None:
-                if tally is not None:
-                    tally.add("columnar_flat", len(batch), timer() - t0)
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-                continue
-        if tally is not None:
-            out = list(row_path(batch))
-            tally.add("row_fallback", len(batch), timer() - t0)
-            yield from out
-        else:
-            yield from row_path(batch)
 
 
 # --- filter pushdown -------------------------------------------------------
@@ -1159,6 +912,13 @@ def _push_field(attr, schema: T.StructType, corrupt_col: str):
     return i, f
 
 
+def _floating(field: T.StructField) -> bool:
+    """Value comparisons on double/float columns stay Spark-side: Spark
+    orders NaN above every number and holds NaN = NaN, where Python and
+    Arrow compare IEEE-style. Only IsNull/IsNotNull push there."""
+    return isinstance(field.dataType, (T.DoubleType, T.FloatType))
+
+
 def _compile_filter(flt, schema: T.StructType, corrupt_col: str):
     """Compile one pushed Filter into row-tuple -> bool with SQL null
     semantics, or None when the filter can't be evaluated exactly here."""
@@ -1195,7 +955,7 @@ def _compile_filter(flt, schema: T.StructType, corrupt_col: str):
     if not hasattr(flt, "attribute") or not hasattr(flt, "value"):
         return None  # unknown/future filter class: leave to Spark
     loc = _push_field(flt.attribute, schema, corrupt_col)
-    if loc is None:
+    if loc is None or _floating(loc[1]):
         return None
     i, field = loc
     v = flt.value
@@ -1236,9 +996,8 @@ def _compile_filter(flt, schema: T.StructType, corrupt_col: str):
 def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
     """Compile one pushed Filter into RecordBatch -> BooleanArray (no
     nulls: null comparisons are filled False, matching _compile_filter's
-    row semantics exactly — both follow IEEE comparison on doubles, so
-    the columnar and row pushdown paths always agree). None when the
-    filter can't be expressed with pyarrow.compute."""
+    row semantics exactly, so the columnar and row pushdown paths always
+    agree). None when the filter can't be expressed with pyarrow.compute."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import datasource as ds
@@ -1274,7 +1033,7 @@ def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
     if not hasattr(flt, "attribute") or not hasattr(flt, "value"):
         return None
     loc = _push_field(flt.attribute, schema, corrupt_col)
-    if loc is None:
+    if loc is None or _floating(loc[1]):
         return None
     i, field = loc
     v = flt.value
@@ -1313,6 +1072,19 @@ def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
     if isinstance(flt, ds.StringContains) and str_field:
         return lambda b: pc.fill_null(pc.match_substring(b.column(i), v), False)
     return None
+
+
+def _masked(batches, masks):
+    """Keep the rows of each batch that every pushed-filter mask selects."""
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        mask = masks[0](batch)
+        for m in masks[1:]:
+            mask = pc.and_(mask, m(batch))
+        batch = batch.filter(mask)
+        if batch.num_rows:
+            yield batch
 
 
 def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
@@ -1608,14 +1380,14 @@ class XmlReader(DataSourceReader):
 
         xopts = XmlOptions.from_dict(self._opts_dict)
         dschema = self._data_schema()
+        corrupt = xopts.column_name_of_corrupt_record
+        splits = [tokenizer.FileSplit(*s) for s in partition.splits]
 
         def _records():
-            for path, start, end, compression, whole_file in partition.splits:
-                split = tokenizer.FileSplit(path, start, end, compression, whole_file)
+            for split in splits:
                 yield from tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
 
         records = _records()
-        corrupt = xopts.column_name_of_corrupt_record
         if self._pushed and xopts.mode != "FAILFAST":
             # raw-text reject shortcut: skip parsing records that can't
             # match (FAILFAST keeps parsing everything so malformed
@@ -1623,120 +1395,53 @@ class XmlReader(DataSourceReader):
             reject = _raw_prefilter(self._pushed, dschema, corrupt)
             if reject is not None:
                 records = (r for r in records if not reject(r))
-        fix = _tz_fixer(dschema)
-        rows = parser.parse_records(records, dschema, xopts)
-        if fix is not None:
-            rows = (fix(row) for row in rows)
+        masks = [_compile_filter_arrow(f, dschema, corrupt) for f in self._pushed]
+        if _columnar_ok(dschema, xopts) and all(m is not None for m in masks):
+            # Columnar path: batches go straight from matched field
+            # strings to Arrow arrays with C-level casts; any batch the
+            # pattern or casts can't prove equivalent re-runs through the
+            # exact row path. Unfiltered scans hand the consumer clean
+            # tokenizer windows; pushed scans hand it records so the
+            # raw-text prefilter composes, then apply the pushed filters
+            # as pyarrow.compute masks.
+            if self._pushed:
+                items = (("rec", r) for r in records)
+            else:
+                items = (
+                    item
+                    for split in splits
+                    for item in tokenizer.scan_split_windows(
+                        split, xopts.row_tag, xopts.charset
+                    )
+                )
+            batches = _columnar_window_batches(items, dschema, xopts, tally=tally)
+            if masks:
+                batches = _masked(batches, masks)
+            yield from batches
+            return
+        rows = _parsed_rows(records, dschema, xopts)
         if self._pushed:
             preds = [
                 _compile_filter(f, dschema, corrupt) for f in self._pushed
             ]
             rows = (row for row in rows if all(p(row) for p in preds))
-
-        arrow_flag = str(
-            self._opts_dict.get("arrowBatches")
-            or self._opts_dict.get("arrowbatches")
-            or "true"
-        ).lower()
-        if arrow_flag == "false":
-            if tally is None:
-                yield from rows
-            else:
-                nr = 0
-                for row in rows:
-                    nr += 1
-                    yield row
-                tally.add("row_tuple", nr)
-            return
-        batch_size = int(
-            self._opts_dict.get("arrowBatchSize")
-            or self._opts_dict.get("arrowbatchsize")
-            or 8192  # fewer IPC batches & JVM per-batch setups than 4096
-        )
-        columnar_flag = str(
-            self._opts_dict.get("columnar")
-            or self._opts_dict.get("columnarBatches")
-            or self._opts_dict.get("columnarbatches")
-            or "true"
-        ).lower()
-        if columnar_flag != "false" and _columnar_ok(dschema, xopts):
-            # Columnar fast path: record batches go straight from matched
-            # field strings to Arrow arrays with C-level casts; any batch
-            # the pattern or casts can't prove equivalent re-runs through
-            # the exact row path. `rows` above was never advanced, so
-            # `records` is still whole (minus the raw-text prefilter,
-            # which composes). Pushed filters are evaluated per batch
-            # with pyarrow.compute masks when every filter maps; if any
-            # doesn't, the row path below handles them all.
-            if not self._pushed:
-                # fused window scan: no pushed filters -> consume clean
-                # tokenizer windows directly (no per-record slicing or
-                # match objects); pushed scans keep the record path so
-                # the raw-text prefilter composes
-                def _windows():
-                    for path, start, end, compression, whole_file in (
-                        partition.splits
-                    ):
-                        sp = tokenizer.FileSplit(
-                            path, start, end, compression, whole_file
-                        )
-                        yield from tokenizer.scan_split_windows(
-                            sp, xopts.row_tag, xopts.charset
-                        )
-
-                yield from _columnar_window_batches(
-                    _windows(), dschema, xopts, batch_size, tally=tally
-                )
-                return
-            masks = None
-            if self._pushed:
-                masks = [
-                    _compile_filter_arrow(f, dschema, corrupt)
-                    for f in self._pushed
-                ]
-                if any(m is None for m in masks):
-                    masks = []  # not fully expressible: use the row path
-            if masks is None or masks:
-                import pyarrow.compute as pc
-
-                for batch in _columnar_flat_batches(
-                    records, dschema, xopts, batch_size, tally=tally
-                ):
-                    if masks:
-                        mask = masks[0](batch)
-                        for m in masks[1:]:
-                            mask = pc.and_(mask, m(batch))
-                        batch = batch.filter(mask)
-                        if batch.num_rows == 0:
-                            continue
-                    yield batch
-                return
         # Probe arrow conversion on the first batch only: the rows are
         # buffered, so an unmappable schema (or value shape) falls back to
         # tuple mode with nothing lost. Later batches propagate errors —
         # a mixed tuple/batch stream is not allowed.
-        buf = list(itertools.islice(rows, batch_size))
+        buf = list(itertools.islice(rows, _BATCH_SIZE))
         if not buf:
             return
         try:
-            first = next(_rows_to_arrow_batches(iter(buf), dschema, batch_size))
+            first = next(_rows_to_arrow_batches(iter(buf), dschema))
         except Exception:
+            n = 0
+            for n, row in enumerate(itertools.chain(buf, rows), 1):
+                yield row
             if tally is not None:
-                tally.add("row_tuple", len(buf))
-            yield from buf
-            if tally is None:
-                yield from rows
-            else:
-                nr = 0
-                for row in rows:
-                    nr += 1
-                    yield row
-                tally.add("row_tuple", nr)
+                tally.add("row_tuple", n)
             return
-        if tally is not None:
-            tally.add("row_arrow", first.num_rows)
-        yield first
-        for b in _rows_to_arrow_batches(rows, dschema, batch_size):
+        for b in itertools.chain([first], _rows_to_arrow_batches(rows, dschema)):
             if tally is not None:
                 tally.add("row_arrow", b.num_rows)
             yield b

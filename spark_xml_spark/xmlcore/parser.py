@@ -369,12 +369,6 @@ _ATTR_PAIR = _re.compile(r"([^\s=>/]+)=(?:\"([^\"<]*)\"|'([^'<]*)')")
 # Attribute-free root open tag (the '=' disqualifier already proved there
 # are no attributes anywhere in the record).
 _ROOT_OPEN_PLAIN = _re.compile(r"\s*<([A-Za-z_:][^\s>/=]*)\s*>")
-# One child element with optional attributes and text-only body, used by
-# the struct-mode pattern compiler to walk a record's top-level children.
-_CHILD_ELEM = _re.compile(
-    r"\s*<([A-Za-z_:][^\s>/=]*)"
-    r"((?:\s+[^\s=>/]+=(?:\"[^\"<]*\"|'[^'<]*'))*)\s*>([^<]*)</\1\s*>"
-)
 
 
 class FastFlatParser:
@@ -409,9 +403,7 @@ class FastFlatParser:
         "schema", "options", "index", "types", "is_string", "n", "strip_ns",
         "casters", "seq_pattern", "strict_seq_pattern",
         "strict_window_pattern", "group_map",
-        "attr_index", "attr_casters",
-        "simple_structs", "struct_pattern", "struct_gmap",
-        "_struct_learn_attempts", "array_fields",
+        "attr_index", "attr_casters", "array_fields",
     )
 
     @classmethod
@@ -423,39 +415,16 @@ class FastFlatParser:
         if not prefix and names:
             # no way to tell attr fields from element fields — stay generic
             return None
-        has_struct = has_array = False
         for f in schema.fields:
-            if isinstance(f.dataType, T.StructType):
-                # "simple struct": an attribute-only element, i.e. every
-                # subfield is the valueTag or an attribute — the
-                # <price prio="X">12.3</price> shape. Anything else
-                # (child elements, nested structs) stays generic.
-                if not all(
-                    (
-                        sf.name == options.value_tag
-                        or sf.name.startswith(prefix)
-                    )
-                    and not isinstance(
-                        sf.dataType, (T.StructType, T.ArrayType, T.MapType)
-                    )
-                    for sf in f.dataType.fields
-                ):
-                    return None
-                has_struct = True
-            elif isinstance(f.dataType, T.ArrayType):
+            if isinstance(f.dataType, (T.StructType, T.MapType)):
+                return None
+            if isinstance(f.dataType, T.ArrayType) and isinstance(
+                f.dataType.elementType, (T.StructType, T.ArrayType, T.MapType)
+            ):
                 # repeated-tag scalar arrays parse on tiers 1/2 (variable
                 # occurrence counts are inexpressible in the tier-0
                 # pattern); complex element types stay generic
-                if isinstance(
-                    f.dataType.elementType,
-                    (T.StructType, T.ArrayType, T.MapType),
-                ):
-                    return None
-                has_array = True
-            elif isinstance(f.dataType, T.MapType):
                 return None
-        if has_struct and has_array:
-            return None  # struct mode is tier-0-only; arrays need tier 1/2
         return cls(schema, options)
 
     def __init__(self, schema: T.StructType, options: XmlOptions):
@@ -507,38 +476,6 @@ class FastFlatParser:
         self.strict_seq_pattern = None
         self.strict_window_pattern = None
         self.group_map: List[tuple] = []
-        # Simple-struct fields (attribute-only elements): field index ->
-        # (n_sub, vt_sub_index|None, {bare attr name: sub index},
-        #  [per-sub caster]). Element cell semantics for the valueTag sub,
-        # attribute semantics for attr subs.
-        self.simple_structs = {}
-        for i, f in enumerate(schema.fields):
-            if not isinstance(f.dataType, T.StructType):
-                continue
-            vt_sub = None
-            attr_sub = {}
-            sub_casters = []
-            for j, sf in enumerate(f.dataType.fields):
-                if sf.name == options.value_tag:
-                    vt_sub = j
-                    # generic semantics for an attribute-only element's
-                    # body: empty body is an END event -> None; any CHARS
-                    # go through cast_to directly (convert_field's
-                    # attributes_only branch — no element whitespace
-                    # special-casing)
-                    sub_casters.append(self._build_vt_caster(sf.dataType))
-                else:
-                    if not options.exclude_attribute:
-                        attr_sub[sf.name[len(prefix):]] = j
-                    sub_casters.append(self._build_attr_caster(sf.dataType))
-            self.simple_structs[i] = (
-                len(f.dataType.fields), vt_sub, attr_sub, sub_casters
-            )
-        # struct-mode tier-0: pattern + 4-tuple group map, learned from the
-        # first record whose pattern-parse EQUALS the generic parse
-        self.struct_pattern = None
-        self.struct_gmap: List[tuple] = []
-        self._struct_learn_attempts = 0
 
     def _build_caster(self, dt: T.DataType):
         """Per-field CELL converter: the empty/whitespace element semantics
@@ -668,19 +605,7 @@ class FastFlatParser:
 
         return c_attr
 
-    def _build_vt_caster(self, dt: T.DataType):
-        o = self.options
-
-        def c_vt(v, _dt=dt):
-            if v == "":
-                return None  # empty body is an END event in the generic path
-            return cast_to(v, _dt, o)
-
-        return c_vt
-
     def parse(self, xml: str) -> tuple:
-        if self.simple_structs:
-            return self._parse_struct_mode(xml)
         # entities need real unescaping -> straight to expat
         if "&" in xml:
             return self._parse_expat(xml)
@@ -855,168 +780,6 @@ class FastFlatParser:
         except _re.error:
             self.strict_seq_pattern = None
             self.strict_window_pattern = None
-
-    # -- struct mode (simple-struct fields present) ------------------------
-    # Tier-1/expat can't represent attribute-only child elements, so this
-    # mode is tier-0-only: a whole-record pattern learned from the first
-    # record whose pattern-parse EQUALS the generic parse (adoption gated
-    # on that equality, so a mis-learned shape can never ship rows).
-    # Records the pattern can't match raise _FastFallback, which
-    # parse_record turns into an exact generic parse.
-
-    def _parse_struct_mode(self, xml: str) -> tuple:
-        if "&" in xml:
-            raise _FastFallback()
-        pat = self.struct_pattern
-        if pat is None:
-            if self._struct_learn_attempts >= 16:
-                raise _FastFallback()
-            self._learn_struct_pattern(xml)
-            pat = self.struct_pattern
-            if pat is None:
-                raise _FastFallback()
-        m = pat.match(xml)
-        if m is None:
-            raise _FastFallback()
-        return self._struct_row_from_match(m)
-
-    def _learn_struct_pattern(self, xml: str) -> None:
-        self._struct_learn_attempts += 1
-        pat, gmap = self._compile_struct_pattern(xml)
-        if pat is None:
-            return
-        m = pat.match(xml)
-        if m is None:
-            return
-        try:
-            save_pat, save_map = self.struct_pattern, self.struct_gmap
-            self.struct_pattern, self.struct_gmap = pat, gmap
-            fast_row = self._struct_row_from_match(m)
-        except Exception:
-            self.struct_pattern, self.struct_gmap = save_pat, save_map
-            return
-        try:
-            stream = ev.filtered_reader(xml)
-            root_attributes = ev.gather_root_attributes(stream)
-            gen_row = convert_object(
-                stream, self.schema, self.options, root_attributes
-            )
-        except Exception:
-            self.struct_pattern, self.struct_gmap = save_pat, save_map
-            return
-        if fast_row != gen_row:
-            self.struct_pattern, self.struct_gmap = save_pat, save_map
-
-    def _compile_struct_pattern(self, xml: str):
-        m = _ROOT_OPEN_ATTRS.match(xml)
-        if m is None:
-            return None, None
-        root = m.group(1)
-        parts = ["\\s*<", _re.escape(root)]
-        gmap: List[tuple] = []
-        g = 0
-        for am in _ATTR_PAIR.finditer(m.group(2)):
-            name = am.group(1)
-            q = '"' if am.group(2) is not None else "'"
-            esc = _re.escape(name)
-            base = (
-                name.rsplit(":", 1)[-1] if self.strip_ns and ":" in name else name
-            )
-            i = self.attr_index.get(base, -1)
-            if i >= 0:
-                g += 1
-                gmap.append((g, i, -1, "rootattr"))
-                parts.append(f"(?:\\s+{esc}={q}([^{q}<]*){q})?")
-            else:
-                parts.append(f"(?:\\s+{esc}={q}[^{q}<]*{q})?")
-        parts.append("\\s*>")
-        skip_attrs = r"(?:\s+[^\s=>/]+=(?:\"[^\"<]*\"|'[^'<]*'))*"
-        pos = m.end()
-        while True:
-            cm = _CHILD_ELEM.match(xml, pos)
-            if cm is None:
-                break
-            pos = cm.end()
-            tag = cm.group(1)
-            name = tag.rsplit(":", 1)[-1] if self.strip_ns and ":" in tag else tag
-            i = self.index.get(name, -1)
-            esc = _re.escape(tag)
-            meta = self.simple_structs.get(i)
-            if meta is not None:
-                _nsub, vt_sub, attr_sub, _sc = meta
-                parts.append(f"(?:\\s*<{esc}")
-                for am in _ATTR_PAIR.finditer(cm.group(2)):
-                    an = am.group(1)
-                    q = '"' if am.group(2) is not None else "'"
-                    aesc = _re.escape(an)
-                    abase = (
-                        an.rsplit(":", 1)[-1]
-                        if self.strip_ns and ":" in an
-                        else an
-                    )
-                    j = attr_sub.get(abase, -1)
-                    if j >= 0:
-                        g += 1
-                        gmap.append((g, i, j, "attr"))
-                        parts.append(f"(?:\\s+{aesc}={q}([^{q}<]*){q})?")
-                    else:
-                        parts.append(f"(?:\\s+{aesc}={q}[^{q}<]*{q})?")
-                g += 1
-                gmap.append((g, i, vt_sub if vt_sub is not None else -1, "vt"))
-                parts.append(f"\\s*>([^<]*)</{esc}\\s*>)?")
-            elif i >= 0:
-                # scalar field: the generic path ignores attributes on a
-                # scalar-typed child, so consume them non-capturing
-                g += 1
-                gmap.append((g, i, -1, "elem"))
-                parts.append(
-                    f"(?:\\s*<{esc}{skip_attrs}\\s*>([^<]*)</{esc}\\s*>)?"
-                )
-            else:
-                parts.append(
-                    f"(?:\\s*<{esc}{skip_attrs}\\s*>[^<]*</{esc}\\s*>)?"
-                )
-        if _re.match(r"\s*</" + _re.escape(root) + r"\s*>\s*\Z", xml[pos:]) is None:
-            return None, None
-        parts.append("\\s*</" + _re.escape(root) + "\\s*>\\s*\\Z")
-        try:
-            return _re.compile("".join(parts)), gmap
-        except _re.error:
-            return None, None
-
-    def _struct_row_from_match(self, m) -> tuple:
-        row: List[Any] = [None] * self.n
-        pending: dict = {}
-        structs = self.simple_structs
-        casters = self.casters
-        attr_casters = self.attr_casters
-        # document order: root attrs first, then children; a later
-        # occurrence of the same target overwrites (convert_object order)
-        for g, i, sub, kind in self.struct_gmap:
-            v = m.group(g)
-            if kind == "elem":
-                if v is not None:
-                    row[i] = casters[i](v)
-            elif kind == "vt":
-                if v is not None:
-                    b = pending.get(i)
-                    if b is None:
-                        b = [None] * structs[i][0]
-                    if sub >= 0:
-                        b[sub] = structs[i][3][sub](v)
-                    row[i] = tuple(b)
-                pending.pop(i, None)
-            elif kind == "attr":
-                if v is not None:
-                    b = pending.get(i)
-                    if b is None:
-                        b = [None] * structs[i][0]
-                        pending[i] = b
-                    b[sub] = structs[i][3][sub](v)
-            else:  # rootattr
-                if v is not None:
-                    row[i] = attr_casters[i](v)
-        return tuple(row)
 
     def _parse_expat(self, xml: str) -> tuple:
         from xml.parsers import expat

@@ -18,3 +18,24 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def reader_batches():
+    """Read records through the data source's reader in-process (no Spark
+    session): the records are written as one document under a ``<root>``
+    tag, then every planned partition is read. Returns the Arrow batches."""
+    import os
+    import tempfile
+
+    from spark_xml_spark.sources.datasource import XmlReader
+
+    def run(records, schema, **options):
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "t.xml")
+            with open(path, "w", encoding="utf-8") as fh:
+                fh.write("<root>" + "".join(records) + "</root>")
+            reader = XmlReader({"path": path, **options}, schema)
+            return [b for part in reader.partitions() for b in reader.read(part)]
+
+    return run

@@ -296,19 +296,23 @@ def _struct_record(draw):
 
 @settings(max_examples=120, deadline=None)
 @given(recs=st.lists(_struct_record(), min_size=1, max_size=6))
-def test_simple_struct_fast_path_equivalence_property(recs):
-    """Attribute-only struct children (<price prio="X">12.3</price>) parse
-    identically through the struct-mode learned pattern and the generic
-    parser, including missing elements, empty bodies, unknown attributes
-    (pattern miss -> generic), and malformed bodies (parse policy)."""
+def test_simple_struct_fast_path_equivalence_property(recs, reader_batches):
+    """Attribute-only struct children (<price prio="X">12.3</price>) have
+    no fast parser: the reader serves them from the generic parser, and
+    its Arrow output equals parse_records -> Arrow on any mix of missing
+    elements, empty bodies, unknown attributes and malformed bodies."""
+    import pyarrow as pa
+
+    from spark_xml_spark.sources import datasource as D
+
     opts = XmlOptions.from_dict({"rowTag": "r"})
-    fast = parser.FastFlatParser.try_build(_STRUCT_SCHEMA, opts)
-    assert fast is not None and fast.simple_structs
-    for _tier_pass in range(2):
-        for rec in recs:
-            got = parser.parse_record(rec, _STRUCT_SCHEMA, opts, fast=fast)
-            ref = parser.parse_record(rec, _STRUCT_SCHEMA, opts, fast=None)
-            assert got == ref, (rec, got, ref)
+    assert parser.FastFlatParser.try_build(_STRUCT_SCHEMA, opts) is None
+    rows = parser.parse_records(iter(recs), _STRUCT_SCHEMA, opts)
+    ref = pa.Table.from_batches(
+        list(D._rows_to_arrow_batches(rows, _STRUCT_SCHEMA, 256))
+    )
+    got = reader_batches(recs, _STRUCT_SCHEMA, rowTag="r")
+    assert pa.Table.from_batches(got, schema=ref.schema).equals(ref)
 
 
 _ARRAY_SCHEMA = T.StructType(
@@ -419,9 +423,11 @@ def test_strict_and_window_paths_equivalence_property(recs):
         list(D._rows_to_arrow_batches(iter(rows), _FLAT_SCHEMA, 256))
     )
 
-    # record-based columnar (strict tried first internally)
+    # the columnar consumer fed per-record items (strict tried first)
     col = pa.Table.from_batches(
-        list(D._columnar_flat_batches(iter(recs), _FLAT_SCHEMA, opts, 4))
+        list(D._columnar_window_batches(
+            (("rec", r) for r in recs), _FLAT_SCHEMA, opts, 4
+        ))
     )
     assert col.equals(ref)
 

@@ -13,6 +13,7 @@ DataFrame/view. The default path must therefore never engage pushdown.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_xml_spark.sources import read_xml, write_xml
 
@@ -153,6 +154,14 @@ def test_pushdown_through_sql_ddl(push, tmp_path):
         push.sql("DROP TABLE IF EXISTS push_t")
 
 
+def _with_corrupt(schema):
+    """``schema`` plus a ``_corrupt_record`` column, which sends the scan
+    down the row path (row-tuple predicates instead of Arrow masks)."""
+    return T.StructType(
+        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
+    )
+
+
 def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
     """Pushed filters evaluated as pyarrow.compute masks on the columnar
     path must select exactly the rows the row-tuple predicates select."""
@@ -163,9 +172,9 @@ def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
     out = str(tmp_path / "t")
     write_xml(df.repartition(2), out, rowTag="row")
 
-    def run(columnar):
+    def run(schema):
         d = read_xml(
-            spark, out, rowTag="row", filterPushdown="true", columnar=columnar
+            spark, out, rowTag="row", filterPushdown="true", schema=schema
         )
         return {
             tuple(r)
@@ -174,11 +183,11 @@ def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
                 & (F.col("v").isNotNull())
                 & F.col("name").isin("n1", "n3")
                 & F.col("name").startswith("n")
-            ).collect()
+            ).select("k", "name", "v").collect()
         }
 
-    a = run("true")
-    b = run("false")
+    a = run(df.schema)
+    b = run(_with_corrupt(df.schema))
     assert a == b
     assert a  # non-empty selection
     expect = {
@@ -202,13 +211,13 @@ def test_pushdown_not_in_with_null_three_valued(push, tmp_path):
     write_xml(src, out, rowTag="item")
     schema = src.schema
 
-    for columnar in ("true", "false"):
+    for read_schema in (schema, _with_corrupt(schema)):
         pushed = read_xml(
-            push, out, rowTag="item", schema=schema,
-            filterPushdown="true", columnar=columnar,
+            push, out, rowTag="item", schema=read_schema,
+            filterPushdown="true",
         )
         cond = ~F.col("v").isin(1, None)
-        assert pushed.filter(cond).count() == 0, columnar
+        assert pushed.filter(cond).count() == 0, read_schema
         # sanity: same condition without pushdown also selects nothing
         plain = read_xml(push, out, rowTag="item", schema=schema)
         assert plain.filter(cond).count() == 0
@@ -218,7 +227,7 @@ def test_pushdown_not_in_with_null_three_valued(push, tmp_path):
             r.v for r in pushed.filter(~F.col("v").isin(1)).select("v").collect()
         )
         want = sorted(i % 3 for i in range(30) if i % 10 != 0 and i % 3 != 1)
-        assert got == want, columnar
+        assert got == want, read_schema
 
 
 def test_pushdown_not_eqnullsafe_keeps_null_rows(push, tmp_path):
@@ -236,10 +245,42 @@ def test_pushdown_not_eqnullsafe_keeps_null_rows(push, tmp_path):
     plain = read_xml(push, out, rowTag="item", schema=schema)
     expected = sorted(map(tuple, plain.filter(cond).collect()))
     assert any(v is None for _, v in expected)  # null rows ARE selected
-    for columnar in ("true", "false"):
+    for read_schema in (schema, _with_corrupt(schema)):
         pushed = read_xml(
-            push, out, rowTag="item", schema=schema,
-            filterPushdown="true", columnar=columnar,
+            push, out, rowTag="item", schema=read_schema,
+            filterPushdown="true",
         )
-        got = sorted(map(tuple, pushed.filter(cond).collect()))
-        assert got == expected, columnar
+        got = sorted(map(tuple, pushed.filter(cond).select("id", "v").collect()))
+        assert got == expected, read_schema
+
+
+@pytest.mark.parametrize("corrupt", [False, True], ids=["columnar", "row"])
+def test_pushdown_nan_matches_spark(push, tmp_path, corrupt):
+    """Spark holds NaN = NaN and orders NaN above every number, unlike
+    IEEE comparison in Python and Arrow: a pushed comparison on a double
+    column must select the same rows as Spark's own filter."""
+    src = push.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 9.0), (4, float("nan"))],
+        "k long, v double",
+    )
+    out = str(tmp_path / "nan_xml")
+    write_xml(src, out, rowTag="item")
+    schema = _with_corrupt(src.schema) if corrupt else src.schema
+    nan = float("nan")
+    conds = {
+        "v > 5": (F.col("v") > 5, [2, 3, 4]),
+        "v >= 9": (F.col("v") >= 9.0, [2, 3, 4]),
+        "v = NaN": (F.col("v") == nan, [2, 4]),
+        "v IN (NaN)": (F.col("v").isin(nan), [2, 4]),
+        "v <=> NaN": (F.col("v").eqNullSafe(nan), [2, 4]),
+        "NOT v < 5": (~(F.col("v") < 5), [2, 3, 4]),
+        "v IS NOT NULL": (F.col("v").isNotNull(), [1, 2, 3, 4]),
+    }
+    pushed = read_xml(push, out, rowTag="item", schema=schema,
+                      filterPushdown="true")
+    plain = read_xml(push, out, rowTag="item", schema=schema)
+    for name, (cond, want) in conds.items():
+        got = sorted(r.k for r in pushed.filter(cond).select("k").collect())
+        ref = sorted(r.k for r in plain.filter(cond).select("k").collect())
+        assert ref == want, name
+        assert got == want, name
