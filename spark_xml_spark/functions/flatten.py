@@ -22,44 +22,40 @@ the community flatten recipes.
 
 from __future__ import annotations
 
-from typing import List
+from typing import List, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _flat_cols(schema: T.StructType, sep: str) -> List:
-    """One promotion pass: struct fields -> prefixed columns; everything
-    else passes through. Returns (columns, changed). Raises on an alias
-    collision (e.g. existing column ``a_b`` next to struct ``a.b``) —
-    silently emitting duplicate column names would break the first
-    downstream select/write with an ambiguity error that doesn't point
-    back here."""
-    cols = []
-    names: List[str] = []
-    changed = False
-    for f in schema.fields:
-        if isinstance(f.dataType, T.StructType):
-            changed = True
-            for sub in f.dataType.fields:
-                cols.append(
-                    F.col(f"`{f.name}`.`{sub.name}`").alias(
-                        f"{f.name}{sep}{sub.name}"
-                    )
+def _promote(cols: List[Tuple[str, T.DataType, Column]], sep: str):
+    """Promote struct fields to prefixed columns until none remain, in
+    place of their struct. ``cols`` are (name, type, expression) triples
+    over the current DataFrame. Raises on an alias collision (e.g.
+    existing column ``a_b`` next to struct ``a.b``) — silently emitting
+    duplicate column names would break the first downstream select/write
+    with an ambiguity error that doesn't point back here."""
+    while any(isinstance(t, T.StructType) for _, t, _ in cols):
+        out = []
+        for name, t, expr in cols:
+            if isinstance(t, T.StructType):
+                out.extend(
+                    (f"{name}{sep}{sub.name}", sub.dataType, expr.getField(sub.name))
+                    for sub in t.fields
                 )
-                names.append(f"{f.name}{sep}{sub.name}")
-        else:
-            cols.append(F.col(f"`{f.name}`"))
-            names.append(f.name)
-    dupes = {n for n in names if names.count(n) > 1}
-    if dupes:
-        raise ValueError(
-            f"flatten_xml alias collision on {sorted(dupes)}: a promoted "
-            f"struct field clashes with an existing column; pass a "
-            f"different sep"
-        )
-    return cols, changed
+            else:
+                out.append((name, t, expr))
+        names = [n for n, _, _ in out]
+        dupes = {n for n in names if names.count(n) > 1}
+        if dupes:
+            raise ValueError(
+                f"flatten_xml alias collision on {sorted(dupes)}: a promoted "
+                f"struct field clashes with an existing column; pass a "
+                f"different sep"
+            )
+        cols = out
+    return cols
 
 
 def flatten_xml(
@@ -82,41 +78,44 @@ def flatten_xml(
     however many sibling arrays the level holds); a deeper (adversarial)
     schema raises instead of looping. Struct promotion terminates on its
     own — each pass strictly reduces struct depth.
+
+    The projections are derived from the schema on the driver: the
+    DataFrame is analyzed once, struct promotions fold into the next
+    projection, and each explode is one ``select`` (Spark allows a single
+    generator per projection).
     """
     if arrays not in ("all", "none", "first"):
         raise ValueError("arrays must be 'all', 'none' or 'first'")
+    cols = [(f.name, f.dataType, F.col(f"`{f.name}`")) for f in df.schema.fields]
+    moved = False  # cols hold expressions not yet projected
     exploded_once = False
     for _ in range(max_depth):
         # promote structs until none remain at this level, so
         # array-of-struct explosions surface their fields before the
         # next level's explode
-        while True:
-            cols, changed = _flat_cols(df.schema, sep)
-            if not changed:
-                break
-            df = df.select(*cols)
-        arrs = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, T.ArrayType)
-        ]
+        promoted = _promote(cols, sep)
+        moved = moved or promoted is not cols
+        cols = promoted
+        arrs = [n for n, t, _ in cols if isinstance(t, T.ArrayType)]
         if not arrs or arrays == "none" or (
             arrays == "first" and exploded_once
         ):
+            if moved:
+                df = df.select(*[e.alias(n) for n, _, e in cols])
             return df
-        # one LEVEL: every current sibling array exploded exactly once
-        # (sequential selects — Spark allows a single generator per
-        # projection; sibling arrays produce the relational cross
-        # product per parent row)
+        # one LEVEL: every current sibling array exploded exactly once,
+        # one select each; sibling arrays produce the relational cross
+        # product per parent row
         for arr in arrs:
-            df = df.select(
-                *[
-                    F.explode_outer(F.col(f"`{c}`")).alias(arr)
-                    if c == arr
-                    else F.col(f"`{c}`")
-                    for c in df.columns
-                ]
-            )
+            df = df.select(*[
+                F.explode_outer(e).alias(n) if n == arr else e.alias(n)
+                for n, _, e in cols
+            ])
+            cols = [
+                (n, t.elementType if n == arr else t, F.col(f"`{n}`"))
+                for n, t, _ in cols
+            ]
+        moved = False
         exploded_once = True
     raise ValueError(
         f"array nesting deeper than {max_depth} levels"

@@ -154,20 +154,20 @@ def schema_of_xml(
         opts_dict = dict(options or {})
 
         def infer_partition(batches):
-            import pandas as pd
+            import pyarrow as pa
 
             xo2 = XmlOptions.from_dict(opts_dict)
             texts = []
-            for pdf in batches:
-                texts.extend(x for x in pdf[colname] if x is not None)
-            yield pd.DataFrame(
+            for batch in batches:
+                texts.extend(x for x in batch.column(0).to_pylist() if x is not None)
+            yield pa.RecordBatch.from_pydict(
                 {"schema_json": [infer.partial_schema_json(texts, xo2)]}
             )
 
         parts = [
             r.schema_json
             for r in data.select(colname)
-            .mapInPandas(infer_partition, "schema_json string")
+            .mapInArrow(infer_partition, "schema_json string")
             .collect()
         ]
         return infer.merge_schema_jsons(parts, xo)

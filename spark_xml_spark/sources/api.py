@@ -8,11 +8,12 @@ idiomatically — *distributed* schema inference as a Spark job before the
 scan (the reference's two-pass inferred read, XmlRelation.scala:39-49 +
 InferSchema.scala:67-101).
 
-Distributed-inference shape (100 TB-safe): one task per file split infers a
-partial schema over its own records and emits a single schema JSON; the
-driver folds #splits tiny JSONs with the compatible-type lattice. Data never
-moves; only schemas do (the treeReduce-style partial+final aggregation noted
-in SURVEY.md §2 S5).
+Distributed-inference shape (100 TB-safe): one narrow stage with one task
+per reader partition (the same splits, bin-packing and partition-value
+groups the scan plans), each inferring a partial schema over its own
+records and emitting a single schema JSON; the driver folds the tiny JSONs
+with the compatible-type lattice. Data never moves; only schemas do (the
+treeReduce-style partial+final aggregation noted in SURVEY.md §2 S5).
 """
 
 from __future__ import annotations
@@ -24,15 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from spark_xml_spark.options import XmlOptions
-from spark_xml_spark.sources.datasource import FORMAT_NAME, XmlDataSource
+from spark_xml_spark.sources import partitions as pmod
+from spark_xml_spark.sources.datasource import FORMAT_NAME, XmlDataSource, XmlReader
 from spark_xml_spark.xmlcore import infer, tokenizer
 
 # keyed on the live session, not id(): a new session may get a dead one's id
 _REGISTERED_SESSIONS = weakref.WeakSet()
-
-_SPLIT_SCHEMA = (
-    "path string, start long, end long, compression string, whole_file boolean"
-)
 
 
 def register(spark: SparkSession) -> None:
@@ -102,63 +100,58 @@ def _inject_filter_pushdown(spark: SparkSession, options: dict) -> dict:
     return options
 
 
-def _splits_df(spark: SparkSession, path, xopts: XmlOptions,
-               files=None) -> DataFrame:
-    splits = tokenizer.plan_splits(path, xopts.charset, files=files)
-    rows = [
-        (s.path, s.start, s.end, s.compression or "", s.whole_file) for s in splits
-    ]
-    # one split per task: the scan parallelism IS the split list
-    return spark.createDataFrame(rows, _SPLIT_SCHEMA).repartition(len(rows))
-
-
 def infer_xml_schema(
     spark: SparkSession, path, **options
 ) -> T.StructType:
-    """Distributed schema inference: per-split partial schemas merged on the
-    driver. Respects ``samplingRatio`` (Bernoulli per record, seed 1 — the
-    reference's sample semantics, InferSchema.scala:68-72)."""
+    """Distributed schema inference: per-partition partial schemas merged
+    on the driver. Respects ``samplingRatio`` (Bernoulli per record, seed 1
+    per task — the reference's sample semantics, InferSchema.scala:68-72).
+
+    The driver plans with the reader's own ``XmlReader.partitions()``, so
+    inference reads exactly the tasks the scan will; each task of
+    ``spark.range(n, numPartitions=n)`` looks its partition up by id."""
     options = _inject_session_timezone(spark, options)
+    options = _inject_parallelism(spark, options)
     xopts = XmlOptions.from_dict(options)
-    # Hive-style layouts: infer over the DISCOVERED (possibly nested)
-    # files, then append the typed partition columns — the read schema a
-    # partition-aware scan produces
-    from spark_xml_spark.sources import partitions as pmod
-
-    from spark_xml_spark.sources.datasource import _listing_opts
-
-    gf, rl = _listing_opts(options)
-    pfiles, pcols = pmod.discover_partitions(
-        path, glob_filter=gf, recursive_lookup=rl
-    )
-    sdf = _splits_df(spark, path, xopts, files=[(f, sz) for f, sz, _ in pfiles])
+    reader = XmlReader(dict(options, path=path), T.StructType())
+    parts = reader.partitions()
+    # Hive-style layouts: the partitions cover the DISCOVERED (possibly
+    # nested) files; append the typed partition columns after inference —
+    # the read schema a partition-aware scan produces
+    _, pcols = reader._discover()
     opts_dict = dict(options)
 
-    def infer_partition(batches):
-        import pandas as pd
+    def infer_partitions(batches):
         import random as _random
 
+        import pyarrow as pa
+
         xo = XmlOptions.from_dict(opts_dict)
-        rng = _random.Random(1)
-        out = []
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                split = tokenizer.FileSplit(
-                    row.path, row.start, row.end, row.compression or None, row.whole_file
+        for batch in batches:
+            for pid in batch.column(0).to_pylist():
+                records = (
+                    r
+                    for s in parts[pid].splits
+                    for r in tokenizer.scan_split(
+                        tokenizer.FileSplit(*s), xo.row_tag, xo.charset
+                    )
                 )
-                records = tokenizer.scan_split(split, xo.row_tag, xo.charset)
                 if xo.sampling_ratio < 1.0:
+                    rng = _random.Random(1)
                     records = (
                         r for r in records if rng.random() < xo.sampling_ratio
                     )
-                out.append(infer.partial_schema_json(records, xo))
-        yield pd.DataFrame({"schema_json": out})
+                yield pa.RecordBatch.from_pydict(
+                    {"schema_json": [infer.partial_schema_json(records, xo)]}
+                )
 
-    parts = [
+    jsons = [
         r.schema_json
-        for r in sdf.mapInPandas(infer_partition, "schema_json string").collect()
+        for r in spark.range(len(parts), numPartitions=max(len(parts), 1))
+        .mapInArrow(infer_partitions, "schema_json string")
+        .collect()
     ]
-    schema = infer.merge_schema_jsons(parts, xopts)
+    schema = infer.merge_schema_jsons(jsons, xopts)
     if not schema.fields:
         raise ValueError(
             f"no XML rows with rowTag '{xopts.row_tag}' found in {path}"

@@ -726,14 +726,15 @@ def _columnar_window_batches(
     tokenizer.scan_split_windows items: a clean ``("win", text, spans)``
     window runs the learned STRICT whole-record pattern's findall straight
     over the text — no per-record slicing, decoding, or match objects; a
-    ``("rec", record)`` item (a dirty window's record, or every record of
-    a pushed-filter scan) takes the per-record ladder: strict, then
+    ``("rec", record)`` item (a dirty record, or every record of a
+    pushed-filter scan) takes the per-record ladder: strict, then
     optional whole-record match, then the row path.
 
-    Soundness: a window is already proven clean by _batch_scan_window (no
-    quotes/comments/PIs, aligned starts/ends, no nested same-name rows), a
-    strict-pattern match is confined to one record ([^<]* fields, literal
-    tags) and can occur at most once per record, so
+    Soundness: the tokenizer's record scanner emits a window only over
+    clean records (no quote, ``<!`` or ``<?`` from the previous record's
+    end through the last record's end, no nested or self-closing
+    same-name row), a strict-pattern match is confined to one record
+    ([^<]* fields, literal tags) and can occur at most once per record, so
     ``len(findall) == len(spans)`` implies per-record strict.match
     equivalence; strict has no optional groups, so every findall tuple has
     all groups participating (None-vs-'' never arises — missing-field
@@ -1216,27 +1217,7 @@ class XmlReader(DataSourceReader):
             )
         listed = [(f, sz) for f, sz, _ in pfiles] if pfiles is not None else None
         sizes = dict(listed) if listed is not None else {}
-        explicit = self._opt("targetSplitSize", "maxPartitionBytes")
-        if explicit is not None:
-            target = int(explicit)
-        else:
-            # Spark's maxSplitBytes: min(maxPartitionBytes,
-            # max(openCostInBytes, totalBytes/minPartitionNum)) — small
-            # corpora split finer to feed every core, huge corpora cap at
-            # 128 MB per task, and the open cost keeps a million tiny
-            # files from becoming a million tasks.
-            total = open_cost  # avoid zero; matches Spark's +openCost/file
-            for _f, size in listed or ():
-                total += size + open_cost
-            par = int(self._opt("minPartitions") or 0)
-            if par <= 0:
-                # split planning runs in Spark's Python planner worker,
-                # where getActiveSession() is None — read_xml injects the
-                # session's defaultParallelism as minPartitions; raw
-                # format() reads fall back to the planner host's cores
-                par = os.cpu_count() or 8
-            bytes_per_core = total // max(par, 1)
-            target = min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
+        target = self._split_target(open_cost, listed)
         out = _pack_splits(
             tokenizer.plan_splits(self._path, xopts.charset, target, files=listed),
             target,
@@ -1250,11 +1231,19 @@ class XmlReader(DataSourceReader):
         explicit = self._opt("targetSplitSize", "maxPartitionBytes")
         if explicit is not None:
             return int(explicit)
-        total = open_cost
+        # Spark's maxSplitBytes: min(maxPartitionBytes, max(openCostInBytes,
+        # totalBytes/minPartitionNum)) — small corpora split finer to feed
+        # every core, huge corpora cap at 128 MB per task, and the open
+        # cost keeps a million tiny files from becoming a million tasks.
+        total = open_cost  # avoid zero; matches Spark's +openCost/file
         for _f, size in listed or ():
             total += size + open_cost
         par = int(self._opt("minPartitions") or 0)
         if par <= 0:
+            # split planning runs in Spark's Python planner worker, where
+            # getActiveSession() is None — read_xml and infer_xml_schema
+            # inject the session's defaultParallelism as minPartitions;
+            # raw format() reads fall back to the planner host's cores
             par = os.cpu_count() or 8
         bytes_per_core = total // max(par, 1)
         return min(128 * 1024 * 1024, max(open_cost, bytes_per_core))

@@ -15,10 +15,17 @@ XmlInputFormat.scala:193-313):
   exactly one task — the no-loss/no-duplication invariant asserted by
   XmlPartitioningSuite.scala:27-72
 
-Improvements over the reference scanner (strictly more robust, no behavior
-change on its fixtures): comments, CDATA sections, and processing
-instructions are skipped during both scans, and attribute values are scanned
-quote-aware so '>' inside a quoted value cannot end a tag early.
+One scanner serves every byte path (plain ranges, bzip2 block ranges,
+transcoded charsets, in-memory strings): :func:`_record_spans` counts rowTag
+depth over the matches of one scanner regex (:func:`_scanner`), so the
+per-byte work runs in the regex engine's C loop; stretches that memchr
+proves free of quotes and markup take its lean open/close-only form. The
+regex steps over comments, CDATA sections, processing instructions and
+declarations whole, and reads attribute values quote-aware, so a row tag,
+'>' or an end tag inside any of them cannot count — strictly more robust
+than the reference scanner, with no behavior change on its fixtures. A tag
+whose quote never closes degrades to the reference's first-'>' rule
+(:func:`_settle`).
 
 Scale note: each Spark task scans only its own byte range with a bounded
 buffer (memory ~ max record size + chunk), so the scan parallelizes to
@@ -31,14 +38,13 @@ XmlInputFormat.scala:93-103).
 from __future__ import annotations
 
 import functools
-import os
+import re
 from dataclasses import dataclass
 from typing import Iterator, List, Optional, Tuple
 
 from spark_xml_spark.xmlcore import codecs, fs
 
 _CHUNK = 1 << 20
-_NAME_END = (" ", "\t", "\n", "\r", ">", "/")
 
 # Charsets where '<', '>', '/', '"' are single ASCII bytes (safe to scan raw).
 _ASCII_COMPAT_PREFIXES = ("utf-8", "utf8", "ascii", "latin", "iso-8859", "cp12", "koi8")
@@ -306,65 +312,30 @@ class _Buffer:
     """Incrementally-loaded window over a binary stream, addressed by absolute
     offset. Memory stays bounded: consumed prefixes are discarded."""
 
-    __slots__ = ("_fh", "_buf", "_base", "_eof")
+    __slots__ = ("_fh", "_buf", "_base")
 
     def __init__(self, fh, base: int = 0):
         self._fh = fh
         self._buf = b""
         self._base = base
-        self._eof = False
 
     @property
     def end_loaded(self) -> int:
         return self._base + len(self._buf)
 
+    def load(self) -> bool:
+        """Append one chunk; False at EOF."""
+        chunk = self._fh.read(_CHUNK)
+        if chunk:
+            self._buf += chunk
+        return bool(chunk)
+
     def ensure(self, abs_pos: int) -> bool:
         """Load until abs_pos is buffered (exclusive). False once EOF blocks it."""
-        while not self._eof and self.end_loaded < abs_pos:
-            chunk = self._fh.read(_CHUNK)
-            if not chunk:
-                self._eof = True
-                return self.end_loaded >= abs_pos
-            self._buf += chunk
-        return self.end_loaded >= abs_pos
-
-    def find(self, pattern: bytes, abs_from: int, abs_limit: int = -1) -> int:
-        """Absolute position of pattern at/after abs_from, or -1 at EOF.
-        With abs_limit >= 0, only matches starting before abs_limit count
-        (and no data beyond what's loaded is pulled in)."""
-        pos = max(abs_from, self._base)
-        while True:
-            rel_end = -1
-            if abs_limit >= 0:
-                rel_end = min(abs_limit, self.end_loaded) - self._base + len(pattern) - 1
-                rel_end = min(rel_end, len(self._buf))
-            if rel_end >= 0:
-                i = self._buf.find(pattern, pos - self._base, rel_end)
-            else:
-                i = self._buf.find(pattern, pos - self._base)
-            if i != -1:
-                return self._base + i
-            if abs_limit >= 0 and self.end_loaded >= abs_limit + len(pattern):
-                return -1
-            if self._eof:
-                return -1
-            keep_from = max(len(self._buf) - len(pattern) + 1, 0)
-            chunk = self._fh.read(_CHUNK)
-            if not chunk:
-                self._eof = True
-                continue
-            # retry including overlap
-            pos = self._base + keep_from
-            self._buf += chunk
-
-    def byte_at(self, abs_pos: int) -> Optional[int]:
-        if not self.ensure(abs_pos + 1):
-            return None
-        return self._buf[abs_pos - self._base]
-
-    def slice(self, abs_start: int, abs_end: int) -> bytes:
-        self.ensure(abs_end)
-        return self._buf[abs_start - self._base: abs_end - self._base]
+        while self.end_loaded < abs_pos:
+            if not self.load():
+                return False
+        return True
 
     def discard_to(self, abs_pos: int) -> None:
         """Lazy prefix discard: slicing the buffer per record would memcpy
@@ -388,11 +359,10 @@ def _open_stream(split: FileSplit):
 
 class _Utf8Transcoder:
     """Binary-stream adapter: serves the UTF-8 transcoding of a unit-width
-    charset stream (UTF-16/32) so the byte-space scanner machinery
-    (_Buffer, _batch_scan_window, _find_start_tag, _find_record_end, the
-    quote/comment/CDATA/depth rules) applies unchanged — the analogue of
-    the reference's per-split InputStreamReader decode
-    (XmlInputFormat.scala:76-122).
+    charset stream (UTF-16/32) so the byte-space record scanner
+    (_record_spans, with its quote/comment/CDATA/depth rules) applies
+    unchanged — the analogue of the reference's per-split InputStreamReader
+    decode (XmlInputFormat.scala:76-122).
 
     Ownership: ``owned_src_bytes`` counts source bytes belonging to this
     split (unit-aligned; -1 = unbounded). Reads are split exactly at that
@@ -589,46 +559,29 @@ def _scan_lt_aligned_range(
 def _scan_transcoded(fh, cs: str, owned: int, row_tag: str) -> Iterator[str]:
     """Shared scan loop over a :class:`_Utf8Transcoder` stream: UTF-16/32
     unit-aligned ranges and lt-aligned multi-byte ranges both run the
-    standard UTF-8 byte scanner over the transcoded stream; ``owned``
-    source bytes bound where new record starts are admitted."""
+    record scanner over the transcoded UTF-8 stream; ``owned`` source
+    bytes bound where new record starts are admitted."""
     tc = _Utf8Transcoder(fh, cs, owned)
+
+    def owns(pos: int) -> bool:
+        # None until the transcoder crosses the source boundary: every
+        # byte produced before that IS owned
+        limit = tc.owned_utf8_end
+        return limit is None or pos < limit
+
     try:
-        buf = _Buffer(tc)  # utf-8 transcoded offsets, base 0
-        start_pat = b"<" + row_tag.encode("utf-8")
-        end_pat = b"</" + row_tag.encode("utf-8")
-        pos = 0
-        dirty_until = -1
-        while True:
-            # dynamic ownership limit: None until the transcoder crosses the
-            # source boundary — every byte produced before that IS owned
-            if pos >= dirty_until:
-                buf.ensure(pos + _CHUNK)
-                spans, new_pos, mark_dirty = _batch_scan_window(
-                    buf, start_pat, end_pat, pos
-                )
-                if spans:
-                    limit = tc.owned_utf8_end
-                    for s, e in spans:
-                        if limit is not None and s >= limit:
-                            return
-                        yield buf.slice(s, e).decode("utf-8", errors="replace")
-                    pos = new_pos
-                    buf.discard_to(pos)
-                    continue
-                if mark_dirty:
-                    dirty_until = buf.end_loaded
-            i = _find_start_tag(buf, start_pat, pos)
-            limit = tc.owned_utf8_end
-            if i == -1 or (limit is not None and i >= limit):
-                return
-            rec_end = _find_record_end(buf, start_pat, end_pat, i)
-            if rec_end == -1:
-                return
-            yield buf.slice(i, rec_end).decode("utf-8", errors="replace")
-            pos = rec_end
-            buf.discard_to(pos)
+        yield from _decoded(
+            _record_spans(_Buffer(tc), row_tag.encode("utf-8"), 0, owns),
+            "utf-8",
+        )
     finally:
         fh.close()
+
+
+def _decoded(batches, charset: str) -> Iterator[str]:
+    for data, base, spans, _irregular in batches:
+        for s, e in spans:
+            yield data[s - base:e - base].decode(charset, errors="replace")
 
 
 def scan_split(split: FileSplit, row_tag: str, charset: str = "UTF-8") -> Iterator[str]:
@@ -653,7 +606,7 @@ def scan_split(split: FileSplit, row_tag: str, charset: str = "UTF-8") -> Iterat
 
 
 # single-byte charsets: one byte == one character, so byte offsets from the
-# window scanner are valid str offsets after decoding
+# scanner are valid str offsets after decoding
 _SINGLE_BYTE_PREFIXES = ("ascii", "latin", "iso-8859", "cp12", "koi8")
 
 
@@ -663,16 +616,17 @@ def scan_split_windows(
     """Window-granular variant of :func:`scan_split` — the fused-scan
     interface for the columnar reader. Yields, in document order:
 
-    - ``("win", text, spans)``: a provably-clean batch window decoded
+    - ``("win", text, spans)``: a run of consecutive clean records decoded
       ONCE; ``spans`` are ``(start, end)`` *str* offsets of the owned
-      records inside ``text``. Emitted only when byte offsets are valid
-      str offsets (single-byte charset, or an all-ASCII window under an
-      ASCII-compatible charset) — so downstream can run a learned
-      whole-record regex straight over the window without per-record
-      slicing/decoding.
-    - ``("rec", record_str)``: one decoded record from the exact path
-      (dirty windows, compressed bz2 ranges, unit-width charsets,
-      non-ASCII windows).
+      records inside ``text``. A record is clean when the bytes from the
+      previous record's end through its own end hold no quote, no ``<!``
+      and no ``<?``, and it holds no nested or self-closing same-name row.
+      Emitted only when byte offsets are valid str offsets (single-byte
+      charset, or an all-ASCII run under an ASCII-compatible charset) — so
+      downstream can run a learned whole-record regex straight over the
+      window without per-record slicing/decoding.
+    - ``("rec", record_str)``: one decoded record (dirty records,
+      compressed bz2 ranges, transcoded charsets, non-ASCII runs).
 
     scan_split() is the flattening wrapper, so both views share one
     scanner and one ownership rule."""
@@ -716,9 +670,6 @@ def scan_split_windows(
     )
     fh = _open_stream(split)
     try:
-        tag = row_tag.encode(charset if is_ascii_compatible(charset) else "utf-8")
-        start_pat = b"<" + tag
-        end_pat = b"</" + tag
         if split.start > 0:
             # cheap skip: stream to the start offset (seek on plain files)
             try:
@@ -737,302 +688,289 @@ def scan_split_windows(
                 fh = _CapReader(fh, split.eof)
             buf = _Buffer(fh)
         limit = split.end  # only record *starts* before this belong to us
-        pos = split.start
-        dirty_until = -1  # loaded bytes already proven batch-unfriendly
-        while True:
-            # batched extraction over the loaded window when it is provably
-            # clean (one C regex pass per chunk instead of ~10 C calls per
-            # record); anything unprovable takes the exact per-record path.
-            # dirty_until stops re-scanning a rejected window per record
-            # (which would be quadratic on e.g. attribute-heavy data).
-            if pos >= dirty_until:
-                buf.ensure(pos + _CHUNK)
-                spans, new_pos, mark_dirty = _batch_scan_window(
-                    buf, start_pat, end_pat, pos
-                )
-                if spans:
-                    owned = spans
-                    past_limit = False
-                    if limit != -1 and spans[-1][0] >= limit:
-                        owned = [(s, e) for s, e in spans if s < limit]
-                        past_limit = True
-                    if owned:
-                        lo, hi = owned[0][0], owned[-1][1]
-                        wb = buf.slice(lo, hi)
-                        if single_byte or wb.isascii():
-                            yield (
-                                "win",
-                                wb.decode(charset, errors="replace"),
-                                [(s - lo, e - lo) for s, e in owned],
-                            )
-                        else:
-                            for s, e in owned:
-                                yield (
-                                    "rec",
-                                    buf.slice(s, e).decode(
-                                        charset, errors="replace"
-                                    ),
-                                )
-                    if past_limit:
-                        return
-                    pos = new_pos
-                    buf.discard_to(pos)
-                    continue
-                if mark_dirty:
-                    dirty_until = buf.end_loaded
-            i = _find_start_tag(buf, start_pat, pos)
-            if i == -1 or (limit != -1 and i >= limit):
-                return
-            rec_end = _find_record_end(buf, start_pat, end_pat, i)
-            if rec_end == -1:
-                return  # unterminated trailing record: no full row region
-            yield ("rec", buf.slice(i, rec_end).decode(charset, errors="replace"))
-            pos = rec_end
-            buf.discard_to(pos)
+        batches = _record_spans(
+            buf, row_tag.encode(charset), split.start,
+            (lambda pos: pos < limit) if limit != -1 else (lambda pos: True),
+        )
+        yield from _window_items(batches, split.start, charset, single_byte)
     finally:
         fh.close()
 
 
-# bytes the batch scanner cannot adjudicate wholesale: quotes (end-tag
-# bytes inside attribute values), comments/CDATA/DOCTYPE ('<!'), PIs ('<?')
-# — located with per-pattern bytes.find (memchr) in _batch_scan_window
-
-_BATCH_RE_CACHE: dict = {}
-
-
-def _batch_patterns(start_pat: bytes, end_pat: bytes):
-    key = (start_pat, end_pat)
-    pair = _BATCH_RE_CACHE.get(key)
-    if pair is None:
-        import re
-
-        pair = (
-            re.compile(re.escape(start_pat) + rb"[ \t\r\n>/]"),
-            re.compile(re.escape(end_pat) + rb"[ \t\r\n]*>"),
-        )
-        _BATCH_RE_CACHE[key] = pair
-    return pair
+# bytes after which a stretch is no longer clean: quotes (row-tag bytes can
+# hide in attribute values), comments/CDATA/DOCTYPE ('<!') and processing
+# instructions ('<?')
+_OFFENDERS = (b'"', b"'", b"<!", b"<?")
 
 
-def _batch_scan_window(buf: _Buffer, start_pat: bytes, end_pat: bytes, pos: int):
-    """Extract complete record spans from the loaded window at C speed,
-    or (None, pos) when the window can't be adjudicated wholesale.
-
-    Sound because rejection is total: any quote (end-tag bytes inside an
-    attribute value must not close a record), any comment/CDATA/DOCTYPE
-    ('<!') or PI ('<?') opener, and any start/end misalignment (nested
-    same-name tags, self-closing rows, stray end tags) sends the whole
-    window to the exact per-record path. On clean tabular data — the
-    dominant shape at scale — each chunk costs two C regex passes and two
-    comparisons per record instead of ~10 buffer searches per record."""
-    base = buf._base
-    window = buf._buf[pos - base:]
-    # Cut at the first offender byte so e.g. a quoted XML declaration at
-    # the file head only excludes itself, not the whole chunk. Four
-    # memchr-speed finds beat one alternation regex ~10x here (the regex
-    # scan was 55% of a clean-data scan_split profile).
-    cut = len(window)
-    for pat in (b'"', b"'", b"<!", b"<?"):
-        i = window.find(pat, 0, cut)
-        if i >= 0:
-            cut = i
-    if cut < 1024:
-        return None, pos, False  # offender too close: cheap retry later
-    window = window[:cut]
-    s_re, e_re = _batch_patterns(start_pat, end_pat)
-    starts = [m.start() for m in s_re.finditer(window)]
-    if not starts:
-        return None, pos, True
-    # end tags BEFORE the first start are the tail of a record owned by the
-    # previous split (every non-first split begins mid-record) — skip them
-    # rather than rejecting the window; stray ends between records still
-    # fail the alignment check below.
-    ends = [m.span() for m in e_re.finditer(window) if m.start() > starts[0]]
-    n = min(len(starts), len(ends))
-    if n == 0:
-        return None, pos, True
-    spans = []
-    for k in range(n):
-        s = starts[k]
-        es, ee = ends[k]
-        if es <= s:
-            return None, pos, True  # stray end tag before its start
-        if k + 1 < len(starts) and starts[k + 1] < ee:
-            return None, pos, True  # nested same-name or self-closing row
-        spans.append((pos + s, pos + ee))
-    return spans, pos + ends[n - 1][1], False
+def _next_offender(data: bytes, at: int, end: int, hits: List[int]) -> int:
+    """First offender in ``data[at:end]`` (``end`` when none). ``hits``
+    holds each offender's next position from earlier calls; only those
+    that ``at`` has passed are searched again. Each search is a memchr
+    for the offender's last byte (a two-byte ``bytes.find`` runs ~70x
+    slower on tag-dense data)."""
+    for k, h in enumerate(hits):
+        if h < at:
+            pat = _OFFENDERS[k]
+            w = len(pat) - 1
+            h = data.find(pat[w:], at + w, end)
+            while h >= 0 and not data.startswith(pat, h - w):
+                h = data.find(pat[w:], h + 1, end)
+            hits[k] = h - w if h >= 0 else end
+    return min(hits)
 
 
-def _find_start_tag(buf: _Buffer, start_pat: bytes, abs_from: int) -> int:
-    """Next genuine rowTag start tag: '<tag' followed by a name-ending byte
-    (XmlInputFormat.scala:193-224). Comments / CDATA / PIs found before the
-    candidate are skipped so a rowTag inside them can't start a record."""
-    pos = abs_from
-    while True:
-        i = buf.find(start_pat, pos)
-        if i == -1:
-            return -1
-        # Skip any non-element markup that opens before the candidate
-        # (bounded searches: nothing past i is loaded by them).
-        openers = [
-            m
-            for opener in (b"<!--", b"<![CDATA[", b"<?")
-            for m in (buf.find(opener, pos, i),)
-            if m != -1 and m < i
-        ]
-        if openers:
-            nxt = _skip_markup(buf, min(openers))
-            if nxt == -1:
-                return -1
-            pos = nxt
-            continue
-        nxt = buf.byte_at(i + len(start_pat))
-        if nxt is None:
-            return -1
-        if chr(nxt) in _NAME_END:
-            return i
-        pos = i + 1
+def _window_items(batches, prev: int, charset: str, single_byte: bool):
+    """Turn the scanner's batches into scan_split_windows items: runs of
+    clean records become one ``"win"``, the rest ``"rec"``. ``prev`` is
+    where the bytes the first record answers for begin (the scan start)."""
+    for data, base, spans, irregular in batches:
+        hi = spans[-1][1] - base
+        hits = [-1] * len(_OFFENDERS)
+        first = -1  # next offender at/after prev (relative)
+        run: List[Tuple[int, int]] = []
+        for i, (s, e) in enumerate(spans):
+            lo = max(prev - base, 0)  # a refill may have dropped the gap
+            if first < lo:
+                first = _next_offender(data, lo, hi, hits)
+            if first >= hi and not irregular:
+                run.extend(spans[i:])  # the rest of the batch is clean
+                break
+            if first >= e - base and s not in irregular:
+                run.append((s, e))
+            else:
+                if run:
+                    yield from _window(data, base, run, charset, single_byte)
+                    run = []
+                yield ("rec", data[s - base:e - base].decode(
+                    charset, errors="replace"))
+            prev = e
+        prev = spans[-1][1]
+        if run:
+            yield from _window(data, base, run, charset, single_byte)
 
 
-def _skip_markup(buf: _Buffer, i: int) -> int:
-    """Position just past a non-element markup construct starting at '<', or
-    -1 at EOF. Handles comments, CDATA, processing instructions."""
-    b1 = buf.byte_at(i + 1)
-    if b1 is None:
-        return -1
-    if b1 == ord("!"):
-        if buf.slice(i, i + 4) == b"<!--":
-            j = buf.find(b"-->", i + 4)
-            return -1 if j == -1 else j + 3
-        if buf.slice(i, i + 9) == b"<![CDATA[":
-            j = buf.find(b"]]>", i + 9)
-            return -1 if j == -1 else j + 3
-        j = buf.find(b">", i + 1)
-        return -1 if j == -1 else j + 1
-    if b1 == ord("?"):
-        j = buf.find(b"?>", i + 1)
-        return -1 if j == -1 else j + 2
-    return -2  # a real element tag
+def _window(data: bytes, base: int, run, charset: str, single_byte: bool):
+    lo, hi = run[0][0], run[-1][1]
+    wb = data[lo - base:hi - base]
+    if single_byte or wb.isascii():
+        yield ("win", wb.decode(charset, errors="replace"),
+               [(s - lo, e - lo) for s, e in run])
+    else:
+        for s, e in run:
+            yield ("rec", data[s - base:e - base].decode(
+                charset, errors="replace"))
 
 
-# a start tag (name + attributes) longer than this is declared malformed:
-# bounds the quote-aware walk when an UNBALANCED attribute quote would
-# otherwise swallow the rest of the stream
+# A start tag (name + attributes) longer than this is declared malformed:
+# bounds the quote-aware scan when an UNBALANCED attribute quote would
+# otherwise swallow the rest of the stream.
 _MAX_TAG_BYTES = 1 << 20
 
+# Attributes, quote-aware, in unrolled form: every quoted value is consumed
+# whole, so '>' or an end tag inside it cannot end anything. Possessive
+# quantifiers: a failed match never backtracks into the run it consumed.
+_ATTRS = rb"""[^"'>]*+(?:(?:"[^"]*+"|'[^']*+')[^"'>]*+)*+"""
+_ATTRS_TO_END = re.compile(_ATTRS + rb"\Z")
 
-def _scan_tag_end(buf: _Buffer, i: int) -> Tuple[int, bool]:
-    """From '<' at i, find the tag's closing '>' quote-aware.
-    Returns (pos after '>', self_closing).
 
-    Malformed-quote recovery: when the quote-aware walk hits EOF or the
-    tag-size bound while a quote is open (e.g. ``id="broken " extra "``),
-    the tag is judged malformed and the scan DEGRADES to the reference's
-    quote-naive rule — the first '>' ends the tag (XmlInputFormat does no
-    quote tracking at all) — so one bad record cannot swallow the split's
-    remaining valid records; the parser's mode policy then judges the
-    mis-framed record itself."""
-    # fast path: no quotes anywhere before the first '>' -> it closes the tag
-    j = buf.find(b">", i + 1)
-    if j != -1:
-        head = buf.slice(i + 1, j)
-        if b'"' not in head and b"'" not in head:
-            return j + 1, head.rstrip(b" \t\r\n").endswith(b"/")
-    p = i + 1
-    quote = 0
-    last = 0
-    limit = i + _MAX_TAG_BYTES
+@functools.lru_cache(maxsize=64)
+def _scanner(tag: bytes):
+    """The record-scanning regex for ``tag``, and its lean form.
+
+    Every match starts at a '<' and names its kind in an empty marker
+    group (``m.lastgroup``). Markup the scan steps over whole has no
+    marker: comments, CDATA, PIs, ``<!...>`` declarations. ``close``/
+    ``open`` are rowTag tags; ``tag`` is any other tag with a quoted
+    attribute, consumed whole so '>' or an end tag inside its value cannot
+    count. ``more`` (markup) and ``moretag`` run past the loaded bytes:
+    load more, or at EOF / past _MAX_TAG_BYTES apply the degrade rule of
+    :func:`_settle`. A tag with no quote and another name never matches:
+    nothing in it can matter. Every alternative starts with a literal or a
+    class, so the engine rejects a plain tag's '<' in a few byte compares
+    and one scan of its name (a naive alternation over the same markup ran
+    ~70x slower).
+
+    The lean form keeps only the ``close`` and ``open`` branches: it is the
+    same scanner over bytes that hold no quote, ``<!`` or ``<?`` and end on
+    a complete tag, where no other branch can match (:func:`_matches`)."""
+    t = re.escape(tag)
+    close = rb"/" + t + rb"(?=[ \t\r\n>])[^>]*+>(?P<close>)"
+    open_ = t + rb"(?=[ \t\r\n/>])" + _ATTRS + rb">(?P<open>)"
+    full = re.compile(
+        rb"<(?:"
+        rb"!(?:--[^-]*+(?:-(?!->)[^-]*+)*+-->"
+        rb"|\[CDATA\[[^\]]*+(?:\](?!\]>)[^\]]*+)*+\]\]>"
+        rb"|(?!--|\[CDATA\[)[^>]*+>)"
+        rb"|\?(?:[^?]*+(?:\?(?!>)[^?]*+)*+\?)?>"
+        rb"|" + close + rb"|" + open_ +
+        rb"|[!?](?P<more>)"
+        rb"|[^\"'>]*+(?:(?:\"[^\"]*+\"|'[^']*+')" + _ATTRS + rb">(?P<tag>)"
+        rb"|(?=[\"']|\Z)(?P<moretag>))"
+        rb")"
+    )
+    return full, re.compile(rb"<(?:" + close + rb"|" + open_ + rb")")
+
+
+# a clean stretch shorter than this stays on the full regex, and dirty data
+# is looked at again only this many bytes on, so quote-dense data does not
+# pay an offender search per quote
+_LEAN_MIN = 4096
+
+
+def _matches(tag: bytes, data: bytes, i: int):
+    """The full scanner's matches over ``data[i:]``, in order. A clean
+    stretch (no offender, found with memchr-speed finds) holds no markup
+    and no quoted attribute, so only rowTag tags can match in it: it takes
+    the lean regex, which rejects a plain tag's '<' several times faster.
+    A stretch ends at the last '<' before the next offender (or the end of
+    the loaded bytes): the construct there, which may hold the offender or
+    be cut short by the end of the loaded bytes, is the full regex's."""
+    full, lean = _scanner(tag)
+    n = len(data)
+    hits = [-1] * len(_OFFENDERS)
+    off = _next_offender(data, i, n, hits)
     while True:
-        b = buf.byte_at(p)
-        if b is None or p > limit:
-            # degrade to the quote-naive rule when a quote is unbalanced
-            # (EOF or bound) OR the size bound was hit with quotes balanced
-            # (an over-long but well-formed tag must not silently vanish —
-            # the first '>' mis-frames at worst, exactly what the reference
-            # would do). EOF with balanced quotes stays -1: the tag is
-            # genuinely unterminated (split/stream boundary).
-            if j != -1 and (quote or p > limit):
-                head = buf.slice(i + 1, j)
-                return j + 1, head.rstrip(b" \t\r\n").endswith(b"/")
-            return -1, False
-        if quote:
-            if b == quote:
-                quote = 0
-        elif b in (ord('"'), ord("'")):
-            quote = b
-        elif b == ord(">"):
-            return p + 1, last == ord("/")
-        if b not in (ord(" "), ord("\t"), ord("\n"), ord("\r")):
-            last = b
-        p += 1
+        if off - i >= _LEAN_MIN:
+            cut = data.rfind(b"<", i, off + 1)
+            if cut > i:
+                yield from lean.finditer(data, i, cut)
+                i = cut
+        for m in full.finditer(data, i):
+            yield m
+            if m.end() > off:
+                i = m.end()
+                off = _next_offender(data, i, n, hits)
+                if off - i >= _LEAN_MIN:
+                    break
+                off = i + _LEAN_MIN  # dirty here: look again this far on
+        else:
+            return
 
 
-_END_TAG_OK = (ord(" "), ord("\t"), ord("\n"), ord("\r"), ord(">"))
-_MARKUP_OPENERS = (b"<!--", b"<![CDATA[", b"<?")
+_NAME_END = frozenset(b" \t\r\n>/")
+_RETRY = -2
 
 
-def _find_record_end(buf: _Buffer, start_pat: bytes, end_pat: bytes, rec_start: int) -> int:
-    """From the record's start tag, return the absolute position just past its
-    matching end tag (depth-counting same-name nesting,
-    XmlInputFormat.scala:226-313).
+def _self_closing(data: bytes, s: int, e: int) -> bool:
+    """Tag data[s:e] ends in '/>' (whitespace allowed before '>')."""
+    return data[s:e - 1].rstrip(b" \t\r\n").endswith(b"/")
 
-    Fast path: jump directly to the next ``</rowTag`` occurrence and accept
-    it if the intervening bytes contain no nested same-name start tag and no
-    comment/CDATA/PI opener (one C-level ``find`` + a few substring checks
-    per record instead of a Python visit of every '<'). Records that do
-    contain such constructs fall back to the exact depth-counting walk —
-    ~4x tokenizer throughput on flat row-oriented data."""
-    after, self_closing = _scan_tag_end(buf, rec_start)
-    if after == -1:
-        return -1
-    if self_closing:
-        return after
-    e = buf.find(end_pat, after)
-    if e != -1:
-        nxt = buf.byte_at(e + len(end_pat))
-        if nxt is not None and nxt in _END_TAG_OK:
-            window = buf.slice(after, e)
-            if not _window_needs_slow_scan(window, start_pat):
-                close = buf.find(b">", e + len(end_pat))
-                return -1 if close == -1 else close + 1
-    depth = 1
-    pos = after
-    tag_len = len(start_pat)
+
+def _settle(buf: _Buffer, s: int, oversize: bool) -> int:
+    """Resolve the construct at '<' ``s`` that the scanner could not close
+    within the loaded bytes (or whose tag exceeds _MAX_TAG_BYTES).
+
+    Returns _RETRY after loading more bytes, -1 when the scan must stop
+    (unterminated markup, or an unterminated tag with balanced quotes at
+    EOF: a split/stream boundary), else the end of the tag under the
+    degrade rule. Malformed-quote recovery: a tag whose quote is still
+    open at EOF, or that runs past _MAX_TAG_BYTES, ends at its first '>'
+    — the reference's quote-naive rule (XmlInputFormat does no quote
+    tracking at all) — so one bad record cannot swallow the split's
+    remaining records; the parser's mode policy judges the mis-framed
+    record itself."""
+    rel = s - buf._base
+    nxt = buf._buf[rel + 1:rel + 2]
+    markup = nxt in (b"!", b"?")
+    if not oversize and (markup or buf.end_loaded - s <= _MAX_TAG_BYTES + 1):
+        if buf.load():
+            return _RETRY
+        if markup or not nxt or _ATTRS_TO_END.match(buf._buf, rel + 1):
+            return -1
     while True:
-        lt = buf.find(b"<", pos)
-        if lt == -1:
+        j = buf._buf.find(b">", s + 1 - buf._base)
+        if j >= 0:
+            return buf._base + j + 1
+        if not buf.load():
             return -1
-        skipped = _skip_markup(buf, lt)
-        if skipped == -1:
-            return -1
-        if skipped != -2:
-            pos = skipped
-            continue
-        if buf.slice(lt, lt + len(end_pat)) == end_pat:
-            nxt = buf.byte_at(lt + len(end_pat))
-            if nxt is not None and chr(nxt) in (" ", "\t", "\n", "\r", ">"):
-                close = buf.find(b">", lt + len(end_pat))
-                if close == -1:
-                    return -1
-                depth -= 1
-                pos = close + 1
-                if depth == 0:
-                    return pos
+
+
+def _record_spans(buf: _Buffer, tag: bytes, pos: int, owns):
+    """The record scanner behind every byte path. From ``pos``, count
+    rowTag depth over the scanner regex's matches (:func:`_matches`) and
+    yield, per loaded
+    window, ``(data, base, spans, irregular)``: ``spans`` are absolute
+    ``(start, end)`` byte ranges of complete records in ``data`` (which
+    starts at absolute offset ``base``); ``irregular`` holds the starts of
+    records that are self-closing or contain a same-name row.
+
+    Ownership: a record belongs to the caller when ``owns(start)`` holds
+    for its start tag's '<'; the first unowned start (or unowned position
+    at depth 0) ends the scan. On a refill the scan resumes where it
+    stopped with its depth carried forward — it never rescans a record. An
+    unterminated trailing record yields nothing."""
+    ntag = len(tag)
+    depth = 0
+    rec = -1
+    odd = False  # the open record holds a nested same-name row
+    buf.ensure(pos + _CHUNK)
+    while True:
+        data, base = buf._buf, buf._base
+        spans: List[Tuple[int, int]] = []
+        irregular = set()
+        resume = -1
+        done = False
+        for m in _matches(tag, data, pos - base):
+            kind = m.lastgroup
+            if kind is None:
                 continue
-        if buf.slice(lt, lt + tag_len) == start_pat:
-            nxt = buf.byte_at(lt + tag_len)
-            if nxt is not None and chr(nxt) in _NAME_END:
-                after, self_closing = _scan_tag_end(buf, lt)
-                if after == -1:
-                    return -1
-                if not self_closing:
+            if kind == "close":
+                if depth:
+                    depth -= 1
+                    if not depth:
+                        spans.append((rec, base + m.end()))
+                        if odd:
+                            irregular.add(rec)
+                continue
+            s, e = base + m.start(), base + m.end()
+            unclosed = kind in ("more", "moretag")
+            if unclosed or e - s > _MAX_TAG_BYTES + 1:
+                if not depth and not owns(s):
+                    done = True
+                    break
+                e = _settle(buf, s, not unclosed)
+                if e == _RETRY:
+                    resume = s
+                    break
+                if e < 0:
+                    done = True
+                    break
+                data = buf._buf  # _settle may have loaded; base is unchanged
+                k = s - base + 1 + ntag
+                kind = "open" if (data.startswith(tag, s - base + 1)
+                                  and data[k] in _NAME_END) else "tag"
+                resume = e
+            if kind == "open":
+                if not depth:
+                    if not owns(s):
+                        done = True
+                        break
+                    rec, odd = s, False
+                else:
+                    odd = True
+                b = data[e - base - 2]
+                if not (b == 47 or b in b" \t\r\n"
+                        and _self_closing(data, s - base, e - base)):
                     depth += 1
-                pos = after
-                continue
-        after, _sc = _scan_tag_end(buf, lt)
-        if after == -1:
-            return -1
-        pos = after
+                elif not depth:
+                    spans.append((s, e))
+                    irregular.add(s)
+            if resume >= 0:
+                break
+        if spans:
+            yield buf._buf, base, spans, irregular
+        if done:
+            return
+        if resume >= 0:
+            pos = resume
+        else:
+            pos = buf.end_loaded
+            if not depth and not owns(pos):
+                return
+            if not buf.load():
+                return  # EOF: an unterminated trailing record yields nothing
+        buf.discard_to(rec if depth else pos)
 
 
 def _scan_bz2_range(split: FileSplit, row_tag: str, charset: str) -> Iterator[str]:
@@ -1047,62 +985,13 @@ def _scan_bz2_range(split: FileSplit, row_tag: str, charset: str) -> Iterator[st
     if stream is None:
         return
     try:
-        tag = row_tag.encode(charset if is_ascii_compatible(charset) else "utf-8")
-        start_pat = b"<" + tag
-        end_pat = b"</" + tag
-        buf = _Buffer(stream)
-        pos = 0
-        dirty_until = -1
-        while True:
-            # same batched window extraction as the plain-file scan; the
-            # owned region is a contiguous prefix of the decompressed
-            # stream, so the first unowned span start ends the task
-            # exactly like the per-record owns() check
-            if pos >= dirty_until:
-                buf.ensure(pos + _CHUNK)
-                spans, new_pos, mark_dirty = _batch_scan_window(
-                    buf, start_pat, end_pat, pos
-                )
-                if spans:
-                    for s, e in spans:
-                        if not stream.owns(s):
-                            return
-                        yield buf.slice(s, e).decode(charset, errors="replace")
-                    pos = new_pos
-                    buf.discard_to(pos)
-                    continue
-                if mark_dirty:
-                    dirty_until = buf.end_loaded
-            i = _find_start_tag(buf, start_pat, pos)
-            if i == -1 or not stream.owns(i):
-                return
-            rec_end = _find_record_end(buf, start_pat, end_pat, i)
-            if rec_end == -1:
-                return
-            yield buf.slice(i, rec_end).decode(charset, errors="replace")
-            pos = rec_end
-            buf.discard_to(pos)
+        yield from _decoded(
+            _record_spans(_Buffer(stream), row_tag.encode(charset), 0,
+                          stream.owns),
+            charset,
+        )
     finally:
         stream.close()
-
-
-def _window_needs_slow_scan(window: bytes, start_pat: bytes) -> bool:
-    """True when the bytes between a start tag and the first end-tag
-    candidate contain anything the fast path can't adjudicate: a genuine
-    nested same-name start tag, non-element markup that could hide a
-    rowTag (comment / CDATA / PI), or a quote character (an end-tag byte
-    sequence inside a quoted attribute value must not close the record —
-    the slow path's _scan_tag_end is quote-aware, so route quoted content
-    there to keep both paths' semantics identical)."""
-    if b'"' in window or b"'" in window:
-        return True
-    i = window.find(start_pat)
-    while i != -1:
-        j = i + len(start_pat)
-        if j >= len(window) or chr(window[j]) in _NAME_END:
-            return True
-        i = window.find(start_pat, i + 1)
-    return any(op in window for op in _MARKUP_OPENERS)
 
 
 def scan_string(text: str, row_tag: str) -> Iterator[str]:
@@ -1110,18 +999,8 @@ def scan_string(text: str, row_tag: str) -> Iterator[str]:
     schema_of_xml over whole documents)."""
     import io
 
-    data = text.encode("utf-8")
-    buf = _Buffer(io.BytesIO(data))
-    start_pat = b"<" + row_tag.encode("utf-8")
-    end_pat = b"</" + row_tag.encode("utf-8")
-    pos = 0
-    while True:
-        i = _find_start_tag(buf, start_pat, pos)
-        if i == -1:
-            return
-        rec_end = _find_record_end(buf, start_pat, end_pat, i)
-        if rec_end == -1:
-            return
-        yield buf.slice(i, rec_end).decode("utf-8", errors="replace")
-        pos = rec_end
-        buf.discard_to(pos)
+    buf = _Buffer(io.BytesIO(text.encode("utf-8")))
+    yield from _decoded(
+        _record_spans(buf, row_tag.encode("utf-8"), 0, lambda pos: True),
+        "utf-8",
+    )

@@ -222,27 +222,38 @@ def test_bz2_corruption_after_commit_raises(tmp_path):
     chained.close()
 
 
-def test_batch_scan_equals_generic(tmp_path, monkeypatch):
-    """The batched window scanner must yield byte-identical records to the
-    per-record path on every reference fixture and on synthetic shapes
-    that trigger its rejection paths (attributes, comments, CDATA,
-    self-closing rows, nested same-name tags)."""
+def test_batch_scan_equals_generic(tmp_path):
+    """The records of every split, joined, are exactly the records the
+    document was built from, on synthetic shapes that exercise every
+    scanner branch (attributes, comments, CDATA, self-closing rows,
+    nested same-name tags); on each reference fixture present, the joined
+    splits equal the whole-file scan."""
     import glob as _glob
 
     from spark_xml_spark.xmlcore import tokenizer as tk
 
+    records = (
+        [f"<r><a>{i}</a><b>x{i}</b></r>" for i in range(200)]
+        + [
+            "<r at='1'><a>q</a></r>",
+            "<r><!-- <r> comment --><a>c</a></r>",
+            "<r><a><![CDATA[</r>]]></a></r>",
+            "<r/>",
+            "<r><r><a>nested</a></r></r>",
+        ]
+        + [f"<r><a>{i}</a></r>" for i in range(100)]
+    )
     synth = tmp_path / "synth.xml"
     synth.write_text(
         "<?xml version=\"1.0\"?>\n<rows>\n"
-        + "".join(f"<r><a>{i}</a><b>x{i}</b></r>\n" for i in range(200))
-        + "<r at='1'><a>q</a></r>\n"
-        + "<r><!-- <r> comment --><a>c</a></r>\n"
-        + "<r><a><![CDATA[</r>]]></a></r>\n"
-        + "<r/>\n<r><r><a>nested</a></r></r>\n"
-        + "".join(f"<r><a>{i}</a></r>\n" for i in range(100))
+        + "".join(r + "\n" for r in records)
         + "</rows>\n"
     )
-    fixtures = [(str(synth), "r")] + [
+    for target in (400, 4096, 1 << 30):
+        splits = tk.plan_splits(str(synth), target_split_size=target)
+        got = [r for s in splits for r in tk.scan_split(s, "r")]
+        assert got == records, target
+    fixtures = [
         (f, tag)
         for pat, tag in [
             ("/root/reference/src/test/resources/cars.xml", "ROW"),
@@ -252,61 +263,55 @@ def test_batch_scan_equals_generic(tmp_path, monkeypatch):
         for f in sorted(_glob.glob(pat))
     ]
     for path, tag in fixtures:
+        whole = list(tk.scan_split(tk.FileSplit(path, 0, -1), tag))
         for target in (400, 4096, 1 << 30):
             splits = tk.plan_splits(path, target_split_size=target)
-            fast = [r for s in splits for r in tk.scan_split(s, tag)]
-            monkeypatch.setattr(
-                tk, "_batch_scan_window", lambda b, sp, ep, p: (None, p, True)
-            )
-            slow = [r for s in splits for r in tk.scan_split(s, tag)]
-            monkeypatch.undo()
-            assert fast == slow, (path, tag, target)
-            if path.endswith(("synth.xml", "cars.xml", "fias_house.xml")):
-                assert fast, (path, tag)
+            got = [r for s in splits for r in tk.scan_split(s, tag)]
+            assert got == whole, (path, tag, target)
+            if path.endswith(("cars.xml", "fias_house.xml")):
+                assert got, (path, tag)
 
 
-def test_batch_scan_randomized_differential(tmp_path, monkeypatch):
+def test_batch_scan_randomized_differential(tmp_path):
     """Randomized shapes (whitespace layouts, attributes, empty and
     self-closing elements, same-name nesting, markup, quotes in text)
-    through both tokenizer paths under several forced split sizes."""
+    under several forced split sizes: the records of every split, joined,
+    are exactly the records the document was built from."""
     import random
 
     from spark_xml_spark.xmlcore import tokenizer as tk
 
     rng = random.Random(20260813)
     parts = ["<?xml version=\"1.0\"?>", "<rows>"]
+    records = []
     for i in range(400):
         shape = rng.randrange(8)
         ws = rng.choice(["", "\n", "  ", "\n    "])
         if shape == 0:
-            parts.append(f"{ws}<r><a>{i}</a></r>")
+            rec = f"<r><a>{i}</a></r>"
         elif shape == 1:
-            parts.append(f"{ws}<r><a>{i}</a><b>t{i}</b></r>")
+            rec = f"<r><a>{i}</a><b>t{i}</b></r>"
         elif shape == 2:
-            parts.append(f"{ws}<r k=\"{i}\"><a>{i}</a></r>")
+            rec = f"<r k=\"{i}\"><a>{i}</a></r>"
         elif shape == 3:
-            parts.append(f"{ws}<r><a></a><b/></r>")
+            rec = "<r><a></a><b/></r>"
         elif shape == 4:
-            parts.append(f"{ws}<r/>")
+            rec = "<r/>"
         elif shape == 5:
-            parts.append(f"{ws}<r><r><a>{i}</a></r><a>outer</a></r>")
+            rec = f"<r><r><a>{i}</a></r><a>outer</a></r>"
         elif shape == 6:
-            parts.append(f"{ws}<r><!-- </r> --><a>{i}</a></r>")
+            rec = f"<r><!-- </r> --><a>{i}</a></r>"
         else:
-            parts.append(f"{ws}<r><a>it's \"{i}\"</a></r>")
+            rec = f"<r><a>it's \"{i}\"</a></r>"
+        parts.append(ws + rec)
+        records.append(rec)
     parts.append("</rows>")
     p = tmp_path / "rand.xml"
     p.write_text("\n".join(parts))
     for target in (256, 1777, 16384, 1 << 30):
         splits = tk.plan_splits(str(p), target_split_size=target)
-        fast = [r for s in splits for r in tk.scan_split(s, "r")]
-        monkeypatch.setattr(
-            tk, "_batch_scan_window", lambda b, sp, ep, pos: (None, pos, True)
-        )
-        slow = [r for s in splits for r in tk.scan_split(s, "r")]
-        monkeypatch.undo()
-        assert fast == slow, target
-        assert len(fast) >= 400
+        got = [r for s in splits for r in tk.scan_split(s, "r")]
+        assert got == records, target
 
 
 def test_pack_splits_bins_small_files(tmp_path):
@@ -348,6 +353,35 @@ def test_small_file_read_counts(spark, tmp_path):
     back = read_xml(spark, out, rowTag="row")
     assert back.count() == 300
     assert back.rdd.getNumPartitions() < n_files
+
+
+def test_infer_bin_packs_small_files(spark, tmp_path):
+    """Schema inference plans with the reader's own partitions: 100 small
+    files infer as a few bin-packed tasks of one stage, not one task per
+    file, and a direct call (no read_xml) plans the same splits."""
+    from spark_xml_spark.sources.api import infer_xml_schema
+
+    for i in range(100):
+        (tmp_path / f"f{i:03d}.xml").write_text(
+            f"<rows><row><k>{i}</k><v>x{i}</v></row></rows>"
+        )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("infer-bin-pack", "infer over 100 small files")
+    try:
+        schema = infer_xml_schema(spark, str(tmp_path), rowTag="row")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [(f.name, f.dataType.simpleString()) for f in schema.fields] == [
+        ("k", "bigint"), ("v", "string")
+    ]
+    stages = [
+        tracker.getStageInfo(st)
+        for job in tracker.getJobIdsForGroup("infer-bin-pack")
+        for st in tracker.getJobInfo(job).stageIds
+    ]
+    assert len(stages) == 1
+    assert 1 <= stages[0].numTasks <= sc.defaultParallelism
 
 
 # --- UTF-16/32 split-parallel scan (reference InputStreamReader-per-split
