@@ -97,8 +97,8 @@ def _cached_build(base: str, build) -> None:
     stage = base + f".stage-{os.getpid()}"
     t0 = time.time()
     build(stage)
-    # the marker records the build cost so ANY later process (bench.py's
-    # artifact_builds report, a human with cat) can attribute cold-run
+    # the marker records the build cost so ANY later process (a report
+    # reading the markers, a human with cat) can attribute cold-run
     # wall to the artifact it built — in-process cold/warm ratios can't
     # see builds paid by an earlier process
     with open(os.path.join(stage, "_DONE"), "w") as fh:
@@ -1265,7 +1265,7 @@ def q_stream_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # honest r13 number was ~3.7-4.4s). A watermarked stream-stream
     # self-join variant (all-JVM bit_count) measured 3.69s — the
     # stateful+sharded shape wins AND keeps the max_bucket cap.
-    # Protocol: tools/profile_query.py stream_simhash (ISOLATED.json).
+    # Protocol: the query run alone on a quiet host, min of repeated runs.
     # foreachBatch sink, one overwrite-per-batch-id write job (the
     # backpressure/cms_topk sink playbook, VERDICT r15 task 4): the
     # streaming parquet sink's per-batch _spark_metadata commit log was
@@ -3703,11 +3703,12 @@ def q_text_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells — and by linearity the merged matrix, and therefore every
     estimate, must EQUAL the from-scratch sketch of the union, which is
     exactly what the (shared) oracle computes. Both partials come from
-    ONE tokenize scan: grouping by (lang, doc_id%2) partitions the rows
-    exactly as two parity filters would (doc_id is non-negative), so
-    each per-(lang, parity) sketch row is bit-identical to the
-    filtered-branch build — at half the corpus scans (r17; the old
-    two-filtered-branch shape read 1.63 s vs 1.32 s at sf0.1)."""
+    ONE tokenize scan: grouping by (lang, doc_id%2) splits the rows into
+    disjoint partials (a NULL or negative doc_id only adds a _par NULL
+    or -1 partial) and the merge sums every partial, so by linearity
+    the result equals the union's sketch for any doc_id — at half the
+    corpus scans (r17; the old two-filtered-branch shape read 1.63 s vs
+    1.32 s at sf0.1)."""
     from spark_xml_spark.operators import (
         cms_estimate,
         count_min_sketch,
@@ -3751,9 +3752,9 @@ def q_text_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, tok) distinct agg + per-group sketch join + codegen
     estimate/filter; no window, no collect. Both partials come from ONE
     tokenize scan (r17, the text_cms_merge parity-group construction):
-    grouping by (lang, doc_id%2) partitions the rows exactly as two
-    parity filters would, so the per-(lang, parity) sketch rows feeding
-    the merge are bit-identical to the filtered-branch build."""
+    grouping by (lang, doc_id%2) splits the rows into disjoint partials
+    (NULL or negative doc_ids only add more of them), and the merge
+    sums every partial into the union's sketch."""
     from spark_xml_spark.operators import (
         cms_heavy_hitters,
         count_min_sketch,
@@ -4093,10 +4094,11 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both halves ("history" and "new day") roll up from ONE events
     # scan (r17, the text_cms_merge parity-group construction): keying
-    # the rollup by (event_type, event_id%2) partitions the rows
-    # exactly as the two parity filters would, and merge_rollups over
-    # the one partial frame combines the two parity rows per
-    # (bucket, event_type) just as it combines two frames
+    # the rollup by (event_type, event_id%2) splits the rows into
+    # disjoint partials (a NULL or negative event_id only adds a _par
+    # NULL or -1 partial), and merge_rollups over the one partial frame
+    # combines every parity row per (bucket, event_type) just as it
+    # combines separate frames — the aggregates are algebraic
     parts = time_rollup(
         base.withColumn("_par", F.col("event_id") % 2),
         "ts_sec", ["event_type", "_par"], 3600, "value",
@@ -4180,7 +4182,8 @@ def q_text_qsketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both partials from ONE corpus scan (r17, the text_cms_merge
     # parity-group construction): the per-(source, doc_id%2) bottom-k
-    # samples are bit-identical to the two filtered-branch sketches
+    # samples cover disjoint slices (NULL or negative doc_ids only add
+    # more), and the bottom-k of their union is the union's bottom-k
     parts = quantile_sketch(
         d.withColumn("_par", F.col("doc_id") % 2),
         ["source", "_par"], "n_chars", "doc_id", k=64, salt="qs",

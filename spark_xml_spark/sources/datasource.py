@@ -662,9 +662,10 @@ def _group_columns(groups, group_map, ncols, nrec):
 def _collect_columns(batch, pat, group_map, ncols, strict=None):
     """Match every record against the learned whole-record pattern and
     transpose the captured field strings into columns. None when any
-    record needs the real parser (no match, or entity references)."""
+    record needs the real parser (no match, entity references, or a CR
+    that line-end normalization must rewrite)."""
     for rec in batch:
-        if "&" in rec:
+        if "&" in rec or "\r" in rec:
             return None
     groups = None
     if strict is not None:
@@ -739,9 +740,9 @@ def _columnar_window_batches(
     equivalence; strict has no optional groups, so every findall tuple has
     all groups participating (None-vs-'' never arises — missing-field
     records fail strict and route to the per-record path). Any
-    ineligibility (entities in the window, unlearned pattern, duplicate
-    group targets, cast failure) falls back to the exact per-record
-    machinery with nothing lost."""
+    ineligibility (entities or CRs in the window, unlearned pattern,
+    duplicate group targets, cast failure) falls back to the exact
+    per-record machinery with nothing lost."""
     import pyarrow as pa
 
     fast = parser.FastFlatParser.try_build(schema, xopts)
@@ -825,7 +826,10 @@ def _columnar_window_batches(
                     except Exception:
                         pass
             wp = fast.strict_window_pattern
-            if wp is not None and "&" not in text and transposable():
+            if (
+                wp is not None and "&" not in text and "\r" not in text
+                and transposable()
+            ):
                 t0 = timer() if timer else 0.0
                 found = wp.findall(text)
                 if len(found) == len(spans):
@@ -1093,9 +1097,11 @@ def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
     contain a required string literal anywhere can't satisfy an equality /
     contains / startswith / endswith filter on any field — skip the parse.
     Sound only when the literal appears verbatim in well-formed XML, so it
-    is guarded per record: entity references ('&') or CDATA splits (']]>')
-    disable the shortcut for that record. Caller must not use this in
-    FAILFAST mode (a skipped malformed record would no longer raise)."""
+    is guarded per record: entity references ('&') and the markup the
+    parser joins text across ('<!' comments and CDATA, '<?' processing
+    instructions) disable the shortcut for that record. Caller must not
+    use this in FAILFAST mode (a skipped malformed record would no longer
+    raise)."""
     from pyspark.sql import datasource as ds
 
     literals = []
@@ -1116,7 +1122,7 @@ def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
         return None
 
     def reject(rec: str) -> bool:
-        if "&" in rec or "]]>" in rec:
+        if "&" in rec or "<!" in rec or "<?" in rec:
             return False
         return any(lit not in rec for lit in literals)
 

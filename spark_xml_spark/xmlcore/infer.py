@@ -422,6 +422,7 @@ def _learn_seq_pattern(xml: str, options: XmlOptions):
         _FLAT_DISQUALIFIER,
         _FLAT_FIELD,
         _ROOT_OPEN_ATTRS,
+        _attr_value,
     )
 
     m = _ROOT_OPEN_ATTRS.match(xml)
@@ -461,7 +462,7 @@ def _learn_seq_pattern(xml: str, options: XmlOptions):
     parts = ["\\s*<", _re_inf.escape(root)]
     for a, q in attrs:
         esc = _re_inf.escape(a)
-        parts.append(f"(?:\\s+{esc}={q}([^{q}<]*){q})?")
+        parts.append(f"(?:\\s+{esc}={q}({_attr_value(q)}){q})?")
     parts.append("\\s*>")
     for tag, _ in fields:
         esc = _re_inf.escape(tag)
@@ -559,7 +560,10 @@ def _columnar_fold(records: Iterable[str], options: XmlOptions, fast) -> T.DataT
                 learned = _learn_seq_pattern(xml, options)
                 if learned is not None:
                     pat, tags = learned
-            if not disabled and pat is not None and "&" not in xml:
+            if (
+                not disabled and pat is not None
+                and "&" not in xml and "\r" not in xml
+            ):
                 m = pat.match(xml)
                 if m is not None:
                     if cols is None:

@@ -350,22 +350,37 @@ class _FastFallback(Exception):
 import re as _re
 
 # Regex-path guards: any record containing attributes/entities/CDATA/
-# comments/PIs/self-closing tags drops to the expat path (whose anomaly
-# handling is in turn backed by the generic parser). A '=' inside the ROOT
-# open tag alone is re-tried by the attribute-aware branch of _parse_regex.
-_FLAT_DISQUALIFIER = _re.compile(r"[=&]|<!|/>|<\?")
+# comments/PIs/self-closing tags, or a CR (XML line-end normalization turns
+# CRLF and lone CR into LF, XML 1.0 §2.11), drops to the expat path (whose
+# anomaly handling is in turn backed by the generic parser). A '=' inside
+# the ROOT open tag alone is re-tried by the attribute-aware branch of
+# _parse_regex.
+_FLAT_DISQUALIFIER = _re.compile(r"[=&\r]|<!|/>|<\?")
 # One flat field: <tag>text-without-markup</tag> (closing name must match).
 _FLAT_FIELD = _re.compile(r"<([^\s>/]+)>([^<]*)</\1>")
 # Root open tag with optional attributes: <name a="v" b='v'>. The name must
 # start like an XML name so comments/PIs can never match; attr values are
 # quote-delimited and may not contain markup ('<' and '&' are always escaped
-# by conformant writers, and '&' already routed the record to expat).
+# by conformant writers, and '&' already routed the record to expat) nor a
+# tab, LF or CR, which attribute-value normalization turns into spaces
+# (XML 1.0 §3.3.3) — such records are left to expat.
 _ROOT_OPEN_ATTRS = _re.compile(
-    r"\s*<([A-Za-z_:][^\s>/=]*)((?:\s+[^\s=>/]+=(?:\"[^\"<]*\"|'[^'<]*'))*)\s*>"
+    r"\s*<([A-Za-z_:][^\s>/=]*)"
+    r"((?:\s+[^\s=>/]+=(?:\"[^\"<\t\n\r]*\"|'[^'<\t\n\r]*'))*)\s*>"
 )
 # One attribute inside the captured blob; exactly one of the two value
 # groups is non-None (double- vs single-quoted).
-_ATTR_PAIR = _re.compile(r"([^\s=>/]+)=(?:\"([^\"<]*)\"|'([^'<]*)')")
+_ATTR_PAIR = _re.compile(
+    r"([^\s=>/]+)=(?:\"([^\"<\t\n\r]*)\"|'([^'<\t\n\r]*)')"
+)
+
+
+def _attr_value(q: str) -> str:
+    """Regex body of a ``q``-quoted attribute value the regex tiers may take
+    verbatim (the value classes of _ROOT_OPEN_ATTRS / _ATTR_PAIR)."""
+    return f"[^{q}<\\t\\n\\r]*"
+
+
 # Attribute-free root open tag (the '=' disqualifier already proved there
 # are no attributes anywhere in the record).
 _ROOT_OPEN_PLAIN = _re.compile(r"\s*<([A-Za-z_:][^\s>/=]*)\s*>")
@@ -606,8 +621,8 @@ class FastFlatParser:
         return c_attr
 
     def parse(self, xml: str) -> tuple:
-        # entities need real unescaping -> straight to expat
-        if "&" in xml:
+        # entities need real unescaping, CR line-end normalization -> expat
+        if "&" in xml or "\r" in xml:
             return self._parse_expat(xml)
         pat = self.seq_pattern
         if pat is not None:
@@ -741,11 +756,11 @@ class FastFlatParser:
             if i >= 0:
                 g += 1
                 gmap.append((g, i, True))
-                parts.append(f"(?:\\s+{esc}={q}([^{q}<]*){q})?")
-                strict_parts.append(f"\\s+{esc}={q}([^{q}<]*){q}")
+                parts.append(f"(?:\\s+{esc}={q}({_attr_value(q)}){q})?")
+                strict_parts.append(f"\\s+{esc}={q}({_attr_value(q)}){q}")
             else:
-                parts.append(f"(?:\\s+{esc}={q}[^{q}<]*{q})?")
-                strict_parts.append(f"\\s+{esc}={q}[^{q}<]*{q}")
+                parts.append(f"(?:\\s+{esc}={q}{_attr_value(q)}{q})?")
+                strict_parts.append(f"\\s+{esc}={q}{_attr_value(q)}{q}")
         parts.append("\\s*>")
         strict_parts.append(">")
         for tag in tags:

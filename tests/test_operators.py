@@ -4953,3 +4953,63 @@ def test_token_tf_arrow_partials_sum_to_counts(spark):
         )
     )
     assert tf_rows == want
+
+
+def test_parity_grouped_partials_merge_to_the_union(spark):
+    """The parity-group rewrites in __spark_entry__.py (text_cms_merge,
+    text_cms_topk, events_rollup, text_qsketch_merge) key one build by
+    ``id % 2`` and merge the partials. NULL and negative ids land in extra partials
+    (``_par`` NULL and -1); every merge is exact (linear, algebraic,
+    bottom-k), so the merge still equals the ungrouped build."""
+    from spark_xml_spark.operators import (
+        count_min_sketch,
+        merge_count_min_sketches,
+        merge_quantile_sketches,
+        merge_rollups,
+        quantile_sketch,
+        time_rollup,
+    )
+
+    ids = [None, -3, -2, 0, 1, 2]
+    rows = [
+        (i, f"g{j % 2}", tok, 900 * (3 * j + n), float(10 * j + n))
+        for j, i in enumerate(ids)
+        for n, tok in enumerate(["a", "b", "a", "c"][: 2 + j % 3])
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, g string, tok string, ts long, v double"
+    )
+    par = df.withColumn("_par", F.col("id") % 2)
+    assert {r._par for r in par.select("_par").distinct().collect()} == {
+        None, -1, 0, 1,
+    }
+
+    def cells(sk):
+        return sorted(
+            (r.g, r.cms_depth, r.cms_width, sorted(map(tuple, r.cms)))
+            for r in sk.collect()
+        )
+
+    cms = dict(depth=3, width=16, salt="cm")
+    whole = count_min_sketch(df, ["g"], "tok", **cms)
+    parts = count_min_sketch(par, ["g", "_par"], "tok", **cms).drop("_par")
+    assert cells(merge_count_min_sketches(parts, ["g"])) == cells(whole)
+
+    whole = time_rollup(df, "ts", ["g"], 3600, "v")
+    parts = time_rollup(par, "ts", ["g", "_par"], 3600, "v").drop("_par")
+    merged = merge_rollups([parts], ["g"]).select(*whole.columns)
+    assert sorted(map(tuple, merged.collect())) == sorted(
+        map(tuple, whole.collect())
+    )
+
+    def sample(sk):
+        return sorted((r.g, r.sketch_k, list(map(tuple, r.qsample)))
+                      for r in sk.collect())
+
+    for k in (3, 64):
+        whole = quantile_sketch(df, ["g"], "v", "id", k=k, salt="qs")
+        parts = quantile_sketch(
+            par, ["g", "_par"], "v", "id", k=k, salt="qs"
+        ).drop("_par")
+        merged = merge_quantile_sketches(parts, ["g"], k=k)
+        assert sample(merged) == sample(whole), k

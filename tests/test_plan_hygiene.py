@@ -4,9 +4,10 @@ joins stay broadcast, no row-at-a-time Python UDF appears in a hot path,
 no cartesian products or wasted mid-plan global sorts creep in
 (tools/audit_plans.py's checklist, enforced as tests on sf0.001)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pytest
 

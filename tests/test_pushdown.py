@@ -284,3 +284,40 @@ def test_pushdown_nan_matches_spark(push, tmp_path, corrupt):
         ref = sorted(r.k for r in plain.filter(cond).select("k").collect())
         assert ref == want, name
         assert got == want, name
+
+
+@pytest.mark.parametrize("corrupt", [False, True], ids=["columnar", "row"])
+def test_pushdown_string_split_by_comment_or_pi(push, tmp_path, corrupt):
+    """The parser joins text around comments, PIs and CDATA, so a value
+    can equal a literal that never appears verbatim in the raw record:
+    the raw-text prefilter must not reject such records."""
+    p = tmp_path / "split.xml"
+    p.write_text(
+        "<ROWS>"
+        "<ROW><id>1</id><name>ab<!-- x -->cd</name></ROW>"
+        "<ROW><id>2</id><name>abcd</name></ROW>"
+        "<ROW><id>3</id><name>ab<?pi data?>cd</name></ROW>"
+        "<ROW><id>4</id><name>a<!--x-->b<?p?>c<![CDATA[d]]></name></ROW>"
+        "<ROW><id>5</id><name>zzzz</name></ROW>"
+        "</ROWS>"
+    )
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+    ])
+    if corrupt:
+        schema = _with_corrupt(schema)
+    conds = {
+        "==": F.col("name") == "abcd",
+        "contains": F.col("name").contains("bc"),
+        "startswith": F.col("name").startswith("abc"),
+        "endswith": F.col("name").endswith("bcd"),
+    }
+    pushed = read_xml(push, str(p), rowTag="ROW", schema=schema,
+                      filterPushdown="true")
+    plain = read_xml(push, str(p), rowTag="ROW", schema=schema)
+    for name, cond in conds.items():
+        ref = sorted(r.id for r in plain.filter(cond).select("id").collect())
+        got = sorted(r.id for r in pushed.filter(cond).select("id").collect())
+        assert ref == [1, 2, 3, 4], name
+        assert got == ref, name
