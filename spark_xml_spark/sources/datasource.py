@@ -18,8 +18,9 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 
 Scale notes: split planning is O(#files) driver metadata only; tasks never
 materialize more than one record + a chunk buffer; no shuffle anywhere on
-the read path; parsed rows reach Spark as Arrow record batches (tuples only
-for a schema Arrow cannot map).
+the read path; every path hands Spark Arrow record batches, built with
+Spark's own type mapping from values already in Spark's convention
+(timestamps UTC-aware, structs as tuples, maps as dicts).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from spark_xml_spark.options import XmlOptions
 from spark_xml_spark.xmlcore import generator, infer, parser, tokenizer
@@ -343,127 +345,12 @@ def _pack_splits(splits, max_split_bytes: int, open_cost: int,
     ]
 
 
-def _tz_fixer(schema: T.StructType):
-    """Build a row post-processor attaching UTC tzinfo to naive datetimes so
-    Spark interprets them as instants regardless of session timezone.
-    Returns None when the schema holds no timestamps (zero-cost path)."""
-    import datetime as dt
-
-    utc = dt.timezone.utc
-
-    def needs(d: T.DataType) -> bool:
-        if isinstance(d, T.TimestampType):
-            return True
-        if isinstance(d, T.StructType):
-            return any(needs(f.dataType) for f in d.fields)
-        if isinstance(d, T.ArrayType):
-            return needs(d.elementType)
-        if isinstance(d, T.MapType):
-            return needs(d.valueType)
-        return False
-
-    if not needs(schema):
-        return None
-
-    def fix_value(v, d):
-        if v is None:
-            return None
-        if isinstance(d, T.TimestampType):
-            return v.replace(tzinfo=utc) if v.tzinfo is None else v
-        if isinstance(d, T.StructType):
-            return tuple(
-                fix_value(x, f.dataType) if needs(f.dataType) else x
-                for x, f in zip(v, d.fields)
-            )
-        if isinstance(d, T.ArrayType):
-            return [fix_value(x, d.elementType) for x in v]
-        if isinstance(d, T.MapType):
-            return {k: fix_value(x, d.valueType) for k, x in v.items()}
-        return v
-
-    def fix_row(row: tuple) -> tuple:
-        return tuple(
-            fix_value(v, f.dataType) if needs(f.dataType) else v
-            for v, f in zip(row, schema.fields)
-        )
-
-    return fix_row
-
-
 # --- Arrow batch output ----------------------------------------------------
 # Spark 4's Python DataSource accepts ``pyarrow.RecordBatch`` from read();
 # batching rows into Arrow skips the per-row pickle + JVM-side converter
-# (the biggest scan-path cost after the parse itself).
-
-
-def _arrow_type(dt: T.DataType):
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.ShortType):
-        return pa.int16()
-    if isinstance(dt, T.ByteType):
-        return pa.int8()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.FloatType):
-        return pa.float32()
-    if isinstance(dt, T.BooleanType):
-        return pa.bool_()
-    if isinstance(dt, T.DateType):
-        return pa.date32()
-    if isinstance(dt, T.TimestampType):
-        return pa.timestamp("us", tz="UTC")
-    if isinstance(dt, T.DecimalType):
-        return pa.decimal128(dt.precision, dt.scale)
-    if isinstance(dt, T.BinaryType):
-        return pa.binary()
-    if isinstance(dt, T.ArrayType):
-        return pa.list_(_arrow_type(dt.elementType))
-    if isinstance(dt, T.StructType):
-        return pa.struct([pa.field(f.name, _arrow_type(f.dataType)) for f in dt.fields])
-    if isinstance(dt, T.MapType):
-        return pa.map_(_arrow_type(dt.keyType), _arrow_type(dt.valueType))
-    raise TypeError(f"no arrow mapping for {dt.simpleString()}")
-
-
-def _struct_fixer(dt: T.DataType):
-    """Converter turning parser output (structs as tuples, maps as dicts)
-    into what pyarrow accepts (structs as dicts, maps as item lists), or
-    None when the subtree needs no conversion."""
-    if isinstance(dt, T.StructType):
-        subs = [(f.name, _struct_fixer(f.dataType)) for f in dt.fields]
-
-        def fix_struct(v):
-            if v is None:
-                return None
-            return {
-                name: (sub(x) if sub is not None else x)
-                for (name, sub), x in zip(subs, v)
-            }
-
-        return fix_struct
-    if isinstance(dt, T.ArrayType):
-        sub = _struct_fixer(dt.elementType)
-        if sub is None:
-            return None
-        return lambda v: None if v is None else [sub(x) for x in v]
-    if isinstance(dt, T.MapType):
-        sub = _struct_fixer(dt.valueType)
-
-        def fix_map(v):
-            if v is None:
-                return None
-            return [(k, sub(x) if sub is not None else x) for k, x in v.items()]
-
-        return fix_map
-    return None
-
+# (the biggest scan-path cost after the parse itself). Every batch carries
+# ``to_arrow_schema(schema)``, the mapping Spark's data-source worker itself
+# applies to the reader's schema (timestamps as UTC instants).
 
 # Rows per Arrow batch: fewer IPC batches and JVM per-batch setups than 4096.
 _BATCH_SIZE = 8192
@@ -471,36 +358,23 @@ _BATCH_SIZE = 8192
 
 def _rows_to_arrow_batches(rows, schema: T.StructType,
                            batch_size: int = _BATCH_SIZE):
-    """Yield pyarrow.RecordBatch objects from row tuples. Raises on the
-    FIRST batch if the schema/value shapes don't map — callers fall back to
-    tuple mode before anything has been emitted."""
+    """Yield pyarrow.RecordBatch objects from parsed row tuples. pyarrow
+    takes the parser's values as they are: structs as tuples, maps as
+    dicts, timestamps as UTC-aware datetimes."""
+    import itertools
+
     import pyarrow as pa
 
-    fields = schema.fields
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
-    )
-    fixers = [_struct_fixer(f.dataType) for f in fields]
-    ncols = len(fields)
+    arrow_schema = to_arrow_schema(schema)
+    rows = iter(rows)
     while True:
-        cols: List[list] = [[] for _ in range(ncols)]
-        n = 0
-        for row in rows:
-            for i in range(ncols):
-                cols[i].append(row[i])
-            n += 1
-            if n >= batch_size:
-                break
-        if n == 0:
+        buf = list(itertools.islice(rows, batch_size))
+        if not buf:
             return
-        arrays = [
-            pa.array(
-                [fx(v) for v in cols[i]] if (fx := fixers[i]) is not None else cols[i],
-                type=arrow_schema.field(i).type,
-            )
-            for i in range(ncols)
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(col, type=t) for col, t in zip(zip(*buf), arrow_schema.types)],
+            schema=arrow_schema,
+        )
 
 
 # --- columnar flat scan ----------------------------------------------------
@@ -527,11 +401,12 @@ _C_CAST_GUARDS = {
 
 # Zone-LESS ISO timestamps ("1997-02-15 00:00:00", the overwhelmingly
 # common shape) may take the Arrow cast only when no `timezone` option is
-# set: the row path then resolves naive values as UTC, which is exactly
-# Arrow's string->timestamp cast. With a timezone option the naive value
-# is interpreted in that zone (shifted), so such columns must stay on the
-# Python caster. timestampFormat does NOT affect guard-passing values —
-# the ISO branch runs before the custom format (parse_xml_timestamp).
+# set: the row path then resolves zone-less values as UTC, which is
+# exactly Arrow's string->timestamp cast. With a timezone option the
+# zone-less value is interpreted in that zone (shifted), so such columns
+# must stay on the Python caster. timestampFormat does NOT affect
+# guard-passing values — the ISO branch runs before the custom format
+# (parse_xml_timestamp).
 _C_TS_GUARD_NO_TZ = (
     r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}"
     r"(\.\d{1,6})?(Z|[+-]\d{2}:\d{2})?$"
@@ -630,7 +505,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
             and target_type.tz is not None
         ):
             # zone-less column first (the dominant shape; guard-checked
-            # ISO): naive == UTC on the row path, so attach the zone
+            # ISO): zone-less is UTC on the row path, so attach the zone
             # without shifting. The doomed-parse branch order matters:
             # each branch either raises or is correct, and trying the
             # common case first saves a full failed parse pass per batch
@@ -712,13 +587,6 @@ def _cast_ladder(cols, fast, arrow_schema, guards):
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
-def _parsed_rows(records, schema: T.StructType, xopts: XmlOptions):
-    """The generic row path: exact per-record parse, timestamps UTC-tagged."""
-    fix = _tz_fixer(schema)
-    rows = parser.parse_records(records, schema, xopts)
-    return rows if fix is None else (fix(row) for row in rows)
-
-
 def _columnar_window_batches(
     witer, schema: T.StructType, xopts: XmlOptions,
     batch_size: int = _BATCH_SIZE, tally=None,
@@ -743,14 +611,9 @@ def _columnar_window_batches(
     ineligibility (entities or CRs in the window, unlearned pattern,
     duplicate group targets, cast failure) falls back to the exact
     per-record machinery with nothing lost."""
-    import pyarrow as pa
-
     fast = parser.FastFlatParser.try_build(schema, xopts)
-    fields = schema.fields
-    ncols = len(fields)
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _arrow_type(f.dataType)) for f in fields]
-    )
+    ncols = len(schema.fields)
+    arrow_schema = to_arrow_schema(schema)
     guards = _cast_guards(xopts)
     timer = __import__("time").perf_counter if tally is not None else None
 
@@ -788,7 +651,7 @@ def _columnar_window_batches(
                 if tally is not None:
                     tally.add("columnar_flat", len(batch), timer() - t0)
                 return [out]
-        rows = _parsed_rows(iter(batch), schema, xopts)
+        rows = parser.parse_records(batch, schema, xopts)
         out = list(_rows_to_arrow_batches(rows, schema, batch_size))
         if tally is not None:
             tally.add("row_fallback", len(batch), timer() - t0)
@@ -873,11 +736,12 @@ def _columnar_window_batches(
 # --- filter pushdown -------------------------------------------------------
 # Spark 4.1's Python DataSource API delivers Catalyst's pushable predicates
 # via DataSourceReader.pushFilters. Accepted filters are REMOVED from the
-# Spark plan, so evaluation must be exact: predicates run on the very row
-# tuples the scan emits (same values Spark would have filtered), with SQL
-# three-valued null semantics folded in (null comparisons -> row dropped,
-# matching a post-scan Filter). Payoff at scale: filtered rows never leave
-# the Python worker — no Arrow transfer, no JVM processing.
+# Spark plan, so evaluation must be exact: predicates run as
+# pyarrow.compute masks on the very Arrow batches the scan emits (same
+# values Spark would have filtered), with SQL three-valued null semantics
+# folded in (null comparisons -> row dropped, matching a post-scan Filter).
+# Payoff at scale: filtered rows never leave the Python worker — no Arrow
+# transfer, no JVM processing.
 
 _PUSH_SCALARS = (
     T.StringType,
@@ -924,85 +788,11 @@ def _floating(field: T.StructField) -> bool:
     return isinstance(field.dataType, (T.DoubleType, T.FloatType))
 
 
-def _compile_filter(flt, schema: T.StructType, corrupt_col: str):
-    """Compile one pushed Filter into row-tuple -> bool with SQL null
-    semantics, or None when the filter can't be evaluated exactly here."""
-    from pyspark.sql import datasource as ds
-
-    if isinstance(flt, ds.Not):
-        child = flt.child
-        sub = _compile_filter(child, schema, corrupt_col)
-        if sub is None:
-            return None
-        if isinstance(child, (ds.IsNull, ds.IsNotNull, ds.EqualNullSafe)):
-            # these child predicates are never UNKNOWN: plain negation
-            return lambda row: not sub(row)
-        if not hasattr(child, "attribute"):
-            return None  # Not(Not(..)) / composite child: leave to Spark
-        # NOT(pred) on a null operand is UNKNOWN -> row dropped
-        loc = _push_field(child.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda row: row[i] is not None and not sub(row)
-    if isinstance(flt, ds.IsNull):
-        loc = _push_field(flt.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda row: row[i] is None
-    if isinstance(flt, ds.IsNotNull):
-        loc = _push_field(flt.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda row: row[i] is not None
-    if not hasattr(flt, "attribute") or not hasattr(flt, "value"):
-        return None  # unknown/future filter class: leave to Spark
-    loc = _push_field(flt.attribute, schema, corrupt_col)
-    if loc is None or _floating(loc[1]):
-        return None
-    i, field = loc
-    v = flt.value
-    if isinstance(flt, ds.EqualNullSafe):
-        return lambda row: (row[i] is None and v is None) or (
-            row[i] is not None and row[i] == v
-        )
-    if v is None:
-        return None  # null literal in other comparators: UNKNOWN everywhere
-    str_field = isinstance(field.dataType, T.StringType)
-    if isinstance(flt, ds.EqualTo):
-        return lambda row: row[i] is not None and row[i] == v
-    if isinstance(flt, ds.GreaterThan):
-        return lambda row: row[i] is not None and row[i] > v
-    if isinstance(flt, ds.GreaterThanOrEqual):
-        return lambda row: row[i] is not None and row[i] >= v
-    if isinstance(flt, ds.LessThan):
-        return lambda row: row[i] is not None and row[i] < v
-    if isinstance(flt, ds.LessThanOrEqual):
-        return lambda row: row[i] is not None and row[i] <= v
-    if isinstance(flt, ds.In):
-        if any(x is None for x in flt.value):
-            # x IN (.., NULL) is UNKNOWN for every non-member x; under a
-            # parent NOT that must drop ALL rows, which the Not wrapper
-            # above cannot express -> refuse to push, Spark evaluates it
-            return None
-        vals = set(flt.value)
-        return lambda row: row[i] is not None and row[i] in vals
-    if isinstance(flt, ds.StringStartsWith) and str_field:
-        return lambda row: row[i] is not None and row[i].startswith(v)
-    if isinstance(flt, ds.StringEndsWith) and str_field:
-        return lambda row: row[i] is not None and row[i].endswith(v)
-    if isinstance(flt, ds.StringContains) and str_field:
-        return lambda row: row[i] is not None and v in row[i]
-    return None
-
-
 def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
-    """Compile one pushed Filter into RecordBatch -> BooleanArray (no
-    nulls: null comparisons are filled False, matching _compile_filter's
-    row semantics exactly, so the columnar and row pushdown paths always
-    agree). None when the filter can't be expressed with pyarrow.compute."""
+    """Compile one pushed Filter into RecordBatch -> BooleanArray with SQL
+    null semantics (no nulls in the mask: null comparisons are filled
+    False, so the row is dropped). None when the filter can't be evaluated
+    exactly with pyarrow.compute; pushFilters then leaves it to Spark."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import datasource as ds
@@ -1036,20 +826,38 @@ def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
         i = loc[0]
         return lambda b: pc.is_valid(b.column(i))
     if not hasattr(flt, "attribute") or not hasattr(flt, "value"):
-        return None
+        return None  # unknown/future filter class: leave to Spark
     loc = _push_field(flt.attribute, schema, corrupt_col)
     if loc is None or _floating(loc[1]):
         return None
     i, field = loc
-    v = flt.value
-    if isinstance(flt, ds.EqualNullSafe):
-        if v is None:
+    atype = to_arrow_schema(schema).field(i).type
+    if isinstance(flt, ds.In):
+        if any(x is None for x in flt.value):
+            # x IN (.., NULL) is UNKNOWN for every non-member x; under a
+            # parent NOT that must drop ALL rows, which the Not branch
+            # above cannot express -> refuse to push, Spark evaluates it
+            return None
+        try:
+            value_set = pa.array(list(flt.value), type=atype)
+        except Exception:
+            return None
+        return lambda b: pc.fill_null(
+            pc.is_in(b.column(i), value_set=value_set), False
+        )
+    if flt.value is None:
+        if isinstance(flt, ds.EqualNullSafe):
             return lambda b: pc.is_null(b.column(i))
-        return lambda b: pc.fill_null(pc.equal(b.column(i), v), False)
-    if v is None:
+        return None  # null literal in other comparators: UNKNOWN everywhere
+    try:
+        # the literal in the column's own Arrow type, so every kernel
+        # below compares like with like; a literal that does not fit the
+        # column type exactly is not pushed
+        v = pa.scalar(flt.value, type=atype)
+    except Exception:
         return None
-    str_field = isinstance(field.dataType, T.StringType)
     cmp = {
+        ds.EqualNullSafe: pc.equal,
         ds.EqualTo: pc.equal,
         ds.GreaterThan: pc.greater,
         ds.GreaterThanOrEqual: pc.greater_equal,
@@ -1058,38 +866,41 @@ def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
     }.get(type(flt))
     if cmp is not None:
         return lambda b: pc.fill_null(cmp(b.column(i), v), False)
-    if isinstance(flt, ds.In):
-        if any(x is None for x in flt.value):
-            return None  # see _compile_filter: NULL member breaks NOT(In)
-        try:
-            value_set = pa.array(
-                list(flt.value), type=_arrow_type(field.dataType)
-            )
-        except Exception:
-            return None
-        return lambda b: pc.fill_null(
-            pc.is_in(b.column(i), value_set=value_set), False
-        )
-    if isinstance(flt, ds.StringStartsWith) and str_field:
-        return lambda b: pc.fill_null(pc.starts_with(b.column(i), v), False)
-    if isinstance(flt, ds.StringEndsWith) and str_field:
-        return lambda b: pc.fill_null(pc.ends_with(b.column(i), v), False)
-    if isinstance(flt, ds.StringContains) and str_field:
-        return lambda b: pc.fill_null(pc.match_substring(b.column(i), v), False)
+    if not isinstance(field.dataType, T.StringType):
+        return None
+    pattern = flt.value
+    if isinstance(flt, ds.StringStartsWith):
+        return lambda b: pc.fill_null(pc.starts_with(b.column(i), pattern), False)
+    if isinstance(flt, ds.StringEndsWith):
+        return lambda b: pc.fill_null(pc.ends_with(b.column(i), pattern), False)
+    if isinstance(flt, ds.StringContains):
+        return lambda b: pc.fill_null(pc.match_substring(b.column(i), pattern), False)
     return None
+
+
+def _mask(batch, masks):
+    """The AND of every pushed-filter mask over one batch."""
+    import pyarrow.compute as pc
+
+    mask = masks[0](batch)
+    for m in masks[1:]:
+        mask = pc.and_(mask, m(batch))
+    return mask
 
 
 def _masked(batches, masks):
     """Keep the rows of each batch that every pushed-filter mask selects."""
-    import pyarrow.compute as pc
-
     for batch in batches:
-        mask = masks[0](batch)
-        for m in masks[1:]:
-            mask = pc.and_(mask, m(batch))
-        batch = batch.filter(mask)
+        batch = batch.filter(_mask(batch, masks))
         if batch.num_rows:
             yield batch
+
+
+def _tallied(batches, tally, tier: str):
+    """Book each batch's rows to ``tier`` as it passes."""
+    for b in batches:
+        tally.add(tier, b.num_rows)
+        yield b
 
 
 def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
@@ -1276,23 +1087,31 @@ class XmlReader(DataSourceReader):
                 for n, t in pcols
             ]
         )
-        preds = [
-            _compile_filter(f, pschema, "\x00none")
-            for f in getattr(self, "_ppushed", [])
-        ]
         groups: dict = {}
         for f, sz, pv in pfiles:
             groups.setdefault(pv, []).append((f, sz))
+        keys = sorted(
+            groups, key=lambda t: tuple("" if v is None else v for v in t)
+        )
+        typed = [
+            tuple(pmod.typed_value(v, t) for v, (_n, t) in zip(pv, pcols))
+            for pv in keys
+        ]
+        keep = [True] * len(keys)
+        masks = [
+            _compile_filter_arrow(f, pschema, "\x00none")
+            for f in getattr(self, "_ppushed", [])
+        ]
+        if masks and keys:
+            # the scan's own Arrow masks over one row per value group
+            keep = _mask(
+                next(_rows_to_arrow_batches(typed, pschema, len(typed))), masks
+            ).to_pylist()
         all_listed = [(f, sz) for f, sz, _ in pfiles]
         target = self._split_target(open_cost, all_listed)
         out: List[InputPartition] = []
-        for pv in sorted(
-            groups, key=lambda t: tuple("" if v is None else v for v in t)
-        ):
-            typed = tuple(
-                pmod.typed_value(v, t) for v, (_n, t) in zip(pv, pcols)
-            )
-            if preds and not all(p(typed) for p in preds if p is not None):
+        for pv, pvals, kept in zip(keys, typed, keep):
+            if not kept:
                 continue  # pruned: no file in this group is opened
             listed = groups[pv]
             out.extend(
@@ -1303,7 +1122,7 @@ class XmlReader(DataSourceReader):
                     target,
                     open_cost,
                     dict(listed),
-                    pvals=typed if attach else (),
+                    pvals=pvals if attach else (),
                 )
             )
         self._pfiles = None  # keep executor pickles slim
@@ -1344,11 +1163,10 @@ class XmlReader(DataSourceReader):
             tally.flush()
 
     def _attach_pvals(self, gen, pv) -> Iterator:
-        """Append the partition-directory constants to every output row /
-        batch: the parser never sees these columns (they are not in the
-        file content), so tuples extend and Arrow batches gain constant
-        arrays — the analogue of Spark appending partition values outside
-        the FileFormat reader."""
+        """Append the partition-directory constants to every output batch
+        as constant arrays: the parser never sees these columns (they are
+        not in the file content) — the analogue of Spark appending
+        partition values outside the FileFormat reader."""
         import pyarrow as pa
 
         attach = self._attach_cols()
@@ -1356,33 +1174,29 @@ class XmlReader(DataSourceReader):
         names = [f.name for f in self._data_schema().fields] + [
             n for n, _ in attach
         ]
-        for item in gen:
-            if isinstance(item, pa.RecordBatch):
-                arrays = list(item.columns)
-                for v, (_n, t) in zip(pv, attach):
-                    ptype = pa_types.get(t, pa.string())
-                    arrays.append(
-                        pa.nulls(item.num_rows, ptype)
-                        if v is None
-                        else pa.array([v] * item.num_rows, ptype)
-                    )
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-            else:
-                yield tuple(item) + pv
+        for batch in gen:
+            arrays = list(batch.columns)
+            for v, (_n, t) in zip(pv, attach):
+                ptype = pa_types.get(t, pa.string())
+                arrays.append(
+                    pa.nulls(batch.num_rows, ptype)
+                    if v is None
+                    else pa.array([v] * batch.num_rows, ptype)
+                )
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     def _read_impl(self, partition: XmlInputPartition, tally) -> Iterator:
-        import itertools
-
+        """One pipeline: records -> Arrow batches (columnar or row tier)
+        -> pushed-filter masks; read() appends the partition constants."""
         xopts = XmlOptions.from_dict(self._opts_dict)
         dschema = self._data_schema()
         corrupt = xopts.column_name_of_corrupt_record
         splits = [tokenizer.FileSplit(*s) for s in partition.splits]
-
-        def _records():
-            for split in splits:
-                yield from tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
-
-        records = _records()
+        records = (
+            rec
+            for split in splits
+            for rec in tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
+        )
         if self._pushed and xopts.mode != "FAILFAST":
             # raw-text reject shortcut: skip parsing records that can't
             # match (FAILFAST keeps parsing everything so malformed
@@ -1390,15 +1204,13 @@ class XmlReader(DataSourceReader):
             reject = _raw_prefilter(self._pushed, dschema, corrupt)
             if reject is not None:
                 records = (r for r in records if not reject(r))
-        masks = [_compile_filter_arrow(f, dschema, corrupt) for f in self._pushed]
-        if _columnar_ok(dschema, xopts) and all(m is not None for m in masks):
+        if _columnar_ok(dschema, xopts):
             # Columnar path: batches go straight from matched field
             # strings to Arrow arrays with C-level casts; any batch the
             # pattern or casts can't prove equivalent re-runs through the
             # exact row path. Unfiltered scans hand the consumer clean
             # tokenizer windows; pushed scans hand it records so the
-            # raw-text prefilter composes, then apply the pushed filters
-            # as pyarrow.compute masks.
+            # raw-text prefilter composes.
             if self._pushed:
                 items = (("rec", r) for r in records)
             else:
@@ -1410,36 +1222,18 @@ class XmlReader(DataSourceReader):
                     )
                 )
             batches = _columnar_window_batches(items, dschema, xopts, tally=tally)
-            if masks:
-                batches = _masked(batches, masks)
-            yield from batches
-            return
-        rows = _parsed_rows(records, dschema, xopts)
+        else:
+            batches = _rows_to_arrow_batches(
+                parser.parse_records(records, dschema, xopts), dschema
+            )
+            if tally is not None:
+                batches = _tallied(batches, tally, "row_arrow")
         if self._pushed:
-            preds = [
-                _compile_filter(f, dschema, corrupt) for f in self._pushed
-            ]
-            rows = (row for row in rows if all(p(row) for p in preds))
-        # Probe arrow conversion on the first batch only: the rows are
-        # buffered, so an unmappable schema (or value shape) falls back to
-        # tuple mode with nothing lost. Later batches propagate errors —
-        # a mixed tuple/batch stream is not allowed.
-        buf = list(itertools.islice(rows, _BATCH_SIZE))
-        if not buf:
-            return
-        try:
-            first = next(_rows_to_arrow_batches(iter(buf), dschema))
-        except Exception:
-            n = 0
-            for n, row in enumerate(itertools.chain(buf, rows), 1):
-                yield row
-            if tally is not None:
-                tally.add("row_tuple", n)
-            return
-        for b in itertools.chain([first], _rows_to_arrow_batches(rows, dschema)):
-            if tally is not None:
-                tally.add("row_arrow", b.num_rows)
-            yield b
+            batches = _masked(
+                batches,
+                [_compile_filter_arrow(f, dschema, corrupt) for f in self._pushed],
+            )
+        yield from batches
 
 
 class XmlPushdownReader(XmlReader):
@@ -1451,7 +1245,7 @@ class XmlPushdownReader(XmlReader):
     the session conf)."""
 
     def pushFilters(self, filters):
-        """Accept every filter we can evaluate exactly on parsed rows
+        """Accept exactly the filters _compile_filter_arrow compiles
         (top-level scalar fields, SQL null semantics); the rest stay in
         the Spark plan. Stores raw Filter dataclasses — self must remain
         picklable, so compilation to closures happens in read()."""
@@ -1491,11 +1285,11 @@ class XmlPushdownReader(XmlReader):
             if attr is not None and len(attr) == 1 and attr[0] in pnames:
                 # constant per file: consumed by pruning whole partition
                 # groups in partitions(), never re-checked per row
-                if _compile_filter(f, pschema, corrupt) is not None:
+                if _compile_filter_arrow(f, pschema, corrupt) is not None:
                     self._ppushed.append(f)
                 else:
                     remaining.append(f)
-            elif _compile_filter(f, dschema, corrupt) is not None:
+            elif _compile_filter_arrow(f, dschema, corrupt) is not None:
                 self._pushed.append(f)
             else:
                 remaining.append(f)

@@ -14,8 +14,9 @@ Behavioral parity with the reference's TypeCast
 - is* sniffers with the digit-first shortcut and the d/D/f/F-suffix rejection
   (TypeCast.scala:203-266)
 
-All timestamps are returned as *naive UTC* datetimes; the engine pins
-``spark.sql.session.timeZone=UTC`` so these map to the correct instants.
+All timestamps are returned as UTC-aware datetimes (``tzinfo=UTC``): the
+instants they are, read the same by pyarrow and by Spark's Python
+converters in every process-local zone and session time zone.
 """
 
 from __future__ import annotations
@@ -114,13 +115,11 @@ def parse_xml_date(value: str, options: XmlOptions) -> Optional[_dt.date]:
 
 
 def _finish_ts(dt: _dt.datetime, default_tz: Optional[_dt.tzinfo]) -> _dt.datetime:
-    """Normalize to naive-UTC."""
+    """Normalize to a UTC-aware instant: the value Spark and pyarrow both
+    read as the instant it is, whatever the process-local zone."""
     if dt.tzinfo is None:
-        if default_tz is not None:
-            dt = dt.replace(tzinfo=default_tz)
-        else:
-            dt = dt.replace(tzinfo=_dt.timezone.utc)
-    return dt.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        dt = dt.replace(tzinfo=default_tz or _dt.timezone.utc)
+    return dt.astimezone(_dt.timezone.utc)
 
 
 def _zone_of(options: XmlOptions) -> Optional[_dt.tzinfo]:
@@ -137,7 +136,7 @@ def _zone_of(options: XmlOptions) -> Optional[_dt.tzinfo]:
 def parse_xml_timestamp(value: str, options: XmlOptions) -> Optional[_dt.datetime]:
     """The reference's 4 built-in formats (TypeCast.scala:114-129) are all
     ISO-8601 shapes ('T' or ' ' separator, optional fraction, optional
-    offset/'Z'); naive values are UTC. Then the user ``timestampFormat``
+    offset/'Z'); zone-less values are UTC. Then the user ``timestampFormat``
     with options.timezone applied when the pattern has no zone
     (TypeCast.scala:143-162)."""
     if value and value[0].isdigit():

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
+import time
 from typing import Any, Iterable, Iterator, List
 
 from pyspark.sql import types as T
@@ -47,11 +48,21 @@ def _java_strftime(fmt_pattern: str, dt: _dt.datetime) -> str:
     return dt.strftime(java_time_pattern_to_strptime(fmt_pattern))
 
 
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
 def format_timestamp(v: _dt.datetime, options: XmlOptions) -> str:
-    """ISO_INSTANT by default (naive values are UTC); custom pattern +
-    timezone honored (StaxXmlGenerator.scala:87-91)."""
+    """ISO_INSTANT by default; custom pattern + timezone honored
+    (StaxXmlGenerator.scala:87-91). A naive value is process-local time,
+    as PySpark hands ``TimestampType`` values to Python writers and UDFs;
+    it is read the way ``TimestampType.toInternal`` reads it (``mktime``,
+    which unlike ``astimezone`` also covers year 1)."""
     if v.tzinfo is None:
-        v = v.replace(tzinfo=_dt.timezone.utc)
+        v = _EPOCH + _dt.timedelta(
+            seconds=int(time.mktime(v.timetuple())), microseconds=v.microsecond
+        )
+    else:
+        v = v.astimezone(_dt.timezone.utc)
     if options.timestamp_format:
         if options.timezone:
             try:
@@ -61,7 +72,6 @@ def format_timestamp(v: _dt.datetime, options: XmlOptions) -> str:
             except Exception:
                 pass
         return _java_strftime(options.timestamp_format, v)
-    v = v.astimezone(_dt.timezone.utc)
     # strftime %Y does not zero-pad years < 1000; ISO_INSTANT requires it
     base = (
         f"{v.year:04d}-{v.month:02d}-{v.day:02d}"

@@ -278,92 +278,6 @@ def infer_record(
         return None
 
 
-class _InferFallback(Exception):
-    """Record needs the generic event-based inference (attributes, nesting,
-    or mixed content the flat fast path can't adjudicate)."""
-
-
-class FastFlatInfer:
-    """Fast single-record inference for FLAT attribute-free records: expat
-    callbacks sniff leaf types directly, skipping the generic event-list
-    walk. Falls back exactly on any attribute (root or child), any element
-    below field depth, or malformed input — so the inferred type is always
-    identical to infer_record's (repeated siblings still become ArrayType
-    with compatible_type-merged elements; fields sort by name)."""
-
-    __slots__ = ("options",)
-
-    def __init__(self, options: XmlOptions):
-        self.options = options
-
-    def infer(self, xml: str) -> T.DataType:
-        from xml.parsers import expat
-
-        options = self.options
-        strip_ns = options.ignore_namespace
-        name_types: dict = {}
-        state = [0]  # depth
-        cur: List[Optional[str]] = [None]
-        buf: List[str] = []
-
-        def start(name, attrs):
-            if attrs:
-                raise _InferFallback()
-            state[0] += 1
-            d = state[0]
-            if d == 2:
-                cur[0] = name.split(":")[-1] if strip_ns else name
-                buf.clear()
-            elif d > 2:
-                raise _InferFallback()
-
-        def end(name):
-            d = state[0]
-            if d == 2:
-                text = "".join(buf)
-                if text == "":
-                    t: T.DataType = T.NullType()
-                elif ev.is_whitespace(text):
-                    # infer_field whitespace branch (data nonempty)
-                    t = (
-                        T.NullType()
-                        if options.treat_empty_values_as_nulls
-                        else T.StringType()
-                    )
-                else:
-                    t = infer_from(text, options)
-                name_types.setdefault(cur[0], []).append(t)
-                cur[0] = None
-            state[0] = d - 1
-
-        def chard(data):
-            if state[0] == 2:
-                buf.append(data)
-
-        def hardening(*_a, **_k):
-            raise ev.XmlSecurityError("DTD/external entities are not supported")
-
-        p = expat.ParserCreate(namespace_separator=None)
-        p.buffer_text = True
-        p.StartElementHandler = start
-        p.EndElementHandler = end
-        p.CharacterDataHandler = chard
-        p.StartDoctypeDeclHandler = hardening
-        p.ExternalEntityRefHandler = hardening
-        p.Parse(xml, True)
-
-        fields = []
-        for name, dts in name_types.items():
-            if len(dts) > 1:
-                merged = dts[0]
-                for dt in dts[1:]:
-                    merged = compatible_type(merged, dt, self.options)
-                fields.append(T.StructField(name, T.ArrayType(merged), True))
-            else:
-                fields.append(T.StructField(name, dts[0], True))
-        return T.StructType(sorted(fields, key=lambda f: f.name))
-
-
 # --- columnar inference ----------------------------------------------------
 # For flat attribute-free records, type sniffing moves from per-cell Python
 # to per-column C regex classification: the masks below are DISJOINT and
@@ -532,7 +446,7 @@ def _fold_types(types: List[T.DataType], options: XmlOptions) -> T.DataType:
     return merged
 
 
-def _columnar_fold(records: Iterable[str], options: XmlOptions, fast) -> T.DataType:
+def _columnar_fold(records: Iterable[str], options: XmlOptions) -> T.DataType:
     """Fold record schemas batch-wise: pattern-matching flat records are
     typed per column (C regex + Arrow validity); everything else goes
     through the exact per-record path. Inference folds are commutative, so
@@ -574,10 +488,7 @@ def _columnar_fold(records: Iterable[str], options: XmlOptions, fast) -> T.DataT
                     matched = True
                     n_matched += 1
             if not matched:
-                try:
-                    rt: Optional[T.DataType] = fast.infer(xml)
-                except Exception:
-                    rt = infer_record(xml, options)
+                rt = infer_record(xml, options)
                 if rt is not None:
                     merged = compatible_type(merged, rt, options)
         if cols is not None:
@@ -599,28 +510,20 @@ def infer_schema_from_records(
     records: Iterable[str], options: XmlOptions
 ) -> T.StructType:
     """Driver-side / per-partition inference: fold record schemas with
-    compatible_type, then canonicalize (InferSchema.scala:67-101). Flat
-    attribute-free records take the FastFlatInfer path; under default
-    options whole batches of them are typed per COLUMN (C regex masks +
-    Arrow validity casts, exact fallback per cell)."""
+    compatible_type, then canonicalize (InferSchema.scala:67-101). Under
+    default options, whole batches of flat records are typed per COLUMN
+    (C regex masks + Arrow validity casts, exact fallback per cell)."""
     merged: T.DataType = T.StructType([])
     validator = None
     if options.row_validation_xsd_path:
         from spark_xml_spark.xsd import get_validator
 
         validator = get_validator(options.row_validation_xsd_path)
-    fast = FastFlatInfer(options)
     if validator is None and _columnar_infer_ok(options):
-        merged = _columnar_fold(records, options, fast)
+        merged = _columnar_fold(records, options)
     else:
         for xml in records:
-            rt: Optional[T.DataType]
-            try:
-                if validator is not None:
-                    validator(xml)
-                rt = fast.infer(xml)
-            except Exception:
-                rt = infer_record(xml, options, validator=validator)
+            rt = infer_record(xml, options, validator=validator)
             if rt is not None:
                 merged = compatible_type(merged, rt, options)
     out = canonicalize_type(merged)

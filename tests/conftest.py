@@ -1,4 +1,13 @@
+import os
+import time
+
 import pytest
+
+# Tier-1 compares collect() output (naive datetimes in the process-local
+# zone) with UTC wall times: pin the test process, and the Spark JVM and
+# Python workers it starts, to UTC whatever the host's zone.
+os.environ["TZ"] = "UTC"
+time.tzset()
 
 
 @pytest.fixture(scope="session")

@@ -24,7 +24,7 @@ def _table(batches):
 
 
 def _row_table(records, schema, opts):
-    rows = D._parsed_rows(iter(records), schema, opts)
+    rows = parser.parse_records(records, schema, opts)
     return _table(list(D._rows_to_arrow_batches(rows, schema, 512)))
 
 

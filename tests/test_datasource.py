@@ -427,8 +427,8 @@ class TestSessionTimezone:
             spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
             df = read_xml(spark, str(p), rowTag="r")
             got = df.collect()[0]["ts"]
-            # PySpark collect() returns UTC-naive datetimes; LA noon in June
-            # (UTC-7) is 19:00 UTC
+            # PySpark collect() returns naive datetimes in the process-local
+            # zone (UTC under conftest); LA noon in June (UTC-7) is 19:00 UTC
             assert got == dt.datetime(2024, 6, 15, 19, 0, 0)
         finally:
             spark.conf.set("spark.sql.session.timeZone", old)

@@ -1,6 +1,6 @@
 """Catalyst filter pushdown into the XML scan (Spark 4.1 Python Data
-Source pushFilters API). Pushed predicates are evaluated on the parsed
-row tuples inside the scan with SQL null semantics, so results must be
+Source pushFilters API). Pushed predicates are evaluated as Arrow masks
+on the scan's batches with SQL null semantics, so results must be
 bit-identical to Spark-side filtering — and the Filter node disappears
 from the physical plan. The raw-text prefilter additionally skips the
 parse for records that cannot match a string literal.
@@ -57,17 +57,34 @@ def test_no_option_no_pushdown_despite_conf(push):
 
 def test_pushdown_results_match_unpushed(push, tmp_path):
     """Every supported operator produces the same rows with and without
-    pushdown, including null-comparison semantics."""
+    pushdown, including null-comparison semantics, on every pushable type
+    and on both scan paths (a ``_corrupt_record`` column selects the row
+    path)."""
+    import datetime
+    import decimal
+
     import pyspark.sql.functions as F
 
+    def row(i):
+        return (
+            i,
+            None if i % 5 == 0 else f"name{i:03d}",
+            float(i) if i % 7 else None,
+            None if i % 6 == 0 else datetime.date(2020, 1, 1 + i % 10),
+            None if i % 8 == 0 else decimal.Decimal(i * 25) / 100,
+            None if i % 3 == 0 else i % 2 == 0,
+        )
+
     src = push.createDataFrame(
-        [(i, None if i % 5 == 0 else f"name{i:03d}", float(i) if i % 7 else None)
-         for i in range(100)],
-        "id long, name string, score double",
+        [row(i) for i in range(100)],
+        "id long, name string, score double, day date, amt decimal(10,2), "
+        "flag boolean",
     )
     out = str(tmp_path / "t_xml")
     write_xml(src, out, rowTag="item")
 
+    d = datetime.date
+    dec = decimal.Decimal
     conds = [
         F.col("id") > 90,
         F.col("name") == "name042",
@@ -78,17 +95,31 @@ def test_pushdown_results_match_unpushed(push, tmp_path):
         F.col("name").contains("042"),
         F.col("name").endswith("7"),
         F.col("id").isin(1, 2, 3) | (F.col("score") > 95.0),  # OR: not pushable
+        F.col("day") == d(2020, 1, 3),
+        F.col("day") < d(2020, 1, 3),
+        F.col("day").isin(d(2020, 1, 2), d(2020, 1, 5)),
+        F.col("day").isNull(),
+        F.col("amt") == dec("2.50"),
+        F.col("amt") < dec("5.00"),
+        F.col("amt").isin(dec("1.25"), dec("10.00")),
+        F.col("amt").isNull(),
+        F.col("flag") == True,  # noqa: E712
+        F.col("flag") < True,
+        F.col("flag").isin(False),
+        F.col("flag").isNull(),
     ]
-    schema = src.schema
-    for cond in conds:
+    for schema in (src.schema, _with_corrupt(src.schema)):
         plain = read_xml(push, out, rowTag="item", schema=schema)
-        expected = sorted(map(tuple, plain.filter(cond).collect()))
-        pushed = read_xml(
-            push, out, rowTag="item", schema=schema, filterPushdown="true"
-        )
-        got = sorted(map(tuple, pushed.filter(cond).collect()))
-        assert got == expected, str(cond)
-        assert expected, f"test condition selected nothing: {cond}"
+        for cond in conds:
+            expected = sorted(map(tuple, plain.filter(cond).collect()))
+            # one pushed relation per query: a reused one replays the
+            # filters an earlier query pushed (see the module docstring)
+            pushed = read_xml(
+                push, out, rowTag="item", schema=schema, filterPushdown="true"
+            )
+            got = sorted(map(tuple, pushed.filter(cond).collect()))
+            assert got == expected, (str(cond), schema.names)
+            assert expected, f"test condition selected nothing: {cond}"
 
 
 def test_pushdown_failfast_still_raises(push, tmp_path):
@@ -156,15 +187,16 @@ def test_pushdown_through_sql_ddl(push, tmp_path):
 
 def _with_corrupt(schema):
     """``schema`` plus a ``_corrupt_record`` column, which sends the scan
-    down the row path (row-tuple predicates instead of Arrow masks)."""
+    down the row path (the generic parser instead of the columnar tier)."""
     return T.StructType(
         schema.fields + [T.StructField("_corrupt_record", T.StringType())]
     )
 
 
 def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
-    """Pushed filters evaluated as pyarrow.compute masks on the columnar
-    path must select exactly the rows the row-tuple predicates select."""
+    """The columnar and row scan paths, each masking its own Arrow
+    batches, must select the same rows, and exactly the rows computed by
+    hand."""
     df = spark.createDataFrame(
         [(k, f"n{k % 7}", float(k) if k % 5 else None) for k in range(400)],
         "k bigint, name string, v double",

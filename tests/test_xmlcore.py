@@ -15,6 +15,8 @@ from spark_xml_spark.options import XmlOptions, DROPMALFORMED, FAILFAST
 from spark_xml_spark.xmlcore import casts, infer, parser, tokenizer
 from spark_xml_spark.xmlcore.generator import row_to_xml
 
+UTC = dt.timezone.utc
+
 
 def ddl(schema: T.StructType) -> str:
     return schema.simpleString()
@@ -50,27 +52,28 @@ def test_cast_scalars():
 
 
 def test_cast_timestamps():
+    # parsed timestamps are UTC-aware instants
     o = XmlOptions()
     assert casts.cast_to("2002-05-30 21:46:54", T.TimestampType(), o) == dt.datetime(
-        2002, 5, 30, 21, 46, 54
+        2002, 5, 30, 21, 46, 54, tzinfo=UTC
     )
     assert casts.cast_to("2002-05-30T21:46:54", T.TimestampType(), o) == dt.datetime(
-        2002, 5, 30, 21, 46, 54
+        2002, 5, 30, 21, 46, 54, tzinfo=UTC
     )
     assert casts.cast_to("2002-05-30T21:46:54+06:00", T.TimestampType(), o) == dt.datetime(
-        2002, 5, 30, 15, 46, 54
+        2002, 5, 30, 15, 46, 54, tzinfo=UTC
     )
     assert casts.cast_to("2002-05-30T21:46:54.1234Z", T.TimestampType(), o) == dt.datetime(
-        2002, 5, 30, 21, 46, 54, 123400
+        2002, 5, 30, 21, 46, 54, 123400, tzinfo=UTC
     )
     # custom format with zone abbreviation (XmlSuite date/time matrix)
     o2 = XmlOptions(timestamp_format="MM-dd-yyyy HH:mm:ss z")
     got = casts.cast_to("12-03-2011 10:15:30 PST", T.TimestampType(), o2)
-    assert got == dt.datetime(2011, 12, 3, 18, 15, 30)  # epoch 1322936130
+    assert got == dt.datetime(2011, 12, 3, 18, 15, 30, tzinfo=UTC)  # epoch 1322936130
     # format without zone: timezone option applies
     o3 = XmlOptions(timestamp_format="yyyy/MM/dd HH:mm:ss", timezone="UTC")
     assert casts.cast_to("2011/12/03 10:15:30", T.TimestampType(), o3) == dt.datetime(
-        2011, 12, 3, 10, 15, 30
+        2011, 12, 3, 10, 15, 30, tzinfo=UTC
     )
 
 
@@ -529,7 +532,7 @@ def test_generator_roundtrip_nested_arrays_nulls():
         ]
     )
     o = XmlOptions(row_tag="r")
-    row = ([1, 2, 3], ("x", "y"), None, dt.datetime(2002, 5, 30, 21, 46, 54))
+    row = ([1, 2, 3], ("x", "y"), None, dt.datetime(2002, 5, 30, 21, 46, 54, tzinfo=UTC))
     xml = row_to_xml(schema, row, o)
     assert "<a>1</a><a>2</a><a>3</a>" in xml
     assert '<s attr="x">' in xml
