@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 import random
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Iterator, List, Optional, Tuple
 
 from pyspark.sql import types as T
@@ -297,10 +297,12 @@ class XmlInputPartition(InputPartition):
     # One task reads these splits sequentially. Small files are bin-packed
     # Spark-style (FilePartition/maxSplitBytes semantics) so a million
     # 1 MB files does not mean a million tasks; a large file's byte-range
-    # splits stay one per partition. ``pvals`` carries the Hive-style
-    # partition-directory values shared by every split in the partition
-    # (splits are packed within one partition-value group only).
-    splits: Tuple[Tuple[str, int, int, Optional[str], bool], ...]
+    # splits stay one per partition. Each split is a tokenizer.FileSplit
+    # as a tuple. ``pvals`` carries the raw Hive-style partition-directory
+    # strings shared by every split in the partition (splits are packed
+    # within one partition-value group only); read() casts them to the
+    # read schema's own types.
+    splits: Tuple[Tuple[str, int, int, Optional[str], bool, int], ...]
     pvals: Tuple = ()
 
 
@@ -338,11 +340,49 @@ def _pack_splits(splits, max_split_bytes: int, open_cost: int,
         parts.append(cur)
     return [
         XmlInputPartition(
-            tuple((s.path, s.start, s.end, s.compression, s.whole_file) for s in g),
+            tuple(
+                (s.path, s.start, s.end, s.compression, s.whole_file, s.eof)
+                for s in g
+            ),
             pvals,
         )
         for g in parts
     ]
+
+
+def _exposes(schema: T.StructType, keys) -> bool:
+    """Whether the read schema carries the partition columns ``keys``:
+    True when they are its LAST fields in order, False when it names none
+    of them (data-only output — an explicit schema without partition
+    columns). Any other placement raises."""
+    if not keys:
+        return False
+    tail = [f.name for f in schema.fields[-len(keys):]]
+    if tail == list(keys):
+        return True
+    if set(keys) & set(schema.fieldNames()):
+        raise ValueError(
+            f"partition columns {list(keys)} must be the LAST fields of the "
+            f"schema, in discovery order; got schema tail {tail}"
+        )
+    return False
+
+
+def _pvals_batch(rows, fields):
+    """Raw partition-value tuples -> one Arrow batch, a row per tuple,
+    each column cast to its read-schema field's Arrow type — the values
+    partition pruning tests and read() appends, as Spark's file sources
+    cast partition values to the declared schema."""
+    import pyarrow as pa
+
+    schema = to_arrow_schema(T.StructType(list(fields)))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(col, pa.string()).cast(t)
+            for col, t in zip(zip(*rows), schema.types)
+        ],
+        schema=schema,
+    )
 
 
 # --- Arrow batch output ----------------------------------------------------
@@ -965,12 +1005,11 @@ class XmlReader(DataSourceReader):
         return None
 
     def _discover(self, need_files: bool = False):
-        """Driver-side Hive-style partition discovery, cached on self.
-        pushFilters (to classify partition filters) and partitions() (to
-        group/prune) both need it; partitions() drops the FILE list
-        afterwards so executor pickles stay slim, while the small
-        ``_pcols`` result stays cached — executors consult it without
-        ever touching the filesystem."""
+        """Driver-side Hive-style partition discovery, cached on self:
+        pushFilters (to classify partition filters) and partitions() both
+        need it; partitions() drops the FILE list afterwards so executor
+        pickles stay slim. The read path never consults it — partitions
+        carry their raw values and read() types them by the schema."""
         if getattr(self, "_pcols", None) is None or (
             need_files and getattr(self, "_pfiles", None) is None
         ):
@@ -982,38 +1021,7 @@ class XmlReader(DataSourceReader):
             )
         return getattr(self, "_pfiles", None), self._pcols
 
-    def _attach_cols(self):
-        """The partition columns this scan actually EXPOSES: the trailing
-        schema fields matching the discovered partition keys, in order.
-        [] when the schema omits them (data-only output — a pruned
-        projection or an explicit schema without partition columns)."""
-        _, pcols = self._discover()
-        if not pcols:
-            return []
-        names = [n for n, _ in pcols]
-        tail = [f.name for f in self._schema.fields[-len(pcols):]]
-        if tail == names:
-            return pcols
-        present = [n for n in names if n in {f.name for f in self._schema.fields}]
-        if present:
-            raise ValueError(
-                f"partition columns {names} must be the LAST fields of the "
-                f"schema, in discovery order; got schema tail {tail}"
-            )
-        return []
-
-    def _data_schema(self) -> T.StructType:
-        """The schema the XML parser fills — the full scan schema minus
-        the attached partition columns (constants from the directory
-        names, never parsed from file content)."""
-        attach = self._attach_cols()
-        if not attach:
-            return self._schema
-        return T.StructType(self._schema.fields[: -len(attach)])
-
     def partitions(self) -> List[InputPartition]:
-        xopts = XmlOptions.from_dict(self._opts_dict)
-        open_cost = int(self._opt("openCostBytes") or 4 * 1024 * 1024)
         try:
             pfiles, pcols = self._discover(need_files=True)
         except OSError as exc:
@@ -1027,21 +1035,59 @@ class XmlReader(DataSourceReader):
                 # listing; degrading to the unpartitioned path here would
                 # silently never apply them — wrong rows, not an error
                 raise
-            pfiles, pcols = None, []
-        if pcols:
-            return self._partitions_partitioned(
-                xopts, open_cost, pfiles, pcols
-            )
-        listed = [(f, sz) for f, sz, _ in pfiles] if pfiles is not None else None
-        sizes = dict(listed) if listed is not None else {}
-        target = self._split_target(open_cost, listed)
-        out = _pack_splits(
-            tokenizer.plan_splits(self._path, xopts.charset, target, files=listed),
-            target,
-            open_cost,
-            sizes,
-        )
+            pfiles = [
+                (f, sz, ()) for f, sz in tokenizer._expand_with_sizes(self._path)
+            ]
+            pcols = []
         self._pfiles = None  # keep executor pickles slim
+        return self._plan(pfiles, [n for n, _ in pcols])
+
+    def _plan(
+        self, files, keys, snapshot: bool = False
+    ) -> List[XmlInputPartition]:
+        """The split planner of the batch and the stream reader. ``files``
+        is [(file, size, raw partition values)], ``keys`` the partition
+        column names. Splits pack WITHIN one partition-value group (a
+        task's rows share one value tuple; an unpartitioned layout is the
+        single group ``()``), pushed partition filters prune whole groups
+        before any byte is read (the 100 TB point of a partitioned
+        layout), and the surviving groups' raw values ride the partitions
+        when the schema exposes ``keys``. ``snapshot`` makes every split
+        end its file at the listed size: a stream offset's replay bound."""
+        xopts = XmlOptions.from_dict(self._opts_dict)
+        open_cost = int(self._opt("openCostBytes") or 4 * 1024 * 1024)
+        target = self._split_target(open_cost, [(f, sz) for f, sz, _ in files])
+        groups: dict = {}
+        for f, sz, pv in files:
+            groups.setdefault(pv, []).append((f, sz))
+        values = sorted(
+            groups, key=lambda t: tuple("" if v is None else v for v in t)
+        )
+        attach = _exposes(self._schema, keys)
+        pfields = self._schema.fields[len(self._schema.fields) - len(keys):]
+        masks = [
+            _compile_filter_arrow(f, T.StructType(pfields), "\x00none")
+            for f in getattr(self, "_ppushed", [])
+        ]
+        keep = [True] * len(values)
+        if masks and values:
+            # the scan's own Arrow masks over one row per value group
+            keep = _mask(_pvals_batch(values, pfields), masks).to_pylist()
+        out: List[XmlInputPartition] = []
+        for pv, kept in zip(values, keep):
+            if not kept:
+                continue  # pruned: no file in this group is opened
+            sizes = dict(groups[pv])
+            splits = tokenizer.plan_splits(
+                self._path, xopts.charset, target, files=groups[pv]
+            )
+            if snapshot:
+                splits = [replace(s, eof=sizes[s.path]) for s in splits]
+            out.extend(
+                _pack_splits(
+                    splits, target, open_cost, sizes, pv if attach else ()
+                )
+            )
         return out
 
     def _split_target(self, open_cost: int, listed) -> int:
@@ -1064,69 +1110,6 @@ class XmlReader(DataSourceReader):
             par = os.cpu_count() or 8
         bytes_per_core = total // max(par, 1)
         return min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
-
-    def _partitions_partitioned(
-        self, xopts, open_cost: int, pfiles, pcols
-    ) -> List[InputPartition]:
-        """Split planning for a Hive-partitioned layout: splits pack
-        WITHIN one partition-value group (a task's rows share one value
-        tuple), pushed partition filters prune whole groups before any
-        byte is read (the 100 TB point of a partitioned layout), and the
-        surviving groups' typed values ride the partition objects."""
-        from spark_xml_spark.sources import partitions as pmod
-
-        attach = self._attach_cols()
-        pschema = T.StructType(
-            [
-                T.StructField(
-                    n,
-                    {"bigint": T.LongType(), "double": T.DoubleType()}.get(
-                        t, T.StringType()
-                    ),
-                )
-                for n, t in pcols
-            ]
-        )
-        groups: dict = {}
-        for f, sz, pv in pfiles:
-            groups.setdefault(pv, []).append((f, sz))
-        keys = sorted(
-            groups, key=lambda t: tuple("" if v is None else v for v in t)
-        )
-        typed = [
-            tuple(pmod.typed_value(v, t) for v, (_n, t) in zip(pv, pcols))
-            for pv in keys
-        ]
-        keep = [True] * len(keys)
-        masks = [
-            _compile_filter_arrow(f, pschema, "\x00none")
-            for f in getattr(self, "_ppushed", [])
-        ]
-        if masks and keys:
-            # the scan's own Arrow masks over one row per value group
-            keep = _mask(
-                next(_rows_to_arrow_batches(typed, pschema, len(typed))), masks
-            ).to_pylist()
-        all_listed = [(f, sz) for f, sz, _ in pfiles]
-        target = self._split_target(open_cost, all_listed)
-        out: List[InputPartition] = []
-        for pv, pvals, kept in zip(keys, typed, keep):
-            if not kept:
-                continue  # pruned: no file in this group is opened
-            listed = groups[pv]
-            out.extend(
-                _pack_splits(
-                    tokenizer.plan_splits(
-                        self._path, xopts.charset, target, files=listed
-                    ),
-                    target,
-                    open_cost,
-                    dict(listed),
-                    pvals=pvals if attach else (),
-                )
-            )
-        self._pfiles = None  # keep executor pickles slim
-        return out
 
     def read(self, partition: XmlInputPartition) -> Iterator:
         tally = _TierTally() if _tier_stats_dir() else None
@@ -1151,9 +1134,8 @@ class XmlReader(DataSourceReader):
             pyarrow.array(["x"], pyarrow.string())
             tally.add("setup", 0, _time.perf_counter() - t0)
             gen = self._read_tallied(partition, tally)
-        pv = getattr(partition, "pvals", ())
-        if pv:
-            gen = self._attach_pvals(gen, pv)
+        if partition.pvals:
+            gen = self._attach_pvals(gen, partition.pvals)
         yield from gen
 
     def _read_tallied(self, partition, tally) -> Iterator:
@@ -1164,32 +1146,28 @@ class XmlReader(DataSourceReader):
 
     def _attach_pvals(self, gen, pv) -> Iterator:
         """Append the partition-directory constants to every output batch
-        as constant arrays: the parser never sees these columns (they are
-        not in the file content) — the analogue of Spark appending
-        partition values outside the FileFormat reader."""
+        as constant arrays typed as the schema's last ``len(pv)`` fields:
+        the parser never sees these columns (they are not in the file
+        content) — the analogue of Spark appending partition values
+        outside the FileFormat reader."""
         import pyarrow as pa
 
-        attach = self._attach_cols()
-        pa_types = {"bigint": pa.int64(), "double": pa.float64()}
-        names = [f.name for f in self._data_schema().fields] + [
-            n for n, _ in attach
-        ]
+        consts = _pvals_batch([pv], self._schema.fields[-len(pv):]).columns
+        names = self._schema.fieldNames()
         for batch in gen:
-            arrays = list(batch.columns)
-            for v, (_n, t) in zip(pv, attach):
-                ptype = pa_types.get(t, pa.string())
-                arrays.append(
-                    pa.nulls(batch.num_rows, ptype)
-                    if v is None
-                    else pa.array([v] * batch.num_rows, ptype)
-                )
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield pa.RecordBatch.from_arrays(
+                list(batch.columns)
+                + [pa.repeat(c[0], batch.num_rows) for c in consts],
+                names=names,
+            )
 
     def _read_impl(self, partition: XmlInputPartition, tally) -> Iterator:
         """One pipeline: records -> Arrow batches (columnar or row tier)
-        -> pushed-filter masks; read() appends the partition constants."""
+        -> pushed-filter masks; read() appends the partition constants.
+        The batch and the stream reader both read through it."""
         xopts = XmlOptions.from_dict(self._opts_dict)
-        dschema = self._data_schema()
+        fields = self._schema.fields
+        dschema = T.StructType(fields[: len(fields) - len(partition.pvals)])
         corrupt = xopts.column_name_of_corrupt_record
         splits = [tokenizer.FileSplit(*s) for s in partition.splits]
         records = (
@@ -1258,26 +1236,19 @@ class XmlPushdownReader(XmlReader):
         self._ppushed = []  # partition-column filters -> file pruning
         remaining = []
         try:
-            attach = self._attach_cols()
+            _, pcols = self._discover()
         except OSError as exc:
             from spark_xml_spark.sources.partitions import NoMatchingFilesError
 
             if isinstance(exc, NoMatchingFilesError):
                 raise
-            attach = []
-        pnames = {n for n, _ in attach}
-        pschema = T.StructType(
-            [
-                T.StructField(
-                    n,
-                    {"bigint": T.LongType(), "double": T.DoubleType()}.get(
-                        t, T.StringType()
-                    ),
-                )
-                for n, t in attach
-            ]
-        )
-        dschema = self._data_schema() if attach else self._schema
+            pcols = []
+        keys = [n for n, _ in pcols]
+        fields = self._schema.fields
+        n = len(fields) - (len(keys) if _exposes(self._schema, keys) else 0)
+        pschema = T.StructType(fields[n:])
+        dschema = T.StructType(fields[:n])
+        pnames = set(pschema.fieldNames())
         for f in filters:
             attr = getattr(f, "attribute", None)
             if attr is None:
@@ -1309,12 +1280,12 @@ class XmlCommitMessage(WriterCommitMessage):
 def iter_partition_groups(schema: T.StructType, iterator, pby: List[str]):
     """Split a row iterator into Hive-style partition groups: yields
     (relative directory, data-only schema, group-row iterator) per run of
-    equal partition-column values. Shared by the batch and streaming XML
-    writers. Values escape like Spark's escapePathName (NULL ->
-    __HIVE_DEFAULT_PARTITION__); partition columns are dropped from the
-    yielded rows — the partitioned read re-derives them from the
-    directory names. The caller MUST exhaust each group's iterator
-    before advancing (both writers stream a group straight to a file).
+    equal partition-column values, for write_task_files. Values escape
+    like Spark's escapePathName (NULL -> __HIVE_DEFAULT_PARTITION__);
+    partition columns are dropped from the yielded rows — the
+    partitioned read re-derives them from the directory names. The
+    caller MUST exhaust each group's iterator before advancing (a group
+    streams straight to a file).
     Files roll on value change: sorted-within-partition input gives one
     file per (task, value); unsorted input stays correct but produces
     more files. O(1) memory either way."""
@@ -1363,7 +1334,7 @@ def write_document_file(
 ):
     """Stream one complete XML document file into ``directory`` (created
     if needed), honoring the compression codec; returns (file name, row
-    count). Shared by the batch and streaming XML writers."""
+    count). One per write_task_files group."""
     import io
 
     from spark_xml_spark.xmlcore import codecs as _codecs
@@ -1402,6 +1373,33 @@ def write_document_file(
     return name, count
 
 
+def write_task_files(path: str, schema: T.StructType, iterator, opts: dict):
+    """One writer task's body, shared by the batch and streaming XML
+    writers: one document file for the task, or with the ``partitionBy``
+    option a Hive-style partitioned write (iter_partition_groups) whose
+    partition columns become <col>=<value>/ directories and are NOT
+    written into the XML content — the read side re-derives them from the
+    directory names. Returns [(file relative to ``path``, row count)]."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else 0
+    xopts = XmlOptions.from_dict(opts)
+    raw = opts.get("partitionBy") or opts.get("partitionby")
+    pby = [c.strip() for c in raw.split(",") if c.strip()] if raw else []
+    if not pby:
+        return [write_document_file(path, schema, iterator, xopts, pid, 0)]
+    written = []
+    for seq, (reldir, dschema, rows) in enumerate(
+        iter_partition_groups(schema, iterator, pby)
+    ):
+        name, n = write_document_file(
+            path.rstrip("/") + "/" + reldir, dschema, rows, xopts, pid, seq
+        )
+        written.append((reldir + "/" + name, n))
+    return written
+
+
 class XmlWriter(DataSourceWriter):
     """One complete XML document per partition (XmlFile.scala:104-155);
     SaveMode semantics follow DefaultSource.scala:83-106 (Append unsupported,
@@ -1437,40 +1435,14 @@ class XmlWriter(DataSourceWriter):
             # _SUCCESS/hidden files must not survive into the new output
             _fs.delete_dir(self._path)
 
-    def _partition_by(self) -> List[str]:
-        raw = self._opts_dict.get("partitionBy") or self._opts_dict.get(
-            "partitionby"
-        )
-        return [c.strip() for c in raw.split(",") if c.strip()] if raw else []
-
     def write(self, iterator) -> XmlCommitMessage:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        xopts = XmlOptions.from_dict(self._opts_dict)
-        pby = self._partition_by()
-        if not pby:
-            name, count = write_document_file(
-                self._path, self._schema, iterator, xopts, pid, 0
-            )
-            return XmlCommitMessage(files=(name,), count=count)
-        # Hive-style partitioned write (iter_partition_groups): partition
-        # columns become <col>=<value>/ directories and are NOT written
-        # into the XML content — the read side re-derives them from the
-        # directory names.
-        files: List[str] = []
-        total = 0
-        for seq, (reldir, dschema, rows) in enumerate(
-            iter_partition_groups(self._schema, iterator, pby)
-        ):
-            name, n = write_document_file(
-                self._path.rstrip("/") + "/" + reldir,
-                dschema, rows, xopts, pid, seq,
-            )
-            files.append(reldir + "/" + name)
-            total += n
-        return XmlCommitMessage(files=tuple(files), count=total)
+        written = write_task_files(
+            self._path, self._schema, iterator, self._opts_dict
+        )
+        return XmlCommitMessage(
+            files=tuple(f for f, _ in written),
+            count=sum(n for _, n in written),
+        )
 
     def commit(self, messages) -> None:
         pass

@@ -21,7 +21,9 @@ Semantics (matching Spark's discovery where noted):
 - Column types are inferred over all discovered values: bigint if every
   non-null value parses as a 64-bit integer, else double if every one
   parses as a float, else string. (Spark additionally infers dates; a
-  date-looking value types as string here — cast in the query.)
+  date-looking value types as string here — cast in the query.) These
+  types only shape an inferred schema: the reader casts the raw strings
+  to whatever type the read schema declares.
 """
 
 from __future__ import annotations
@@ -232,17 +234,6 @@ def discover_partitions(
         (f, sz, tuple(v for _, v in pv)) for f, sz, pv in walked
     ]
     return files, list(zip(keys, types))
-
-
-def typed_value(raw: Optional[str], spark_type: str):
-    """Convert one raw partition-value string to its inferred type."""
-    if raw is None:
-        return None
-    if spark_type == "bigint":
-        return int(raw)
-    if spark_type == "double":
-        return float(raw)
-    return raw
 
 
 def append_partition_fields(schema, pcols):

@@ -3,9 +3,11 @@ streaming API.
 
 Reader: a file-tailing source (the shape of Spark's own FileStreamSource).
 Offsets are the set of files already delivered, as a
-``{"files": {path: size}}`` dict; each microbatch plans byte-range splits
-for newly appeared files only, so the per-batch work distributes exactly
-like the batch scan (same tokenizer, same ownership rule). This is the
+``{"files": {path: size}}`` dict. A micro-batch is a batch read over that
+batch's new files: ``partitions(start, end)`` hands them to the batch
+reader's planner (``XmlReader._plan``) with each file ending at its
+snapshot size, and ``read`` is the batch reader's ``read`` — same splits,
+packing, Arrow tiers and partition columns as ``spark.read``. This is the
 full ``DataSourceStreamReader`` (executor-side reads) — not the
 driver-side Simple variant — so batch size is bounded by split planning,
 not driver throughput.
@@ -30,36 +32,24 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from spark_xml_spark.options import XmlOptions
-from spark_xml_spark.xmlcore import parser, tokenizer
+from spark_xml_spark.sources.datasource import (
+    XmlInputPartition,
+    XmlReader,
+    _listing_opts,
+    write_task_files,
+)
 
 _LOG = logging.getLogger(__name__)
-
-
-@dataclass
-class XmlStreamPartition(InputPartition):
-    # One task reads these splits sequentially; each tuple is
-    # (path, start, end, compression, whole_file, snap_size) with
-    # snap_size the file size recorded in the committed offset. Small
-    # files are bin-packed like the batch reader's FilePartition
-    # semantics: a micro-batch that discovers thousands of small files
-    # must not schedule thousands of tasks. An empty tuple marks an
-    # empty batch (Spark requires >= 1 partition).
-    splits: tuple
 
 
 class XmlStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict, schema: T.StructType):
         self._opts_dict = dict(options)
-        self._schema = schema
         self._path = options.get("path") or options.get("location")
         if not self._path:
             raise ValueError("path option is required for the xml stream source")
-        self._target = int(
-            options.get("targetSplitSize")
-            or options.get("targetsplitsize")
-            or 128 * 1024 * 1024
-        )
+        # plans and reads every micro-batch (one read path with batch)
+        self._reader = XmlReader(self._opts_dict, schema)
         mf = options.get("maxFilesPerTrigger") or options.get("maxfilespertrigger")
         mb = options.get("maxBytesPerTrigger") or options.get("maxbytespertrigger")
         self._max_files = int(mf) if mf is not None else None
@@ -100,10 +90,6 @@ class XmlStreamReader(DataSourceStreamReader):
                 # readers get distinct cursor files, while the same
                 # reader re-derives the same name across restarts.
                 import hashlib
-
-                from spark_xml_spark.sources.datasource import (
-                    _listing_opts,
-                )
 
                 gf, rl = _listing_opts(self._opts_dict)
                 ident = "|".join(
@@ -283,8 +269,6 @@ class XmlStreamReader(DataSourceStreamReader):
         try:
             # partition-aware listing: a Hive-style layout's nested files
             # are discovered recursively; flat dirs list exactly as before
-            from spark_xml_spark.sources.datasource import _listing_opts
-
             gf, rl = _listing_opts(self._opts_dict)
             listed = [
                 (f, sz)
@@ -380,14 +364,18 @@ class XmlStreamReader(DataSourceStreamReader):
             # restart replay: the engine's position is this batch's end
             self._base = dict((end or {}).get("files") or {})
         self._cursor_save()
+        from spark_xml_spark.sources import partitions as pmod
         from spark_xml_spark.xmlcore import fs
 
         seen = set((start or {}).get("files", {}))
         end_files = (end or {}).get("files", {})
-        new_files = [p for p in end_files if p not in seen]
-        raw: List[tuple] = []
-        xopts = XmlOptions.from_dict(self._opts_dict)
-        for f in new_files:
+        # recursiveFileLookup disables partition inference (batch parity):
+        # name=value directories are plain directories, never value sources
+        _, recursive = _listing_opts(self._opts_dict)
+        files: List[tuple] = []
+        keys: tuple = ()
+        changed = set()
+        for f in (p for p in end_files if p not in seen):
             # Deterministic replay: the offset recorded the file's size at
             # snapshot time. Plan/clamp splits against THAT size, never the
             # current one — a file that grew since yields identical rows; a
@@ -400,113 +388,24 @@ class XmlStreamReader(DataSourceStreamReader):
                 continue
             if cur < snap:
                 continue
-            for s in tokenizer.plan_splits(f, xopts.charset, self._target):
-                if s.whole_file:
-                    if cur != snap:
-                        # compressed/whole-file content changed; not replayable
-                        continue
-                    raw.append((s.path, s.start, s.end, s.compression or "", True, snap))
-                else:
-                    if s.start >= snap:
-                        continue
-                    raw.append(
-                        (s.path, s.start, min(s.end, snap), s.compression or "", False, snap)
-                    )
-        # bin-pack small splits so a many-small-files batch stays O(cores)
-        # tasks (same maxSplitBytes/open-cost shape as the batch reader)
-        open_cost = int(
-            self._opts_dict.get("openCostBytes")
-            or self._opts_dict.get("opencostbytes")
-            or 4 * 1024 * 1024
-        )
-
-        def _size(t):
-            if t[2] >= 0:
-                return t[2] - t[1]
-            return t[5] if t[5] >= 0 else self._target
-
-        total = sum(_size(t) + open_cost for t in raw)
-        par = int(
-            self._opts_dict.get("minPartitions")
-            or self._opts_dict.get("minpartitions")
-            or (os.cpu_count() or 8)
-        )
-        pack_target = min(self._target, max(open_cost, total // max(par, 1)))
-        raw.sort(key=lambda t: (-_size(t), t[0], t[1]))
-        parts: List[XmlStreamPartition] = []
-        cur_group: List[tuple] = []
-        cur_cost = 0
-        for t in raw:
-            sz = _size(t)
-            if cur_group and cur_cost + sz > pack_target:
-                parts.append(XmlStreamPartition(tuple(cur_group)))
-                cur_group, cur_cost = [], 0
-            cur_group.append(t)
-            cur_cost += sz + open_cost
-        if cur_group:
-            parts.append(XmlStreamPartition(tuple(cur_group)))
+            if cur != snap:
+                changed.add(f)
+            kv = [] if recursive else pmod.partition_values_of(self._path, f)
+            keys = tuple(k for k, _ in kv)
+            files.append((f, snap, tuple(v for _, v in kv)))
+        parts = self._reader._plan(files, keys, snapshot=True)
+        for p in parts:
+            # a whole-file (compressed) split cannot be cut at the snapshot
+            # size: a file that changed since is not replayable
+            p.splits = tuple(
+                s for s in p.splits if not (s[4] and s[0] in changed)
+            )
         # Spark requires at least one partition per batch; an empty batch
         # gets an empty marker partition.
-        if not parts:
-            parts = [XmlStreamPartition(())]
-        return parts
+        return [p for p in parts if p.splits] or [XmlInputPartition(())]
 
-    def _attach_fields(self, filepath: str):
-        """Schema-tail fields matching this file's path-derived partition
-        keys -> [(index-in-schema, name, typed value)], [] when the
-        layout (or the declared schema) is unpartitioned. Pure path
-        logic; values convert per the DECLARED schema type (streams
-        always run with an explicit schema)."""
-        from spark_xml_spark.sources import partitions as pmod
-
-        from spark_xml_spark.sources.datasource import _listing_opts
-
-        _, recursive = _listing_opts(self._opts_dict)
-        if recursive:
-            # recursiveFileLookup disables partition inference (batch
-            # parity): name=value directory names are plain directories,
-            # never value sources — the field parses from file content
-            return []
-        kv = pmod.partition_values_of(self._path, filepath)
-        if not kv:
-            return []
-        names = [f.name for f in self._schema.fields]
-        keys = [k for k, _ in kv]
-        if names[-len(keys):] != keys:
-            return []  # schema does not expose the partition columns
-        out = []
-        for (k, v), f in zip(kv, self._schema.fields[-len(keys):]):
-            if v is None:
-                out.append((k, None))
-            elif isinstance(f.dataType, (T.LongType, T.IntegerType)):
-                out.append((k, int(v)))
-            elif isinstance(f.dataType, (T.DoubleType, T.FloatType)):
-                out.append((k, float(v)))
-            else:
-                out.append((k, v))
-        return out
-
-    def read(self, partition: XmlStreamPartition) -> Iterator[tuple]:
-        xopts = XmlOptions.from_dict(self._opts_dict)
-
-        def _rows():
-            for path, start, end, compression, whole_file, snap in partition.splits:
-                split = tokenizer.FileSplit(
-                    path, start, end, compression or None, whole_file, eof=snap
-                )
-                attach = self._attach_fields(path)
-                if attach:
-                    dschema = T.StructType(
-                        self._schema.fields[: -len(attach)]
-                    )
-                    pv = tuple(v for _, v in attach)
-                else:
-                    dschema, pv = self._schema, ()
-                records = tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
-                for row in parser.parse_records(records, dschema, xopts):
-                    yield tuple(row) + pv
-
-        return _rows()
+    def read(self, partition: XmlInputPartition) -> Iterator:
+        return self._reader.read(partition)
 
     def commit(self, end: dict) -> None:
         self._learn_planned(end)
@@ -527,54 +426,19 @@ class XmlStreamWriter(DataSourceStreamWriter):
         if not self._path:
             raise ValueError("path option is required for the xml stream sink")
 
-    def _partition_by(self) -> List[str]:
-        raw = self._opts_dict.get("partitionBy") or self._opts_dict.get(
-            "partitionby"
-        )
-        return [c.strip() for c in raw.split(",") if c.strip()] if raw else []
-
     def write(self, iterator) -> XmlStreamCommitMessage:
-        from pyspark import TaskContext
-
-        from spark_xml_spark.sources.datasource import (
-            iter_partition_groups,
-            write_document_file,
-        )
         from spark_xml_spark.xmlcore import fs
 
-        xopts = XmlOptions.from_dict(self._opts_dict)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        pby = self._partition_by()
-        files: List[str] = []
-        if not pby:
-            name, count = write_document_file(
-                self._path, self._schema, iterator, xopts, pid, 0
-            )
-            if count:
-                files.append(name)
-            else:  # empty micro-batch partition: no empty-document litter
-                fs.delete_file(self._path.rstrip("/") + "/" + name)
-        else:
-            # Hive-style partitioned streaming sink: same col=value/ layout,
-            # value escaping and content elision as the batch writer (the
-            # partition-aware stream/batch readers re-derive the columns).
-            # Batches APPEND files into the partition dirs; sort each
-            # micro-batch within partitions on the partition columns to get
-            # one file per (task, value, batch).
-            for seq, (reldir, dschema, rows) in enumerate(
-                iter_partition_groups(self._schema, iterator, pby)
-            ):
-                name, count = write_document_file(
-                    self._path.rstrip("/") + "/" + reldir,
-                    dschema, rows, xopts, pid, seq,
-                )
-                rel = reldir + "/" + name
-                if count:
-                    files.append(rel)
-                else:
-                    fs.delete_file(self._path.rstrip("/") + "/" + rel)
-        return XmlStreamCommitMessage(files=tuple(files))
+        # Batches APPEND files (into the col=value/ dirs of a partitionBy
+        # sink); sort each micro-batch within partitions on the partition
+        # columns to get one file per (task, value, batch).
+        written = write_task_files(
+            self._path, self._schema, iterator, self._opts_dict
+        )
+        for f, n in written:
+            if not n:  # empty micro-batch partition: no empty-document litter
+                fs.delete_file(self._path.rstrip("/") + "/" + f)
+        return XmlStreamCommitMessage(files=tuple(f for f, n in written if n))
 
     def commit(self, messages, batchId: int) -> None:
         pass

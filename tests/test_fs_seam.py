@@ -115,9 +115,10 @@ def test_stream_replay_clamps_to_offset_size(tmp_path):
     )
     parts = reader.partitions(start, end)
     got = sorted(
-        row[0]
+        row["k"]
         for p in parts
-        for row in reader.read(p)
+        for batch in reader.read(p)
+        for row in batch.to_pylist()
     )
     # the record count at snapshot time: every <r> fully inside body1
     assert got == list(range(50))
@@ -125,5 +126,10 @@ def test_stream_replay_clamps_to_offset_size(tmp_path):
     # rewritten smaller -> not replayable -> skipped
     f.write_text("<rows><r><k>999</k><v>z</v></r></rows>")
     parts = reader.partitions(start, end)
-    got = [row for p in parts for row in reader.read(p)]
+    got = [
+        row
+        for p in parts
+        for batch in reader.read(p)
+        for row in batch.to_pylist()
+    ]
     assert got == []

@@ -17,7 +17,6 @@ from spark_xml_spark.sources.api import read_xml
 from spark_xml_spark.sources.partitions import (
     append_partition_fields,
     discover_partitions,
-    typed_value,
 )
 
 
@@ -53,8 +52,6 @@ def test_discover_partitions_types_and_nulls(tmp_path):
     assert len(files) == 4
     vals = {pv for _, _, pv in files}
     assert (None, "EU") in vals and ("2024", "EU") in vals
-    assert typed_value("2024", "bigint") == 2024
-    assert typed_value(None, "bigint") is None
     # mixed top-level data file + partition dirs -> conflict error
     with open(f"{base}/stray.xml", "w") as fh:
         fh.write("<root/>")
@@ -116,7 +113,7 @@ def test_partition_filter_prunes_files_before_read(spark, tmp_path):
     parts = r.partitions()
     files = {s[0] for p in parts for s in p.splits}
     assert all("year=2024" in f for f in files) and files
-    assert {p.pvals for p in parts} == {(2024, "EU")}
+    assert {p.pvals for p in parts} == {("2024", "EU")}
     rows = []
     for p in parts:
         for item in r.read(p):
@@ -159,6 +156,12 @@ def test_partition_cols_must_be_schema_tail(spark, tmp_path):
     )
     with pytest.raises(Exception, match="LAST fields"):
         read_xml(spark, base, schema=bad, rowTag="rec").collect()
+    # the stream source plans through the same rule
+    from spark_xml_spark.streaming.source import XmlStreamReader
+
+    r = XmlStreamReader({"path": base, "rowTag": "rec"}, bad)
+    with pytest.raises(ValueError, match="LAST fields"):
+        r.partitions(r.initialOffset(), r.latestOffset())
 
 
 def test_partitioned_write_roundtrip(spark, tmp_path):
@@ -294,3 +297,92 @@ def test_path_glob_filter_zero_match_with_explicit_schema(spark, tmp_path):
     )
     with pytest.raises(Exception, match="pathGlobFilter"):
         df.collect()
+
+
+def _stream_rows(spark, src, schema, name, **options):
+    """Rows of an availableNow xml-graft stream over ``src`` (memory sink)."""
+    reader = spark.readStream.format("xml-graft").schema(schema)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    q = (
+        reader.load(src)
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+@pytest.mark.parametrize(
+    "ytype,year",
+    [("long", 2023), ("int", 2023), ("string", "2023"), ("double", 2023.0)],
+)
+def test_declared_partition_type_batch_and_stream(spark, tmp_path, ytype, year):
+    """A partition column declared in an explicit schema takes the DECLARED
+    type on both readers (Spark's file sources cast partition values to
+    the user schema), not the type discovery would infer."""
+    from spark_xml_spark.sources.api import register
+
+    register(spark)
+    src = tmp_path / "src"
+    (src / "year=2023").mkdir(parents=True)
+    (src / "year=2023" / "a.xml").write_text(
+        "<rec><id>1</id></rec><rec><id>2</id></rec>"
+    )
+    schema = f"id long, year {ytype}"
+    batch = (
+        spark.read.format("xml-graft")
+        .schema(schema)
+        .option("rowTag", "rec")
+        .load(str(src))
+        .collect()
+    )
+    stream = _stream_rows(
+        spark, str(src), schema, f"ptype_{ytype}", rowTag="rec"
+    )
+    got = sorted((r.id, r.year) for r in batch)
+    assert got == sorted((r.id, r.year) for r in stream)
+    assert got == [(1, year), (2, year)]
+    assert all(type(r.year) is type(year) for r in batch + stream)
+
+
+def test_declared_int_partition_filter_prunes(spark, tmp_path):
+    """An ``int`` partition column's pushed filter compiles against the
+    declared type and prunes the other value groups before any read."""
+    from pyspark.sql import datasource as ds
+
+    from spark_xml_spark.sources.api import register
+    from spark_xml_spark.sources.datasource import XmlPushdownReader
+
+    register(spark)
+    src = tmp_path / "src"
+    for y, ids in ((2023, (1, 2)), (2024, (3,))):
+        (src / f"year={y}").mkdir(parents=True)
+        (src / f"year={y}" / "a.xml").write_text(
+            "".join(f"<rec><id>{i}</id></rec>" for i in ids)
+        )
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("year", T.IntegerType())]
+    )
+    r = XmlPushdownReader(
+        {"path": str(src), "rowTag": "rec", "filterPushdown": "true"}, schema
+    )
+    assert r.pushFilters([ds.EqualTo(("year",), 2024)]) == []
+    parts = r.partitions()
+    assert {s[0] for p in parts for s in p.splits} == {
+        str(src / "year=2024" / "a.xml")
+    }
+    df = (
+        spark.read.format("xml-graft")
+        .schema(schema)
+        .option("rowTag", "rec")
+        .option("filterPushdown", "true")
+        .load(str(src))
+        .filter(F.col("year") == 2024)
+    )
+    assert [(r.id, r.year) for r in df.collect()] == [(3, 2024)]

@@ -1236,3 +1236,84 @@ def test_stream_stream_interval_join_validation(spark, tmp_path):
         stream_stream_interval_join(stream, stream, key="k", how="cross")
     with pytest.raises(ValueError, match="join key"):
         stream_stream_interval_join(stream, stream, key=[])
+
+
+def test_stream_equals_batch_across_row_tiers(spark, tmp_path, monkeypatch):
+    """A micro-batch is a batch read of its files: on a directory that
+    puts records on every tier of the columnar scan (clean windows, a
+    quote-bearing record matched per record, and the row fallback for an
+    entity reference and nested pages), the stream source returns the
+    batch reader's rows, and reaches the columnar tiers itself."""
+    import glob
+    import json
+
+    from spark_xml_spark.streaming.source import XmlStreamReader
+
+    register(spark)
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_doc(src / "a_flat.xml", [(i, f"v{i}") for i in range(50)])
+
+    def clean(k):
+        return "".join(f"<ROW><a>{k + i}</a><b>w{i}</b></ROW>\n" for i in range(3))
+
+    (src / "b_mixed.xml").write_text(
+        '<ROWS>\n<ROW id="7"><a>101</a><b>q</b></ROW>\n' + clean(110)
+        + "<ROW><a>102</a><b>it's</b></ROW>\n" + clean(120) + "</ROWS>\n"
+    )
+    (src / "c_nested.xml").write_text(
+        "<ROWS>\n"
+        + "".join(
+            f"<ROW><a>{200 + i}</a><b>p{i}</b>"
+            f"<page><rev><id>{i}</id></rev></page></ROW>\n"
+            for i in range(3)
+        )
+        + "<ROW><a>100</a><b>x &amp; y</b></ROW>\n</ROWS>\n"
+    )
+    batch = (
+        spark.read.format("xml-graft")
+        .schema(SCHEMA)
+        .option("rowTag", "ROW")
+        .load(str(src))
+        .collect()
+    )
+    q = (
+        spark.readStream.format("xml-graft")
+        .schema(SCHEMA)
+        .option("rowTag", "ROW")
+        .load(str(src))
+        .writeStream.format("memory")
+        .queryName("stream_eq_batch")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    stream = spark.sql("SELECT * FROM stream_eq_batch").collect()
+    assert len(batch) == 62
+    assert sorted(map(tuple, stream)) == sorted(map(tuple, batch))
+
+    # in-process, with the reader's tier tallies on
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv("SPARK_XML_TIER_STATS_DIR", str(stats))
+    reader = XmlStreamReader({"path": str(src), "rowTag": "ROW"}, SCHEMA)
+    end = reader.latestOffset()
+    rows = [
+        tuple(r.values())
+        for p in reader.partitions(reader.initialOffset(), end)
+        for b in reader.read(p)
+        for r in b.to_pylist()
+    ]
+    assert sorted(rows) == sorted(map(tuple, batch))
+    tiers = {}
+    for f in glob.glob(str(stats / "*.jsonl")):
+        for line in open(f):
+            t = json.loads(line)
+            tiers[t["tier"]] = tiers.get(t["tier"], 0) + t["rows"]
+    assert all(
+        tiers.get(t, 0) > 0
+        for t in ("columnar_window", "columnar_flat", "row_fallback")
+    ), tiers
