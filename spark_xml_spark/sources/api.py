@@ -118,7 +118,7 @@ def infer_xml_schema(
     # Hive-style layouts: the partitions cover the DISCOVERED (possibly
     # nested) files; append the typed partition columns after inference —
     # the read schema a partition-aware scan produces
-    _, pcols = reader._discover()
+    pcols = reader._pcols
     opts_dict = dict(options)
 
     def infer_partitions(batches):

@@ -8,6 +8,10 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 - ``partitions()`` plans byte-range file splits on the driver (the HDFS-split
   analogue); each ``read(partition)`` task scans only its range with the
   record-ownership rule, then parses records against the requested schema.
+  Flat all-scalar schemas take the columnar scan: each record is matched
+  on its own against a whole-record pattern learned from the data, the
+  matched ones are cast in one columnar pass per batch, and the rest take
+  the exact parser.
 - ``schema()`` resolves the user-provided ``schema`` option or runs sampled
   inference (the reference's 2-pass inferred-read semantics,
   XmlRelation.scala:43-49). For cluster-distributed inference use
@@ -368,21 +372,36 @@ def _exposes(schema: T.StructType, keys) -> bool:
     return False
 
 
-def _pvals_batch(rows, fields):
+def _pvals_batch(rows, fields, xopts: XmlOptions):
     """Raw partition-value tuples -> one Arrow batch, a row per tuple,
     each column cast to its read-schema field's Arrow type — the values
     partition pruning tests and read() appends, as Spark's file sources
-    cast partition values to the declared schema."""
+    cast partition values to the declared schema. A zone-less timestamp
+    reads in the ``timezone`` option, or UTC when it is unset, as element
+    text does (casts.iso_instant); a value with an offset keeps it, and
+    a date alone is its midnight. ``timestampFormat`` governs element text
+    only, never directory names."""
     import pyarrow as pa
 
+    from spark_xml_spark.xmlcore import casts
+
     schema = to_arrow_schema(T.StructType(list(fields)))
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(col, pa.string()).cast(t)
-            for col, t in zip(zip(*rows), schema.types)
-        ],
-        schema=schema,
-    )
+    cols = []
+    for col, f in zip(zip(*rows), schema):
+        if pa.types.is_timestamp(f.type) and f.type.tz is not None:
+            ts = []
+            for v in col:
+                dt = None if v is None else casts.iso_instant(v, xopts)
+                if v is not None and dt is None:
+                    raise ValueError(
+                        f"partition value {v!r} of column {f.name!r} is "
+                        "not an ISO-8601 timestamp"
+                    )
+                ts.append(dt)
+            cols.append(pa.array(ts, f.type))
+        else:
+            cols.append(pa.array(col, pa.string()).cast(f.type))
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
 # --- Arrow batch output ----------------------------------------------------
@@ -504,7 +523,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
     """One column of raw strings -> Arrow array. C casts when provably
     equivalent; Python casters otherwise. Raises (ValueError /
     parser fallback) only from the Python casters — the caller then
-    re-runs the whole batch through the exact row path so the parse-mode
+    re-runs those records through the exact row path so the parse-mode
     policy applies. ``guards`` defaults to the conservative option-free
     set; pass _cast_guards(xopts) for the option-aware set. ``is_attr``
     columns carry ATTRIBUTE cell semantics: an empty value is NOT
@@ -524,7 +543,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
         if is_attr:
             # empty attribute on a non-string scalar: the generic path
             # raises from cast_to -> parse policy; route via the Python
-            # caster so the caller re-runs the batch on the row path
+            # caster so the caller re-runs the records on the row path
             return _py_cast_column(vals, caster, target_type)
         # empty element -> null for every non-string scalar (row-path END
         # branch); whitespace-only is NOT empty and falls to the casters
@@ -574,38 +593,11 @@ def _group_columns(groups, group_map, ncols, nrec):
     return cols
 
 
-def _collect_columns(batch, pat, group_map, ncols, strict=None):
-    """Match every record against the learned whole-record pattern and
-    transpose the captured field strings into columns. None when any
-    record needs the real parser (no match, entity references, or a CR
-    that line-end normalization must rewrite)."""
-    for rec in batch:
-        if "&" in rec or "\r" in rec:
-            return None
-    groups = None
-    if strict is not None:
-        try:
-            # all-fields-required pattern: ~45% faster when every record
-            # carries every probe-observed part (identical captures by
-            # construction — see _compile_seq_pattern)
-            groups = [m.groups() for m in map(strict.match, batch)]
-        except AttributeError:
-            groups = None  # some record diverged: optional pattern decides
-    if groups is None:
-        try:
-            # map() drives pat.match in C; a None match (record shape
-            # drifted) raises AttributeError -> whole batch to the row path
-            groups = [m.groups() for m in map(pat.match, batch)]
-        except AttributeError:
-            return None
-    return _group_columns(groups, group_map, ncols, len(batch))
-
-
 def _cast_ladder(cols, fast, arrow_schema, guards):
     """Raw-string columns -> one Arrow record batch, each column through
     _cast_column with the field's element or root-attribute caster. None
     when a Python caster rejected a value (malformed / whitespace-only) —
-    the caller re-runs the batch through the exact row path so the
+    the caller re-runs the records through the exact row path so the
     parse-mode policy applies."""
     import pyarrow as pa
 
@@ -627,150 +619,112 @@ def _cast_ladder(cols, fast, arrow_schema, guards):
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
-def _columnar_window_batches(
-    witer, schema: T.StructType, xopts: XmlOptions,
+def _captures(fast, batch):
+    """Per record, the learned whole-record pattern's match (strict first,
+    then optional: identical captures, see _compile_seq_pattern), or None
+    when the row path must parse it: no pattern learned, an entity
+    reference, a CR that line-end normalization must rewrite, or a field
+    fed by several groups (a root attr plus a same-named element, or a
+    duplicated tag), which the row tiers resolve by in-order overwrite but
+    the columnar transpose would double-append."""
+    pat = fast.seq_pattern
+    targets = [i for _g, i, _a in fast.group_map]
+    if pat is None or len(targets) != len(set(targets)):
+        return [None] * len(batch)
+    loose = pat.match
+    if fast.strict_seq_pattern is None:
+        return [None if "&" in r or "\r" in r else loose(r) for r in batch]
+    strict = fast.strict_seq_pattern.match
+    return [
+        None if "&" in r or "\r" in r else strict(r) or loose(r)
+        for r in batch
+    ]
+
+
+def _columnar_batches(
+    records, schema: T.StructType, xopts: XmlOptions,
     batch_size: int = _BATCH_SIZE, tally=None,
 ):
-    """The columnar scan (schemas _columnar_ok accepts). Consumes
-    tokenizer.scan_split_windows items: a clean ``("win", text, spans)``
-    window runs the learned STRICT whole-record pattern's findall straight
-    over the text — no per-record slicing, decoding, or match objects; a
-    ``("rec", record)`` item (a dirty record, or every record of a
-    pushed-filter scan) takes the per-record ladder: strict, then
-    optional whole-record match, then the row path.
+    """The columnar scan (schemas _columnar_ok accepts): one Arrow batch
+    out per ``batch_size`` records in. Each record is matched on its own
+    (:func:`_captures`). The batch's matched records are transposed and
+    cast in one columnar pass; its unmatched records — and all of them
+    when a Python caster rejects a value — take the exact row path
+    through one shared parser, and one ``take`` restores record order.
+    So a batch costs a fixed number of Arrow calls however dirty records
+    interleave with clean ones, a dirty record never drags its clean
+    neighbours to the row path, and DROPMALFORMED drops only the records
+    it rejects."""
+    import itertools
 
-    Soundness: the tokenizer's record scanner emits a window only over
-    clean records (no quote, ``<!`` or ``<?`` from the previous record's
-    end through the last record's end, no nested or self-closing
-    same-name row), a strict-pattern match is confined to one record
-    ([^<]* fields, literal tags) and can occur at most once per record, so
-    ``len(findall) == len(spans)`` implies per-record strict.match
-    equivalence; strict has no optional groups, so every findall tuple has
-    all groups participating (None-vs-'' never arises — missing-field
-    records fail strict and route to the per-record path). Any
-    ineligibility (entities or CRs in the window, unlearned pattern,
-    duplicate group targets, cast failure) falls back to the exact
-    per-record machinery with nothing lost."""
+    import pyarrow as pa
+
     fast = parser.FastFlatParser.try_build(schema, xopts)
+    row_fast = parser.FastFlatParser.try_build(schema, xopts)  # once per scan
     ncols = len(schema.fields)
     arrow_schema = to_arrow_schema(schema)
     guards = _cast_guards(xopts)
     timer = __import__("time").perf_counter if tally is not None else None
-
-    def transposable():
-        # a field fed by several groups (root attr + same-named element,
-        # or a duplicated tag) parses correctly on the row tiers via
-        # in-order overwrite, but the columnar transpose would
-        # double-append its column — those batches stay on the row path
-        targets = [i for _g, i, _a in fast.group_map]
-        return len(targets) == len(set(targets))
-
-    def emit_records(batch):
-        """Per-record ladder for a list of records, INCLUDING pattern
-        learning: on corpora whose windows are all dirty (attributes or
-        apostrophes make every window quote-bearing) all records arrive
-        here, so this must be able to learn the pattern or the scan would
-        silently run the row tier forever."""
+    records = iter(records)
+    while True:
+        batch = list(itertools.islice(records, batch_size))
+        if not batch:
+            return
         t0 = timer() if timer else 0.0
         if fast.seq_pattern is None:
-            probe = next((r for r in batch if "&" not in r), None)
-            if probe is not None:
+            # learn from up to 16 entity-free records, so a batch that
+            # opens with a record the pattern cannot describe (a comment,
+            # a CDATA field) still learns
+            for probe in itertools.islice(
+                (r for r in batch if "&" not in r), 16
+            ):
                 try:
                     fast._parse_regex(probe)  # compiles pattern on success
                 except Exception:
                     pass
-        if fast.seq_pattern is not None and transposable():
-            cols = _collect_columns(
-                batch, fast.seq_pattern, fast.group_map, ncols,
-                strict=fast.strict_seq_pattern,
+                if fast.seq_pattern is not None:
+                    break
+        caps = _captures(fast, batch)
+        hit = [i for i, m in enumerate(caps) if m is not None]
+        cast = None
+        if hit:
+            cast = _cast_ladder(
+                _group_columns(
+                    [caps[i].groups() for i in hit], fast.group_map, ncols,
+                    len(hit),
+                ),
+                fast, arrow_schema, guards,
             )
-            out = None if cols is None else _cast_ladder(
-                cols, fast, arrow_schema, guards
-            )
-            if out is not None:
-                if tally is not None:
-                    tally.add("columnar_flat", len(batch), timer() - t0)
-                return [out]
-        rows = parser.parse_records(batch, schema, xopts)
-        out = list(_rows_to_arrow_batches(rows, schema, batch_size))
-        if tally is not None:
-            tally.add("row_fallback", len(batch), timer() - t0)
-        return out
-
-    def emit_groups(groups, refs):
-        """Group tuples (strict window captures) -> one arrow batch; cast
-        failure re-slices the records and uses the per-record ladder."""
-        t0 = timer() if timer else 0.0
-        out = _cast_ladder(
-            _group_columns(groups, fast.group_map, ncols, len(groups)),
-            fast, arrow_schema, guards,
-        )
-        if out is None:
-            return emit_records([t[s:e] for t, s, e in refs])
-        if tally is not None:
-            tally.add("columnar_window", len(groups), timer() - t0)
-        return [out]
-
-    pending_groups: List[tuple] = []
-    pending_refs: List[tuple] = []
-    rec_buf: List[str] = []
-    learn_attempts = 0
-
-    for item in witer:
-        if item[0] == "win":
-            text, spans = item[1], item[2]
-            if fast.seq_pattern is None and learn_attempts < 16:
-                s0, e0 = spans[0]
-                probe = text[s0:e0]
-                if "&" not in probe:
-                    learn_attempts += 1
-                    try:
-                        fast._parse_regex(probe)
-                    except Exception:
-                        pass
-            wp = fast.strict_window_pattern
-            if (
-                wp is not None and "&" not in text and "\r" not in text
-                and transposable()
-            ):
-                t0 = timer() if timer else 0.0
-                found = wp.findall(text)
-                if len(found) == len(spans):
-                    if rec_buf:
-                        yield from emit_records(rec_buf)
-                        rec_buf = []
-                    if wp.groups == 1:
-                        found = [(v,) for v in found]
-                    pending_groups.extend(found)
-                    pending_refs.extend((text, s, e) for s, e in spans)
-                    if tally is not None:
-                        # findall cost booked to the window tier
-                        tally.add("columnar_window", 0, timer() - t0)
-                    while len(pending_groups) >= batch_size:
-                        yield from emit_groups(
-                            pending_groups[:batch_size],
-                            pending_refs[:batch_size],
-                        )
-                        pending_groups = pending_groups[batch_size:]
-                        pending_refs = pending_refs[batch_size:]
-                    continue
-            # ineligible window: records through the per-record ladder
-            if pending_groups:
-                yield from emit_groups(pending_groups, pending_refs)
-                pending_groups, pending_refs = [], []
-            rec_buf.extend(text[s:e] for s, e in spans)
+        if cast is None:
+            # nothing matched, or a cast rejected a value: the row path
+            # decides the whole batch
+            hit, miss = [], range(len(batch))
         else:
-            if pending_groups:
-                yield from emit_groups(pending_groups, pending_refs)
-                pending_groups, pending_refs = [], []
-            rec_buf.append(item[1])
-        while len(rec_buf) >= batch_size:
-            yield from emit_records(rec_buf[:batch_size])
-            rec_buf = rec_buf[batch_size:]
-    if pending_groups:
-        yield from emit_groups(pending_groups, pending_refs)
-    if rec_buf:
-        yield from emit_records(rec_buf)
+            if tally is not None:
+                tally.add("columnar_flat", len(hit), timer() - t0)
+                t0 = timer()
+            if len(hit) == len(batch):
+                yield cast
+                continue
+            miss = [i for i, m in enumerate(caps) if m is None]
+        rows = [
+            parser.parse_record(batch[i], schema, xopts, fast=row_fast)
+            for i in miss
+        ]
+        parsed = [r for r in rows if r is not None]
+        out = list(_rows_to_arrow_batches(parsed, schema, batch_size))
+        if hit and parsed:
+            # cast rows first, parsed rows after: take them back in
+            # record order (a dropped record has no row)
+            src = hit + [i for i, row in zip(miss, rows) if row is not None]
+            out = pa.Table.from_batches([cast] + out).take(
+                sorted(range(len(src)), key=src.__getitem__)
+            ).combine_chunks().to_batches()
+        elif hit:
+            out = [cast]
+        if tally is not None:
+            tally.add("row_fallback", len(miss), timer() - t0)
+        yield from out
 
 
 # --- filter pushdown -------------------------------------------------------
@@ -1004,26 +958,23 @@ class XmlReader(DataSourceReader):
                 return v
         return None
 
-    def _discover(self, need_files: bool = False):
-        """Driver-side Hive-style partition discovery, cached on self:
-        pushFilters (to classify partition filters) and partitions() both
-        need it; partitions() drops the FILE list afterwards so executor
-        pickles stay slim. The read path never consults it — partitions
-        carry their raw values and read() types them by the schema."""
-        if getattr(self, "_pcols", None) is None or (
-            need_files and getattr(self, "_pfiles", None) is None
-        ):
-            from spark_xml_spark.sources import partitions as pmod
+    def _discover(self):
+        """Driver-side Hive-style partition discovery: (files, partition
+        columns). The read path needs no listing — partitions carry their
+        raw values and read() types them by the schema."""
+        from spark_xml_spark.sources import partitions as pmod
 
-            gf, rl = _listing_opts(self._opts_dict)
-            self._pfiles, self._pcols = pmod.discover_partitions(
-                self._path, glob_filter=gf, recursive_lookup=rl
-            )
-        return getattr(self, "_pfiles", None), self._pcols
+        gf, rl = _listing_opts(self._opts_dict)
+        return pmod.discover_partitions(
+            self._path, glob_filter=gf, recursive_lookup=rl
+        )
 
     def partitions(self) -> List[InputPartition]:
+        # the listing pushFilters classified its filters against, when
+        # this planning pushed any; one listing per planning either way
+        listing = self.__dict__.pop("_listing", None)
         try:
-            pfiles, pcols = self._discover(need_files=True)
+            pfiles, pcols = listing or self._discover()
         except OSError as exc:
             from spark_xml_spark.sources.partitions import NoMatchingFilesError
 
@@ -1039,7 +990,7 @@ class XmlReader(DataSourceReader):
                 (f, sz, ()) for f, sz in tokenizer._expand_with_sizes(self._path)
             ]
             pcols = []
-        self._pfiles = None  # keep executor pickles slim
+        self._pcols = pcols  # [(name, type)]: small, for infer_xml_schema
         return self._plan(pfiles, [n for n, _ in pcols])
 
     def _plan(
@@ -1072,7 +1023,9 @@ class XmlReader(DataSourceReader):
         keep = [True] * len(values)
         if masks and values:
             # the scan's own Arrow masks over one row per value group
-            keep = _mask(_pvals_batch(values, pfields), masks).to_pylist()
+            keep = _mask(
+                _pvals_batch(values, pfields, xopts), masks
+            ).to_pylist()
         out: List[XmlInputPartition] = []
         for pv, kept in zip(values, keep):
             if not kept:
@@ -1152,7 +1105,10 @@ class XmlReader(DataSourceReader):
         outside the FileFormat reader."""
         import pyarrow as pa
 
-        consts = _pvals_batch([pv], self._schema.fields[-len(pv):]).columns
+        consts = _pvals_batch(
+            [pv], self._schema.fields[-len(pv):],
+            XmlOptions.from_dict(self._opts_dict),
+        ).columns
         names = self._schema.fieldNames()
         for batch in gen:
             yield pa.RecordBatch.from_arrays(
@@ -1183,23 +1139,11 @@ class XmlReader(DataSourceReader):
             if reject is not None:
                 records = (r for r in records if not reject(r))
         if _columnar_ok(dschema, xopts):
-            # Columnar path: batches go straight from matched field
-            # strings to Arrow arrays with C-level casts; any batch the
-            # pattern or casts can't prove equivalent re-runs through the
-            # exact row path. Unfiltered scans hand the consumer clean
-            # tokenizer windows; pushed scans hand it records so the
-            # raw-text prefilter composes.
-            if self._pushed:
-                items = (("rec", r) for r in records)
-            else:
-                items = (
-                    item
-                    for split in splits
-                    for item in tokenizer.scan_split_windows(
-                        split, xopts.row_tag, xopts.charset
-                    )
-                )
-            batches = _columnar_window_batches(items, dschema, xopts, tally=tally)
+            # Columnar path: matched records go straight from their field
+            # strings to Arrow arrays with C-level casts; the records the
+            # pattern or casts can't prove equivalent take the exact row
+            # path.
+            batches = _columnar_batches(records, dschema, xopts, tally=tally)
         else:
             batches = _rows_to_arrow_batches(
                 parser.parse_records(records, dschema, xopts), dschema
@@ -1222,6 +1166,14 @@ class XmlPushdownReader(XmlReader):
     option ``filterPushdown=true`` (read_xml injects it automatically from
     the session conf)."""
 
+    def __getstate__(self):
+        # Spark pickles the read function, which closes over this reader,
+        # into every read task before it calls partitions(): the listing
+        # pushFilters keeps for partitions() stays on the driver
+        state = dict(self.__dict__)
+        state.pop("_listing", None)
+        return state
+
     def pushFilters(self, filters):
         """Accept exactly the filters _compile_filter_arrow compiles
         (top-level scalar fields, SQL null semantics); the rest stay in
@@ -1235,8 +1187,10 @@ class XmlPushdownReader(XmlReader):
         self._pushed = []
         self._ppushed = []  # partition-column filters -> file pruning
         remaining = []
+        self.__dict__.pop("_listing", None)
         try:
-            _, pcols = self._discover()
+            self._listing = self._discover()
+            pcols = self._listing[1]
         except OSError as exc:
             from spark_xml_spark.sources.partitions import NoMatchingFilesError
 

@@ -133,23 +133,32 @@ def _zone_of(options: XmlOptions) -> Optional[_dt.tzinfo]:
     return None
 
 
+def iso_instant(value: str, options: XmlOptions) -> Optional[_dt.datetime]:
+    """An ISO-8601 date or date-time as a UTC-aware instant, or None when
+    ``value`` is not ISO. Zone-less values resolve in the configured zone
+    (the session timeZone when injected at the API layer,
+    DefaultSource.scala:70-74), UTC when unset; offset/'Z' values are
+    exact. A date alone is its midnight."""
+    if not value or not value[0].isdigit():
+        return None
+    try:
+        dt = _dt.datetime.fromisoformat(value)
+    except ValueError:
+        return None
+    return _finish_ts(dt, _zone_of(options) or _dt.timezone.utc)
+
+
 def parse_xml_timestamp(value: str, options: XmlOptions) -> Optional[_dt.datetime]:
     """The reference's 4 built-in formats (TypeCast.scala:114-129) are all
     ISO-8601 shapes ('T' or ' ' separator, optional fraction, optional
     offset/'Z'); zone-less values are UTC. Then the user ``timestampFormat``
     with options.timezone applied when the pattern has no zone
     (TypeCast.scala:143-162)."""
-    if value and value[0].isdigit():
-        try:
-            dt = _dt.datetime.fromisoformat(value)
-            # Reject date-only strings: ISO timestamps must have a time part.
-            if "T" in value or " " in value:
-                # Zone-less values resolve in the configured zone (the
-                # session timeZone when injected at the API layer,
-                # DefaultSource.scala:70-74); offset/'Z' values are exact.
-                return _finish_ts(dt, _zone_of(options) or _dt.timezone.utc)
-        except ValueError:
-            pass
+    # Reject date-only strings: ISO timestamps must have a time part.
+    if value and ("T" in value or " " in value):
+        dt = iso_instant(value, options)
+        if dt is not None:
+            return dt
     if options.timestamp_format:
         fs = options.timestamp_format
         has_zone = any(c in fs for c in "VzOXxZ")

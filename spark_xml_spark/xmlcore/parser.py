@@ -416,8 +416,7 @@ class FastFlatParser:
 
     __slots__ = (
         "schema", "options", "index", "types", "is_string", "n", "strip_ns",
-        "casters", "seq_pattern", "strict_seq_pattern",
-        "strict_window_pattern", "group_map",
+        "casters", "seq_pattern", "strict_seq_pattern", "group_map",
         "attr_index", "attr_casters", "array_fields",
     )
 
@@ -489,7 +488,6 @@ class FastFlatParser:
         # elision drops tags). Records in a different order fall to tier 1.
         self.seq_pattern = None
         self.strict_seq_pattern = None
-        self.strict_window_pattern = None
         self.group_map: List[tuple] = []
 
     def _build_caster(self, dt: T.DataType):
@@ -729,8 +727,8 @@ class FastFlatParser:
         # \s* scans, ~2x faster than the optional pattern. A strict match
         # produces byte-identical captures to the optional pattern (same
         # groups, same order, sequential-greedy over the same parts), so
-        # the columnar path tries strict on the whole batch first and falls
-        # back to the optional pattern when any record diverges (null-
+        # the columnar path tries strict on each record first and falls
+        # back to the optional pattern when the record diverges (null-
         # elided field, extra attr, reordering, indentation).
         strict_parts = ["<", _re.escape(root_m.group(1))]
         gmap: List[tuple] = []
@@ -785,16 +783,8 @@ class FastFlatParser:
             return
         try:
             self.strict_seq_pattern = _re.compile("".join(strict_parts))
-            # unanchored variant for window-level findall (datasource fused
-            # scan): strict has NO optional groups, so every findall tuple
-            # has all groups participating — no None-vs-'' ambiguity — and
-            # [^<]* fields + literal tags confine a match to one record
-            self.strict_window_pattern = _re.compile(
-                "".join(strict_parts[:-1]) + ">"  # drop only the \Z anchor
-            )
         except _re.error:
             self.strict_seq_pattern = None
-            self.strict_window_pattern = None
 
     def _parse_expat(self, xml: str) -> tuple:
         from xml.parsers import expat

@@ -25,7 +25,8 @@ declarations whole, and reads attribute values quote-aware, so a row tag,
 '>' or an end tag inside any of them cannot count — strictly more robust
 than the reference scanner, with no behavior change on its fixtures. A tag
 whose quote never closes degrades to the reference's first-'>' rule
-(:func:`_settle`).
+(:func:`_settle`). :func:`scan_split` yields one decoded string per record,
+the unit the parser and the reader's columnar scan both take.
 
 Scale note: each Spark task scans only its own byte range with a bounded
 buffer (memory ~ max record size + chunk), so the scan parallelizes to
@@ -98,8 +99,8 @@ def unit_width(charset: str) -> Optional[int]:
     if w is not None:
         return w
     if is_ascii_compatible(charset):
-        # raw byte scanner + clean-window fast path own these; routing
-        # them through the transcoder would be a regression
+        # the raw byte scanner owns these; routing them through the
+        # transcoder would be a regression
         return None
     return _single_byte_codec_width(c)
 
@@ -579,7 +580,7 @@ def _scan_transcoded(fh, cs: str, owned: int, row_tag: str) -> Iterator[str]:
 
 
 def _decoded(batches, charset: str) -> Iterator[str]:
-    for data, base, spans, _irregular in batches:
+    for data, base, spans in batches:
         for s, e in spans:
             yield data[s - base:e - base].decode(charset, errors="replace")
 
@@ -596,59 +597,22 @@ def scan_split(split: FileSplit, row_tag: str, charset: str = "UTF-8") -> Iterat
     (XmlInputFormat.scala:193-224 readUntilStartElement); the supported
     contract is rowTag elements that do not self-nest. Property-tested in
     tests/test_property_roundtrip.py."""
-    for item in scan_split_windows(split, row_tag, charset):
-        if item[0] == "rec":
-            yield item[1]
-        else:
-            text, spans = item[1], item[2]
-            for s, e in spans:
-                yield text[s:e]
-
-
-# single-byte charsets: one byte == one character, so byte offsets from the
-# scanner are valid str offsets after decoding
-_SINGLE_BYTE_PREFIXES = ("ascii", "latin", "iso-8859", "cp12", "koi8")
-
-
-def scan_split_windows(
-    split: FileSplit, row_tag: str, charset: str = "UTF-8"
-) -> Iterator[tuple]:
-    """Window-granular variant of :func:`scan_split` — the fused-scan
-    interface for the columnar reader. Yields, in document order:
-
-    - ``("win", text, spans)``: a run of consecutive clean records decoded
-      ONCE; ``spans`` are ``(start, end)`` *str* offsets of the owned
-      records inside ``text``. A record is clean when the bytes from the
-      previous record's end through its own end hold no quote, no ``<!``
-      and no ``<?``, and it holds no nested or self-closing same-name row.
-      Emitted only when byte offsets are valid str offsets (single-byte
-      charset, or an all-ASCII run under an ASCII-compatible charset) — so
-      downstream can run a learned whole-record regex straight over the
-      window without per-record slicing/decoding.
-    - ``("rec", record_str)``: one decoded record (dirty records,
-      compressed bz2 ranges, transcoded charsets, non-ASCII runs).
-
-    scan_split() is the flattening wrapper, so both views share one
-    scanner and one ownership rule."""
     if split.compression == "bz2" and not split.whole_file:
-        for r in _scan_bz2_range(split, row_tag, charset):
-            yield ("rec", r)
+        yield from _scan_bz2_range(split, row_tag, charset)
         return
     w = unit_width(charset)
     if w is not None:
         # UTF-16/32: split-parallel via per-split transcode (the
         # reference's InputStreamReader-per-split shape,
         # XmlInputFormat.scala:76-122) — no whole-file degrade
-        for r in _scan_unit_width_range(split, row_tag, charset, w):
-            yield ("rec", r)
+        yield from _scan_unit_width_range(split, row_tag, charset, w)
         return
     if not is_ascii_compatible(charset):
         if lt_safe_multibyte(charset):
             # Shift-JIS/Big5/EUC/GBK family: split-parallel via the
             # '<'-aligned per-split transcode (compressed files arrive
             # as one whole-file split and take the owned=-1 path)
-            for r in _scan_lt_aligned_range(split, row_tag, charset):
-                yield ("rec", r)
+            yield from _scan_lt_aligned_range(split, row_tag, charset)
             return
         # Stateful exotics (ISO-2022, HZ): decode the whole stream
         # (decompressing if needed) and scan text.
@@ -661,13 +625,9 @@ def scan_split_windows(
             text = fh.read().decode(charset)
         finally:
             fh.close()
-        for r in scan_string(text, row_tag):
-            yield ("rec", r)
+        yield from scan_string(text, row_tag)
         return
 
-    single_byte = charset.lower().replace("_", "-").startswith(
-        _SINGLE_BYTE_PREFIXES
-    )
     fh = _open_stream(split)
     try:
         if split.start > 0:
@@ -688,18 +648,30 @@ def scan_split_windows(
                 fh = _CapReader(fh, split.eof)
             buf = _Buffer(fh)
         limit = split.end  # only record *starts* before this belong to us
-        batches = _record_spans(
-            buf, row_tag.encode(charset), split.start,
-            (lambda pos: pos < limit) if limit != -1 else (lambda pos: True),
+        yield from _decoded(
+            _record_spans(
+                buf, row_tag.encode(charset), split.start,
+                (lambda pos: pos < limit) if limit != -1 else (lambda pos: True),
+            ),
+            charset,
         )
-        yield from _window_items(batches, split.start, charset, single_byte)
     finally:
         fh.close()
 
 
-# bytes after which a stretch is no longer clean: quotes (row-tag bytes can
-# hide in attribute values), comments/CDATA/DOCTYPE ('<!') and processing
-# instructions ('<?')
+def scan_split_windows(
+    split: FileSplit, row_tag: str, charset: str = "UTF-8"
+) -> Iterator[tuple]:
+    """``("rec", record)`` for each record of :func:`scan_split`. The
+    benchmark's per-layer tokenizer probe (``perfbench/layers.py``) still
+    calls this item-stream interface; the reader does not."""
+    for r in scan_split(split, row_tag, charset):
+        yield ("rec", r)
+
+
+# bytes whose presence rules out the lean scanner form: quotes (row-tag
+# bytes can hide in attribute values), comments/CDATA/DOCTYPE ('<!') and
+# processing instructions ('<?')
 _OFFENDERS = (b'"', b"'", b"<!", b"<?")
 
 
@@ -718,48 +690,6 @@ def _next_offender(data: bytes, at: int, end: int, hits: List[int]) -> int:
                 h = data.find(pat[w:], h + 1, end)
             hits[k] = h - w if h >= 0 else end
     return min(hits)
-
-
-def _window_items(batches, prev: int, charset: str, single_byte: bool):
-    """Turn the scanner's batches into scan_split_windows items: runs of
-    clean records become one ``"win"``, the rest ``"rec"``. ``prev`` is
-    where the bytes the first record answers for begin (the scan start)."""
-    for data, base, spans, irregular in batches:
-        hi = spans[-1][1] - base
-        hits = [-1] * len(_OFFENDERS)
-        first = -1  # next offender at/after prev (relative)
-        run: List[Tuple[int, int]] = []
-        for i, (s, e) in enumerate(spans):
-            lo = max(prev - base, 0)  # a refill may have dropped the gap
-            if first < lo:
-                first = _next_offender(data, lo, hi, hits)
-            if first >= hi and not irregular:
-                run.extend(spans[i:])  # the rest of the batch is clean
-                break
-            if first >= e - base and s not in irregular:
-                run.append((s, e))
-            else:
-                if run:
-                    yield from _window(data, base, run, charset, single_byte)
-                    run = []
-                yield ("rec", data[s - base:e - base].decode(
-                    charset, errors="replace"))
-            prev = e
-        prev = spans[-1][1]
-        if run:
-            yield from _window(data, base, run, charset, single_byte)
-
-
-def _window(data: bytes, base: int, run, charset: str, single_byte: bool):
-    lo, hi = run[0][0], run[-1][1]
-    wb = data[lo - base:hi - base]
-    if single_byte or wb.isascii():
-        yield ("win", wb.decode(charset, errors="replace"),
-               [(s - lo, e - lo) for s, e in run])
-    else:
-        for s, e in run:
-            yield ("rec", data[s - base:e - base].decode(
-                charset, errors="replace"))
 
 
 # A start tag (name + attributes) longer than this is declared malformed:
@@ -889,11 +819,9 @@ def _settle(buf: _Buffer, s: int, oversize: bool) -> int:
 def _record_spans(buf: _Buffer, tag: bytes, pos: int, owns):
     """The record scanner behind every byte path. From ``pos``, count
     rowTag depth over the scanner regex's matches (:func:`_matches`) and
-    yield, per loaded
-    window, ``(data, base, spans, irregular)``: ``spans`` are absolute
-    ``(start, end)`` byte ranges of complete records in ``data`` (which
-    starts at absolute offset ``base``); ``irregular`` holds the starts of
-    records that are self-closing or contain a same-name row.
+    yield, per loaded buffer, ``(data, base, spans)``: ``spans`` are
+    absolute ``(start, end)`` byte ranges of complete records in ``data``
+    (which starts at absolute offset ``base``).
 
     Ownership: a record belongs to the caller when ``owns(start)`` holds
     for its start tag's '<'; the first unowned start (or unowned position
@@ -903,12 +831,10 @@ def _record_spans(buf: _Buffer, tag: bytes, pos: int, owns):
     ntag = len(tag)
     depth = 0
     rec = -1
-    odd = False  # the open record holds a nested same-name row
     buf.ensure(pos + _CHUNK)
     while True:
         data, base = buf._buf, buf._base
         spans: List[Tuple[int, int]] = []
-        irregular = set()
         resume = -1
         done = False
         for m in _matches(tag, data, pos - base):
@@ -920,8 +846,6 @@ def _record_spans(buf: _Buffer, tag: bytes, pos: int, owns):
                     depth -= 1
                     if not depth:
                         spans.append((rec, base + m.end()))
-                        if odd:
-                            irregular.add(rec)
                 continue
             s, e = base + m.start(), base + m.end()
             unclosed = kind in ("more", "moretag")
@@ -946,20 +870,17 @@ def _record_spans(buf: _Buffer, tag: bytes, pos: int, owns):
                     if not owns(s):
                         done = True
                         break
-                    rec, odd = s, False
-                else:
-                    odd = True
+                    rec = s
                 b = data[e - base - 2]
                 if not (b == 47 or b in b" \t\r\n"
                         and _self_closing(data, s - base, e - base)):
                     depth += 1
                 elif not depth:
                     spans.append((s, e))
-                    irregular.add(s)
             if resume >= 0:
                 break
         if spans:
-            yield buf._buf, base, spans, irregular
+            yield buf._buf, base, spans
         if done:
             return
         if resume >= 0:

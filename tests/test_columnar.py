@@ -1,6 +1,6 @@
 """Columnar flat-scan fast path: exact equivalence with the row path.
 
-The columnar consumer (sources/datasource._columnar_window_batches) must
+The columnar consumer (sources/datasource._columnar_batches) must
 be invisible: same values, same nulls, same malformed-record policy as the
 per-row parse for every record shape, falling back wherever equivalence
 isn't provable. Schemas it does not accept (attribute-only struct children
@@ -28,17 +28,14 @@ def _row_table(records, schema, opts):
     return _table(list(D._rows_to_arrow_batches(rows, schema, 512)))
 
 
-def _columnar(records, schema, opts):
-    """The columnar consumer fed per-record items, as a pushed-filter scan
-    or a dirty window feeds it."""
-    return D._columnar_window_batches(
-        (("rec", r) for r in records), schema, opts, 512
-    )
+def _columnar_batches(records, schema, opts):
+    """The columnar consumer fed plain records, as the reader feeds it."""
+    return D._columnar_batches(records, schema, opts, 512)
 
 
 def _both_paths(records, schema, opts):
     return _row_table(records, schema, opts), _table(
-        list(_columnar(records, schema, opts))
+        list(_columnar_batches(records, schema, opts))
     )
 
 
@@ -137,7 +134,7 @@ def test_failfast_raises():
     )
     recs = [_rec(), _rec(i="notanint")]
     with pytest.raises(Exception):
-        list(_columnar(recs, SCHEMA, opts))
+        list(_columnar_batches(recs, SCHEMA, opts))
 
 
 def test_reordered_fields_fall_back():
@@ -441,14 +438,16 @@ def test_duplicate_tag_columnar_falls_back():
     assert ct["a"].to_pylist() == ["2", "3"]  # last occurrence wins
 
 
-# --- fused window path (scan_split_windows -> _columnar_window_batches) ----
+# --- scanned records from forced-small splits -> _columnar_batches ---------
+# (the test names keep the retired clean-window tier's: the same corpora
+# now check per-record matching)
 
 
-def _window_vs_record_paths(doc: str, schema, opts, row_tag="r",
-                            target=512, charset="utf-8"):
-    """Write doc, scan via forced-small splits, feed the columnar consumer
-    BOTH the tokenizer's windows and the plain record stream; return
-    (window_tbl, record_tbl, flat_records)."""
+def _scanned_vs_row_paths(doc: str, schema, opts, row_tag="r",
+                          target=512, charset="utf-8"):
+    """Write doc, scan via forced-small splits, and feed the scanned
+    records to the columnar consumer and to the row path; return
+    (columnar_tbl, row_tbl, records)."""
     import os
     import tempfile
 
@@ -458,37 +457,28 @@ def _window_vs_record_paths(doc: str, schema, opts, row_tag="r",
     p = os.path.join(d, "t.xml")
     with open(p, "wb") as fh:
         fh.write(doc.encode(charset))
-    splits = tok.plan_splits(p, charset, target)
-
-    def windows():
-        for s in splits:
-            yield from tok.scan_split_windows(s, row_tag, charset)
-
-    def records():
-        for s in splits:
-            yield from tok.scan_split(s, row_tag, charset)
-
-    win = list(D._columnar_window_batches(windows(), schema, opts, 256))
-    rec = list(D._columnar_window_batches(
-        (("rec", r) for r in records()), schema, opts, 256
-    ))
-    wt = pa.Table.from_batches(win) if win else None
-    rt = pa.Table.from_batches(rec) if rec else None
-    return wt, rt, list(records())
+    recs = [
+        r
+        for s in tok.plan_splits(p, charset, target)
+        for r in tok.scan_split(s, row_tag, charset)
+    ]
+    got = list(D._columnar_batches(iter(recs), schema, opts, 256))
+    ct = pa.Table.from_batches(got) if got else None
+    return ct, _row_table(recs, schema, opts), recs
 
 
 def test_window_path_identical_clean_data():
     doc = "<root>" + "".join(_rec(i=str(k)) for k in range(900)) + "</root>"
-    wt, rt, recs = _window_vs_record_paths(doc, SCHEMA, OPTS)
+    ct, rt, recs = _scanned_vs_row_paths(doc, SCHEMA, OPTS)
     assert len(recs) == 900
-    assert wt.num_rows == 900
-    assert wt.equals(rt)
+    assert ct.num_rows == 900
+    assert ct.equals(rt)
 
 
 def test_window_path_null_elided_and_entities():
-    """Records with missing fields fail the strict window findall (count
-    mismatch) and route through the per-record ladder; entity-bearing
-    windows fall back entirely. Results must equal the record path."""
+    """Records with missing fields fail the strict pattern and match the
+    optional one; entity-bearing records take the row path. Results must
+    equal the row path."""
     recs = []
     for k in range(300):
         if k % 7 == 0:
@@ -498,18 +488,17 @@ def test_window_path_null_elided_and_entities():
         else:
             recs.append(_rec(i=str(k)))
     doc = "<root>" + "".join(recs) + "</root>"
-    wt, rt, _ = _window_vs_record_paths(doc, SCHEMA, OPTS)
-    assert wt.num_rows == 300
-    assert wt.equals(rt)
+    ct, rt, _ = _scanned_vs_row_paths(doc, SCHEMA, OPTS)
+    assert ct.num_rows == 300
+    assert ct.equals(rt)
     # null elision really produced nulls
-    scol = wt.column("s").to_pylist()
+    scol = ct.column("s").to_pylist()
     assert scol[0] is None and scol[1] == "x"
 
 
 def test_window_path_quoted_attr_windows_fall_back():
-    """Windows containing quotes (attributes) are rejected by the batch
-    window scanner and arrive as per-record items; results still equal
-    the record path."""
+    """Quote-bearing records (root attributes) match the learned pattern
+    like any other; results still equal the row path."""
     schema = T.StructType(
         [T.StructField("_a", T.StringType()), T.StructField("i", T.LongType())]
     )
@@ -517,17 +506,16 @@ def test_window_path_quoted_attr_windows_fall_back():
     doc = "<root>" + "".join(
         f'<r a="v{k}"><i>{k}</i></r>' for k in range(200)
     ) + "</root>"
-    wt, rt, _ = _window_vs_record_paths(doc, schema, opts)
-    assert wt.num_rows == 200
-    assert wt.equals(rt)
-    assert wt.column("_a").to_pylist()[:2] == ["v0", "v1"]
+    ct, rt, _ = _scanned_vs_row_paths(doc, schema, opts)
+    assert ct.num_rows == 200
+    assert ct.equals(rt)
+    assert ct.column("_a").to_pylist()[:2] == ["v0", "v1"]
 
 
 def test_window_path_learns_on_dirty_window_corpora():
-    """Review r7: attribute corpora make EVERY window quote-dirty, so all
-    records arrive as per-record items — the window consumer must learn
-    the pattern there too, or the scan silently runs the row tier
-    forever (~10x)."""
+    """On an attribute corpus every record carries quotes; the
+    consumer must learn the pattern there too, or the scan silently runs
+    the row tier forever (~10x)."""
     import os
     import tempfile
 
@@ -545,15 +533,127 @@ def test_window_path_learns_on_dirty_window_corpora():
     with open(p, "w") as fh:
         fh.write(doc)
 
-    def windows():
+    def records():
         for s in tok.plan_splits(p, "utf-8", 1 << 20):
-            yield from tok.scan_split_windows(s, "r", "utf-8")
+            yield from tok.scan_split(s, "r", "utf-8")
 
     tally = D._TierTally()
     batches = list(
-        D._columnar_window_batches(windows(), schema, opts, 256, tally=tally)
+        D._columnar_batches(records(), schema, opts, 256, tally=tally)
     )
     assert pa.Table.from_batches(batches).num_rows == 2000
     # the learned-pattern tier served everything; zero rows on the row tier
     assert tally.counts.get("columnar_flat") == 2000
     assert "row_fallback" not in tally.counts
+
+
+# --- per-record isolation on the write_roundtrip flat shape ----------------
+
+_LINEITEM = T.StructType(
+    [
+        T.StructField("orderkey", T.LongType()),
+        T.StructField("partkey", T.LongType()),
+        T.StructField("suppkey", T.LongType()),
+        T.StructField("linenumber", T.IntegerType()),
+        T.StructField("quantity", T.DecimalType(12, 2)),
+        T.StructField("extendedprice", T.DecimalType(12, 2)),
+        T.StructField("discount", T.DoubleType()),
+        T.StructField("tax", T.DoubleType()),
+        T.StructField("returnflag", T.StringType()),
+        T.StructField("linestatus", T.StringType()),
+        T.StructField("shipdate", T.DateType()),
+        T.StructField("commitdate", T.DateType()),
+        T.StructField("shipmode", T.StringType()),
+        T.StructField("comment", T.StringType()),
+    ]
+)
+
+
+def _lineitems(n, dirty):
+    """``n`` lineitem records as the XML writer lays them out, every 500th
+    one's comment made ``dirty``."""
+    import random
+
+    rng = random.Random(1)
+    words = "final regular pending bold quick ironic deposits accounts".split()
+    out = []
+    for k in range(n):
+        comment = " ".join(rng.choice(words) for _ in range(rng.randint(2, 7)))
+        if k % 500 == 0:
+            comment = dirty(comment)
+        vals = (
+            k, rng.randint(1, 200_000), rng.randint(1, 10_000),
+            rng.randint(1, 7), f"{rng.randint(100, 5000) / 100:.2f}",
+            f"{rng.randint(90_000, 10_000_000) / 100:.2f}",
+            f"{rng.randint(0, 10) / 100:.2f}", f"{rng.randint(0, 8) / 100:.2f}",
+            rng.choice("ANR"), rng.choice("OF"),
+            f"199{rng.randint(2, 8)}-0{rng.randint(1, 9)}-1{rng.randint(0, 9)}",
+            f"199{rng.randint(2, 8)}-0{rng.randint(1, 9)}-2{rng.randint(0, 8)}",
+            rng.choice(("AIR", "MAIL", "RAIL", "SHIP", "TRUCK")), comment,
+        )
+        out.append(
+            "    <item>"
+            + "".join(f"<{f.name}>{v}</{f.name}>" for f, v in zip(_LINEITEM, vals))
+            + "</item>"
+        )
+    return out
+
+
+@pytest.mark.parametrize(
+    "dirty",
+    [lambda c: f"<![CDATA[{c}]]>", lambda c: c + " &amp; more"],
+    ids=["cdata", "amp"],
+)
+def test_dirty_records_take_the_row_path_alone(tmp_path, monkeypatch, dirty):
+    """One dirty record every 500 (a CDATA section, or an entity
+    reference) takes the row path by itself: the read equals the row
+    path, the row tier serves exactly the dirty records and the columnar
+    tier every other one."""
+    import glob
+
+    recs = _lineitems(8000, dirty)
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.xml").write_text(
+        '<?xml version="1.0"?>\n<lineitems>\n' + "\n".join(recs)
+        + "\n</lineitems>\n"
+    )
+    stats = tmp_path / "stats"
+    stats.mkdir()
+    monkeypatch.setenv("SPARK_XML_TIER_STATS_DIR", str(stats))
+    reader = D.XmlReader({"path": str(src), "rowTag": "item"}, _LINEITEM)
+    got = pa.Table.from_batches(
+        [b for p in reader.partitions() for b in reader.read(p)]
+    ).sort_by("orderkey")
+    opts = XmlOptions.from_dict({"rowTag": "item"})
+    assert got.equals(_row_table([r.strip() for r in recs], _LINEITEM, opts))
+    tiers = {}
+    for f in glob.glob(str(stats / "*.jsonl")):
+        for line in open(f):
+            t = json.loads(line)
+            tiers[t["tier"]] = tiers.get(t["tier"], 0) + t["rows"]
+    assert tiers.get("row_fallback") == 16, tiers
+    assert tiers.get("columnar_flat") == 8000 - 16, tiers
+
+
+@pytest.mark.parametrize("mode", ["PERMISSIVE", "DROPMALFORMED"])
+def test_dense_interleaving_keeps_record_order(mode):
+    """Every third record an entity reference and every seventh truncated
+    (malformed): the consumer's output equals the row path's in record
+    order, DROPMALFORMED drops only the malformed records, and the row
+    tier serves exactly the records the pattern misses."""
+    recs = [r.strip() for r in _lineitems(3000, lambda c: c)]
+    for k in range(len(recs)):
+        if k % 3 == 1:
+            recs[k] = recs[k].replace("</comment>", " &amp; more</comment>")
+        if k % 7 == 2:
+            recs[k] = recs[k].replace("</shipmode>", "")
+    opts = XmlOptions.from_dict({"rowTag": "item", "mode": mode})
+    tally = D._TierTally()
+    got = _table(list(D._columnar_batches(recs, _LINEITEM, opts, 512, tally)))
+    assert got.equals(_row_table(recs, _LINEITEM, opts))
+    missed = sum(1 for k in range(len(recs)) if k % 3 == 1 or k % 7 == 2)
+    assert tally.counts["row_fallback"] == missed
+    assert tally.counts["columnar_flat"] == len(recs) - missed
+    if mode == "DROPMALFORMED":
+        assert got.num_rows == len(recs) - len(range(2, len(recs), 7))

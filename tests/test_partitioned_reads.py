@@ -386,3 +386,114 @@ def test_declared_int_partition_filter_prunes(spark, tmp_path):
         .filter(F.col("year") == 2024)
     )
     assert [(r.id, r.year) for r in df.collect()] == [(3, 2024)]
+
+
+@pytest.mark.parametrize(
+    "zone,hour", [(None, 3), ("America/New_York", 8)], ids=["unset", "new_york"]
+)
+def test_declared_timestamp_partition_batch_and_stream(spark, tmp_path, zone, hour):
+    """A zone-less partition timestamp reads in the reader's ``timezone``
+    option, or UTC when it is unset (the rule element text follows), on
+    both readers."""
+    import datetime as dt
+
+    from spark_xml_spark.sources.api import register
+
+    register(spark)
+    src = tmp_path / "src"
+    (src / "ts=2024-01-02 03%3A04%3A05").mkdir(parents=True)
+    (src / "ts=2024-01-02 03%3A04%3A05" / "a.xml").write_text(
+        "<rec><id>1</id></rec>"
+    )
+    opts = {"rowTag": "rec"}
+    if zone:
+        opts["timezone"] = zone
+    schema = "id long, ts timestamp"
+    reader = spark.read.format("xml-graft").schema(schema)
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    batch = reader.load(str(src)).collect()
+    stream = _stream_rows(
+        spark, str(src), schema, f"pts_{zone or 'unset'}".replace("/", "_"),
+        **opts,
+    )
+    # the session and the process zone are UTC: naive values are UTC
+    want = [(1, dt.datetime(2024, 1, 2, hour, 4, 5))]
+    assert [(r.id, r.ts) for r in batch] == want
+    assert [(r.id, r.ts) for r in stream] == want
+
+
+def test_partition_timestamp_date_only_and_unparseable(tmp_path):
+    """A date-only partition timestamp reads as its midnight (in the
+    ``timezone`` option), ``timestampFormat`` does not apply to directory
+    names, and a value that is no ISO timestamp raises naming itself."""
+    import datetime as dt
+
+    from spark_xml_spark.sources.datasource import XmlReader
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("ts", T.TimestampType())]
+    )
+
+    def read(value, **opts):
+        src = tmp_path / value
+        (src / f"ts={value}").mkdir(parents=True)
+        (src / f"ts={value}" / "a.xml").write_text("<rec><id>1</id></rec>")
+        r = XmlReader({"path": str(src), "rowTag": "rec", **opts}, schema)
+        return [row for p in r.partitions() for b in r.read(p) for row in b.to_pylist()]
+
+    utc = dt.timezone.utc
+    assert read("2024-01-02") == [
+        {"id": 1, "ts": dt.datetime(2024, 1, 2, tzinfo=utc)}
+    ]
+    assert read("2024-01-03", timezone="America/New_York") == [
+        {"id": 1, "ts": dt.datetime(2024, 1, 3, 5, tzinfo=utc)}
+    ]
+    with pytest.raises(ValueError, match="'02-01-2024'"):
+        read("02-01-2024", timestampFormat="dd-MM-yyyy")
+
+
+def test_pushdown_reader_pickles_without_file_listing(tmp_path, monkeypatch):
+    """Spark pickles the read function, which closes over the reader, into
+    every read task before it calls partitions(): after pushFilters the
+    reader must not carry the file listing, partitions() plans from the
+    one listing pushFilters classified against, and the pushed read's
+    rows stay the same."""
+    import pickle
+
+    from pyspark.sql import datasource as ds
+
+    from spark_xml_spark.sources import partitions as pmod
+    from spark_xml_spark.sources.datasource import XmlPushdownReader
+
+    src = tmp_path / "src"
+    for y in range(2000, 2020):
+        d = src / f"year={y}"
+        d.mkdir(parents=True)
+        for k in range(100):
+            (d / f"f{k:03d}.xml").write_text(f"<rec><id>{k}</id></rec>")
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("year", T.IntegerType())]
+    )
+    r = XmlPushdownReader(
+        {"path": str(src), "rowTag": "rec", "filterPushdown": "true"}, schema
+    )
+    fresh = len(pickle.dumps(r))
+    listings = []
+    discover = pmod.discover_partitions
+    monkeypatch.setattr(
+        pmod, "discover_partitions",
+        lambda *a, **k: listings.append(a) or discover(*a, **k),
+    )
+    assert r.pushFilters(
+        [ds.EqualTo(("year",), 2005), ds.GreaterThanOrEqual(("id",), 90)]
+    ) == []
+    assert len(pickle.dumps(r)) < 2048, (fresh, len(pickle.dumps(r)))
+    rows = sorted(
+        (row["id"], row["year"])
+        for p in r.partitions()
+        for b in r.read(p)
+        for row in b.to_pylist()
+    )
+    assert rows == [(k, 2005) for k in range(90, 100)]
+    assert len(listings) == 1

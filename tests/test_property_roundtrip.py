@@ -404,10 +404,12 @@ _FLAT_SCHEMA = T.StructType(
 @settings(max_examples=120, deadline=None)
 @given(recs=st.lists(_flat_record(), min_size=1, max_size=8))
 def test_strict_and_window_paths_equivalence_property(recs):
-    """The strict-pattern collect, the optional-pattern collect, the fused
-    window path, and the generic row path must produce identical Arrow
-    tables on ANY flat record mix (present/missing fields, whitespace,
-    entities, CR line ends)."""
+    """The columnar consumer (strict pattern, optional pattern, row path
+    per record), fed the records directly or scanned from a file with
+    forced-small splits, and the generic row path must produce identical
+    Arrow tables on ANY flat record mix (present/missing fields,
+    whitespace, entities, CR line ends). The name keeps the retired
+    clean-window tier's."""
     import os
     import tempfile
 
@@ -429,26 +431,24 @@ def test_strict_and_window_paths_equivalence_property(recs):
         list(D._rows_to_arrow_batches(iter(rows), _FLAT_SCHEMA, 256))
     )
 
-    # the columnar consumer fed per-record items (strict tried first)
+    # the columnar consumer fed the records (strict tried first)
     col = pa.Table.from_batches(
-        list(D._columnar_window_batches(
-            (("rec", r) for r in recs), _FLAT_SCHEMA, opts, 4
-        ))
+        list(D._columnar_batches(iter(recs), _FLAT_SCHEMA, opts, 4))
     )
     assert col.equals(ref)
 
-    # fused window path over a real file with forced-small splits
+    # the records scanned from a real file with forced-small splits
     d = tempfile.mkdtemp()
     p = os.path.join(d, "t.xml")
     with open(p, "w") as fh:
         fh.write("<root>" + "".join(recs) + "</root>")
 
-    def windows():
+    def scanned():
         for sp in tok.plan_splits(p, "utf-8", 64):
-            yield from tok.scan_split_windows(sp, "r", "utf-8")
+            yield from tok.scan_split(sp, "r", "utf-8")
 
-    win = list(D._columnar_window_batches(windows(), _FLAT_SCHEMA, opts, 4))
-    wt = pa.Table.from_batches(win) if win else ref.slice(0, 0)
+    got = list(D._columnar_batches(scanned(), _FLAT_SCHEMA, opts, 4))
+    wt = pa.Table.from_batches(got) if got else ref.slice(0, 0)
     assert wt.equals(ref)
 
 

@@ -1240,10 +1240,10 @@ def test_stream_stream_interval_join_validation(spark, tmp_path):
 
 def test_stream_equals_batch_across_row_tiers(spark, tmp_path, monkeypatch):
     """A micro-batch is a batch read of its files: on a directory that
-    puts records on every tier of the columnar scan (clean windows, a
-    quote-bearing record matched per record, and the row fallback for an
+    puts records on both tiers of the columnar scan (plain and
+    quote-bearing records matched per record, and the row fallback for an
     entity reference and nested pages), the stream source returns the
-    batch reader's rows, and reaches the columnar tiers itself."""
+    batch reader's rows, and reaches both tiers itself."""
     import glob
     import json
 
@@ -1315,5 +1315,5 @@ def test_stream_equals_batch_across_row_tiers(spark, tmp_path, monkeypatch):
             tiers[t["tier"]] = tiers.get(t["tier"], 0) + t["rows"]
     assert all(
         tiers.get(t, 0) > 0
-        for t in ("columnar_window", "columnar_flat", "row_fallback")
+        for t in ("columnar_flat", "row_fallback")
     ), tiers

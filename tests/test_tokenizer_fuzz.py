@@ -17,7 +17,6 @@ record that holds a same-name row. There, as in the reference's
 import bz2
 import functools
 import random
-import re
 from unittest import mock
 
 import pytest
@@ -163,22 +162,6 @@ def test_plain_splits_join_to_oracle(tmp_path_factory, gen, points):
     with mock.patch.object(tokenizer, "_LEAN_MIN", 1):
         got = [r for s in splits for r in tokenizer.scan_split(s, "r")]
     assert got == records
-    # the windowed view carries the same records in the same order
-    # and a window only ever holds clean records: no quote, comment,
-    # CDATA, DOCTYPE or PI, and no nested or self-closing same-name row
-    flat = []
-    for s in splits:
-        for item in tokenizer.scan_split_windows(s, "r"):
-            if item[0] == "rec":
-                flat.append(item[1])
-                continue
-            text = item[1]
-            assert not re.search(r"[\"']|<[!?]", text)
-            recs = [text[a:b] for a, b in item[2]]
-            assert not any(re.search(r"<r[\s/>]", r[1:]) or r.endswith("/>")
-                           for r in recs)
-            flat.extend(recs)
-    assert flat == records
     assert list(tokenizer.scan_string(data.decode("utf-8"), "r")) == records
 
 
@@ -238,24 +221,17 @@ def test_record_larger_than_three_chunks(tmp_path):
         assert got == records, target
 
 
-def test_windows_across_refills_hold_no_offenders(tmp_path):
-    """Past the first loaded chunk, a record with a quoted attribute is
-    still a ``"rec"`` item, never part of a clean window."""
+def test_quoted_records_across_refills_scan_whole(tmp_path):
+    """Past the first loaded chunk, records with a quoted attribute among
+    plain ones (the full regex and its lean form taking turns) still scan
+    whole, in order."""
     records = [
         f'<r k="{i}"><a>{i}</a></r>' if i % 3 == 0 else f"<r><a>{i}</a></r>"
         for i in range(3 * tokenizer._CHUNK // 20)
     ]
     path = tmp_path / "many.xml"
     path.write_text("<rows>\n" + "\n".join(records) + "\n</rows>\n")
-    got = []
-    for item in tokenizer.scan_split_windows(
-        tokenizer.FileSplit(str(path), 0, -1), "r"
-    ):
-        if item[0] == "rec":
-            got.append(item[1])
-        else:
-            assert '"' not in item[1]
-            got.extend(item[1][a:b] for a, b in item[2])
+    got = list(tokenizer.scan_split(tokenizer.FileSplit(str(path), 0, -1), "r"))
     assert got == records
 
 
