@@ -4,8 +4,9 @@
 The Python-native analogue of the reference's expression surface
 (/root/reference/src/main/scala/com/databricks/spark/xml/functions.scala:35-38,
 XmlDataToCatalyst.scala:28-63, package.scala:124-157). The reference's
-``XmlDataToCatalyst`` is a CodegenFallback expression (interpreted per row);
-our equivalent is an Arrow-batched Python UDF — same semantics, batched
+``XmlDataToCatalyst`` is a CodegenFallback expression running the scan's
+parser on each value; our ``from_xml`` is an Arrow UDF over the scan's own
+records -> Arrow step (``decode_records``) — same semantics, batched
 transfer instead of py4j round trips (README.md:146-172 shows what reference
 users had to do from Python).
 
@@ -19,13 +20,19 @@ Semantics kept bit-for-bit:
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterable, Optional, Union
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
-from spark_xml_spark.options import XmlOptions
+from spark_xml_spark.options import DROPMALFORMED, PERMISSIVE, XmlOptions
+from spark_xml_spark.sources.datasource import decode_records
 from spark_xml_spark.xmlcore import generator, infer, parser
 
 
@@ -36,6 +43,49 @@ def _as_schema(schema: Union[str, T.DataType]) -> T.DataType:
     return schema
 
 
+def _struct_decoder(schema: T.StructType, xo: XmlOptions):
+    """``pa.StringArray`` -> ``pa.StructArray``, one slot per string (null
+    for null), through the scan's records -> Arrow step. Rows are not
+    XSD-validated. Under the effective DROPMALFORMED mode a malformed record
+    must null its slot, not drop it: records decode PERMISSIVE with a
+    private corrupt-record column, and the struct is null where it is set."""
+    xo = replace(xo, row_validation_xsd_path=None)
+    drop = parser.effective_mode_for_column(schema, xo) == DROPMALFORMED
+    dschema = schema
+    if drop:
+        # no element or attribute name has a space: no record can fill it
+        private = " from_xml corrupt record"
+        while private in schema.fieldNames():
+            private += " "
+        xo = replace(xo, mode=PERMISSIVE, column_name_of_corrupt_record=private)
+        dschema = T.StructType(
+            schema.fields + [T.StructField(private, T.StringType())]
+        )
+    arrow_schema = to_arrow_schema(dschema)
+    struct_fields = list(to_arrow_type(schema))
+
+    def decode(strings: pa.Array) -> pa.Array:
+        values = strings.to_pylist()
+        at = [i for i, v in enumerate(values) if v is not None]
+        table = pa.Table.from_batches(
+            list(decode_records((values[i] for i in at), dschema, xo)),
+            arrow_schema,
+        )
+        cols = [c.combine_chunks() for c in table.columns]
+        bad = cols.pop().is_valid() if drop else None
+        structs = pa.StructArray.from_arrays(
+            cols, fields=struct_fields, mask=bad
+        )
+        if len(at) == len(values):
+            return structs
+        slots = [None] * len(values)
+        for j, i in enumerate(at):
+            slots[i] = j
+        return structs.take(pa.array(slots, pa.int64()))
+
+    return decode
+
+
 def from_xml(
     col: Union[str, Column],
     schema: Union[str, T.StructType, T.ArrayType],
@@ -44,45 +94,36 @@ def from_xml(
     """Parse a string column of XML fragments into a struct column
     (or array<string> -> array<struct>)."""
     dt = _as_schema(schema)
-    opts_dict = dict(options or {})
-
-    # Options and mode resolution are computed ONCE here on the driver and
-    # captured by value in the closure — never per row (the reference builds
-    # XmlOptions once per expression too, XmlDataToCatalyst.scala:28-36).
-    xo = XmlOptions.from_dict(opts_dict)
+    # Options and the decoder are built ONCE here on the driver, never per
+    # batch (the reference builds XmlOptions once per expression too,
+    # XmlDataToCatalyst.scala:28-36).
+    xo = XmlOptions.from_dict(dict(options or {}))
 
     if isinstance(dt, T.ArrayType):
-        elem = dt.elementType
-        if not isinstance(elem, T.StructType):
+        if not isinstance(dt.elementType, T.StructType):
             raise TypeError("array schema for from_xml must be array<struct<...>>")
-        mode = parser.effective_mode_for_column(elem, xo)
-        fast_arr = parser.FastFlatParser.try_build(elem, xo)
+        decode = _struct_decoder(dt.elementType, xo)
+        list_type = to_arrow_type(dt)
 
-        @F.udf(returnType=dt, useArrow=True)
-        def parse_array(values):
-            if values is None:
-                return None
-            return [
-                None
-                if v is None
-                else parser.parse_record(v, elem, xo, mode=mode, fast=fast_arr)
-                for v in values
-            ]
+        def parse_lists(lists: pa.Array) -> pa.Array:
+            # decode the values, then rebuild the lists around them
+            import pyarrow.compute as pc
 
-        return parse_array(col)
+            lengths = pc.fill_null(pc.list_value_length(lists), 0)
+            offsets = pa.concat_arrays([
+                pa.array([0], pa.int32()),
+                pc.cumulative_sum(lengths).cast(pa.int32()),
+            ])
+            return pa.ListArray.from_arrays(
+                offsets, decode(lists.flatten()), type=list_type,
+                mask=lists.is_null(),
+            )
+
+        return arrow_udf(parse_lists, dt)(col)
 
     if not isinstance(dt, T.StructType):
         raise TypeError("schema for from_xml must be struct or array<struct>")
-    mode = parser.effective_mode_for_column(dt, xo)
-    fast = parser.FastFlatParser.try_build(dt, xo)
-
-    @F.udf(returnType=dt, useArrow=True)
-    def parse_one(value):
-        if value is None:
-            return None
-        return parser.parse_record(value, dt, xo, mode=mode, fast=fast)
-
-    return parse_one(col)
+    return arrow_udf(_struct_decoder(dt, xo), dt)(col)
 
 
 def _tuple_to_row(value, dt: T.DataType):
@@ -126,14 +167,22 @@ def to_xml(
     if not isinstance(st, T.StructType):
         raise TypeError("schema for to_xml must be a struct")
     xo = XmlOptions.from_dict(dict(options or {}))
+    # An Arrow UDF like from_xml, so that from_xml(to_xml(...)) chains in
+    # one Python worker per task (UDFs of different kinds cannot); rows
+    # reach the generator as the Row values an Arrow-optimized F.udf gets,
+    # through PySpark's own converter.
+    to_row = ArrowTableToRowsConversion._create_converter(st)
 
-    @F.udf(returnType=T.StringType(), useArrow=True)
-    def gen_one(row):
-        if row is None:
-            return None
-        return generator.row_to_xml(st, row, xo)
+    def gen(rows: pa.Array) -> pa.Array:
+        return pa.array(
+            [
+                None if r is None else generator.row_to_xml(st, to_row(r), xo)
+                for r in rows.to_pylist()
+            ],
+            pa.string(),
+        )
 
-    return gen_one(col)
+    return arrow_udf(gen, T.StringType())(col)
 
 
 def schema_of_xml(

@@ -7,11 +7,12 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 
 - ``partitions()`` plans byte-range file splits on the driver (the HDFS-split
   analogue); each ``read(partition)`` task scans only its range with the
-  record-ownership rule, then parses records against the requested schema.
-  Flat all-scalar schemas take the columnar scan: each record is matched
-  on its own against a whole-record pattern learned from the data, the
-  matched ones are cast in one columnar pass per batch, and the rest take
-  the exact parser.
+  record-ownership rule, then decodes them (``decode_records``, which
+  ``from_xml`` shares). Flat all-scalar schemas, a corrupt-record column
+  included, take the columnar scan: each record is matched on its own
+  against a whole-record pattern (``parser.learn_flat_pattern``) learned
+  from the data, the matched ones are cast in one columnar pass per batch,
+  and the rest take the exact parser.
 - ``schema()`` resolves the user-provided ``schema`` option or runs sampled
   inference (the reference's 2-pass inferred-read semantics,
   XmlRelation.scala:43-49). For cluster-distributed inference use
@@ -487,9 +488,10 @@ _C_CASTABLE = ("string", "long", "integer", "short", "byte",
 
 def _columnar_ok(schema: T.StructType, xopts: XmlOptions) -> bool:
     """Columnar path applies only when the row path's per-record extras
-    can't fire: no XSD row validation, no corrupt-record column to
-    populate, and default empty/null-string semantics (non-defaults are
-    honored by the casters, but the C string column is identity-only)."""
+    can't fire: no XSD row validation and default empty/null-string
+    semantics (non-defaults are honored by the casters, but the C string
+    column is identity-only). A corrupt-record cell is null for a matched
+    (well-formed) record; the row path fills it for the rest."""
     if xopts.row_validation_xsd_path:
         return False
     if (
@@ -497,8 +499,6 @@ def _columnar_ok(schema: T.StructType, xopts: XmlOptions) -> bool:
         or xopts.ignore_surrounding_spaces
         or xopts.treat_empty_values_as_nulls
     ):
-        return False
-    if any(f.name == xopts.column_name_of_corrupt_record for f in schema.fields):
         return False
     fast = parser.FastFlatParser.try_build(schema, xopts)
     if fast is None:
@@ -621,20 +621,12 @@ def _cast_ladder(cols, fast, arrow_schema, guards):
 
 def _captures(fast, batch):
     """Per record, the learned whole-record pattern's match (strict first,
-    then optional: identical captures, see _compile_seq_pattern), or None
+    then loose: identical captures, see parser.learn_flat_pattern), or None
     when the row path must parse it: no pattern learned, an entity
-    reference, a CR that line-end normalization must rewrite, or a field
-    fed by several groups (a root attr plus a same-named element, or a
-    duplicated tag), which the row tiers resolve by in-order overwrite but
-    the columnar transpose would double-append."""
-    pat = fast.seq_pattern
-    targets = [i for _g, i, _a in fast.group_map]
-    if pat is None or len(targets) != len(set(targets)):
+    reference, or a CR that line-end normalization must rewrite."""
+    if fast.flat is None:
         return [None] * len(batch)
-    loose = pat.match
-    if fast.strict_seq_pattern is None:
-        return [None if "&" in r or "\r" in r else loose(r) for r in batch]
-    strict = fast.strict_seq_pattern.match
+    strict, loose = fast.flat.strict.match, fast.flat.loose.match
     return [
         None if "&" in r or "\r" in r else strict(r) or loose(r)
         for r in batch
@@ -650,7 +642,7 @@ def _columnar_batches(
     (:func:`_captures`). The batch's matched records are transposed and
     cast in one columnar pass; its unmatched records — and all of them
     when a Python caster rejects a value — take the exact row path
-    through one shared parser, and one ``take`` restores record order.
+    through the same parser, and one ``take`` restores record order.
     So a batch costs a fixed number of Arrow calls however dirty records
     interleave with clean ones, a dirty record never drags its clean
     neighbours to the row path, and DROPMALFORMED drops only the records
@@ -659,8 +651,7 @@ def _columnar_batches(
 
     import pyarrow as pa
 
-    fast = parser.FastFlatParser.try_build(schema, xopts)
-    row_fast = parser.FastFlatParser.try_build(schema, xopts)  # once per scan
+    fast = parser.FastFlatParser.try_build(schema, xopts)  # once per scan
     ncols = len(schema.fields)
     arrow_schema = to_arrow_schema(schema)
     guards = _cast_guards(xopts)
@@ -671,18 +662,15 @@ def _columnar_batches(
         if not batch:
             return
         t0 = timer() if timer else 0.0
-        if fast.seq_pattern is None:
+        if fast.flat is None:
             # learn from up to 16 entity-free records, so a batch that
             # opens with a record the pattern cannot describe (a comment,
             # a CDATA field) still learns
             for probe in itertools.islice(
                 (r for r in batch if "&" not in r), 16
             ):
-                try:
-                    fast._parse_regex(probe)  # compiles pattern on success
-                except Exception:
-                    pass
-                if fast.seq_pattern is not None:
+                fast.learn(probe)
+                if fast.flat is not None:
                     break
         caps = _captures(fast, batch)
         hit = [i for i, m in enumerate(caps) if m is not None]
@@ -708,7 +696,7 @@ def _columnar_batches(
                 continue
             miss = [i for i, m in enumerate(caps) if m is None]
         rows = [
-            parser.parse_record(batch[i], schema, xopts, fast=row_fast)
+            parser.parse_record(batch[i], schema, xopts, fast=fast)
             for i in miss
         ]
         parsed = [r for r in rows if r is not None]
@@ -895,6 +883,22 @@ def _tallied(batches, tally, tier: str):
     for b in batches:
         tally.add(tier, b.num_rows)
         yield b
+
+
+def decode_records(records, schema: T.StructType, xopts: XmlOptions,
+                   tally=None) -> Iterator:
+    """Record strings -> Arrow batches of ``schema``, one row per record
+    the parse mode keeps, in record order: the decoder of the scan and of
+    ``from_xml``. The columnar scan where _columnar_ok allows, else
+    ``parse_records`` into Arrow batches."""
+    if _columnar_ok(schema, xopts):
+        return _columnar_batches(records, schema, xopts, tally=tally)
+    batches = _rows_to_arrow_batches(
+        parser.parse_records(records, schema, xopts), schema
+    )
+    if tally is not None:
+        batches = _tallied(batches, tally, "row_arrow")
+    return batches
 
 
 def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
@@ -1118,9 +1122,10 @@ class XmlReader(DataSourceReader):
             )
 
     def _read_impl(self, partition: XmlInputPartition, tally) -> Iterator:
-        """One pipeline: records -> Arrow batches (columnar or row tier)
-        -> pushed-filter masks; read() appends the partition constants.
-        The batch and the stream reader both read through it."""
+        """One pipeline: records -> Arrow batches (decode_records, the
+        decoder ``from_xml`` shares) -> pushed-filter masks; read() appends
+        the partition constants. The batch and the stream reader both read
+        through it."""
         xopts = XmlOptions.from_dict(self._opts_dict)
         fields = self._schema.fields
         dschema = T.StructType(fields[: len(fields) - len(partition.pvals)])
@@ -1138,18 +1143,7 @@ class XmlReader(DataSourceReader):
             reject = _raw_prefilter(self._pushed, dschema, corrupt)
             if reject is not None:
                 records = (r for r in records if not reject(r))
-        if _columnar_ok(dschema, xopts):
-            # Columnar path: matched records go straight from their field
-            # strings to Arrow arrays with C-level casts; the records the
-            # pattern or casts can't prove equivalent take the exact row
-            # path.
-            batches = _columnar_batches(records, dschema, xopts, tally=tally)
-        else:
-            batches = _rows_to_arrow_batches(
-                parser.parse_records(records, dschema, xopts), dschema
-            )
-            if tally is not None:
-                batches = _tallied(batches, tally, "row_arrow")
+        batches = decode_records(records, dschema, xopts, tally)
         if self._pushed:
             batches = _masked(
                 batches,

@@ -16,6 +16,9 @@ Python re-implementation of the reference's InferSchema
   valueTag, fallback String (InferSchema.scala:39-59,267-332)
 - canonicalization: Null->String, empty structs deleted
   (InferSchema.scala:237-262)
+- columnar inference (below): under default options, flat records that
+  match the pattern ``parser.learn_flat_pattern`` learned are typed per
+  column, with the per-record fold's result exactly
 
 The distributed plan (the reference's RDD fold, InferSchema.scala:67-101) is
 re-expressed in Spark as a per-partition partial merge + driver final merge —
@@ -279,14 +282,15 @@ def infer_record(
 
 
 # --- columnar inference ----------------------------------------------------
-# For flat attribute-free records, type sniffing moves from per-cell Python
-# to per-column C regex classification: the masks below are DISJOINT and
+# For flat records, type sniffing moves from per-cell Python to per-column
+# C regex classification: the capture groups of the pattern the parser's
+# one flat-record learner learned give a column of cell strings per field
+# (an attribute "" infers NullType exactly like an empty element, so
+# attribute columns share the typer). The masks below are DISJOINT and
 # each implies exactly one infer_from outcome for DEFAULT options (no
 # custom formats, no trimming, no empty-as-null). Any value no mask can
 # claim falls back to the per-cell infer_from — so the folded column type
 # is always identical to the per-record path.
-import re as _re_inf
-
 # one sign, ASCII digits only (is_long uses isdecimal + int64 bounds; <=18
 # digits is provably in bounds — longer or unicode-digit values fall back)
 _COL_LONG = r"^-?[0-9]{1,18}$"
@@ -308,8 +312,6 @@ _COL_DATE = r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$"
 # everything else here is String without a per-cell check
 _COL_STRINGISH = r"^[^0-9+\-.]"
 
-_COL_SEQ_CACHE_KEY = "_columnar_seq"
-
 
 def _columnar_infer_ok(options: XmlOptions) -> bool:
     return (
@@ -321,73 +323,6 @@ def _columnar_infer_ok(options: XmlOptions) -> bool:
         and options.date_format is None
         and options.null_value is None
     )
-
-
-def _learn_seq_pattern(xml: str, options: XmlOptions):
-    """Whole-record pattern with one capture group per top-level tag (and
-    per ROOT ATTRIBUTE, as ``attributePrefix``-prefixed field names) of a
-    proven-flat record (same structural proof as the parser's tier 1), or
-    None. Groups are ordered; the field-name list is returned alongside.
-    Attribute "" infers NullType exactly like an empty element
-    (infer_from('') is NullType), so attr columns reuse the same column
-    typer."""
-    from spark_xml_spark.xmlcore.parser import (
-        _ATTR_PAIR,
-        _FLAT_DISQUALIFIER,
-        _FLAT_FIELD,
-        _ROOT_OPEN_ATTRS,
-        _attr_value,
-    )
-
-    m = _ROOT_OPEN_ATTRS.match(xml)
-    if m is None:
-        return None
-    root = m.group(1)
-    attrs: List[tuple] = []
-    body = xml
-    extra_lt = 2
-    if m.group(2):
-        if options.exclude_attribute:
-            return None  # the event path drops attributes: stay exact
-        attrs = [
-            (am.group(1), '"' if am.group(2) is not None else "'")
-            for am in _ATTR_PAIR.finditer(m.group(2))
-        ]
-        body = xml[m.end():]
-        extra_lt = 1
-        if _FLAT_DISQUALIFIER.search(body):
-            return None
-    elif _FLAT_DISQUALIFIER.search(xml):
-        return None
-    fields = _FLAT_FIELD.findall(body)
-    if (not fields and not attrs) or body.count("<") != extra_lt + 2 * len(fields):
-        return None
-    if not body.rstrip().endswith(f"</{root}>"):
-        return None
-
-    def local(n: str) -> str:
-        return n.split(":")[-1] if options.ignore_namespace else n
-
-    names = [options.attribute_prefix + local(a) for a, _q in attrs] + [
-        local(t) for t, _ in fields
-    ]
-    if len(set(names)) != len(names):
-        return None  # repeated tag -> ArrayType (or name clash): exact path
-    parts = ["\\s*<", _re_inf.escape(root)]
-    for a, q in attrs:
-        esc = _re_inf.escape(a)
-        parts.append(f"(?:\\s+{esc}={q}({_attr_value(q)}){q})?")
-    parts.append("\\s*>")
-    for tag, _ in fields:
-        esc = _re_inf.escape(tag)
-        parts.append(f"(?:\\s*<{esc}>([^<]*)</{esc}>)?")
-    parts.append("\\s*</")
-    parts.append(_re_inf.escape(root))
-    parts.append(">\\s*\\Z")
-    try:
-        return _re_inf.compile("".join(parts)), names
-    except _re_inf.error:
-        return None
 
 
 def _column_infer_type(vals: List[Optional[str]], options: XmlOptions):
@@ -453,7 +388,7 @@ def _columnar_fold(records: Iterable[str], options: XmlOptions) -> T.DataType:
     batching does not change the result."""
     import itertools
 
-    from spark_xml_spark.xmlcore.parser import _FLAT_DISQUALIFIER
+    from spark_xml_spark.xmlcore.parser import learn_flat_pattern
 
     merged: T.DataType = T.StructType([])
     pat = None
@@ -471,9 +406,9 @@ def _columnar_fold(records: Iterable[str], options: XmlOptions) -> T.DataType:
             if disabled:
                 pass
             elif pat is None and "&" not in xml:
-                learned = _learn_seq_pattern(xml, options)
+                learned = learn_flat_pattern(xml, options)
                 if learned is not None:
-                    pat, tags = learned
+                    pat, tags = learned.loose, learned.names
             if (
                 not disabled and pat is not None
                 and "&" not in xml and "\r" not in xml

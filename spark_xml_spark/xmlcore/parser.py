@@ -26,7 +26,7 @@ maps = dicts) ready for Spark conversion.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, List, Optional, Tuple
+from typing import Any, Iterable, Iterator, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import types as T
 
@@ -281,7 +281,6 @@ def parse_record(
     xml: str,
     schema: T.StructType,
     options: XmlOptions,
-    mode: Optional[str] = None,
     validator=None,
     fast=None,
 ) -> Optional[tuple]:
@@ -290,7 +289,6 @@ def parse_record(
     dropped (DROPMALFORMED). ``fast`` is an optional FastFlatParser; its
     failures re-route through the generic path so policy semantics are
     unchanged."""
-    mode = mode or options.mode
     try:
         if validator is not None:
             validator(xml)
@@ -303,22 +301,21 @@ def parse_record(
         root_attributes = ev.gather_root_attributes(stream)
         return convert_object(stream, schema, options, root_attributes)
     except PartialResultError as e:
-        return _failed_record(xml, options, mode, schema, partial=e.partial, cause=e.cause)
+        return _failed_record(xml, options, schema, partial=e.partial, cause=e.cause)
     except Exception as e:
-        return _failed_record(xml, options, mode, schema, cause=e)
+        return _failed_record(xml, options, schema, cause=e)
 
 
 def _failed_record(
     record: str,
     options: XmlOptions,
-    mode: str,
     schema: T.StructType,
     partial: Optional[tuple] = None,
     cause: Optional[Exception] = None,
 ) -> Optional[tuple]:
-    if mode == FAILFAST:
+    if options.mode == FAILFAST:
         raise MalformedRecordError("Malformed line in FAILFAST mode") from cause
-    if mode == DROPMALFORMED:
+    if options.mode == DROPMALFORMED:
         return None
     # PERMISSIVE: keep partial values, raw record into the corrupt column
     # (StaxXmlParser.scala:111-122).
@@ -353,8 +350,7 @@ import re as _re
 # comments/PIs/self-closing tags, or a CR (XML line-end normalization turns
 # CRLF and lone CR into LF, XML 1.0 §2.11), drops to the expat path (whose
 # anomaly handling is in turn backed by the generic parser). A '=' inside
-# the ROOT open tag alone is re-tried by the attribute-aware branch of
-# _parse_regex.
+# the ROOT open tag alone is allowed: _flat_proof reads root attributes.
 _FLAT_DISQUALIFIER = _re.compile(r"[=&\r]|<!|/>|<\?")
 # One flat field: <tag>text-without-markup</tag> (closing name must match).
 _FLAT_FIELD = _re.compile(r"<([^\s>/]+)>([^<]*)</\1>")
@@ -381,9 +377,110 @@ def _attr_value(q: str) -> str:
     return f"[^{q}<\\t\\n\\r]*"
 
 
-# Attribute-free root open tag (the '=' disqualifier already proved there
-# are no attributes anywhere in the record).
-_ROOT_OPEN_PLAIN = _re.compile(r"\s*<([A-Za-z_:][^\s>/=]*)\s*>")
+
+
+def _flat_proof(xml: str):
+    """``(root, attrs, fields)`` when ``xml`` is provably one root element
+    holding only text-only children, else None: root attributes as
+    ``(name, quote, value)``, children as ``(tag, text)``, in document
+    order. A flat record has exactly one '<' per start/end tag — root open
+    and close plus one pair per matched field — AND ends with the root's
+    close tag. The count alone can be fooled by an unclosed tag standing in
+    for the root close (e.g. "<d><id>1</id><src>"); the suffix check closes
+    that hole."""
+    m = _ROOT_OPEN_ATTRS.match(xml)
+    if m is None:
+        return None
+    root = m.group(1)
+    attrs: list = []
+    body = xml
+    body_extra_lt = 2  # '<' of root open + close tags
+    if m.group(2):
+        # every '=' must live in the root open tag's attributes
+        body = xml[m.end():]
+        if _FLAT_DISQUALIFIER.search(body):
+            return None
+        # finditer, not findall: findall folds a non-participating value
+        # group to '' which is indistinguishable from a real empty value
+        attrs = [
+            (am.group(1), '"', am.group(2)) if am.group(2) is not None
+            else (am.group(1), "'", am.group(3))
+            for am in _ATTR_PAIR.finditer(m.group(2))
+        ]
+        body_extra_lt = 1  # root open tag already consumed
+    elif _FLAT_DISQUALIFIER.search(xml):
+        return None
+    fields = _FLAT_FIELD.findall(body)
+    if body.count("<") != body_extra_lt + 2 * len(fields):
+        return None
+    if not body.rstrip().endswith(f"</{root}>"):
+        return None
+    return root, attrs, fields
+
+
+class FlatPattern(NamedTuple):
+    """Whole-record patterns learned from one flat record. Group ``g``
+    of either pattern captures field ``names[g - 1]``; the first ``attrs``
+    names are root attributes (``attributePrefix`` + name)."""
+
+    loose: _re.Pattern
+    strict: _re.Pattern
+    names: List[str]
+    attrs: int
+
+
+def learn_flat_pattern(
+    xml: str, options: XmlOptions, proof=None
+) -> Optional[FlatPattern]:
+    """The one flat-record pattern learner (the parser's tier 0, the
+    columnar scan, columnar inference): None unless ``xml`` passes
+    :func:`_flat_proof` (``proof``, if the caller holds it) and names each
+    field once — a repeated tag, or a root attribute and a same-named
+    element, has no fixed field per group and stays on the per-record
+    tiers. One group per root attribute (none under excludeAttribute) and
+    child, in the record's order. The loose pattern makes every part
+    optional and allows whitespace between tags; the strict one, about 2x
+    faster, requires every part and no whitespace. Where both match their
+    captures are identical, so callers may try strict first."""
+    proof = proof or _flat_proof(xml)
+    if proof is None:
+        return None
+    root, attrs, fields = proof
+
+    def local(name: str) -> str:
+        return name.rsplit(":", 1)[-1] if options.ignore_namespace else name
+
+    esc_root = _re.escape(root)
+    loose = ["\\s*<", esc_root]
+    strict = ["<", esc_root]
+    names: List[str] = []
+    for name, q, _value in attrs:
+        value = _attr_value(q)
+        if not options.exclude_attribute:
+            names.append(options.attribute_prefix + local(name))
+            value = f"({value})"
+        esc = _re.escape(name)
+        loose.append(f"(?:\\s+{esc}={q}{value}{q})?")
+        strict.append(f"\\s+{esc}={q}{value}{q}")
+    n_attrs = len(names)
+    loose.append("\\s*>")
+    strict.append(">")
+    for tag, _text in fields:
+        names.append(local(tag))
+        esc = _re.escape(tag)
+        loose.append(f"(?:\\s*<{esc}>([^<]*)</{esc}>)?")
+        strict.append(f"<{esc}>([^<]*)</{esc}>")
+    if not names or len(set(names)) != len(names):
+        return None
+    loose.extend(["\\s*</", esc_root, ">\\s*\\Z"])
+    strict.extend(["</", esc_root, ">\\Z"])
+    try:
+        return FlatPattern(
+            _re.compile("".join(loose)), _re.compile("".join(strict)),
+            names, n_attrs,
+        )
+    except _re.error:
+        return None
 
 
 class FastFlatParser:
@@ -393,14 +490,17 @@ class FastFlatParser:
     attribute can produce — a child element with attributes infers as a
     struct and is rejected above).
 
-    Two tiers, both falling back to the generic parser on ANY anomaly so
+    Three tiers, all falling back to the generic parser on ANY anomaly so
     the parse-mode policy and partial-row behavior are always the generic
     path's:
 
-    1. regex tier: one C-speed ``findall`` of ``<tag>text</tag>`` over the
-       record. Valid only when the record has no entities, CDATA,
-       comments, PIs, self-closing tags, or attributes outside the root
-       open tag (single pre-scan), and the total ``<`` count proves every
+    0. pattern tier: one C-speed match against the pattern
+       :func:`learn_flat_pattern` learned (:meth:`learn`); a record in
+       another field order misses and takes tier 1.
+    1. regex tier: :func:`_flat_proof`, one C-speed ``findall`` of
+       ``<tag>text</tag>`` over the record. Valid only when the record has
+       no entities, CDATA, comments, PIs, self-closing tags, or attributes
+       outside the root open tag, and the total ``<`` count proves every
        element was matched at field depth (nested levels or malformed tags
        break the arithmetic and drop to tier 2). ~10x over per-event
        Python callbacks.
@@ -416,7 +516,7 @@ class FastFlatParser:
 
     __slots__ = (
         "schema", "options", "index", "types", "is_string", "n", "strip_ns",
-        "casters", "seq_pattern", "strict_seq_pattern", "group_map",
+        "casters", "flat", "group_map",
         "attr_index", "attr_casters", "array_fields",
     )
 
@@ -482,12 +582,8 @@ class FastFlatParser:
         self.attr_casters = [
             self._build_attr_caster(f.dataType) for f in schema.fields
         ]
-        # Tier-0 whole-record pattern, learned from the first clean record:
-        # one C-speed match with a capturing group per schema field in the
-        # record's observed attr+tag order (every field optional — null
-        # elision drops tags). Records in a different order fall to tier 1.
-        self.seq_pattern = None
-        self.strict_seq_pattern = None
+        # tier 0: pattern, and (group, field index, is attr) per field group
+        self.flat: Optional[FlatPattern] = None
         self.group_map: List[tuple] = []
 
     def _build_caster(self, dt: T.DataType):
@@ -622,9 +718,8 @@ class FastFlatParser:
         # entities need real unescaping, CR line-end normalization -> expat
         if "&" in xml or "\r" in xml:
             return self._parse_expat(xml)
-        pat = self.seq_pattern
-        if pat is not None:
-            m = pat.match(xml)
+        if self.flat is not None:
+            m = self.flat.loose.match(xml)
             if m is not None:
                 row: List[Any] = [None] * self.n
                 casters = self.casters
@@ -639,47 +734,28 @@ class FastFlatParser:
             return row
         return self._parse_expat(xml)
 
+    def learn(self, xml: str, proof=None) -> None:
+        """Adopt the pattern learned from ``xml``, if any, as tier 0 —
+        never for repeated-tag arrays, whose variable occurrence counts
+        the fixed pattern cannot express."""
+        if self.array_fields:
+            return
+        flat = learn_flat_pattern(xml, self.options, proof)
+        if flat is None:
+            return
+        self.flat = flat
+        self.group_map = [
+            (g, self.index[name], g <= flat.attrs)
+            for g, name in enumerate(flat.names, 1) if name in self.index
+        ]
+
     def _parse_regex(self, xml: str):
         """Tier-1 extraction; None when the record needs a real parser.
-        The first success also compiles the tier-0 whole-record pattern."""
-        attrs: list = []
-        body = xml
-        body_extra_lt = 2  # '<' of root open + close tags
-        root = None
-        if _FLAT_DISQUALIFIER.search(xml):
-            # Salvageable only when every '=' lives in the root open tag's
-            # attributes (root attrs map to attributePrefix fields exactly
-            # like the generic path's gather_root_attributes).
-            m = _ROOT_OPEN_ATTRS.match(xml)
-            if m is None or not m.group(2):
-                return None
-            body = xml[m.end():]
-            if _FLAT_DISQUALIFIER.search(body):
-                return None
-            # finditer, not findall: findall folds a non-participating
-            # value group to '' which is indistinguishable from a real
-            # empty value
-            attrs = [
-                (am.group(1), am.group(2) if am.group(2) is not None else am.group(3))
-                for am in _ATTR_PAIR.finditer(m.group(2))
-            ]
-            body_extra_lt = 1  # root open tag already consumed
-            root = m.group(1)
-        else:
-            rm = _ROOT_OPEN_PLAIN.match(xml)
-            if rm is None:
-                return None
-            root = rm.group(1)
-        fields = _FLAT_FIELD.findall(body)
-        # Structural proof: a flat record has exactly one '<' per start/end
-        # tag — root open+close plus one pair per matched field — AND the
-        # record ends with the root's close tag. The count alone can be
-        # fooled by an unclosed tag standing in for the root close
-        # (e.g. "<d><id>1</id><src>"); the suffix check closes that hole.
-        if body.count("<") != body_extra_lt + 2 * len(fields):
+        The first success also learns the tier-0 pattern."""
+        proof = _flat_proof(xml)
+        if proof is None:
             return None
-        if not body.rstrip().endswith(f"</{root}>"):
-            return None
+        _root, attrs, fields = proof
         row: List[Any] = [None] * self.n
         index = self.index
         casters = self.casters
@@ -689,7 +765,7 @@ class FastFlatParser:
         if attrs:
             attr_index = self.attr_index
             attr_casters = self.attr_casters
-            for name, value in attrs:
+            for name, _q, value in attrs:
                 if strip_ns and ":" in name:
                     name = name.rsplit(":", 1)[-1]
                 i = attr_index.get(name, -1)
@@ -709,82 +785,9 @@ class FastFlatParser:
                         row[i] = [v]
                 else:
                     row[i] = casters[i](text)
-        if self.seq_pattern is None and not arrays:
-            # variable occurrence counts are inexpressible in the fixed
-            # tier-0 pattern; array schemas stay on tier 1/2
-            self._compile_seq_pattern(xml, [t for t, _ in fields])
+        if self.flat is None:
+            self.learn(xml, proof)
         return tuple(row)
-
-    def _compile_seq_pattern(self, xml: str, tags: List[str]) -> None:
-        root_m = _ROOT_OPEN_ATTRS.match(xml)
-        if root_m is None:
-            self.seq_pattern = None
-            return
-        parts = ["\\s*<", _re.escape(root_m.group(1))]
-        # strict variant: every probe-observed part REQUIRED and no
-        # inter-tag whitespace (the dominant machine-generated shape) — the
-        # regex engine skips both the per-part optionality branch and the
-        # \s* scans, ~2x faster than the optional pattern. A strict match
-        # produces byte-identical captures to the optional pattern (same
-        # groups, same order, sequential-greedy over the same parts), so
-        # the columnar path tries strict on each record first and falls
-        # back to the optional pattern when the record diverges (null-
-        # elided field, extra attr, reordering, indentation).
-        strict_parts = ["<", _re.escape(root_m.group(1))]
-        gmap: List[tuple] = []
-        g = 0
-        # A field CAN be captured by several groups (a root attr plus a
-        # same-named element, or a duplicated tag): the parse loop applies
-        # groups in document order and only overwrites on a non-None
-        # capture, which reproduces convert_object's attrs-first,
-        # present-elements-overwrite semantics. (An earlier version
-        # suppressed the attr capture when an element targeted the same
-        # field — that silently NULLed the attribute whenever a later
-        # record had the attribute but not the element.) The columnar
-        # transpose cannot express multi-group fields and skips the
-        # pattern when group_map has duplicate targets.
-        for am in _ATTR_PAIR.finditer(root_m.group(2)):
-            name = am.group(1)
-            q = '"' if am.group(2) is not None else "'"
-            esc = _re.escape(name)
-            base = (
-                name.rsplit(":", 1)[-1] if self.strip_ns and ":" in name else name
-            )
-            i = self.attr_index.get(base, -1)
-            if i >= 0:
-                g += 1
-                gmap.append((g, i, True))
-                parts.append(f"(?:\\s+{esc}={q}({_attr_value(q)}){q})?")
-                strict_parts.append(f"\\s+{esc}={q}({_attr_value(q)}){q}")
-            else:
-                parts.append(f"(?:\\s+{esc}={q}{_attr_value(q)}{q})?")
-                strict_parts.append(f"\\s+{esc}={q}{_attr_value(q)}{q}")
-        parts.append("\\s*>")
-        strict_parts.append(">")
-        for tag in tags:
-            name = tag.rsplit(":", 1)[-1] if self.strip_ns and ":" in tag else tag
-            i = self.index.get(name, -1)
-            esc = _re.escape(tag)
-            if i >= 0:
-                g += 1
-                gmap.append((g, i, False))
-                parts.append(f"(?:\\s*<{esc}>([^<]*)</{esc}>)?")
-                strict_parts.append(f"<{esc}>([^<]*)</{esc}>")
-            else:
-                parts.append(f"(?:\\s*<{esc}>[^<]*</{esc}>)?")
-                strict_parts.append(f"<{esc}>[^<]*</{esc}>")
-        parts.extend(["\\s*</", _re.escape(root_m.group(1)), ">\\s*\\Z"])
-        strict_parts.extend(["</", _re.escape(root_m.group(1)), ">\\Z"])
-        try:
-            self.seq_pattern = _re.compile("".join(parts))
-            self.group_map = gmap
-        except _re.error:
-            self.seq_pattern = None
-            return
-        try:
-            self.strict_seq_pattern = _re.compile("".join(strict_parts))
-        except _re.error:
-            self.strict_seq_pattern = None
 
     def _parse_expat(self, xml: str) -> tuple:
         from xml.parsers import expat

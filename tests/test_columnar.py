@@ -155,10 +155,12 @@ def test_qualifier_rejects_non_defaults():
     ):
         o = XmlOptions.from_dict({"rowTag": "r", **extra})
         assert not D._columnar_ok(SCHEMA, o), extra
+    # a corrupt-record column does not disqualify: a matched record is
+    # well-formed (null cell), the row path fills it for every other
     with_corrupt = T.StructType(
         SCHEMA.fields + [T.StructField("_corrupt_record", T.StringType())]
     )
-    assert not D._columnar_ok(with_corrupt, OPTS)
+    assert D._columnar_ok(with_corrupt, OPTS)
     nested = T.StructType(
         [T.StructField("x", T.StructType([T.StructField("y", T.LongType())]))]
     )
@@ -400,10 +402,10 @@ def test_struct_columnar_spark_end_to_end(spark, tmp_path):
 def test_attr_captured_when_element_absent():
     """Regression: the learned pattern suppressed the root-attr capture
     whenever the learning record also had a same-named element, silently
-    NULLing the attribute on later records without the element. Both are
-    captured now; in-order overwrite keeps element-wins semantics, and
-    the columnar transpose (which can't express multi-group fields)
-    falls back to the row path."""
+    NULLing the attribute on later records without the element. The
+    learner now refuses a record that names a field twice, so such a
+    record takes the per-record tiers (element wins, in document order)
+    and the pattern is learned from a later record."""
     schema = T.StructType(
         [T.StructField("_id", T.StringType()), T.StructField("v", T.LongType())]
     )
@@ -427,7 +429,8 @@ def test_attr_captured_when_element_absent():
 def test_duplicate_tag_columnar_falls_back():
     """Regression: a duplicated tag in the learning record compiled two
     capture groups for one field and the columnar transpose crashed on
-    mismatched column lengths; such scans now take the row path."""
+    mismatched column lengths; the learner now refuses such a record,
+    which takes the row path."""
     schema = T.StructType(
         [T.StructField("a", T.StringType()), T.StructField("b", T.StringType())]
     )
@@ -618,22 +621,45 @@ def test_dirty_records_take_the_row_path_alone(tmp_path, monkeypatch, dirty):
         '<?xml version="1.0"?>\n<lineitems>\n' + "\n".join(recs)
         + "\n</lineitems>\n"
     )
+    got, tiers = _read_with_tiers(tmp_path, monkeypatch, src, _LINEITEM)
+    opts = XmlOptions.from_dict({"rowTag": "item"})
+    assert got.sort_by("orderkey").equals(
+        _row_table([r.strip() for r in recs], _LINEITEM, opts)
+    )
+    assert tiers.get("row_fallback") == 16, tiers
+    assert tiers.get("columnar_flat") == 8000 - 16, tiers
+
+
+def _read_with_tiers(tmp_path, monkeypatch, src, schema, **options):
+    """Read ``src`` through the reader in-process, rowTag ``item``: the
+    table (partitions in plan order) and the rows each tier served."""
+    import glob
+
     stats = tmp_path / "stats"
     stats.mkdir()
     monkeypatch.setenv("SPARK_XML_TIER_STATS_DIR", str(stats))
-    reader = D.XmlReader({"path": str(src), "rowTag": "item"}, _LINEITEM)
+    reader = D.XmlReader({"path": str(src), "rowTag": "item", **options}, schema)
     got = pa.Table.from_batches(
         [b for p in reader.partitions() for b in reader.read(p)]
-    ).sort_by("orderkey")
-    opts = XmlOptions.from_dict({"rowTag": "item"})
-    assert got.equals(_row_table([r.strip() for r in recs], _LINEITEM, opts))
+    )
     tiers = {}
     for f in glob.glob(str(stats / "*.jsonl")):
         for line in open(f):
             t = json.loads(line)
             tiers[t["tier"]] = tiers.get(t["tier"], 0) + t["rows"]
-    assert tiers.get("row_fallback") == 16, tiers
-    assert tiers.get("columnar_flat") == 8000 - 16, tiers
+    return got, tiers
+
+
+def _dense_records():
+    """3000 lineitems: every third one with an entity reference, every
+    seventh truncated (its ``</shipmode>`` gone, so malformed)."""
+    recs = [r.strip() for r in _lineitems(3000, lambda c: c)]
+    for k in range(len(recs)):
+        if k % 3 == 1:
+            recs[k] = recs[k].replace("</comment>", " &amp; more</comment>")
+        if k % 7 == 2:
+            recs[k] = recs[k].replace("</shipmode>", "")
+    return recs
 
 
 @pytest.mark.parametrize("mode", ["PERMISSIVE", "DROPMALFORMED"])
@@ -642,12 +668,7 @@ def test_dense_interleaving_keeps_record_order(mode):
     (malformed): the consumer's output equals the row path's in record
     order, DROPMALFORMED drops only the malformed records, and the row
     tier serves exactly the records the pattern misses."""
-    recs = [r.strip() for r in _lineitems(3000, lambda c: c)]
-    for k in range(len(recs)):
-        if k % 3 == 1:
-            recs[k] = recs[k].replace("</comment>", " &amp; more</comment>")
-        if k % 7 == 2:
-            recs[k] = recs[k].replace("</shipmode>", "")
+    recs = _dense_records()
     opts = XmlOptions.from_dict({"rowTag": "item", "mode": mode})
     tally = D._TierTally()
     got = _table(list(D._columnar_batches(recs, _LINEITEM, opts, 512, tally)))
@@ -657,3 +678,30 @@ def test_dense_interleaving_keeps_record_order(mode):
     assert tally.counts["columnar_flat"] == len(recs) - missed
     if mode == "DROPMALFORMED":
         assert got.num_rows == len(recs) - len(range(2, len(recs), 7))
+
+
+def test_dense_interleaving_with_corrupt_column(tmp_path, monkeypatch):
+    """The same records read with a corrupt-record column: the read still
+    takes the columnar scan, equals the row path in record order (the
+    truncated records keep their partial values and raw text), and the
+    row tier serves only the records the pattern misses."""
+    recs = _dense_records()
+    schema = T.StructType(
+        _LINEITEM.fields + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.xml").write_text(
+        "<lineitems>\n" + "\n".join(recs) + "\n</lineitems>\n"
+    )
+    got, tiers = _read_with_tiers(
+        tmp_path, monkeypatch, src, schema, maxPartitionBytes=str(1 << 30)
+    )
+    opts = XmlOptions.from_dict({"rowTag": "item"})
+    assert got.equals(_row_table(recs, schema, opts))
+    truncated = len(range(2, len(recs), 7))
+    assert got.column("_corrupt_record").null_count == len(recs) - truncated
+    missed = sum(1 for k in range(len(recs)) if k % 3 == 1 or k % 7 == 2)
+    assert tiers.get("row_fallback") == missed, tiers
+    assert tiers.get("columnar_flat") == len(recs) - missed, tiers
+    assert "row_arrow" not in tiers, tiers

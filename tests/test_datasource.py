@@ -6,6 +6,7 @@ read DSL, SQL over temp views, write/read roundtrips, from_xml family.
 """
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
@@ -19,10 +20,12 @@ from spark_xml_spark.functions import (
 from spark_xml_spark.sources import read_xml, register, write_xml
 
 RES = "/root/reference/src/test/resources"
+# the flat reference files, rebuilt in-repo (cars, cars-malformed, books)
+FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 def test_read_cars(spark):
-    df = read_xml(spark, f"{RES}/cars.xml", rowTag="ROW")
+    df = read_xml(spark, f"{FIX}/cars.xml", rowTag="ROW")
     assert df.schema.simpleString() == (
         "struct<comment:string,make:string,model:string,year:bigint>"
     )
@@ -32,7 +35,7 @@ def test_read_cars(spark):
 
 
 def test_read_books_sql(spark):
-    df = read_xml(spark, f"{RES}/books.xml", rowTag="book")
+    df = read_xml(spark, f"{FIX}/books.xml", rowTag="book")
     df.createOrReplaceTempView("books")
     got = spark.sql(
         "SELECT _id, price FROM books WHERE price > 10 ORDER BY price DESC LIMIT 2"
@@ -48,7 +51,7 @@ def test_read_explicit_schema_pruning(spark):
             T.StructField("year", T.LongType()),
         ]
     )
-    df = read_xml(spark, f"{RES}/cars.xml", schema=schema, rowTag="ROW")
+    df = read_xml(spark, f"{FIX}/cars.xml", schema=schema, rowTag="ROW")
     assert df.columns == ["make", "year"]
     assert {r.make for r in df.collect()} == {"Tesla", "Ford", "Chevy"}
 
@@ -61,7 +64,7 @@ def test_read_gzip_and_attributes(spark):
 
 def test_parse_modes_end_to_end(spark):
     df = read_xml(
-        spark, f"{RES}/cars-malformed.xml", rowTag="ROW", mode="DROPMALFORMED"
+        spark, f"{FIX}/cars-malformed.xml", rowTag="ROW", mode="DROPMALFORMED"
     )
     rows = df.collect()
     assert len(rows) == 1
@@ -70,7 +73,7 @@ def test_parse_modes_end_to_end(spark):
 
     df2 = read_xml(
         spark,
-        f"{RES}/cars-malformed.xml",
+        f"{FIX}/cars-malformed.xml",
         rowTag="ROW",
         mode="PERMISSIVE",
         columnNameOfCorruptRecord="_malformed_records",
@@ -135,7 +138,7 @@ def test_sql_ddl_using_format(spark, tmp_path):
     spark.sql(
         f"""CREATE TABLE cars_xml
         USING `xml-graft`
-        OPTIONS (path '{RES}/cars.xml', rowTag 'ROW',
+        OPTIONS (path '{FIX}/cars.xml', rowTag 'ROW',
                  schema_hint 'unused')"""
     )
     try:
@@ -262,7 +265,7 @@ def test_read_xml_columns_pruning(spark):
 
     df = read_xml(
         spark,
-        "/root/reference/src/test/resources/cars.xml",
+        f"{FIX}/cars.xml",
         rowTag="ROW",
         columns=["year", "make"],
     )
@@ -277,7 +280,7 @@ def test_read_xml_columns_pruning(spark):
     with pytest.raises(ValueError, match="columns not in schema"):
         read_xml(
             spark,
-            "/root/reference/src/test/resources/cars.xml",
+            f"{FIX}/cars.xml",
             rowTag="ROW",
             columns=["nope"],
         )

@@ -86,12 +86,12 @@ def _normalize(row):
 @settings(max_examples=150, deadline=None)
 @given(rows=st.lists(_row, min_size=1, max_size=8))
 def test_roundtrip_property(rows):
-    xo = XmlOptions.from_dict({"rowTag": "r", "rootTag": "rs"})
+    xo = XmlOptions.from_dict({"rowTag": "r", "rootTag": "rs", "mode": "FAILFAST"})
     doc = "\n".join(generator.rows_to_document(SCHEMA, rows, xo))
     recs = list(tokenizer.scan_string(doc, "r"))
     assert len(recs) == len(rows)
     for rec, row in zip(recs, rows):
-        got = parser.parse_record(rec, SCHEMA, xo, mode="FAILFAST")
+        got = parser.parse_record(rec, SCHEMA, xo)
         expected = _normalize(row)
         assert len(got) == len(expected)
         for g, e, f in zip(got, expected, SCHEMA.fields):

@@ -11,13 +11,16 @@ pushed predicates would be replayed by every later query on a reused
 DataFrame/view. The default path must therefore never engage pushdown.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_xml_spark.sources import read_xml, write_xml
 
-RES = "/root/reference/src/test/resources"
+# the flat reference files, rebuilt in-repo (cars, books)
+FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 @pytest.fixture()
@@ -34,7 +37,7 @@ def _physical(df) -> str:
 def test_pushed_filter_removed_from_plan(push):
     import pyspark.sql.functions as F
 
-    df = read_xml(push, f"{RES}/cars.xml", rowTag="ROW", filterPushdown="true")
+    df = read_xml(push, f"{FIX}/cars.xml", rowTag="ROW", filterPushdown="true")
     flt = df.filter((F.col("year") > 2012) & (F.col("make") == "Chevy"))
     plan = _physical(flt)
     assert "Filter (" not in plan, plan  # no post-scan Filter node remains
@@ -48,7 +51,7 @@ def test_no_option_no_pushdown_despite_conf(push):
     pushdown unsafe (filtered query then unfiltered reuse of one df)."""
     import pyspark.sql.functions as F
 
-    df = read_xml(push, f"{RES}/books.xml", rowTag="book")
+    df = read_xml(push, f"{FIX}/books.xml", rowTag="book")
     assert df.filter(F.col("price") > 10).count() == 4
     assert df.count() == 12  # reused relation: must NOT replay the filter
     plan = _physical(df.filter(F.col("price") > 10))
@@ -58,8 +61,7 @@ def test_no_option_no_pushdown_despite_conf(push):
 def test_pushdown_results_match_unpushed(push, tmp_path):
     """Every supported operator produces the same rows with and without
     pushdown, including null-comparison semantics, on every pushable type
-    and on both scan paths (a ``_corrupt_record`` column selects the row
-    path)."""
+    and on both scan paths (see ``_row_path``)."""
     import datetime
     import decimal
 
@@ -108,7 +110,7 @@ def test_pushdown_results_match_unpushed(push, tmp_path):
         F.col("flag").isin(False),
         F.col("flag").isNull(),
     ]
-    for schema in (src.schema, _with_corrupt(src.schema)):
+    for schema in (src.schema, _row_path(src.schema)):
         plain = read_xml(push, out, rowTag="item", schema=schema)
         for cond in conds:
             expected = sorted(map(tuple, plain.filter(cond).collect()))
@@ -185,11 +187,16 @@ def test_pushdown_through_sql_ddl(push, tmp_path):
         push.sql("DROP TABLE IF EXISTS push_t")
 
 
-def _with_corrupt(schema):
-    """``schema`` plus a ``_corrupt_record`` column, which sends the scan
-    down the row path (the generic parser instead of the columnar tier)."""
+def _row_path(schema):
+    """``schema`` plus a ``_corrupt_record`` column and a struct column no
+    record fills; the struct sends the scan down the row path (the generic
+    parser instead of the columnar tier)."""
     return T.StructType(
-        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
+        schema.fields
+        + [
+            T.StructField("_corrupt_record", T.StringType()),
+            T.StructField("absent", T.StructType([T.StructField("x", T.StringType())])),
+        ]
     )
 
 
@@ -219,7 +226,7 @@ def test_pushdown_columnar_vs_row_paths_agree(spark, tmp_path):
         }
 
     a = run(df.schema)
-    b = run(_with_corrupt(df.schema))
+    b = run(_row_path(df.schema))
     assert a == b
     assert a  # non-empty selection
     expect = {
@@ -243,7 +250,7 @@ def test_pushdown_not_in_with_null_three_valued(push, tmp_path):
     write_xml(src, out, rowTag="item")
     schema = src.schema
 
-    for read_schema in (schema, _with_corrupt(schema)):
+    for read_schema in (schema, _row_path(schema)):
         pushed = read_xml(
             push, out, rowTag="item", schema=read_schema,
             filterPushdown="true",
@@ -277,7 +284,7 @@ def test_pushdown_not_eqnullsafe_keeps_null_rows(push, tmp_path):
     plain = read_xml(push, out, rowTag="item", schema=schema)
     expected = sorted(map(tuple, plain.filter(cond).collect()))
     assert any(v is None for _, v in expected)  # null rows ARE selected
-    for read_schema in (schema, _with_corrupt(schema)):
+    for read_schema in (schema, _row_path(schema)):
         pushed = read_xml(
             push, out, rowTag="item", schema=read_schema,
             filterPushdown="true",
@@ -297,7 +304,7 @@ def test_pushdown_nan_matches_spark(push, tmp_path, corrupt):
     )
     out = str(tmp_path / "nan_xml")
     write_xml(src, out, rowTag="item")
-    schema = _with_corrupt(src.schema) if corrupt else src.schema
+    schema = _row_path(src.schema) if corrupt else src.schema
     nan = float("nan")
     conds = {
         "v > 5": (F.col("v") > 5, [2, 3, 4]),
@@ -338,7 +345,7 @@ def test_pushdown_string_split_by_comment_or_pi(push, tmp_path, corrupt):
         T.StructField("name", T.StringType()),
     ])
     if corrupt:
-        schema = _with_corrupt(schema)
+        schema = _row_path(schema)
     conds = {
         "==": F.col("name") == "abcd",
         "contains": F.col("name").contains("bc"),

@@ -576,7 +576,10 @@ def test_columnar_inference_differential():
     the per-record fold across value classes, including every mask
     boundary (sign prefixes, >int64 ints, Infinity, calendar-invalid
     timestamps, bools vs 1/0, empties, absent tags, nesting/attr
-    fallbacks)."""
+    fallbacks), and every record shape the shared flat-record learner
+    must prove or refuse (root attributes in either quote, prefixed tags
+    with and without ignoreNamespace, excludeAttribute, a CR, a repeated
+    tag)."""
     import random
 
     from spark_xml_spark.options import XmlOptions
@@ -600,21 +603,44 @@ def test_columnar_inference_differential():
         lambda i: "<n><deep>1</deep></n>",
         lambda i: '<a k="v">1</a>',
         lambda i: "<w>   </w>",
+        lambda i: f"<ns:q>{i}</ns:q>",  # a prefixed tag
+        lambda i: "<ns:note>x</ns:note>",  # one name under ignoreNamespace
+        lambda i: "<cr>a\r\nb</cr>",  # line-end normalization: row path
+        lambda i: "<rep>1</rep><rep>x</rep>",  # repeated tag -> array
     ]
-    for trial in range(4):
-        records = []
-        for i in range(800):
-            picks = rng.sample(range(len(vals)), rng.randrange(1, 5))
-            records.append("<r>" + "".join(vals[p](i) for p in sorted(picks)) + "</r>")
-        opts = XmlOptions.from_dict({"rowTag": "r"})
-        s_col = infer.infer_schema_from_records(iter(records), opts)
-        orig = infer._columnar_infer_ok
-        infer._columnar_infer_ok = lambda o: False
-        try:
-            s_row = infer.infer_schema_from_records(iter(records), opts)
-        finally:
-            infer._columnar_infer_ok = orig
-        assert s_col == s_row, (trial, s_col.json(), s_row.json())
+    # root open tags: none, double- and single-quoted attributes
+    roots = ["<r>", "<r>", "<r k='v'>", f"<r id=\"7\" k='w'>", "<r id='x'>"]
+    for options in (
+        {"rowTag": "r"},
+        {"rowTag": "r", "ignoreNamespace": "true"},
+        {"rowTag": "r", "excludeAttribute": "true"},
+    ):
+        for trial in range(4):
+            # a record carrying one text-only value per tag first, so the
+            # learner has a pattern that many of the random records match
+            records = [
+                "<r id='1' k=\"v\">"
+                + "".join(vals[k](0) for k in (0, 1, 2, 4, 6, 8, 9, 15, 16))
+                + "</r>"
+            ]
+            for i in range(800):
+                # mostly text-only values, in the learning record's order
+                picks = rng.sample(range(len(vals)), rng.randrange(1, 5))
+                if rng.random() < 0.75:
+                    picks = [p for p in picks if p not in (13, 14, 18, 19)]
+                records.append(
+                    rng.choice(roots)
+                    + "".join(vals[p](i) for p in sorted(picks)) + "</r>"
+                )
+            opts = XmlOptions.from_dict(options)
+            s_col = infer.infer_schema_from_records(iter(records), opts)
+            orig = infer._columnar_infer_ok
+            infer._columnar_infer_ok = lambda o: False
+            try:
+                s_row = infer.infer_schema_from_records(iter(records), opts)
+            finally:
+                infer._columnar_infer_ok = orig
+            assert s_col == s_row, (options, trial, s_col.json(), s_row.json())
 
 
 def test_columnar_inference_homogeneous_exact():
