@@ -9,10 +9,12 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
   analogue); each ``read(partition)`` task scans only its range with the
   record-ownership rule, then decodes them (``decode_records``, which
   ``from_xml`` shares). Flat all-scalar schemas, a corrupt-record column
-  included, take the columnar scan: each record is matched on its own
-  against a whole-record pattern (``parser.learn_flat_pattern``) learned
-  from the data, the matched ones are cast in one columnar pass per batch,
-  and the rest take the exact parser.
+  included, take the columnar scan under any empty/null/space options:
+  each record is matched on its own against a whole-record pattern
+  (``parser.match_flat_batch``) learned from the data, the matched ones are
+  cast in one columnar pass per batch, and the rest take the exact parser.
+  XSD-validated reads and schemas with arrays, structs or maps take the
+  exact parser for every record.
 - ``schema()`` resolves the user-provided ``schema`` option or runs sampled
   inference (the reference's 2-pass inferred-read semantics,
   XmlRelation.scala:43-49). For cluster-distributed inference use
@@ -439,13 +441,14 @@ def _rows_to_arrow_batches(rows, schema: T.StructType,
 
 # --- columnar flat scan ----------------------------------------------------
 # For flat all-scalar schemas (the dominant shape for large tabular XML),
-# record batches skip per-row tuples entirely: the tier-0 whole-record
+# record batches skip per-row tuples entirely: the learned whole-record
 # pattern collects raw field STRINGS per column, and pyarrow compute casts
 # them to the target types in C. Exactness is preserved by construction:
-# any record the pattern can't prove flat, any value Arrow's (stricter)
-# parser rejects, and any guard-regex miss re-runs through the exact
-# row-path casts — Arrow only ever handles values whose Python-side result
-# would be identical. ~2x scan throughput on clean tabular data.
+# any record the pattern can't prove flat re-runs through the exact parser,
+# and any value Arrow's (stricter) parser rejects or a guard regex misses
+# takes the exact row-path casts — Arrow only ever handles values whose
+# Python-side result would be identical. ~2x scan throughput on clean
+# tabular data.
 
 # C-level validity guards where Arrow's string parser is MORE lenient than
 # the row path (it must never accept a value the row path would reject):
@@ -487,27 +490,16 @@ _C_CASTABLE = ("string", "long", "integer", "short", "byte",
 
 
 def _columnar_ok(schema: T.StructType, xopts: XmlOptions) -> bool:
-    """Columnar path applies only when the row path's per-record extras
-    can't fire: no XSD row validation and default empty/null-string
-    semantics (non-defaults are honored by the casters, but the C string
-    column is identity-only). A corrupt-record cell is null for a matched
-    (well-formed) record; the row path fills it for the rest."""
-    if xopts.row_validation_xsd_path:
-        return False
-    if (
-        xopts.null_value is not None
-        or xopts.ignore_surrounding_spaces
-        or xopts.treat_empty_values_as_nulls
-    ):
-        return False
-    fast = parser.FastFlatParser.try_build(schema, xopts)
-    if fast is None:
-        return False
-    if fast.array_fields:
-        # repeated-tag arrays have variable per-record group counts — the
-        # fixed-group columnar transpose can't represent them
-        return False
-    return True
+    """The columnar scan takes every flat all-scalar schema
+    (``FastFlatParser.try_build``) unless XSD row validation must see each
+    record. Under nullValue, ignoreSurroundingSpaces or
+    treatEmptyValuesAsNulls every column takes the field's Python caster
+    (_cast_ladder). A corrupt-record cell is null for a matched
+    (well-formed) record; the exact parser fills it for the rest."""
+    return (
+        not xopts.row_validation_xsd_path
+        and parser.FastFlatParser.try_build(schema, xopts) is not None
+    )
 
 
 def _py_cast_column(vals, caster, target_type):
@@ -521,10 +513,9 @@ def _py_cast_column(vals, caster, target_type):
 def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
                  is_attr=False):
     """One column of raw strings -> Arrow array. C casts when provably
-    equivalent; Python casters otherwise. Raises (ValueError /
-    parser fallback) only from the Python casters — the caller then
-    re-runs those records through the exact row path so the parse-mode
-    policy applies. ``guards`` defaults to the conservative option-free
+    equivalent; Python casters otherwise. Raises (ValueError) only from
+    the Python casters — the caller then re-runs those records through
+    the exact row path so the parse-mode policy applies. ``guards`` defaults to the conservative option-free
     set; pass _cast_guards(xopts) for the option-aware set. ``is_attr``
     columns carry ATTRIBUTE cell semantics: an empty value is NOT
     null-coerced (plain cast_to — raises for non-string scalars, which
@@ -537,7 +528,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
         return _py_cast_column(vals, caster, target_type)
     arr = pa.array(vals, pa.string())
     if tname == "string":
-        return arr  # defaults only (see _columnar_ok): "" stays "", no nullValue
+        return arr  # defaults only (see _cast_ladder): "" stays "", no nullValue
     empties = pc.equal(arr, "")
     if pc.any(empties).as_py():
         if is_attr:
@@ -595,42 +586,34 @@ def _group_columns(groups, group_map, ncols, nrec):
 
 def _cast_ladder(cols, fast, arrow_schema, guards):
     """Raw-string columns -> one Arrow record batch, each column through
-    _cast_column with the field's element or root-attribute caster. None
-    when a Python caster rejected a value (malformed / whitespace-only) —
-    the caller re-runs the records through the exact row path so the
-    parse-mode policy applies."""
+    the field's element or root-attribute caster: _cast_column under
+    default options, the Python caster alone under nullValue,
+    ignoreSurroundingSpaces or treatEmptyValuesAsNulls (the C casts know
+    none of them). None when a Python caster rejected a value (malformed /
+    whitespace-only) — the caller re-runs the records through the exact
+    row path so the parse-mode policy applies."""
     import pyarrow as pa
 
+    o = fast.options
+    py_only = (
+        o.null_value is not None
+        or o.ignore_surrounding_spaces
+        or o.treat_empty_values_as_nulls
+    )
     attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
     try:
-        arrays = [
-            _cast_column(
-                cols[i],
-                f.dataType,
-                (fast.attr_casters if i in attr_cols else fast.casters)[i],
-                arrow_schema.field(i).type,
-                guards,
-                is_attr=i in attr_cols,
+        arrays = []
+        for i, f in enumerate(fast.schema.fields):
+            caster = (fast.attr_casters if i in attr_cols else fast.casters)[i]
+            target = arrow_schema.field(i).type
+            arrays.append(
+                _py_cast_column(cols[i], caster, target) if py_only
+                else _cast_column(cols[i], f.dataType, caster, target, guards,
+                                  is_attr=i in attr_cols)
             )
-            for i, f in enumerate(fast.schema.fields)
-        ]
     except Exception:
         return None
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-
-def _captures(fast, batch):
-    """Per record, the learned whole-record pattern's match (strict first,
-    then loose: identical captures, see parser.learn_flat_pattern), or None
-    when the row path must parse it: no pattern learned, an entity
-    reference, or a CR that line-end normalization must rewrite."""
-    if fast.flat is None:
-        return [None] * len(batch)
-    strict, loose = fast.flat.strict.match, fast.flat.loose.match
-    return [
-        None if "&" in r or "\r" in r else strict(r) or loose(r)
-        for r in batch
-    ]
 
 
 def _columnar_batches(
@@ -639,14 +622,15 @@ def _columnar_batches(
 ):
     """The columnar scan (schemas _columnar_ok accepts): one Arrow batch
     out per ``batch_size`` records in. Each record is matched on its own
-    (:func:`_captures`). The batch's matched records are transposed and
-    cast in one columnar pass; its unmatched records — and all of them
-    when a Python caster rejects a value — take the exact row path
-    through the same parser, and one ``take`` restores record order.
-    So a batch costs a fixed number of Arrow calls however dirty records
-    interleave with clean ones, a dirty record never drags its clean
-    neighbours to the row path, and DROPMALFORMED drops only the records
-    it rejects."""
+    against the learned pattern (``parser.match_flat_batch``, which also
+    re-learns when fewer than half of a batch match). The batch's matched
+    records are transposed and cast in one columnar pass; its unmatched
+    records — and all of them when a Python caster rejects a value — take
+    the exact parser, and one ``take`` restores record order. So a batch
+    costs a fixed number of Arrow calls however dirty records interleave
+    with clean ones, a dirty record never drags its clean neighbours to
+    the exact parser, and DROPMALFORMED drops only the records it
+    rejects."""
     import itertools
 
     import pyarrow as pa
@@ -662,18 +646,9 @@ def _columnar_batches(
         if not batch:
             return
         t0 = timer() if timer else 0.0
-        if fast.flat is None:
-            # learn from up to 16 entity-free records, so a batch that
-            # opens with a record the pattern cannot describe (a comment,
-            # a CDATA field) still learns
-            for probe in itertools.islice(
-                (r for r in batch if "&" not in r), 16
-            ):
-                fast.learn(probe)
-                if fast.flat is not None:
-                    break
-        caps = _captures(fast, batch)
-        hit = [i for i, m in enumerate(caps) if m is not None]
+        flat, caps, hit = parser.match_flat_batch(fast.flat, batch, xopts)
+        if flat is not fast.flat:
+            fast.learn(flat)
         cast = None
         if hit:
             cast = _cast_ladder(
@@ -684,7 +659,7 @@ def _columnar_batches(
                 fast, arrow_schema, guards,
             )
         if cast is None:
-            # nothing matched, or a cast rejected a value: the row path
+            # nothing matched, or a cast rejected a value: the exact parser
             # decides the whole batch
             hit, miss = [], range(len(batch))
         else:
@@ -695,10 +670,7 @@ def _columnar_batches(
                 yield cast
                 continue
             miss = [i for i, m in enumerate(caps) if m is None]
-        rows = [
-            parser.parse_record(batch[i], schema, xopts, fast=fast)
-            for i in miss
-        ]
+        rows = [parser.parse_record(batch[i], schema, xopts) for i in miss]
         parsed = [r for r in rows if r is not None]
         out = list(_rows_to_arrow_batches(parsed, schema, batch_size))
         if hit and parsed:

@@ -17,8 +17,9 @@ Python re-implementation of the reference's InferSchema
 - canonicalization: Null->String, empty structs deleted
   (InferSchema.scala:237-262)
 - columnar inference (below): under default options, flat records that
-  match the pattern ``parser.learn_flat_pattern`` learned are typed per
-  column, with the per-record fold's result exactly
+  match the pattern ``parser.match_flat_batch`` learns (the columnar
+  scan's rule) are typed per column, with the per-record fold's result
+  exactly
 
 The distributed plan (the reference's RDD fold, InferSchema.scala:67-101) is
 re-expressed in Spark as a per-partition partial merge + driver final merge —
@@ -29,7 +30,7 @@ per partition, never data.
 from __future__ import annotations
 
 import json
-from typing import Iterable, List, Optional, Tuple
+from typing import Iterable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import types as T
 
@@ -325,7 +326,7 @@ def _columnar_infer_ok(options: XmlOptions) -> bool:
     )
 
 
-def _column_infer_type(vals: List[Optional[str]], options: XmlOptions):
+def _column_infer_type(vals: Sequence[Optional[str]], options: XmlOptions):
     """Fold of infer_from over one column's cell strings (None = absent)."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -382,63 +383,40 @@ def _fold_types(types: List[T.DataType], options: XmlOptions) -> T.DataType:
 
 
 def _columnar_fold(records: Iterable[str], options: XmlOptions) -> T.DataType:
-    """Fold record schemas batch-wise: pattern-matching flat records are
+    """Fold record schemas batch-wise: records that match the batch's flat
+    pattern (``parser.match_flat_batch``, the scan's learning rule) are
     typed per column (C regex + Arrow validity); everything else goes
     through the exact per-record path. Inference folds are commutative, so
     batching does not change the result."""
     import itertools
 
-    from spark_xml_spark.xmlcore.parser import learn_flat_pattern
+    from spark_xml_spark.xmlcore.parser import match_flat_batch
 
     merged: T.DataType = T.StructType([])
-    pat = None
-    tags: List[str] = []
-    disabled = False  # heterogeneous data: stop paying failed match attempts
+    flat = None
     records = iter(records)
     while True:
         batch = list(itertools.islice(records, 4096))
         if not batch:
             return merged
-        cols: Optional[List[list]] = None
-        n_matched = 0
-        for xml in batch:
-            matched = False
-            if disabled:
-                pass
-            elif pat is None and "&" not in xml:
-                learned = learn_flat_pattern(xml, options)
-                if learned is not None:
-                    pat, tags = learned.loose, learned.names
-            if (
-                not disabled and pat is not None
-                and "&" not in xml and "\r" not in xml
-            ):
-                m = pat.match(xml)
-                if m is not None:
-                    if cols is None:
-                        cols = [[] for _ in tags]
-                    groups = m.groups()
-                    for i in range(len(tags)):
-                        cols[i].append(groups[i])
-                    matched = True
-                    n_matched += 1
-            if not matched:
+        flat, caps, hit = match_flat_batch(flat, batch, options)
+        for xml, m in zip(batch, caps):
+            if m is None:
                 rt = infer_record(xml, options)
                 if rt is not None:
                     merged = compatible_type(merged, rt, options)
-        if cols is not None:
-            fields = []
-            for tag, vals in zip(tags, cols):
-                if all(v is None for v in vals):
-                    continue  # tag absent from every matched record
-                fields.append(
-                    T.StructField(tag, _column_infer_type(vals, options), True)
+        if hit:
+            fields = [
+                T.StructField(tag, _column_infer_type(vals, options), True)
+                for tag, vals in zip(
+                    flat.names, zip(*(caps[i].groups() for i in hit))
                 )
+                # a tag absent from every matched record adds no field
+                if any(v is not None for v in vals)
+            ]
             if fields:
                 batch_struct = T.StructType(sorted(fields, key=lambda f: f.name))
                 merged = compatible_type(merged, batch_struct, options)
-        if pat is not None and not disabled and n_matched * 2 < len(batch):
-            disabled = True
 
 
 def infer_schema_from_records(

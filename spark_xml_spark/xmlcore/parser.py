@@ -22,6 +22,12 @@ time and stops when the event *after* a consumed END is itself an END.
 
 Rows are returned as Python tuples (nested structs = tuples, arrays = lists,
 maps = dicts) ready for Spark conversion.
+
+The flat-record pattern learner (``learn_flat_pattern``, with the per-batch
+rule ``match_flat_batch``) and the per-field casts of flat schemas
+(``FastFlatParser``) serve the columnar scan (sources/datasource.py) and
+columnar inference. They parse no record themselves: ``convert_object`` is
+the one parser of every record the scan's pattern does not match.
 """
 
 from __future__ import annotations
@@ -282,21 +288,13 @@ def parse_record(
     schema: T.StructType,
     options: XmlOptions,
     validator=None,
-    fast=None,
 ) -> Optional[tuple]:
     """Parse one record string into a row tuple, applying the parse-mode
     policy (StaxXmlParser.scala:71-124). Returns None when the record is
-    dropped (DROPMALFORMED). ``fast`` is an optional FastFlatParser; its
-    failures re-route through the generic path so policy semantics are
-    unchanged."""
+    dropped (DROPMALFORMED)."""
     try:
         if validator is not None:
             validator(xml)
-        if fast is not None:
-            try:
-                return fast.parse(xml)
-            except Exception:
-                pass  # generic parse below decides the policy outcome
         stream = ev.filtered_reader(xml)
         root_attributes = ev.gather_root_attributes(stream)
         return convert_object(stream, schema, options, root_attributes)
@@ -339,27 +337,23 @@ def effective_mode_for_column(schema: T.StructType, options: XmlOptions) -> str:
     return options.mode
 
 
-class _FastFallback(Exception):
-    """Raised inside the flat fast path when the record needs the generic
-    parser (nested elements, cast anomalies)."""
-
-
+import itertools
 import re as _re
 
-# Regex-path guards: any record containing attributes/entities/CDATA/
+# Flat-proof guards: a record containing attributes/entities/CDATA/
 # comments/PIs/self-closing tags, or a CR (XML line-end normalization turns
-# CRLF and lone CR into LF, XML 1.0 §2.11), drops to the expat path (whose
-# anomaly handling is in turn backed by the generic parser). A '=' inside
-# the ROOT open tag alone is allowed: _flat_proof reads root attributes.
+# CRLF and lone CR into LF, XML 1.0 §2.11), is not provably flat and takes
+# the generic parser. A '=' inside the ROOT open tag alone is allowed:
+# _flat_proof reads root attributes.
 _FLAT_DISQUALIFIER = _re.compile(r"[=&\r]|<!|/>|<\?")
 # One flat field: <tag>text-without-markup</tag> (closing name must match).
 _FLAT_FIELD = _re.compile(r"<([^\s>/]+)>([^<]*)</\1>")
 # Root open tag with optional attributes: <name a="v" b='v'>. The name must
 # start like an XML name so comments/PIs can never match; attr values are
 # quote-delimited and may not contain markup ('<' and '&' are always escaped
-# by conformant writers, and '&' already routed the record to expat) nor a
-# tab, LF or CR, which attribute-value normalization turns into spaces
-# (XML 1.0 §3.3.3) — such records are left to expat.
+# by conformant writers, and a record holding '&' is never proved flat) nor
+# a tab, LF or CR, which attribute-value normalization turns into spaces
+# (XML 1.0 §3.3.3) — such records are left to the generic parser.
 _ROOT_OPEN_ATTRS = _re.compile(
     r"\s*<([A-Za-z_:][^\s>/=]*)"
     r"((?:\s+[^\s=>/]+=(?:\"[^\"<\t\n\r]*\"|'[^'<\t\n\r]*'))*)\s*>"
@@ -372,11 +366,9 @@ _ATTR_PAIR = _re.compile(
 
 
 def _attr_value(q: str) -> str:
-    """Regex body of a ``q``-quoted attribute value the regex tiers may take
-    verbatim (the value classes of _ROOT_OPEN_ATTRS / _ATTR_PAIR)."""
+    """Regex body of a ``q``-quoted attribute value a learned pattern may
+    take verbatim (the value classes of _ROOT_OPEN_ATTRS / _ATTR_PAIR)."""
     return f"[^{q}<\\t\\n\\r]*"
-
-
 
 
 def _flat_proof(xml: str):
@@ -429,20 +421,17 @@ class FlatPattern(NamedTuple):
     attrs: int
 
 
-def learn_flat_pattern(
-    xml: str, options: XmlOptions, proof=None
-) -> Optional[FlatPattern]:
-    """The one flat-record pattern learner (the parser's tier 0, the
-    columnar scan, columnar inference): None unless ``xml`` passes
-    :func:`_flat_proof` (``proof``, if the caller holds it) and names each
-    field once — a repeated tag, or a root attribute and a same-named
-    element, has no fixed field per group and stays on the per-record
-    tiers. One group per root attribute (none under excludeAttribute) and
-    child, in the record's order. The loose pattern makes every part
-    optional and allows whitespace between tags; the strict one, about 2x
-    faster, requires every part and no whitespace. Where both match their
-    captures are identical, so callers may try strict first."""
-    proof = proof or _flat_proof(xml)
+def learn_flat_pattern(xml: str, options: XmlOptions) -> Optional[FlatPattern]:
+    """The one flat-record pattern learner (the columnar scan, columnar
+    inference): None unless ``xml`` passes :func:`_flat_proof` and names
+    each field once — a repeated tag, or a root attribute and a same-named
+    element, has no fixed field per group and takes the generic parser.
+    One group per root attribute (none under excludeAttribute) and child,
+    in the record's order. The loose pattern makes every part optional and
+    allows whitespace between tags; the strict one, about 2x faster,
+    requires every part and no whitespace. Where both match their captures
+    are identical, so callers may try strict first."""
+    proof = _flat_proof(xml)
     if proof is None:
         return None
     root, attrs, fields = proof
@@ -483,41 +472,80 @@ def learn_flat_pattern(
         return None
 
 
+def _learn_batch_pattern(
+    batch: List[str], options: XmlOptions
+) -> Optional[FlatPattern]:
+    """The pattern learned from the first of up to 16 entity-free records
+    of ``batch`` that yields one, so a batch that opens with records no
+    pattern describes (a comment, a CDATA field) still learns."""
+    for xml in itertools.islice((r for r in batch if "&" not in r), 16):
+        flat = learn_flat_pattern(xml, options)
+        if flat is not None:
+            return flat
+    return None
+
+
+def _matches(flat: FlatPattern, batch: List[str]) -> Tuple[list, list]:
+    strict, loose = flat.strict.match, flat.loose.match
+    caps = [
+        None if "&" in r or "\r" in r else strict(r) or loose(r)
+        for r in batch
+    ]
+    return caps, [i for i, m in enumerate(caps) if m is not None]
+
+
+def match_flat_batch(
+    flat: Optional[FlatPattern], batch: List[str], options: XmlOptions
+) -> Tuple[Optional[FlatPattern], list, list]:
+    """``(pattern, matches, hit)``: per record of ``batch``, its match
+    against the pattern (strict first, then loose), or None when the
+    generic parser must parse it — a miss, an entity reference, or a CR
+    that line-end normalization must rewrite; and the indexes of the
+    matched records. With no ``flat`` yet, the pattern is learned from the
+    batch (:func:`_learn_batch_pattern`). When fewer than half of the
+    records match, one is learned from the missed records and kept only if
+    it matches more of the batch, so a corpus whose field order changes
+    between files keeps its records on the pattern. The columnar scan and
+    columnar inference share this rule."""
+    if flat is None:
+        flat = _learn_batch_pattern(batch, options)
+        if flat is None:
+            return None, [None] * len(batch), []
+    caps, hit = _matches(flat, batch)
+    if len(hit) * 2 < len(batch):
+        again = _learn_batch_pattern(
+            [r for r, m in zip(batch, caps) if m is None], options
+        )
+        if again is not None:
+            recaps, rehit = _matches(again, batch)
+            if len(rehit) > len(hit):
+                return again, recaps, rehit
+    return flat, caps, hit
+
+
 class FastFlatParser:
-    """Specialized parser for FLAT all-scalar schemas (no structs, arrays,
-    maps, valueTag, or wildcard). Attribute-prefixed fields are supported
-    when they name ROOT-element attributes (the only flat-scalar shape an
-    attribute can produce — a child element with attributes infers as a
-    struct and is rejected above).
+    """The casts of the columnar scan, for FLAT all-scalar schemas (no
+    structs, arrays, maps, valueTag, or wildcard): per schema field, the
+    element caster and the root-attribute caster, plus the learned
+    whole-record pattern (:meth:`learn`) and which of its groups fill
+    which field. Attribute-prefixed fields name ROOT-element attributes
+    (the only flat-scalar shape an attribute can produce — a child element
+    with attributes infers as a struct, which try_build rejects). It parses
+    no record itself: every record the pattern misses takes the generic
+    parser.
 
-    Three tiers, all falling back to the generic parser on ANY anomaly so
-    the parse-mode policy and partial-row behavior are always the generic
-    path's:
-
-    0. pattern tier: one C-speed match against the pattern
-       :func:`learn_flat_pattern` learned (:meth:`learn`); a record in
-       another field order misses and takes tier 1.
-    1. regex tier: :func:`_flat_proof`, one C-speed ``findall`` of
-       ``<tag>text</tag>`` over the record. Valid only when the record has
-       no entities, CDATA, comments, PIs, self-closing tags, or attributes
-       outside the root open tag, and the total ``<`` count proves every
-       element was matched at field depth (nested levels or malformed tags
-       break the arithmetic and drop to tier 2). ~10x over per-event
-       Python callbacks.
-    2. expat tier: callbacks fill the row directly, skipping the generic
-       event-list machinery (~2x).
-
-    Casts are hoisted per field at build time (same code paths as
-    ``cast_to``, specialized for the scalar types; anything unusual
-    delegates to ``cast_to`` itself). Attribute cells use the generic
-    attribute semantics (attributes_to_values_map + cast_to), which differ
-    from element cells: an empty attribute value is NOT null-coerced.
+    The casters reproduce the generic path's cell semantics exactly (same
+    code paths as ``cast_to``, specialized for the scalar types; anything
+    unusual delegates to ``cast_to`` itself) and raise ``ValueError``
+    wherever the generic path might decide otherwise, which sends the
+    batch to it. Attribute cells use the generic attribute semantics
+    (attributes_to_values_map + cast_to), which differ from element cells:
+    an empty attribute value is NOT null-coerced.
     """
 
     __slots__ = (
-        "schema", "options", "index", "types", "is_string", "n", "strip_ns",
-        "casters", "flat", "group_map",
-        "attr_index", "attr_casters", "array_fields",
+        "schema", "options", "index", "casters", "attr_casters", "flat",
+        "group_map",
     )
 
     @classmethod
@@ -530,14 +558,7 @@ class FastFlatParser:
             # no way to tell attr fields from element fields — stay generic
             return None
         for f in schema.fields:
-            if isinstance(f.dataType, (T.StructType, T.MapType)):
-                return None
-            if isinstance(f.dataType, T.ArrayType) and isinstance(
-                f.dataType.elementType, (T.StructType, T.ArrayType, T.MapType)
-            ):
-                # repeated-tag scalar arrays parse on tiers 1/2 (variable
-                # occurrence counts are inexpressible in the tier-0
-                # pattern); complex element types stay generic
+            if isinstance(f.dataType, (T.StructType, T.MapType, T.ArrayType)):
                 return None
         return cls(schema, options)
 
@@ -545,51 +566,18 @@ class FastFlatParser:
         self.schema = schema
         self.options = options
         self.index = {f.name: i for i, f in enumerate(schema.fields)}
-        self.types = [f.dataType for f in schema.fields]
-        self.is_string = [isinstance(f.dataType, T.StringType) for f in schema.fields]
-        self.n = len(schema.fields)
-        self.strip_ns = options.ignore_namespace
-        # repeated-tag scalar arrays: the cell caster runs on the ELEMENT
-        # type; occurrences append in document order (convert_object's
-        # ArrayType branch)
-        self.array_fields = {
-            i
-            for i, f in enumerate(schema.fields)
-            if isinstance(f.dataType, T.ArrayType)
-        }
-        self.casters = [
-            self._build_caster(
-                f.dataType.elementType
-                if isinstance(f.dataType, T.ArrayType)
-                else f.dataType
-            )
-            for f in schema.fields
-        ]
-        # Root-attribute fields: bare attr name -> field index. With
-        # excludeAttribute the generic path never maps attributes (the
-        # fields can still be hit by literally-named elements), so leave
-        # the map empty to match.
-        prefix = options.attribute_prefix
-        self.attr_index = (
-            {}
-            if options.exclude_attribute
-            else {
-                f.name[len(prefix):]: i
-                for i, f in enumerate(schema.fields)
-                if f.name.startswith(prefix)
-            }
-        )
+        self.casters = [self._build_caster(f.dataType) for f in schema.fields]
         self.attr_casters = [
             self._build_attr_caster(f.dataType) for f in schema.fields
         ]
-        # tier 0: pattern, and (group, field index, is attr) per field group
+        # the pattern, and (group, field index, is attr) per field group
         self.flat: Optional[FlatPattern] = None
         self.group_map: List[tuple] = []
 
     def _build_caster(self, dt: T.DataType):
         """Per-field CELL converter: the empty/whitespace element semantics
         of the generic path (empty scalar -> None; whitespace-only scalar
-        -> fall back so the parse policy decides) fused with the exact
+        -> ValueError, so the generic parser decides) fused with the exact
         ``cast_to`` branch for the common scalar types (dispatch + options
         resolved once); unusual types delegate to ``cast_to`` itself."""
         from spark_xml_spark.xmlcore.casts import (
@@ -629,7 +617,7 @@ class FastFlatParser:
                     return None
                 v2 = v.strip() if strip else v
                 if v2 == "":
-                    raise _FastFallback()  # whitespace-only: policy decides
+                    raise ValueError("whitespace-only value")  # policy decides
                 if v2 == nullv:
                     return None
                 neg = v2.startswith("-")
@@ -652,7 +640,7 @@ class FastFlatParser:
                     return None
                 v2 = v.strip() if strip else v
                 if v2 == "":
-                    raise _FastFallback()
+                    raise ValueError("whitespace-only value")
                 if v2 == nullv:
                     return None
                 neg = v2.startswith("-")
@@ -671,7 +659,7 @@ class FastFlatParser:
                     return None
                 v2 = v.strip() if strip else v
                 if v2 == "":
-                    raise _FastFallback()
+                    raise ValueError("whitespace-only value")
                 if v2 == nullv:
                     return None
                 lv = v2.lower()
@@ -687,7 +675,7 @@ class FastFlatParser:
             if v == "":
                 return None
             if v.strip() == "":
-                raise _FastFallback()
+                raise ValueError("whitespace-only value")
             return cast_to(v, _dt, o)
 
         return c_generic
@@ -697,8 +685,9 @@ class FastFlatParser:
         whitespace-to-null (treatEmptyValuesAsNulls) fused with the plain
         ``cast_to`` the generic path applies to attribute values
         (StaxXmlParserUtils.scala:92-107 + StaxXmlParser.scala:229-242).
-        Cast failures raise — parse_record re-runs the generic path, which
-        raises the same error into the parse-mode policy."""
+        Cast failures raise — the scan then re-runs the batch through the
+        generic parser, which raises the same error into the parse-mode
+        policy."""
         o = self.options
         if o.treat_empty_values_as_nulls:
 
@@ -714,165 +703,26 @@ class FastFlatParser:
 
         return c_attr
 
-    def parse(self, xml: str) -> tuple:
-        # entities need real unescaping, CR line-end normalization -> expat
-        if "&" in xml or "\r" in xml:
-            return self._parse_expat(xml)
-        if self.flat is not None:
-            m = self.flat.loose.match(xml)
-            if m is not None:
-                row: List[Any] = [None] * self.n
-                casters = self.casters
-                attr_casters = self.attr_casters
-                for g, i, is_attr in self.group_map:
-                    text = m.group(g)
-                    if text is not None:
-                        row[i] = (attr_casters if is_attr else casters)[i](text)
-                return tuple(row)
-        row = self._parse_regex(xml)
-        if row is not None:
-            return row
-        return self._parse_expat(xml)
-
-    def learn(self, xml: str, proof=None) -> None:
-        """Adopt the pattern learned from ``xml``, if any, as tier 0 —
-        never for repeated-tag arrays, whose variable occurrence counts
-        the fixed pattern cannot express."""
-        if self.array_fields:
-            return
-        flat = learn_flat_pattern(xml, self.options, proof)
-        if flat is None:
-            return
+    def learn(self, flat: FlatPattern) -> None:
+        """Adopt ``flat`` and map its groups onto the schema's fields."""
         self.flat = flat
         self.group_map = [
             (g, self.index[name], g <= flat.attrs)
             for g, name in enumerate(flat.names, 1) if name in self.index
         ]
 
-    def _parse_regex(self, xml: str):
-        """Tier-1 extraction; None when the record needs a real parser.
-        The first success also learns the tier-0 pattern."""
-        proof = _flat_proof(xml)
-        if proof is None:
-            return None
-        _root, attrs, fields = proof
-        row: List[Any] = [None] * self.n
-        index = self.index
-        casters = self.casters
-        strip_ns = self.strip_ns
-        # attributes first — matching elements overwrite, as in
-        # convert_object (root attrs set before the element loop)
-        if attrs:
-            attr_index = self.attr_index
-            attr_casters = self.attr_casters
-            for name, _q, value in attrs:
-                if strip_ns and ":" in name:
-                    name = name.rsplit(":", 1)[-1]
-                i = attr_index.get(name, -1)
-                if i >= 0:
-                    row[i] = attr_casters[i](value)
-        arrays = self.array_fields
-        for tag, text in fields:
-            if strip_ns and ":" in tag:
-                tag = tag.rsplit(":", 1)[-1]
-            i = index.get(tag, -1)
-            if i >= 0:
-                if i in arrays:
-                    v = casters[i](text)
-                    if isinstance(row[i], list):
-                        row[i].append(v)
-                    else:
-                        row[i] = [v]
-                else:
-                    row[i] = casters[i](text)
-        if self.flat is None:
-            self.learn(xml, proof)
-        return tuple(row)
-
-    def _parse_expat(self, xml: str) -> tuple:
-        from xml.parsers import expat
-
-        row: List[Any] = [None] * self.n
-        state = [0, -1]  # depth, current field index
-        buf: List[str] = []
-        index = self.index
-        options = self.options
-
-        def start(name, attrs):
-            state[0] += 1
-            d = state[0]
-            if d == 1:
-                if attrs and self.attr_index:
-                    # root attributes in document order; same-named child
-                    # elements overwrite later (convert_object order)
-                    for an, av in attrs.items():
-                        if self.strip_ns:
-                            an = an.split(":")[-1]
-                        i = self.attr_index.get(an, -1)
-                        if i >= 0:
-                            row[i] = self.attr_casters[i](av)
-            elif d == 2:
-                if self.strip_ns:
-                    name = name.split(":")[-1]
-                i = index.get(name, -1)
-                state[1] = i
-                if i >= 0:
-                    buf.clear()
-            elif d > 2:
-                # nested content under a scalar field: generic semantics
-                raise _FastFallback()
-
-        def end(name):
-            d = state[0]
-            if d == 2:
-                i = state[1]
-                if i >= 0:
-                    v = self._convert(i, "".join(buf))
-                    if i in self.array_fields:
-                        if isinstance(row[i], list):
-                            row[i].append(v)
-                        else:
-                            row[i] = [v]
-                    else:
-                        row[i] = v
-                    state[1] = -1
-            state[0] = d - 1
-
-        def chard(data):
-            if state[0] == 2 and state[1] >= 0:
-                buf.append(data)
-
-        def hardening(*_a, **_k):
-            raise ev.XmlSecurityError("DTD/external entities are not supported")
-
-        p = expat.ParserCreate(namespace_separator=None)
-        p.buffer_text = True
-        p.StartElementHandler = start
-        p.EndElementHandler = end
-        p.CharacterDataHandler = chard
-        p.StartDoctypeDeclHandler = hardening
-        p.ExternalEntityRefHandler = hardening
-        p.Parse(xml, True)
-        return tuple(row)
-
-    def _convert(self, i: int, text: str):
-        # empty/whitespace element semantics live inside the cell converters
-        return self.casters[i](text)
-
 
 def parse_records(
     records: Iterable[str], schema: T.StructType, options: XmlOptions
 ) -> Iterator[tuple]:
     """Bulk entry point used by the data source reader: one validator per
-    partition (ValidatorUtil.scala:30-55 semantics), rows streamed out.
-    Flat all-scalar schemas take the FastFlatParser path."""
+    partition (ValidatorUtil.scala:30-55 semantics), rows streamed out."""
     validator = None
     if options.row_validation_xsd_path:
         from spark_xml_spark.xsd import get_validator
 
         validator = get_validator(options.row_validation_xsd_path)
-    fast = FastFlatParser.try_build(schema, options)
     for xml in records:
-        row = parse_record(xml, schema, options, validator=validator, fast=fast)
+        row = parse_record(xml, schema, options, validator=validator)
         if row is not None:
             yield row

@@ -146,15 +146,20 @@ def test_reordered_fields_fall_back():
 
 
 def test_qualifier_rejects_non_defaults():
+    """The columnar scan takes every flat all-scalar schema, under the
+    empty/null/space options too (the Python casters apply them); an XSD
+    row validation, a nested struct or an array sends the read to the
+    generic parser."""
     assert D._columnar_ok(SCHEMA, OPTS)
     for extra in (
         {"nullValue": "NA"},
         {"ignoreSurroundingSpaces": "true"},
         {"treatEmptyValuesAsNulls": "true"},
-        {"rowValidationXSDPath": "/tmp/x.xsd"},
     ):
         o = XmlOptions.from_dict({"rowTag": "r", **extra})
-        assert not D._columnar_ok(SCHEMA, o), extra
+        assert D._columnar_ok(SCHEMA, o), extra
+    o = XmlOptions.from_dict({"rowTag": "r", "rowValidationXSDPath": "/tmp/x.xsd"})
+    assert not D._columnar_ok(SCHEMA, o)
     # a corrupt-record column does not disqualify: a matched record is
     # well-formed (null cell), the row path fills it for every other
     with_corrupt = T.StructType(
@@ -165,6 +170,11 @@ def test_qualifier_rejects_non_defaults():
         [T.StructField("x", T.StructType([T.StructField("y", T.LongType())]))]
     )
     assert not D._columnar_ok(nested, OPTS)
+    array = T.StructType(
+        [T.StructField("i", T.LongType()),
+         T.StructField("k", T.ArrayType(T.LongType()))]
+    )
+    assert not D._columnar_ok(array, OPTS)
 
 
 ATTR_SCHEMA = T.StructType(
@@ -243,17 +253,14 @@ def test_unclosed_tag_is_malformed_both_paths():
         ]
     )
     o = XO()
-    fast = parser.FastFlatParser.try_build(schema, o)
     bads = ["<d><id>0</id><src>", "<d><id>1</id></src>", "<d><id>1</id><d>"]
     good = "<d><id>1</id><src>ok</src></d>"
-    for _tier in range(2):  # second pass exercises the learned tier-0 pattern
-        for r in [good] + bads:
-            got = parser.parse_record(r, schema, o, fast=fast)
-            ref = parser.parse_record(r, schema, o, fast=None)
-            assert got == ref, (r, got, ref)
-    for r in bads:
-        row = parser.parse_record(r, schema, o, fast=fast)
-        assert row[2] == r  # corrupt column holds the raw record
+    # the good record first (the pattern is learned from it), and again
+    # after the fragments, which must not match the learned pattern
+    recs = [good] + bads + [good] + bads
+    rt, ct = _both_paths(recs, schema, o)
+    assert rt.equals(ct)
+    assert ct["_corrupt_record"].to_pylist() == ([None] + bads) * 2
 
 
 def _rows_by_name(df, cols):
@@ -404,26 +411,22 @@ def test_attr_captured_when_element_absent():
     whenever the learning record also had a same-named element, silently
     NULLing the attribute on later records without the element. The
     learner now refuses a record that names a field twice, so such a
-    record takes the per-record tiers (element wins, in document order)
+    record takes the generic parser (element wins, in document order)
     and the pattern is learned from a later record."""
     schema = T.StructType(
         [T.StructField("_id", T.StringType()), T.StructField("v", T.LongType())]
     )
     opts = XmlOptions.from_dict({"rowTag": "r"})
-    fast = parser.FastFlatParser.try_build(schema, opts)
     recs = [
         '<r id="A"><_id>E</_id><v>1</v></r>',  # learning record: both
         '<r id="B"><v>2</v></r>',              # attr only
         "<r><v>3</v></r>",                     # neither
     ]
-    for _tier in range(2):
-        for r in recs:
-            got = parser.parse_record(r, schema, opts, fast=fast)
-            ref = parser.parse_record(r, schema, opts, fast=None)
-            assert got == ref, (r, got, ref)
-    rt, ct = _both_paths(recs, schema, opts)
+    # a second pass runs every record against the pattern learned in the
+    # first
+    rt, ct = _both_paths(recs * 2, schema, opts)
     assert rt.equals(ct)
-    assert ct["_id"].to_pylist() == ["E", "B", None]
+    assert ct["_id"].to_pylist() == ["E", "B", None] * 2
 
 
 def test_duplicate_tag_columnar_falls_back():
@@ -705,3 +708,72 @@ def test_dense_interleaving_with_corrupt_column(tmp_path, monkeypatch):
     assert tiers.get("row_fallback") == missed, tiers
     assert tiers.get("columnar_flat") == len(recs) - missed, tiers
     assert "row_arrow" not in tiers, tiers
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        {"nullValue": "NA"},
+        {"ignoreSurroundingSpaces": "true"},
+        {"treatEmptyValuesAsNulls": "true"},
+    ],
+    ids=["nullValue", "ignoreSurroundingSpaces", "treatEmptyValuesAsNulls"],
+)
+def test_null_and_space_options_stay_columnar(tmp_path, monkeypatch, extra):
+    """Under each of the empty/null/space options a flat read stays on the
+    columnar scan (its Python casters apply the option) and equals the
+    generic parser, on string cells that each option rewrites."""
+    recs = [r.strip() for r in _lineitems(3000, lambda c: c)]
+    planted = ("NA", "  padded  ", "", "   ")
+    for k in range(0, len(recs), 5):
+        head, rest = recs[k].split("<comment>")
+        recs[k] = f"{head}<comment>{planted[k // 5 % 4]}</comment></item>"
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.xml").write_text(
+        "<lineitems>\n" + "\n".join(recs) + "\n</lineitems>\n"
+    )
+    got, tiers = _read_with_tiers(tmp_path, monkeypatch, src, _LINEITEM, **extra)
+    opts = XmlOptions.from_dict({"rowTag": "item", **extra})
+    ref = _row_table(recs, _LINEITEM, opts)
+    assert got.equals(ref)
+    assert tiers.get("columnar_flat") == len(recs), tiers
+    assert "row_fallback" not in tiers and "row_arrow" not in tiers, tiers
+    # the option did rewrite some planted cell
+    default = _row_table(recs, _LINEITEM, XmlOptions.from_dict({"rowTag": "item"}))
+    assert got.column("comment") != default.column("comment")
+
+
+def test_field_order_change_relearns(tmp_path, monkeypatch):
+    """A file whose second half lists the fields in reverse order: the
+    scan re-learns its pattern on the first batch that mostly misses, so
+    every record stays columnar and the read equals the generic parser."""
+    n = 2 * D._BATCH_SIZE
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("v", T.DoubleType()),
+        ]
+    )
+    fields = [("k", "{k}"), ("name", "n{k}"), ("v", "{k}.5")]
+    recs = []
+    for k in range(n):
+        order = fields if k < n // 2 else fields[::-1]
+        recs.append(
+            "<item>"
+            + "".join(f"<{t}>{v.format(k=k)}</{t}>" for t, v in order)
+            + "</item>"
+        )
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.xml").write_text(
+        "<items>\n" + "\n".join(recs) + "\n</items>\n"
+    )
+    got, tiers = _read_with_tiers(
+        tmp_path, monkeypatch, src, schema, maxPartitionBytes=str(1 << 30)
+    )
+    opts = XmlOptions.from_dict({"rowTag": "item"})
+    assert got.equals(_row_table(recs, schema, opts))
+    assert tiers.get("columnar_flat") == n, tiers
+    assert "row_fallback" not in tiers, tiers

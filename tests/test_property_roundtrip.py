@@ -191,9 +191,9 @@ def test_split_nested_same_name_boundary_limitation(tmp_path):
 
 
 # --- attr fast-path equivalence property -----------------------------------
-# Random flat records whose root carries attributes: FastFlatParser (all
-# three tiers) must agree with the generic parser exactly, including
-# malformed/degenerate shapes, under several option sets.
+# Random flat records whose root carries attributes: the columnar scan must
+# agree with the generic parser exactly, including malformed/degenerate
+# shapes, under several option sets.
 
 _ATTR_SCHEMA = T.StructType(
     [
@@ -216,18 +216,22 @@ _attr_text = st.text(
 )
 
 
+# values the nullValue / space / empty options rewrite, besides any text
+_cell_text = st.one_of(_attr_text, st.sampled_from(["NA", " NA ", "", "  "]))
+
+
 @st.composite
 def _attr_record(draw):
     parts = ["<r"]
     if draw(st.booleans()):
         parts.append(f' id="{draw(st.integers(-99999, 99999))}"')
     if draw(st.booleans()):
-        parts.append(f' tag="{draw(_attr_text)}"')
+        parts.append(f' tag="{draw(_cell_text)}"')
     if draw(st.booleans()):
         parts.append(f' extra="{draw(_attr_text)}"')
     parts.append(">")
     if draw(st.booleans()):
-        parts.append(f"<name>{draw(_attr_text)}</name>")
+        parts.append(f"<name>{draw(_cell_text)}</name>")
     if draw(st.booleans()):
         parts.append(f"<price>{draw(st.floats(allow_nan=False, allow_infinity=False, width=32))}</price>")
     parts.append("</r>")
@@ -239,6 +243,8 @@ _ATTR_OPTION_SETS = [
     {"treatEmptyValuesAsNulls": "true"},
     {"ignoreSurroundingSpaces": "true"},
     {"excludeAttribute": "true"},
+    {"nullValue": "NA"},
+    {"nullValue": ""},
 ]
 
 
@@ -248,14 +254,15 @@ _ATTR_OPTION_SETS = [
     opt_idx=st.integers(0, len(_ATTR_OPTION_SETS) - 1),
 )
 def test_attr_fast_path_equivalence_property(recs, opt_idx):
+    """Root attributes and text under every empty/null/space option: the
+    columnar scan equals the generic parser. The records run twice, so
+    the second pass meets the pattern the first learned."""
+    from test_columnar import _both_paths
+
     opts = XmlOptions.from_dict({"rowTag": "r", **_ATTR_OPTION_SETS[opt_idx]})
-    fast = parser.FastFlatParser.try_build(_ATTR_SCHEMA, opts)
-    assert fast is not None
-    for _tier_pass in range(2):  # second pass exercises the learned pattern
-        for rec in recs:
-            got = parser.parse_record(rec, _ATTR_SCHEMA, opts, fast=fast)
-            ref = parser.parse_record(rec, _ATTR_SCHEMA, opts, fast=None)
-            assert got == ref, (rec, got, ref)
+    assert parser.FastFlatParser.try_build(_ATTR_SCHEMA, opts) is not None
+    ref, got = _both_paths(recs * 2, _ATTR_SCHEMA, opts)
+    assert got.equals(ref), (recs, got.to_pylist(), ref.to_pylist())
 
 
 _STRUCT_SCHEMA = T.StructType(
@@ -346,16 +353,22 @@ def _array_record(draw):
 
 @settings(max_examples=120, deadline=None)
 @given(recs=st.lists(_array_record(), min_size=1, max_size=6))
-def test_array_fast_path_equivalence_property(recs):
-    """Repeated-tag scalar arrays parse identically through the fast
-    tiers (findall + expat) and the generic parser, in any interleaving."""
+def test_array_fast_path_equivalence_property(recs, reader_batches):
+    """Repeated-tag scalar arrays have no fast parser: the reader serves
+    them from the generic parser, and its Arrow output equals
+    parse_records -> Arrow in any interleaving."""
+    import pyarrow as pa
+
+    from spark_xml_spark.sources import datasource as D
+
     opts = XmlOptions.from_dict({"rowTag": "r"})
-    fast = parser.FastFlatParser.try_build(_ARRAY_SCHEMA, opts)
-    assert fast is not None and fast.array_fields == {1, 2}
-    for rec in recs:
-        got = parser.parse_record(rec, _ARRAY_SCHEMA, opts, fast=fast)
-        ref = parser.parse_record(rec, _ARRAY_SCHEMA, opts, fast=None)
-        assert got == ref, (rec, got, ref)
+    assert parser.FastFlatParser.try_build(_ARRAY_SCHEMA, opts) is None
+    rows = parser.parse_records(iter(recs), _ARRAY_SCHEMA, opts)
+    ref = pa.Table.from_batches(
+        list(D._rows_to_arrow_batches(rows, _ARRAY_SCHEMA, 256))
+    )
+    got = reader_batches(recs, _ARRAY_SCHEMA, rowTag="r")
+    assert pa.Table.from_batches(got, schema=ref.schema).equals(ref)
 
 
 # --- round 7: strict-pattern + fused-window equivalence --------------------
@@ -421,10 +434,10 @@ def test_strict_and_window_paths_equivalence_property(recs):
 
     opts = XmlOptions.from_dict({"rowTag": "r"})
 
-    # reference: the generic parser (no fast tiers) via arrow conversion
+    # reference: the generic parser via arrow conversion
     rows = [
         row for row in (
-            parser.parse_record(r, _FLAT_SCHEMA, opts, fast=None) for r in recs
+            parser.parse_record(r, _FLAT_SCHEMA, opts) for r in recs
         ) if row is not None
     ]
     ref = pa.Table.from_batches(
