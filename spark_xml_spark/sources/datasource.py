@@ -502,20 +502,32 @@ def _columnar_ok(schema: T.StructType, xopts: XmlOptions) -> bool:
     )
 
 
-def _py_cast_column(vals, caster, target_type):
+def _py_cast_column(vals, caster, target_type, rejected):
+    """``vals`` through the Python ``caster``. A value the caster rejects
+    (malformed, whitespace-only) becomes null and its position joins
+    ``rejected``: the caller re-runs that record through the exact row
+    path so the parse-mode policy applies."""
     import pyarrow as pa
 
-    return pa.array(
-        [None if v is None else caster(v) for v in vals], type=target_type
-    )
+    try:
+        cells = [None if v is None else caster(v) for v in vals]
+    except Exception:
+        cells = [None] * len(vals)
+        for k, v in enumerate(vals):
+            if v is not None:
+                try:
+                    cells[k] = caster(v)
+                except Exception:
+                    rejected.add(k)
+    return pa.array(cells, type=target_type)
 
 
-def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
-                 is_attr=False):
+def _cast_column(vals, dt: T.DataType, caster, target_type, rejected,
+                 guards=None, is_attr=False):
     """One column of raw strings -> Arrow array. C casts when provably
-    equivalent; Python casters otherwise. Raises (ValueError) only from
-    the Python casters — the caller then re-runs those records through
-    the exact row path so the parse-mode policy applies. ``guards`` defaults to the conservative option-free
+    equivalent; Python casters otherwise, which add the positions of the
+    values they reject to ``rejected`` (:func:`_py_cast_column`).
+    ``guards`` defaults to the conservative option-free
     set; pass _cast_guards(xopts) for the option-aware set. ``is_attr``
     columns carry ATTRIBUTE cell semantics: an empty value is NOT
     null-coerced (plain cast_to — raises for non-string scalars, which
@@ -525,7 +537,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
 
     tname = dt.typeName()
     if tname not in _C_CASTABLE:
-        return _py_cast_column(vals, caster, target_type)
+        return _py_cast_column(vals, caster, target_type, rejected)
     arr = pa.array(vals, pa.string())
     if tname == "string":
         return arr  # defaults only (see _cast_ladder): "" stays "", no nullValue
@@ -535,7 +547,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
             # empty attribute on a non-string scalar: the generic path
             # raises from cast_to -> parse policy; route via the Python
             # caster so the caller re-runs the records on the row path
-            return _py_cast_column(vals, caster, target_type)
+            return _py_cast_column(vals, caster, target_type, rejected)
         # empty element -> null for every non-string scalar (row-path END
         # branch); whitespace-only is NOT empty and falls to the casters
         arr = pc.if_else(empties, pa.scalar(None, pa.string()), arr)
@@ -543,7 +555,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
     if guard is not None:
         ok = pc.match_substring_regex(arr, guard)
         if not pc.all(pc.fill_null(ok, True)).as_py():
-            return _py_cast_column(vals, caster, target_type)
+            return _py_cast_column(vals, caster, target_type, rejected)
     try:
         if tname == "float":
             # two-step to reproduce the row path's double-rounding
@@ -568,7 +580,7 @@ def _cast_column(vals, dt: T.DataType, caster, target_type, guards=None,
                 return pc.cast(arr, target_type)
         return pc.cast(arr, target_type)
     except Exception:
-        return _py_cast_column(vals, caster, target_type)
+        return _py_cast_column(vals, caster, target_type, rejected)
 
 
 def _group_columns(groups, group_map, ncols, nrec):
@@ -585,13 +597,14 @@ def _group_columns(groups, group_map, ncols, nrec):
 
 
 def _cast_ladder(cols, fast, arrow_schema, guards):
-    """Raw-string columns -> one Arrow record batch, each column through
-    the field's element or root-attribute caster: _cast_column under
-    default options, the Python caster alone under nullValue,
-    ignoreSurroundingSpaces or treatEmptyValuesAsNulls (the C casts know
-    none of them). None when a Python caster rejected a value (malformed /
-    whitespace-only) — the caller re-runs the records through the exact
-    row path so the parse-mode policy applies."""
+    """Raw-string columns -> ``(batch, rejected)``: one Arrow record batch,
+    each column through the field's element or root-attribute caster
+    (_cast_column under default options, the Python caster alone under
+    nullValue, ignoreSurroundingSpaces or treatEmptyValuesAsNulls, which
+    the C casts know none of), and the positions of the records holding a
+    value a Python caster rejected. ``(None, ())`` when Arrow cannot hold
+    a cast value — the caller then re-runs every record through the exact
+    row path."""
     import pyarrow as pa
 
     o = fast.options
@@ -601,19 +614,20 @@ def _cast_ladder(cols, fast, arrow_schema, guards):
         or o.treat_empty_values_as_nulls
     )
     attr_cols = {i for _g, i, is_attr in fast.group_map if is_attr}
+    rejected: set = set()
     try:
         arrays = []
         for i, f in enumerate(fast.schema.fields):
             caster = (fast.attr_casters if i in attr_cols else fast.casters)[i]
             target = arrow_schema.field(i).type
             arrays.append(
-                _py_cast_column(cols[i], caster, target) if py_only
-                else _cast_column(cols[i], f.dataType, caster, target, guards,
-                                  is_attr=i in attr_cols)
+                _py_cast_column(cols[i], caster, target, rejected) if py_only
+                else _cast_column(cols[i], f.dataType, caster, target,
+                                  rejected, guards, is_attr=i in attr_cols)
             )
     except Exception:
-        return None
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+        return None, ()
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema), rejected
 
 
 def _columnar_batches(
@@ -622,15 +636,14 @@ def _columnar_batches(
 ):
     """The columnar scan (schemas _columnar_ok accepts): one Arrow batch
     out per ``batch_size`` records in. Each record is matched on its own
-    against the learned pattern (``parser.match_flat_batch``, which also
-    re-learns when fewer than half of a batch match). The batch's matched
-    records are transposed and cast in one columnar pass; its unmatched
-    records — and all of them when a Python caster rejects a value — take
-    the exact parser, and one ``take`` restores record order. So a batch
-    costs a fixed number of Arrow calls however dirty records interleave
-    with clean ones, a dirty record never drags its clean neighbours to
-    the exact parser, and DROPMALFORMED drops only the records it
-    rejects."""
+    against the learned pattern (``parser.match_flat_batch``). The
+    batch's matched records are transposed and cast in one columnar pass;
+    its unmatched records, and the matched ones whose values a Python
+    caster rejects, take the exact parser, and one ``take`` restores
+    record order. So a batch costs a fixed number of Arrow calls however
+    dirty records interleave with clean ones, a dirty record never drags
+    its clean neighbours to the exact parser, and DROPMALFORMED drops only
+    the records it rejects."""
     import itertools
 
     import pyarrow as pa
@@ -649,18 +662,26 @@ def _columnar_batches(
         flat, caps, hit = parser.match_flat_batch(fast.flat, batch, xopts)
         if flat is not fast.flat:
             fast.learn(flat)
-        cast = None
+        cast, rejected = None, ()
         if hit:
-            cast = _cast_ladder(
+            cast, rejected = _cast_ladder(
                 _group_columns(
                     [caps[i].groups() for i in hit], fast.group_map, ncols,
                     len(hit),
                 ),
                 fast, arrow_schema, guards,
             )
+        if rejected:
+            # a caster rejected a value: those records leave the cast
+            # batch and take the exact parser alone
+            for k in rejected:
+                caps[hit[k]] = None
+            keep = [k for k in range(len(hit)) if k not in rejected]
+            hit = [hit[k] for k in keep]
+            cast = cast.take(pa.array(keep, pa.int64())) if keep else None
         if cast is None:
-            # nothing matched, or a cast rejected a value: the exact parser
-            # decides the whole batch
+            # nothing castable matched, or Arrow could not hold a cast
+            # value: the exact parser decides the whole batch
             hit, miss = [], range(len(batch))
         else:
             if tally is not None:

@@ -472,28 +472,6 @@ def learn_flat_pattern(xml: str, options: XmlOptions) -> Optional[FlatPattern]:
         return None
 
 
-def _learn_batch_pattern(
-    batch: List[str], options: XmlOptions
-) -> Optional[FlatPattern]:
-    """The pattern learned from the first of up to 16 entity-free records
-    of ``batch`` that yields one, so a batch that opens with records no
-    pattern describes (a comment, a CDATA field) still learns."""
-    for xml in itertools.islice((r for r in batch if "&" not in r), 16):
-        flat = learn_flat_pattern(xml, options)
-        if flat is not None:
-            return flat
-    return None
-
-
-def _matches(flat: FlatPattern, batch: List[str]) -> Tuple[list, list]:
-    strict, loose = flat.strict.match, flat.loose.match
-    caps = [
-        None if "&" in r or "\r" in r else strict(r) or loose(r)
-        for r in batch
-    ]
-    return caps, [i for i, m in enumerate(caps) if m is not None]
-
-
 def match_flat_batch(
     flat: Optional[FlatPattern], batch: List[str], options: XmlOptions
 ) -> Tuple[Optional[FlatPattern], list, list]:
@@ -502,25 +480,24 @@ def match_flat_batch(
     generic parser must parse it — a miss, an entity reference, or a CR
     that line-end normalization must rewrite; and the indexes of the
     matched records. With no ``flat`` yet, the pattern is learned from the
-    batch (:func:`_learn_batch_pattern`). When fewer than half of the
-    records match, one is learned from the missed records and kept only if
-    it matches more of the batch, so a corpus whose field order changes
-    between files keeps its records on the pattern. The columnar scan and
-    columnar inference share this rule."""
+    first of up to 16 entity-free records of the batch that yields one (so
+    a batch that opens with records no pattern describes, a comment or a
+    CDATA field, still learns); once learned it is kept. The columnar scan
+    and columnar inference share this rule."""
     if flat is None:
-        flat = _learn_batch_pattern(batch, options)
+        learned = (
+            learn_flat_pattern(r, options)
+            for r in itertools.islice((r for r in batch if "&" not in r), 16)
+        )
+        flat = next((f for f in learned if f is not None), None)
         if flat is None:
             return None, [None] * len(batch), []
-    caps, hit = _matches(flat, batch)
-    if len(hit) * 2 < len(batch):
-        again = _learn_batch_pattern(
-            [r for r, m in zip(batch, caps) if m is None], options
-        )
-        if again is not None:
-            recaps, rehit = _matches(again, batch)
-            if len(rehit) > len(hit):
-                return again, recaps, rehit
-    return flat, caps, hit
+    strict, loose = flat.strict.match, flat.loose.match
+    caps = [
+        None if "&" in r or "\r" in r else strict(r) or loose(r)
+        for r in batch
+    ]
+    return flat, caps, [i for i, m in enumerate(caps) if m is not None]
 
 
 class FastFlatParser:
@@ -538,7 +515,7 @@ class FastFlatParser:
     code paths as ``cast_to``, specialized for the scalar types; anything
     unusual delegates to ``cast_to`` itself) and raise ``ValueError``
     wherever the generic path might decide otherwise, which sends the
-    batch to it. Attribute cells use the generic attribute semantics
+    record to it. Attribute cells use the generic attribute semantics
     (attributes_to_values_map + cast_to), which differ from element cells:
     an empty attribute value is NOT null-coerced.
     """
@@ -685,7 +662,7 @@ class FastFlatParser:
         whitespace-to-null (treatEmptyValuesAsNulls) fused with the plain
         ``cast_to`` the generic path applies to attribute values
         (StaxXmlParserUtils.scala:92-107 + StaxXmlParser.scala:229-242).
-        Cast failures raise — the scan then re-runs the batch through the
+        Cast failures raise — the scan then re-runs the record through the
         generic parser, which raises the same error into the parse-mode
         policy."""
         o = self.options

@@ -9,6 +9,7 @@ reader and check the generic parser's answers.
 """
 
 import json
+import re
 
 import pyarrow as pa
 import pytest
@@ -744,36 +745,27 @@ def test_null_and_space_options_stay_columnar(tmp_path, monkeypatch, extra):
     assert got.column("comment") != default.column("comment")
 
 
-def test_field_order_change_relearns(tmp_path, monkeypatch):
-    """A file whose second half lists the fields in reverse order: the
-    scan re-learns its pattern on the first batch that mostly misses, so
-    every record stays columnar and the read equals the generic parser."""
-    n = 2 * D._BATCH_SIZE
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    fields = [("k", "{k}"), ("name", "n{k}"), ("v", "{k}.5")]
-    recs = []
-    for k in range(n):
-        order = fields if k < n // 2 else fields[::-1]
-        recs.append(
-            "<item>"
-            + "".join(f"<{t}>{v.format(k=k)}</{t}>" for t, v in order)
-            + "</item>"
-        )
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "part-0.xml").write_text(
-        "<items>\n" + "\n".join(recs) + "\n</items>\n"
-    )
-    got, tiers = _read_with_tiers(
-        tmp_path, monkeypatch, src, schema, maxPartitionBytes=str(1 << 30)
-    )
-    opts = XmlOptions.from_dict({"rowTag": "item"})
-    assert got.equals(_row_table(recs, schema, opts))
-    assert tiers.get("columnar_flat") == n, tiers
-    assert "row_fallback" not in tiers, tiers
+@pytest.mark.parametrize(
+    "extra",
+    [{}, {"ignoreSurroundingSpaces": "true"}, {"mode": "DROPMALFORMED"}],
+    ids=["default", "ignoreSurroundingSpaces", "DROPMALFORMED"],
+)
+def test_uncastable_records_take_the_row_path_alone(extra):
+    """Matched records whose numeric cell a caster rejects (whitespace
+    only, or not a number), a few in every batch: only those records take
+    the exact parser, their neighbours stay columnar, and the output
+    equals the generic parser in record order."""
+    recs = [r.strip() for r in _lineitems(3000, lambda c: c)]
+    for k in range(3, len(recs), 200):
+        recs[k] = re.sub("<orderkey>[^<]*<", "<orderkey>   <", recs[k])
+    for k in range(7, len(recs), 200):
+        recs[k] = re.sub("<discount>[^<]*<", "<discount>x1<", recs[k])
+    opts = XmlOptions.from_dict({"rowTag": "item", **extra})
+    tally = D._TierTally()
+    got = _table(list(D._columnar_batches(recs, _LINEITEM, opts, 512, tally)))
+    assert got.equals(_row_table(recs, _LINEITEM, opts))
+    rejected = 2 * len(range(3, len(recs), 200))
+    assert tally.counts["row_fallback"] == rejected
+    assert tally.counts["columnar_flat"] == len(recs) - rejected
+    if extra.get("mode") == "DROPMALFORMED":
+        assert got.num_rows == len(recs) - rejected
