@@ -24,15 +24,19 @@ from __future__ import annotations
 
 from typing import List, Tuple
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def _promote(cols: List[Tuple[str, T.DataType, Column]], sep: str):
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier: backquoted, a backquote doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _promote(cols: List[Tuple[str, T.DataType, str]], sep: str):
     """Promote struct fields to prefixed columns until none remain, in
-    place of their struct. ``cols`` are (name, type, expression) triples
-    over the current DataFrame. Raises on an alias collision (e.g.
+    place of their struct. ``cols`` are (name, type, SQL expression)
+    triples over the current DataFrame. Raises on an alias collision (e.g.
     existing column ``a_b`` next to struct ``a.b``) — silently emitting
     duplicate column names would break the first downstream select/write
     with an ambiguity error that doesn't point back here."""
@@ -41,7 +45,7 @@ def _promote(cols: List[Tuple[str, T.DataType, Column]], sep: str):
         for name, t, expr in cols:
             if isinstance(t, T.StructType):
                 out.extend(
-                    (f"{name}{sep}{sub.name}", sub.dataType, expr.getField(sub.name))
+                    (f"{name}{sep}{sub.name}", sub.dataType, f"{expr}.{_q(sub.name)}")
                     for sub in t.fields
                 )
             else:
@@ -81,12 +85,13 @@ def flatten_xml(
 
     The projections are derived from the schema on the driver: the
     DataFrame is analyzed once, struct promotions fold into the next
-    projection, and each explode is one ``select`` (Spark allows a single
-    generator per projection).
+    projection, and each explode is one ``selectExpr`` of backquoted
+    paths (Spark allows a single generator per projection) — one call
+    into the JVM per projection, not one per leaf column.
     """
     if arrays not in ("all", "none", "first"):
         raise ValueError("arrays must be 'all', 'none' or 'first'")
-    cols = [(f.name, f.dataType, F.col(f"`{f.name}`")) for f in df.schema.fields]
+    cols = [(f.name, f.dataType, _q(f.name)) for f in df.schema.fields]
     moved = False  # cols hold expressions not yet projected
     exploded_once = False
     for _ in range(max_depth):
@@ -101,18 +106,18 @@ def flatten_xml(
             arrays == "first" and exploded_once
         ):
             if moved:
-                df = df.select(*[e.alias(n) for n, _, e in cols])
+                df = df.selectExpr(*[f"{e} AS {_q(n)}" for n, _, e in cols])
             return df
         # one LEVEL: every current sibling array exploded exactly once,
-        # one select each; sibling arrays produce the relational cross
-        # product per parent row
+        # one projection each; sibling arrays produce the relational
+        # cross product per parent row
         for arr in arrs:
-            df = df.select(*[
-                F.explode_outer(e).alias(n) if n == arr else e.alias(n)
+            df = df.selectExpr(*[
+                f"explode_outer({e}) AS {_q(n)}" if n == arr else f"{e} AS {_q(n)}"
                 for n, _, e in cols
             ])
             cols = [
-                (n, t.elementType if n == arr else t, F.col(f"`{n}`"))
+                (n, t.elementType if n == arr else t, _q(n))
                 for n, t, _ in cols
             ]
         moved = False

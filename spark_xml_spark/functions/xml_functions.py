@@ -172,13 +172,17 @@ def to_xml(
     # reach the generator as the Row values an Arrow-optimized F.udf gets,
     # through PySpark's own converter.
     to_row = ArrowTableToRowsConversion._create_converter(st)
+    # flat all-scalar structs take the writer's precompiled generator,
+    # as generator.rows_to_document does for files
+    fast = generator.FastFlatGenerator.try_build(st, xo)
+    if fast is not None:
+        write = lambda row: fast.row_to_xml(row, xo.row_tag)  # noqa: E731
+    else:
+        write = lambda row: generator.row_to_xml(st, row, xo)  # noqa: E731
 
     def gen(rows: pa.Array) -> pa.Array:
         return pa.array(
-            [
-                None if r is None else generator.row_to_xml(st, to_row(r), xo)
-                for r in rows.to_pylist()
-            ],
+            [None if r is None else write(to_row(r)) for r in rows.to_pylist()],
             pa.string(),
         )
 

@@ -8,6 +8,10 @@ idiomatically — *distributed* schema inference as a Spark job before the
 scan (the reference's two-pass inferred read, XmlRelation.scala:39-49 +
 InferSchema.scala:67-101).
 
+Both plan on the driver and run one ``mapInArrow`` job over the data
+source's own partitions (``_planned_scan``), so they start no planner
+worker; only ``filterPushdown`` reads go through ``spark.read.format``.
+
 Distributed-inference shape (100 TB-safe): one narrow stage with one task
 per reader partition (the same splits, bin-packing and partition-value
 groups the scan plans), each inferring a partial schema over its own
@@ -18,11 +22,13 @@ treeReduce-style partial+final aggregation noted in SURVEY.md §2 S5).
 
 from __future__ import annotations
 
+import random
 import weakref
-from typing import Optional
+from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.datasource import CaseInsensitiveDict
 
 from spark_xml_spark.options import XmlOptions
 from spark_xml_spark.sources import partitions as pmod
@@ -62,11 +68,13 @@ def _inject_session_timezone(spark: SparkSession, options: dict) -> dict:
 
 def _inject_parallelism(spark: SparkSession, options: dict) -> dict:
     """Default the ``minPartitions`` option to the session's
-    defaultParallelism. Split planning runs in Spark's Python planner
-    worker process, where no SparkSession is reachable, so the dynamic
-    maxSplitBytes computation (Spark's bytesPerCore term) needs the core
-    count delivered as an option; without it the planner falls back to
-    os.cpu_count() of the planner host, which can undercount a cluster."""
+    defaultParallelism, the core count of the dynamic maxSplitBytes
+    computation (Spark's bytesPerCore term). ``read_xml`` and
+    ``infer_xml_schema`` plan their splits here on the driver, but
+    ``XmlReader`` takes the count from its options only: it also plans
+    ``spark.read.format`` and ``filterPushdown`` reads in Spark's Python
+    planner worker, where no SparkSession is reachable and the fallback,
+    os.cpu_count() of the planner host, can undercount a cluster."""
     keys = {k.lower() for k in options}
     if "minpartitions" in keys or "targetsplitsize" in keys or "maxpartitionbytes" in keys:
         return options
@@ -79,6 +87,13 @@ def _inject_parallelism(spark: SparkSession, options: dict) -> dict:
     return out
 
 
+def _pushdown(options: dict) -> bool:
+    return any(
+        k.lower() == "filterpushdown" and str(v).lower() == "true"
+        for k, v in options.items()
+    )
+
+
 def _inject_filter_pushdown(spark: SparkSession, options: dict) -> dict:
     """Filter pushdown is strictly OPT-IN per read (reader option
     ``filterPushdown=true``) and is never defaulted from the session conf:
@@ -88,16 +103,68 @@ def _inject_filter_pushdown(spark: SparkSession, options: dict) -> dict:
     unfiltered count on the same df returns the filtered number). Safe
     usage is one read per filtered pipeline. When the option is set, this
     enables the required session conf so the read doesn't fail."""
-    if not any(
-        k.lower() == "filterpushdown" and str(v).lower() == "true"
-        for k, v in options.items()
-    ):
+    if not _pushdown(options):
         return options
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass
     return options
+
+
+def _planned_scan(
+    spark: SparkSession, reader: XmlReader, per_partition, schema
+) -> DataFrame:
+    """Plan ``reader``'s partitions on the driver and run
+    ``per_partition(reader, partition)`` over each in one
+    ``spark.range(n, numPartitions=n).mapInArrow`` job; task ``i`` reads
+    partition ``i``. The reader and its plan ride one broadcast, fetched
+    once per worker process, so a task's command does not grow with the
+    plan. No ``create_data_source`` or ``plan_data_source_read`` worker
+    runs: the job's tasks are the only Python it starts."""
+    parts = reader.partitions()
+    plan = spark.sparkContext.broadcast((reader, parts))
+
+    def xml_graft_scan(batches):
+        reader, parts = plan.value
+        for batch in batches:
+            for pid in batch.column(0).to_pylist():
+                yield from per_partition(reader, parts[pid])
+
+    n = len(parts)
+    ids = spark.range(n, numPartitions=max(n, 1))._jdf
+    # the ids' rows as an RDD-backed relation, which reports no size, as
+    # the data source's scan reports none: Range's 8 bytes per id would make
+    # every XML read look small enough for Spark to broadcast into a join
+    ids = spark._jsparkSession.internalCreateDataFrame(
+        ids.queryExecution().toRdd(), ids.schema(), False
+    )
+    return DataFrame(ids, spark).mapInArrow(xml_graft_scan, schema)
+
+
+def _partial_schema(reader: XmlReader, partition) -> Iterator:
+    """One inference task: the partial schema JSON of the partition's
+    records, Bernoulli-sampled by ``samplingRatio`` with seed 1."""
+    import pyarrow as pa
+
+    xo = XmlOptions.from_dict(reader._opts_dict)
+    records = (
+        r
+        for s in partition.splits
+        for r in tokenizer.scan_split(tokenizer.FileSplit(*s), xo.row_tag, xo.charset)
+    )
+    if xo.sampling_ratio < 1.0:
+        rng = random.Random(1)
+        records = (r for r in records if rng.random() < xo.sampling_ratio)
+    yield pa.RecordBatch.from_pydict(
+        {"schema_json": [infer.partial_schema_json(records, xo)]}
+    )
+
+
+def _source_options(options: dict, path) -> CaseInsensitiveDict:
+    """The options as the data source receives them from
+    ``spark.read.format(...).load(path)``: string values, keys lower-cased."""
+    return CaseInsensitiveDict(_stringify(options), path=path)
 
 
 def infer_xml_schema(
@@ -107,62 +174,33 @@ def infer_xml_schema(
     on the driver. Respects ``samplingRatio`` (Bernoulli per record, seed 1
     per task — the reference's sample semantics, InferSchema.scala:68-72).
 
-    The driver plans with the reader's own ``XmlReader.partitions()``, so
-    inference reads exactly the tasks the scan will; each task of
-    ``spark.range(n, numPartitions=n)`` looks its partition up by id."""
+    Inference reads exactly the tasks the scan will: ``_planned_scan``
+    plans with the reader's own ``XmlReader.partitions()``."""
     options = _inject_session_timezone(spark, options)
     options = _inject_parallelism(spark, options)
     xopts = XmlOptions.from_dict(options)
-    reader = XmlReader(dict(options, path=path), T.StructType())
-    parts = reader.partitions()
-    # Hive-style layouts: the partitions cover the DISCOVERED (possibly
-    # nested) files; append the typed partition columns after inference —
-    # the read schema a partition-aware scan produces
-    pcols = reader._pcols
-    opts_dict = dict(options)
-
-    def infer_partitions(batches):
-        import random as _random
-
-        import pyarrow as pa
-
-        xo = XmlOptions.from_dict(opts_dict)
-        for batch in batches:
-            for pid in batch.column(0).to_pylist():
-                records = (
-                    r
-                    for s in parts[pid].splits
-                    for r in tokenizer.scan_split(
-                        tokenizer.FileSplit(*s), xo.row_tag, xo.charset
-                    )
-                )
-                if xo.sampling_ratio < 1.0:
-                    rng = _random.Random(1)
-                    records = (
-                        r for r in records if rng.random() < xo.sampling_ratio
-                    )
-                yield pa.RecordBatch.from_pydict(
-                    {"schema_json": [infer.partial_schema_json(records, xo)]}
-                )
-
+    reader = XmlReader(_source_options(options, path), T.StructType())
     jsons = [
         r.schema_json
-        for r in spark.range(len(parts), numPartitions=max(len(parts), 1))
-        .mapInArrow(infer_partitions, "schema_json string")
-        .collect()
+        for r in _planned_scan(
+            spark, reader, _partial_schema, "schema_json string"
+        ).collect()
     ]
     schema = infer.merge_schema_jsons(jsons, xopts)
     if not schema.fields:
         raise ValueError(
             f"no XML rows with rowTag '{xopts.row_tag}' found in {path}"
         )
-    return pmod.append_partition_fields(schema, pcols)
+    # Hive-style layouts: the partitions cover the DISCOVERED (possibly
+    # nested) files; append the typed partition columns after inference —
+    # the read schema a partition-aware scan produces
+    return pmod.append_partition_fields(schema, reader._pcols)
 
 
 def read_xml(
     spark: SparkSession,
     path,
-    schema: Optional[T.StructType] = None,
+    schema=None,
     columns: Optional[list] = None,
     **options,
 ) -> DataFrame:
@@ -170,32 +208,49 @@ def read_xml(
 
     ``read_xml(spark, "books.xml", rowTag="book")`` — the equivalent of the
     reference's ``spark.read.format("xml").option("rowTag","book").load(...)``
-    (README.md:34-101 option surface). Schema priority: explicit arg >
-    ``inferSchema=false`` (all strings) > distributed inference job.
+    (README.md:34-101 option surface). Schema priority: explicit arg (a
+    ``StructType`` or a DDL string) > ``inferSchema=false`` (all strings,
+    the data source's own sampled field discovery) > distributed inference
+    job.
 
     ``columns`` prunes the scan to the named top-level fields: the parser
     skips unrequested subtrees without allocating (the reference's
     PrunedScan path, XmlRelation.scala:51-58). Spark 4.1's Python Data
     Source API does not push projection pruning down to readers, so this is
     the explicit equivalent.
+
+    The scan is planned here on the driver, as the reference plans its
+    scan in the JVM driver (XmlRelation.buildScan), and runs as one
+    ``mapInArrow`` job (``_planned_scan``). Only a ``filterPushdown=true``
+    read goes through ``spark.read.format``: pushdown needs the data
+    source's ``pushFilters`` hook.
     """
     register(spark)
     options = _inject_session_timezone(spark, options)
     options = _inject_filter_pushdown(spark, options)
     options = _inject_parallelism(spark, options)
     xopts = XmlOptions.from_dict(options)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     if schema is None and xopts.infer_schema:
         schema = infer_xml_schema(spark, path, **options)
-    if columns is not None and schema is not None:
+    elif schema is None:
+        schema = XmlDataSource(_source_options(options, path)).schema()
+    if columns is not None:
         wanted = set(columns)
         missing = wanted - {f.name for f in schema.fields}
         if missing:
             raise ValueError(f"columns not in schema: {sorted(missing)}")
         schema = T.StructType([f for f in schema.fields if f.name in wanted])
-    reader = spark.read.format(FORMAT_NAME).options(**_stringify(options))
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path if isinstance(path, str) else ",".join(path))
+    if _pushdown(options):
+        return (
+            spark.read.format(FORMAT_NAME)
+            .options(**_stringify(options))
+            .schema(schema)
+            .load(path if isinstance(path, str) else ",".join(path))
+        )
+    reader = XmlReader(_source_options(options, path), schema)
+    return _planned_scan(spark, reader, XmlReader.read, schema)
 
 
 def write_xml(df: DataFrame, path: str, mode: str = "overwrite",

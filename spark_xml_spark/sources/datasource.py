@@ -18,8 +18,9 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
 - ``schema()`` resolves the user-provided ``schema`` option or runs sampled
   inference (the reference's 2-pass inferred-read semantics,
   XmlRelation.scala:43-49). For cluster-distributed inference use
-  ``spark_xml_spark.sources.api.read_xml`` which runs the partial/final
-  schema merge as a Spark job and passes the resolved schema down.
+  ``spark_xml_spark.sources.api.read_xml``, which runs the partial/final
+  schema merge as a Spark job, then plans this reader's ``partitions()`` on
+  the driver and runs its ``read()`` in a ``mapInArrow`` job of its own.
 - the writer emits one complete XML document per partition
   (declaration + rootTag framing, XmlFile.scala:104-155).
 
@@ -1053,10 +1054,10 @@ class XmlReader(DataSourceReader):
             total += size + open_cost
         par = int(self._opt("minPartitions") or 0)
         if par <= 0:
-            # split planning runs in Spark's Python planner worker, where
-            # getActiveSession() is None — read_xml and infer_xml_schema
-            # inject the session's defaultParallelism as minPartitions;
-            # raw format() reads fall back to the planner host's cores
+            # a format() read plans in Spark's Python planner worker,
+            # where getActiveSession() is None, and falls back to the
+            # planner host's cores; read_xml and infer_xml_schema plan on
+            # the driver and inject defaultParallelism as minPartitions
             par = os.cpu_count() or 8
         bytes_per_core = total // max(par, 1)
         return min(128 * 1024 * 1024, max(open_cost, bytes_per_core))
@@ -1415,8 +1416,9 @@ class XmlDataSource(DataSource):
             raise ValueError("path option is required for the xml data source")
         # Driver-side sampled inference (the inference *semantics* of
         # XmlRelation.scala:43-49 + InferSchema.scala:68-72). read_xml()
-        # distributes this as a Spark job for big inputs and passes the
-        # resolved schema explicitly, skipping this path. To keep the raw
+        # distributes this as a Spark job for big inputs and reads with the
+        # resolved schema, skipping this path (it calls it on the driver
+        # for inferSchema=false, all-string field discovery). To keep the raw
         # format path (SQL DDL / spark.read.format) from parking the cluster
         # behind a single-threaded driver scan of the whole corpus, this path
         # is bounded by ``inferLimit`` records by default (0 = unbounded,

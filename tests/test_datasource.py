@@ -260,6 +260,48 @@ def test_to_xml_from_xml_inverse(spark):
     assert sorted(back.collect()) == sorted(df.collect())
 
 
+@pytest.mark.parametrize(
+    "opts", [{}, {"indent": "true"}, {"nullValue": "NA"}],
+    ids=["default", "indent", "nullValue"],
+)
+def test_to_xml_flat_matches_generic_writer(spark, opts):
+    """A flat all-scalar struct takes the writer's precompiled generator;
+    its fragments are byte-identical to the generic per-row writer's, an
+    all-null row included."""
+    from decimal import Decimal
+
+    from spark_xml_spark.options import XmlOptions
+    from spark_xml_spark.xmlcore import generator
+
+    st = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("val", T.DoubleType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("ok", T.BooleanType()),
+            T.StructField("day", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("price", T.DecimalType(12, 2)),
+        ]
+    )
+    rows = [
+        (i, i * 2.5, f"n<{i}>&", i % 2 == 0, dt.date(2024, 1, i % 28 + 1),
+         dt.datetime(2024, 1, 2, 3, 4, i % 60), Decimal(i) / 4)
+        for i in range(40)
+    ] + [(None,) * len(st.fields)]
+    df = spark.createDataFrame(rows, st)
+    xo = XmlOptions.from_dict(dict(opts, rowTag="rec"))
+    assert generator.FastFlatGenerator.try_build(st, xo) is not None
+    got = [
+        r.x
+        for r in df.select(
+            to_xml(F.struct(*st.names), st, dict(opts, rowTag="rec")).alias("x")
+        ).collect()
+    ]
+    want = [generator.row_to_xml(st, r, xo) for r in df.collect()]
+    assert got == want
+
+
 def test_read_xml_columns_pruning(spark):
     from spark_xml_spark.sources.api import read_xml
 

@@ -1935,6 +1935,35 @@ def test_flatten_xml_collision_raises(spark):
     assert sorted(flat.columns) == ["a__b", "a_b"]
 
 
+def test_flatten_xml_dotted_and_backquoted_names(spark):
+    """Names with a dot or a backquote are quoted, never parsed as paths:
+    a backquote is doubled inside the quoted identifier."""
+    from pyspark.sql import types as T
+
+    from spark_xml_spark.functions import flatten_xml
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("a.b", T.StructType([
+            T.StructField("c`d", T.LongType()),
+            T.StructField("e.f", T.ArrayType(T.StructType([
+                T.StructField("g`", T.StringType()),
+            ]))),
+        ])),
+    ])
+    df = spark.createDataFrame(
+        [(1, (10, [("x",), ("y",)])), (2, (20, None)), (3, None)], schema
+    )
+    flat = flatten_xml(df)
+    assert flat.columns == ["id", "a.b_c`d", "a.b_e.f_g`"]
+    assert sorted(tuple(r) for r in flat.collect()) == [
+        (1, 10, "x"), (1, 10, "y"), (2, 20, None), (3, None, None),
+    ]
+    kept = flatten_xml(df, arrays="none")
+    assert kept.columns == ["id", "a.b_c`d", "a.b_e.f"]
+    assert kept.count() == 3
+
+
 def test_flatten_xml_wide_schema_depth_bound(spark):
     """max_depth bounds array NESTING depth, not total passes: 40 sibling
     arrays at one level must flatten fine with the default bound."""

@@ -338,10 +338,11 @@ def test_exists_join_single_pass(push_conf):
     # orders summary answers both the EXISTS(urgent) and the
     # NOT-EXISTS(any order) counts — the customer dim is scanned and
     # shuffled once (the old semi+anti shape scanned it twice) and the
-    # full-outer recombination join is gone. Exactly two xml-graft
-    # scans (customer + orders) and exactly one join may appear.
+    # full-outer recombination join is gone. Exactly two XML scans
+    # (customer + orders; read_xml prints each as its mapInArrow scan
+    # function) and exactly one join may appear.
     plan = _plan(push_conf, "xml_exists_join")
-    assert plan.count("BatchScan xml-graft") == 2, plan[:2000]
+    assert plan.count("MapInArrow xml_graft_scan") == 2, plan[:2000]
     assert "FullOuter" not in plan
     n_joins = sum(
         plan.count(j) for j in
@@ -356,7 +357,7 @@ def test_distinct_except_single_scan(push_conf):
     # mid.exceptAll(top) shape scanned the XML twice and paid two
     # distinct exchanges plus the exceptAll shuffle.
     plan = _plan(push_conf, "xml_distinct_except")
-    assert plan.count("BatchScan xml-graft") == 1, plan[:2000]
+    assert plan.count("MapInArrow xml_graft_scan") == 1, plan[:2000]
     assert "Union" not in plan
 
 

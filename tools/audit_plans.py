@@ -214,7 +214,11 @@ def main() -> None:
             pid = _re.search(r"\[plan_id=(\d+)\]", m.group(0))
             ex_ids[pid.group(1) if pid else f"line{raw_ex}:{m.group(0)}"] = 1
         n_exchanges = len(ex_ids)
-        n_scans = plan.count("BatchScan xml-graft")
+        # read_xml scans print as their mapInArrow function; only a
+        # filterPushdown=true read is a data-source BatchScan
+        n_scans = plan.count("MapInArrow xml_graft_scan") + plan.count(
+            "BatchScan xml-graft"
+        )
         status = "FLAG" if flags else "ok"
         if flags:
             bad += 1
