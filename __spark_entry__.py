@@ -122,7 +122,6 @@ def _xml_table(
     variant: str = "plain",
     transform=None,
     partitions: int = 16,
-    read_options: dict = None,
     columns: list = None,
     local_dim: bool = False,
     **write_opts,
@@ -174,9 +173,8 @@ def _xml_table(
             raise ValueError(f"columns not in {table} schema: {sorted(missing)}")
         schema = T.StructType([f for f in schema.fields if f.name in want])
     if local_dim:
-        return _local_dim_df(spark, base, xml_dir, schema, tag,
-                             read_options or {})
-    return read_xml(spark, xml_dir, schema=schema, rowTag=tag, **(read_options or {}))
+        return _local_dim_df(spark, base, xml_dir, schema, tag)
+    return read_xml(spark, xml_dir, schema=schema, rowTag=tag)
 
 
 _LOCAL_DIM_CAP_BYTES = 8 << 20  # ~broadcast-side scale; fail loudly beyond
@@ -185,7 +183,7 @@ _LOCAL_DIM_DFS: dict = {}
 
 def _local_dim_df(
     spark: SparkSession, base: str, xml_dir: str,
-    schema: T.StructType, tag: str, read_options: dict,
+    schema: T.StructType, tag: str,
 ) -> DataFrame:
     """Parse a cached tiny-dim XML dir on the driver (same tokenizer +
     parse_records code path as the distributed scan, pruned to the given
@@ -200,9 +198,7 @@ def _local_dim_df(
     from spark_xml_spark.xmlcore import parser as xparser
     from spark_xml_spark.xmlcore import tokenizer as xtok
 
-    opts = _inject_session_timezone(
-        spark, dict(read_options, rowTag=tag)
-    )
+    opts = _inject_session_timezone(spark, {"rowTag": tag})
     app_id = spark.sparkContext.applicationId
     key = (app_id, base,
            tuple(f.name for f in schema.fields),
@@ -393,13 +389,12 @@ def q_xml_scan_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_xml_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3 filter pushdown: Catalyst predicates handed to the scan via Spark
-    4.1 pushFilters (sources/datasource.py XmlPushdownReader) are evaluated
-    inside the Python reader — non-matching rows never cross the
-    Python->JVM boundary, and equality literals prefilter the raw record
-    text before parsing. Opt-in read (one read per filtered pipeline)."""
+    """S3 pruned scan + predicate: a 4-column read of the XML orders with an
+    equality and a range filter, which Spark applies after the scan as it
+    does for the reference's PrunedScan (no predicate reaches the
+    reader)."""
     o = _xml_table(
-        spark, sf_dir, "orders", read_options={"filterPushdown": "true"},
+        spark, sf_dir, "orders",
         columns=["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"],
     )
     return (
@@ -829,11 +824,11 @@ def q_xml_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_xml_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned XML layout: nation written under
     region=<n_regionkey>/ directories, read back through partition
-    DISCOVERY (typed `region` column from the directory names) with a
-    pushed partition filter that PRUNES the region=0 directory before any
-    byte of it is read — the reference inherits exactly this from
-    Spark's FileFormat machinery; here it is reimplemented for the
-    Python data source (sources/partitions.py)."""
+    DISCOVERY (typed `region` column from the directory names) and a
+    filter on that column, which Spark applies after the scan — the
+    reference inherits discovery from Spark's FileFormat machinery; here
+    it is reimplemented for the Python data source
+    (sources/partitions.py)."""
     fp = _table_fingerprint(sf_dir, "nation")
     base = os.path.join(CACHE_ROOT, f"xmlpart2-nation-{fp}")
 
@@ -847,10 +842,7 @@ def q_xml_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     _cached_build(base, _build)
-    df = read_xml(
-        spark, os.path.join(base, "xml"), rowTag="nation",
-        filterPushdown="true",
-    )
+    df = read_xml(spark, os.path.join(base, "xml"), rowTag="nation")
     return (
         df.filter(F.col("region") >= 1)
         .groupBy("region")
@@ -879,6 +871,7 @@ def q_xml_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.getsize(os.path.join(xml_dir, f)) for f in os.listdir(xml_dir)
     )
     target = min(max(total // 128, 256 * 1024), 16 * 1024 * 1024)
+    register(spark)
     df = (
         spark.read.format("xml-graft")
         .schema(schema)

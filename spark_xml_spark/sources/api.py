@@ -10,7 +10,8 @@ InferSchema.scala:67-101).
 
 Both plan on the driver and run one ``mapInArrow`` job over the data
 source's own partitions (``_planned_scan``), so they start no planner
-worker; only ``filterPushdown`` reads go through ``spark.read.format``.
+worker and need no ``register``. Spark applies every filter after the
+scan, as it does for the reference (a ``PrunedScan``).
 
 Distributed-inference shape (100 TB-safe): one narrow stage with one task
 per reader partition (the same splits, bin-packing and partition-value
@@ -40,7 +41,9 @@ _REGISTERED_SESSIONS = weakref.WeakSet()
 
 
 def register(spark: SparkSession) -> None:
-    """Idempotently register the data source for this session."""
+    """Idempotently register the data source for this session: what
+    ``spark.read.format("xml-graft")``, ``USING xml-graft`` tables and
+    streams need. ``read_xml`` and ``infer_xml_schema`` do not."""
     if spark not in _REGISTERED_SESSIONS:
         spark.dataSource.register(XmlDataSource)
         _REGISTERED_SESSIONS.add(spark)
@@ -72,9 +75,9 @@ def _inject_parallelism(spark: SparkSession, options: dict) -> dict:
     computation (Spark's bytesPerCore term). ``read_xml`` and
     ``infer_xml_schema`` plan their splits here on the driver, but
     ``XmlReader`` takes the count from its options only: it also plans
-    ``spark.read.format`` and ``filterPushdown`` reads in Spark's Python
-    planner worker, where no SparkSession is reachable and the fallback,
-    os.cpu_count() of the planner host, can undercount a cluster."""
+    ``spark.read.format`` reads in Spark's Python planner worker, where no
+    SparkSession is reachable and the fallback, os.cpu_count() of the
+    planner host, can undercount a cluster."""
     keys = {k.lower() for k in options}
     if "minpartitions" in keys or "targetsplitsize" in keys or "maxpartitionbytes" in keys:
         return options
@@ -85,31 +88,6 @@ def _inject_parallelism(spark: SparkSession, options: dict) -> dict:
     out = dict(options)
     out["minPartitions"] = str(par)
     return out
-
-
-def _pushdown(options: dict) -> bool:
-    return any(
-        k.lower() == "filterpushdown" and str(v).lower() == "true"
-        for k, v in options.items()
-    )
-
-
-def _inject_filter_pushdown(spark: SparkSession, options: dict) -> dict:
-    """Filter pushdown is strictly OPT-IN per read (reader option
-    ``filterPushdown=true``) and is never defaulted from the session conf:
-    Spark 4.1 caches the Python read plan per relation, so the FIRST
-    query's pushed predicates would be replayed by every later query on a
-    reused DataFrame/view (verified: a filtered count followed by an
-    unfiltered count on the same df returns the filtered number). Safe
-    usage is one read per filtered pipeline. When the option is set, this
-    enables the required session conf so the read doesn't fail."""
-    if not _pushdown(options):
-        return options
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    return options
 
 
 def _planned_scan(
@@ -221,13 +199,10 @@ def read_xml(
 
     The scan is planned here on the driver, as the reference plans its
     scan in the JVM driver (XmlRelation.buildScan), and runs as one
-    ``mapInArrow`` job (``_planned_scan``). Only a ``filterPushdown=true``
-    read goes through ``spark.read.format``: pushdown needs the data
-    source's ``pushFilters`` hook.
+    ``mapInArrow`` job (``_planned_scan``). Filters run in Spark after the
+    scan, as the reference's PrunedScan leaves them.
     """
-    register(spark)
     options = _inject_session_timezone(spark, options)
-    options = _inject_filter_pushdown(spark, options)
     options = _inject_parallelism(spark, options)
     xopts = XmlOptions.from_dict(options)
     if isinstance(schema, str):
@@ -242,13 +217,6 @@ def read_xml(
         if missing:
             raise ValueError(f"columns not in schema: {sorted(missing)}")
         schema = T.StructType([f for f in schema.fields if f.name in wanted])
-    if _pushdown(options):
-        return (
-            spark.read.format(FORMAT_NAME)
-            .options(**_stringify(options))
-            .schema(schema)
-            .load(path if isinstance(path, str) else ",".join(path))
-        )
     reader = XmlReader(_source_options(options, path), schema)
     return _planned_scan(spark, reader, XmlReader.read, schema)
 

@@ -379,11 +379,11 @@ def _exposes(schema: T.StructType, keys) -> bool:
 def _pvals_batch(rows, fields, xopts: XmlOptions):
     """Raw partition-value tuples -> one Arrow batch, a row per tuple,
     each column cast to its read-schema field's Arrow type — the values
-    partition pruning tests and read() appends, as Spark's file sources
-    cast partition values to the declared schema. A zone-less timestamp
-    reads in the ``timezone`` option, or UTC when it is unset, as element
-    text does (casts.iso_instant); a value with an offset keeps it, and
-    a date alone is its midnight. ``timestampFormat`` governs element text
+    read() appends, as Spark's file sources cast partition values to the
+    declared schema. A zone-less timestamp reads in the ``timezone``
+    option, or UTC when it is unset, as element text does
+    (casts.iso_instant); a value with an offset keeps it, and a date alone
+    is its midnight. ``timestampFormat`` governs element text
     only, never directory names."""
     import pyarrow as pa
 
@@ -709,169 +709,6 @@ def _columnar_batches(
         yield from out
 
 
-# --- filter pushdown -------------------------------------------------------
-# Spark 4.1's Python DataSource API delivers Catalyst's pushable predicates
-# via DataSourceReader.pushFilters. Accepted filters are REMOVED from the
-# Spark plan, so evaluation must be exact: predicates run as
-# pyarrow.compute masks on the very Arrow batches the scan emits (same
-# values Spark would have filtered), with SQL three-valued null semantics
-# folded in (null comparisons -> row dropped, matching a post-scan Filter).
-# Payoff at scale: filtered rows never leave the Python worker — no Arrow
-# transfer, no JVM processing.
-
-_PUSH_SCALARS = (
-    T.StringType,
-    T.LongType,
-    T.IntegerType,
-    T.ShortType,
-    T.ByteType,
-    T.DoubleType,
-    T.FloatType,
-    T.BooleanType,
-    T.DateType,
-    T.DecimalType,
-)
-
-
-def _push_field(attr, schema: T.StructType, corrupt_col: str):
-    """Resolve a filter attribute to (index, field) when it names a
-    top-level scalar column we can evaluate exactly; None otherwise."""
-    if not isinstance(attr, tuple) or len(attr) != 1:
-        return None  # nested fields stay Spark-side
-    name = attr[0]
-    matches = [
-        (i, f)
-        for i, f in enumerate(schema.fields)
-        if f.name == name or f.name.lower() == name.lower()
-    ]
-    exact = [m for m in matches if m[1].name == name]
-    if exact:
-        matches = exact
-    if len(matches) != 1:
-        return None
-    i, f = matches[0]
-    if f.name == corrupt_col:
-        return None  # corrupt-record column is populated by the parse itself
-    if not isinstance(f.dataType, _PUSH_SCALARS):
-        return None  # timestamps excluded too: tz-repr pitfalls
-    return i, f
-
-
-def _floating(field: T.StructField) -> bool:
-    """Value comparisons on double/float columns stay Spark-side: Spark
-    orders NaN above every number and holds NaN = NaN, where Python and
-    Arrow compare IEEE-style. Only IsNull/IsNotNull push there."""
-    return isinstance(field.dataType, (T.DoubleType, T.FloatType))
-
-
-def _compile_filter_arrow(flt, schema: T.StructType, corrupt_col: str):
-    """Compile one pushed Filter into RecordBatch -> BooleanArray with SQL
-    null semantics (no nulls in the mask: null comparisons are filled
-    False, so the row is dropped). None when the filter can't be evaluated
-    exactly with pyarrow.compute; pushFilters then leaves it to Spark."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql import datasource as ds
-
-    if isinstance(flt, ds.Not):
-        child = flt.child
-        sub = _compile_filter_arrow(child, schema, corrupt_col)
-        if sub is None:
-            return None
-        if isinstance(child, (ds.IsNull, ds.IsNotNull, ds.EqualNullSafe)):
-            # these child predicates are never UNKNOWN: plain negation
-            return lambda b: pc.invert(sub(b))
-        if not hasattr(child, "attribute"):
-            return None  # Not(Not(..)) / composite child: leave to Spark
-        loc = _push_field(child.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        # NOT(pred) on a null operand is UNKNOWN -> row dropped
-        return lambda b: pc.and_(pc.is_valid(b.column(i)), pc.invert(sub(b)))
-    if isinstance(flt, ds.IsNull):
-        loc = _push_field(flt.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda b: pc.is_null(b.column(i))
-    if isinstance(flt, ds.IsNotNull):
-        loc = _push_field(flt.attribute, schema, corrupt_col)
-        if loc is None:
-            return None
-        i = loc[0]
-        return lambda b: pc.is_valid(b.column(i))
-    if not hasattr(flt, "attribute") or not hasattr(flt, "value"):
-        return None  # unknown/future filter class: leave to Spark
-    loc = _push_field(flt.attribute, schema, corrupt_col)
-    if loc is None or _floating(loc[1]):
-        return None
-    i, field = loc
-    atype = to_arrow_schema(schema).field(i).type
-    if isinstance(flt, ds.In):
-        if any(x is None for x in flt.value):
-            # x IN (.., NULL) is UNKNOWN for every non-member x; under a
-            # parent NOT that must drop ALL rows, which the Not branch
-            # above cannot express -> refuse to push, Spark evaluates it
-            return None
-        try:
-            value_set = pa.array(list(flt.value), type=atype)
-        except Exception:
-            return None
-        return lambda b: pc.fill_null(
-            pc.is_in(b.column(i), value_set=value_set), False
-        )
-    if flt.value is None:
-        if isinstance(flt, ds.EqualNullSafe):
-            return lambda b: pc.is_null(b.column(i))
-        return None  # null literal in other comparators: UNKNOWN everywhere
-    try:
-        # the literal in the column's own Arrow type, so every kernel
-        # below compares like with like; a literal that does not fit the
-        # column type exactly is not pushed
-        v = pa.scalar(flt.value, type=atype)
-    except Exception:
-        return None
-    cmp = {
-        ds.EqualNullSafe: pc.equal,
-        ds.EqualTo: pc.equal,
-        ds.GreaterThan: pc.greater,
-        ds.GreaterThanOrEqual: pc.greater_equal,
-        ds.LessThan: pc.less,
-        ds.LessThanOrEqual: pc.less_equal,
-    }.get(type(flt))
-    if cmp is not None:
-        return lambda b: pc.fill_null(cmp(b.column(i), v), False)
-    if not isinstance(field.dataType, T.StringType):
-        return None
-    pattern = flt.value
-    if isinstance(flt, ds.StringStartsWith):
-        return lambda b: pc.fill_null(pc.starts_with(b.column(i), pattern), False)
-    if isinstance(flt, ds.StringEndsWith):
-        return lambda b: pc.fill_null(pc.ends_with(b.column(i), pattern), False)
-    if isinstance(flt, ds.StringContains):
-        return lambda b: pc.fill_null(pc.match_substring(b.column(i), pattern), False)
-    return None
-
-
-def _mask(batch, masks):
-    """The AND of every pushed-filter mask over one batch."""
-    import pyarrow.compute as pc
-
-    mask = masks[0](batch)
-    for m in masks[1:]:
-        mask = pc.and_(mask, m(batch))
-    return mask
-
-
-def _masked(batches, masks):
-    """Keep the rows of each batch that every pushed-filter mask selects."""
-    for batch in batches:
-        batch = batch.filter(_mask(batch, masks))
-        if batch.num_rows:
-            yield batch
-
-
 def _tallied(batches, tally, tier: str):
     """Book each batch's rows to ``tier`` as it passes."""
     for b in batches:
@@ -895,48 +732,10 @@ def decode_records(records, schema: T.StructType, xopts: XmlOptions,
     return batches
 
 
-def _raw_prefilter(filters, schema: T.StructType, corrupt_col: str):
-    """Reject-only prefilter on the RAW record text: a record that doesn't
-    contain a required string literal anywhere can't satisfy an equality /
-    contains / startswith / endswith filter on any field — skip the parse.
-    Sound only when the literal appears verbatim in well-formed XML, so it
-    is guarded per record: entity references ('&') and the markup the
-    parser joins text across ('<!' comments and CDATA, '<?' processing
-    instructions) disable the shortcut for that record. Caller must not
-    use this in FAILFAST mode (a skipped malformed record would no longer
-    raise)."""
-    from pyspark.sql import datasource as ds
-
-    literals = []
-    for flt in filters:
-        if isinstance(
-            flt, (ds.EqualTo, ds.StringContains, ds.StringStartsWith, ds.StringEndsWith)
-        ):
-            loc = _push_field(getattr(flt, "attribute", None), schema, corrupt_col)
-            if (
-                loc is not None
-                and isinstance(loc[1].dataType, T.StringType)
-                and isinstance(flt.value, str)
-                and flt.value
-                and not any(c in flt.value for c in "&<>\"'")
-            ):
-                literals.append(flt.value)
-    if not literals:
-        return None
-
-    def reject(rec: str) -> bool:
-        if "&" in rec or "<!" in rec or "<?" in rec:
-            return False
-        return any(lit not in rec for lit in literals)
-
-    return reject
-
-
 class XmlReader(DataSourceReader):
     def __init__(self, options: dict, schema: T.StructType):
         self._opts_dict = dict(options)
         self._schema = schema
-        self._pushed: List = []  # Filter dataclasses accepted by pushFilters
         self._path = options.get("path") or options.get("location")
         if not self._path:
             # catalog-table read: Spark handed us empty options (see
@@ -956,34 +755,20 @@ class XmlReader(DataSourceReader):
                 return v
         return None
 
-    def _discover(self):
-        """Driver-side Hive-style partition discovery: (files, partition
-        columns). The read path needs no listing — partitions carry their
-        raw values and read() types them by the schema."""
+    def partitions(self) -> List[InputPartition]:
+        """Driver-side Hive-style partition discovery, then split planning.
+        The read path needs no listing — partitions carry their raw values
+        and read() types them by the schema."""
         from spark_xml_spark.sources import partitions as pmod
 
         gf, rl = _listing_opts(self._opts_dict)
-        return pmod.discover_partitions(
-            self._path, glob_filter=gf, recursive_lookup=rl
-        )
-
-    def partitions(self) -> List[InputPartition]:
-        # the listing pushFilters classified its filters against, when
-        # this planning pushed any; one listing per planning either way
-        listing = self.__dict__.pop("_listing", None)
         try:
-            pfiles, pcols = listing or self._discover()
-        except OSError as exc:
-            from spark_xml_spark.sources.partitions import NoMatchingFilesError
-
-            if isinstance(exc, NoMatchingFilesError):
-                raise  # zero-match pathGlobFilter: never scan unfiltered
-            if getattr(self, "_ppushed", None):
-                # pushFilters CONSUMED partition-column filters (removed
-                # from the Spark plan) on the strength of an earlier
-                # listing; degrading to the unpartitioned path here would
-                # silently never apply them — wrong rows, not an error
-                raise
+            pfiles, pcols = pmod.discover_partitions(
+                self._path, glob_filter=gf, recursive_lookup=rl
+            )
+        except pmod.NoMatchingFilesError:
+            raise  # zero-match pathGlobFilter: never scan unfiltered
+        except OSError:
             pfiles = [
                 (f, sz, ()) for f, sz in tokenizer._expand_with_sizes(self._path)
             ]
@@ -998,11 +783,10 @@ class XmlReader(DataSourceReader):
         is [(file, size, raw partition values)], ``keys`` the partition
         column names. Splits pack WITHIN one partition-value group (a
         task's rows share one value tuple; an unpartitioned layout is the
-        single group ``()``), pushed partition filters prune whole groups
-        before any byte is read (the 100 TB point of a partitioned
-        layout), and the surviving groups' raw values ride the partitions
-        when the schema exposes ``keys``. ``snapshot`` makes every split
-        end its file at the listed size: a stream offset's replay bound."""
+        single group ``()``), and each group's raw values ride the
+        partitions when the schema exposes ``keys``. ``snapshot`` makes
+        every split end its file at the listed size: a stream offset's
+        replay bound."""
         xopts = XmlOptions.from_dict(self._opts_dict)
         open_cost = int(self._opt("openCostBytes") or 4 * 1024 * 1024)
         target = self._split_target(open_cost, [(f, sz) for f, sz, _ in files])
@@ -1013,21 +797,8 @@ class XmlReader(DataSourceReader):
             groups, key=lambda t: tuple("" if v is None else v for v in t)
         )
         attach = _exposes(self._schema, keys)
-        pfields = self._schema.fields[len(self._schema.fields) - len(keys):]
-        masks = [
-            _compile_filter_arrow(f, T.StructType(pfields), "\x00none")
-            for f in getattr(self, "_ppushed", [])
-        ]
-        keep = [True] * len(values)
-        if masks and values:
-            # the scan's own Arrow masks over one row per value group
-            keep = _mask(
-                _pvals_batch(values, pfields, xopts), masks
-            ).to_pylist()
         out: List[XmlInputPartition] = []
-        for pv, kept in zip(values, keep):
-            if not kept:
-                continue  # pruned: no file in this group is opened
+        for pv in values:
             sizes = dict(groups[pv])
             splits = tokenizer.plan_splits(
                 self._path, xopts.charset, target, files=groups[pv]
@@ -1049,9 +820,8 @@ class XmlReader(DataSourceReader):
         # totalBytes/minPartitionNum)) — small corpora split finer to feed
         # every core, huge corpora cap at 128 MB per task, and the open
         # cost keeps a million tiny files from becoming a million tasks.
-        total = open_cost  # avoid zero; matches Spark's +openCost/file
-        for _f, size in listed or ():
-            total += size + open_cost
+        # totalBytes sums size + openCost per file, as Spark's does.
+        total = sum(size + open_cost for _f, size in listed or ())
         par = int(self._opt("minPartitions") or 0)
         if par <= 0:
             # a format() read plans in Spark's Python planner worker,
@@ -1117,96 +887,18 @@ class XmlReader(DataSourceReader):
 
     def _read_impl(self, partition: XmlInputPartition, tally) -> Iterator:
         """One pipeline: records -> Arrow batches (decode_records, the
-        decoder ``from_xml`` shares) -> pushed-filter masks; read() appends
-        the partition constants. The batch and the stream reader both read
-        through it."""
+        decoder ``from_xml`` shares); read() appends the partition
+        constants. The batch and the stream reader both read through it."""
         xopts = XmlOptions.from_dict(self._opts_dict)
         fields = self._schema.fields
         dschema = T.StructType(fields[: len(fields) - len(partition.pvals)])
-        corrupt = xopts.column_name_of_corrupt_record
         splits = [tokenizer.FileSplit(*s) for s in partition.splits]
         records = (
             rec
             for split in splits
             for rec in tokenizer.scan_split(split, xopts.row_tag, xopts.charset)
         )
-        if self._pushed and xopts.mode != "FAILFAST":
-            # raw-text reject shortcut: skip parsing records that can't
-            # match (FAILFAST keeps parsing everything so malformed
-            # records still raise exactly as an unfiltered scan would)
-            reject = _raw_prefilter(self._pushed, dschema, corrupt)
-            if reject is not None:
-                records = (r for r in records if not reject(r))
-        batches = decode_records(records, dschema, xopts, tally)
-        if self._pushed:
-            batches = _masked(
-                batches,
-                [_compile_filter_arrow(f, dschema, corrupt) for f in self._pushed],
-            )
-        yield from batches
-
-
-class XmlPushdownReader(XmlReader):
-    """XmlReader with Catalyst filter pushdown. Kept as a separate class:
-    Spark raises DATA_SOURCE_PUSHDOWN_DISABLED for any reader that merely
-    OVERRIDES pushFilters while spark.sql.python.filterPushdown.enabled is
-    false, so the plain XmlReader must not define it. Selected via reader
-    option ``filterPushdown=true`` (read_xml injects it automatically from
-    the session conf)."""
-
-    def __getstate__(self):
-        # Spark pickles the read function, which closes over this reader,
-        # into every read task before it calls partitions(): the listing
-        # pushFilters keeps for partitions() stays on the driver
-        state = dict(self.__dict__)
-        state.pop("_listing", None)
-        return state
-
-    def pushFilters(self, filters):
-        """Accept exactly the filters _compile_filter_arrow compiles
-        (top-level scalar fields, SQL null semantics); the rest stay in
-        the Spark plan. Stores raw Filter dataclasses — self must remain
-        picklable, so compilation to closures happens in read()."""
-        xopts = XmlOptions.from_dict(self._opts_dict)
-        corrupt = xopts.column_name_of_corrupt_record
-        # Spark reuses one reader instance across plannings of the same
-        # relation (e.g. a temp view queried twice): pushed filters are
-        # per-scan state, never accumulated
-        self._pushed = []
-        self._ppushed = []  # partition-column filters -> file pruning
-        remaining = []
-        self.__dict__.pop("_listing", None)
-        try:
-            self._listing = self._discover()
-            pcols = self._listing[1]
-        except OSError as exc:
-            from spark_xml_spark.sources.partitions import NoMatchingFilesError
-
-            if isinstance(exc, NoMatchingFilesError):
-                raise
-            pcols = []
-        keys = [n for n, _ in pcols]
-        fields = self._schema.fields
-        n = len(fields) - (len(keys) if _exposes(self._schema, keys) else 0)
-        pschema = T.StructType(fields[n:])
-        dschema = T.StructType(fields[:n])
-        pnames = set(pschema.fieldNames())
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            if attr is None:
-                attr = getattr(getattr(f, "child", None), "attribute", None)
-            if attr is not None and len(attr) == 1 and attr[0] in pnames:
-                # constant per file: consumed by pruning whole partition
-                # groups in partitions(), never re-checked per row
-                if _compile_filter_arrow(f, pschema, corrupt) is not None:
-                    self._ppushed.append(f)
-                else:
-                    remaining.append(f)
-            elif _compile_filter_arrow(f, dschema, corrupt) is not None:
-                self._pushed.append(f)
-            else:
-                remaining.append(f)
-        return remaining
+        yield from decode_records(records, dschema, xopts, tally)
 
 
 @dataclass
@@ -1480,16 +1172,10 @@ class XmlDataSource(DataSource):
     def reader(self, schema: T.StructType) -> XmlReader:
         opts = dict(self.options)
         if not (opts.get("path") or opts.get("location")):
-            # catalog-table read: Spark hands reader() empty options;
-            # recover them here so the pushdown flag survives too
+            # catalog-table read: Spark hands reader() empty options
             recovered = _recover_options(schema)
             if recovered is not None:
                 opts = dict(recovered)
-        push = str(
-            opts.get("filterPushdown") or opts.get("filterpushdown") or "false"
-        ).lower()
-        if push == "true":
-            return XmlPushdownReader(opts, schema)
         return XmlReader(opts, schema)
 
     def writer(self, schema: T.StructType, overwrite: bool) -> XmlWriter:

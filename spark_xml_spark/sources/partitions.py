@@ -2,11 +2,11 @@
 
 The reference, being a Spark ``FileFormat``, inherits partitioned-directory
 reads from Spark itself: ``/data/year=2024/region=EU/part.xml`` exposes
-``year``/``region`` as typed partition columns, and filters on them prune
-whole directories before any byte is read (PartitioningAwareFileIndex —
+``year``/``region`` as typed partition columns (PartitioningAwareFileIndex —
 public Spark behavior, not reference code). A Python data source gets none
-of that for free; this module reimplements the discovery half, and
-``sources/datasource.py`` wires pruning + value attachment.
+of that for free; this module reimplements the discovery, and
+``sources/datasource.py`` attaches the values. Filters on partition
+columns run in Spark after the scan: no directory is pruned.
 
 Semantics (matching Spark's discovery where noted):
 - Only directories named ``name=value`` are descended into; other

@@ -1,10 +1,10 @@
 """Hive-style partitioned-directory XML reads.
 
-The reference inherits partition discovery/pruning from Spark's
-FileFormat machinery (PartitioningAwareFileIndex — public Spark
-behavior); the Python data source reimplements it: discovery in
-sources/partitions.py, pruning + value attachment in
-sources/datasource.py.
+The reference inherits partition discovery from Spark's FileFormat
+machinery (PartitioningAwareFileIndex — public Spark behavior); the Python
+data source reimplements it: discovery in sources/partitions.py, value
+attachment in sources/datasource.py. Filters on partition columns run in
+Spark after the scan.
 """
 
 import os
@@ -85,53 +85,17 @@ def test_partitioned_read_schema_values_and_order(spark, tmp_path):
     }
 
 
-def test_partition_filter_prunes_files_before_read(spark, tmp_path):
-    """Reader-level proof: a pushed partition filter removes whole
-    partition-value groups from the planned splits (no byte of a pruned
-    file is opened), and a data filter rides along as a row filter."""
-    from pyspark.sql import datasource as ds
-
-    from spark_xml_spark.sources.datasource import XmlPushdownReader
-
-    base = str(tmp_path)
-    _tree(base, LAYOUT)
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("year", T.LongType()),
-            T.StructField("region", T.StringType()),
-        ]
-    )
-    r = XmlPushdownReader(
-        {"path": base, "rowTag": "rec", "filterPushdown": "true"}, schema
-    )
-    remaining = r.pushFilters(
-        [ds.EqualTo(("year",), 2024), ds.GreaterThan(("id",), 4)]
-    )
-    assert remaining == []
-    parts = r.partitions()
-    files = {s[0] for p in parts for s in p.splits}
-    assert all("year=2024" in f for f in files) and files
-    assert {p.pvals for p in parts} == {("2024", "EU")}
-    rows = []
-    for p in parts:
-        for item in r.read(p):
-            rows.extend(
-                item.to_pylist() if hasattr(item, "to_pylist") else [item]
-            )
-    assert [(row["id"], row["year"]) for row in rows] == [(5, 2024)]
-
-
 def test_partitioned_end_to_end_pushdown_plan(spark, tmp_path):
+    """A partition-column and a data filter both stay in Spark's plan, even
+    under the retired ``filterPushdown`` option, and select the right row."""
     base = str(tmp_path)
     _tree(base, LAYOUT)
     df = read_xml(spark, base, rowTag="rec", filterPushdown="true")
     pr = df.filter((F.col("year") == 2024) & (F.col("id") >= 5))
     plan = pr._jdf.queryExecution().executedPlan().toString()
-    # both filters consumed by the scan: no Filter NODE remains
-    assert ") Filter " not in plan and "+- Filter " not in plan
+    assert "Filter (" in plan and "MapInArrow xml_graft_scan" in plan
     assert [(r.id, r.year) for r in pr.collect()] == [(5, 2024)]
+    assert df.count() == 5  # the reused relation replays no filter
 
 
 def test_explicit_schema_without_partition_cols_is_data_only(spark, tmp_path):
@@ -168,7 +132,7 @@ def test_partitioned_write_roundtrip(spark, tmp_path):
     """write_xml(partition_by=...) lays out col=value/ dirs with the
     partition columns OMITTED from file content; a partitioned read
     recovers them typed, NULL values land in __HIVE_DEFAULT_PARTITION__,
-    and pruning works on the written layout."""
+    and a filter on the partition column works on the written layout."""
     rows = [
         (1, "a", 2023), (2, "b", 2023), (3, "c", 2024),
         (4, "d", None),
@@ -189,9 +153,7 @@ def test_partitioned_write_roundtrip(spark, tmp_path):
     got = {(r.id, r.name, r.year) for r in back.collect()}
     assert got == {(1, "a", 2023), (2, "b", 2023), (3, "c", 2024),
                    (4, "d", None)}
-    pruned = read_xml(spark, out, rowTag="rec", filterPushdown="true").filter(
-        F.col("year") == 2023
-    )
+    pruned = back.filter(F.col("year") == 2023)
     assert sorted(r.id for r in pruned.collect()) == [1, 2]
     # special chars escape like Spark's escapePathName and round-trip
     df2 = spark.createDataFrame([(1, "x", "a/b c")],
@@ -351,43 +313,6 @@ def test_declared_partition_type_batch_and_stream(spark, tmp_path, ytype, year):
     assert all(type(r.year) is type(year) for r in batch + stream)
 
 
-def test_declared_int_partition_filter_prunes(spark, tmp_path):
-    """An ``int`` partition column's pushed filter compiles against the
-    declared type and prunes the other value groups before any read."""
-    from pyspark.sql import datasource as ds
-
-    from spark_xml_spark.sources.api import register
-    from spark_xml_spark.sources.datasource import XmlPushdownReader
-
-    register(spark)
-    src = tmp_path / "src"
-    for y, ids in ((2023, (1, 2)), (2024, (3,))):
-        (src / f"year={y}").mkdir(parents=True)
-        (src / f"year={y}" / "a.xml").write_text(
-            "".join(f"<rec><id>{i}</id></rec>" for i in ids)
-        )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("year", T.IntegerType())]
-    )
-    r = XmlPushdownReader(
-        {"path": str(src), "rowTag": "rec", "filterPushdown": "true"}, schema
-    )
-    assert r.pushFilters([ds.EqualTo(("year",), 2024)]) == []
-    parts = r.partitions()
-    assert {s[0] for p in parts for s in p.splits} == {
-        str(src / "year=2024" / "a.xml")
-    }
-    df = (
-        spark.read.format("xml-graft")
-        .schema(schema)
-        .option("rowTag", "rec")
-        .option("filterPushdown", "true")
-        .load(str(src))
-        .filter(F.col("year") == 2024)
-    )
-    assert [(r.id, r.year) for r in df.collect()] == [(3, 2024)]
-
-
 @pytest.mark.parametrize(
     "zone,hour", [(None, 3), ("America/New_York", 8)], ids=["unset", "new_york"]
 )
@@ -451,49 +376,3 @@ def test_partition_timestamp_date_only_and_unparseable(tmp_path):
     ]
     with pytest.raises(ValueError, match="'02-01-2024'"):
         read("02-01-2024", timestampFormat="dd-MM-yyyy")
-
-
-def test_pushdown_reader_pickles_without_file_listing(tmp_path, monkeypatch):
-    """Spark pickles the read function, which closes over the reader, into
-    every read task before it calls partitions(): after pushFilters the
-    reader must not carry the file listing, partitions() plans from the
-    one listing pushFilters classified against, and the pushed read's
-    rows stay the same."""
-    import pickle
-
-    from pyspark.sql import datasource as ds
-
-    from spark_xml_spark.sources import partitions as pmod
-    from spark_xml_spark.sources.datasource import XmlPushdownReader
-
-    src = tmp_path / "src"
-    for y in range(2000, 2020):
-        d = src / f"year={y}"
-        d.mkdir(parents=True)
-        for k in range(100):
-            (d / f"f{k:03d}.xml").write_text(f"<rec><id>{k}</id></rec>")
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("year", T.IntegerType())]
-    )
-    r = XmlPushdownReader(
-        {"path": str(src), "rowTag": "rec", "filterPushdown": "true"}, schema
-    )
-    fresh = len(pickle.dumps(r))
-    listings = []
-    discover = pmod.discover_partitions
-    monkeypatch.setattr(
-        pmod, "discover_partitions",
-        lambda *a, **k: listings.append(a) or discover(*a, **k),
-    )
-    assert r.pushFilters(
-        [ds.EqualTo(("year",), 2005), ds.GreaterThanOrEqual(("id",), 90)]
-    ) == []
-    assert len(pickle.dumps(r)) < 2048, (fresh, len(pickle.dumps(r)))
-    rows = sorted(
-        (row["id"], row["year"])
-        for p in r.partitions()
-        for b in r.read(p)
-        for row in b.to_pylist()
-    )
-    assert rows == [(k, 2005) for k in range(90, 100)]
-    assert len(listings) == 1

@@ -338,6 +338,26 @@ def test_pack_splits_bins_small_files(tmp_path):
     assert len(parts2) == 4
 
 
+def test_split_target_follows_spark_max_split_bytes(tmp_path):
+    """Spark's maxSplitBytes sums size + openCost per file and nothing
+    more: four 0.8 MB files on four cores make a 4.8 MB target, which no
+    two files (0.8 MB + 4 MB open cost + 0.8 MB) fit under together."""
+    from pyspark.sql import types as T
+
+    from spark_xml_spark.sources.datasource import XmlReader
+
+    rec = "<r><a>" + "x" * 990 + "</a></r>"
+    for i in range(4):
+        (tmp_path / f"f{i}.xml").write_text("<rows>" + rec * 800 + "</rows>")
+    reader = XmlReader(
+        {"path": str(tmp_path), "rowTag": "r", "minPartitions": "4"},
+        T.StructType(),
+    )
+    parts = reader.partitions()
+    assert len(parts) == 4
+    assert sorted(len(p.splits) for p in parts) == [1, 1, 1, 1]
+
+
 def test_small_file_read_counts(spark, tmp_path):
     """End-to-end: a directory of many tiny XML files reads complete and
     with far fewer partitions than files."""

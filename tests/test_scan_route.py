@@ -162,11 +162,54 @@ def test_empty_directory_raises_like_data_source(spark, data):
 
 
 def test_filter_pushdown_read_stays_on_data_source(spark, data):
+    """``filterPushdown`` is an unknown option: such a read takes the
+    planned route like any other, and Spark applies the filter."""
     path = os.path.join(data, "flat")
     df = read_xml(spark, path, "id long", rowTag="r", filterPushdown="true")
     plan = _scans(df.filter("id < 5"))
-    assert "BatchScan xml-graft" in plan and "MapInArrow" not in plan
+    assert "MapInArrow xml_graft_scan" in plan and "BatchScan" not in plan
     assert df.filter("id < 5").count() == 5
+
+
+@pytest.mark.parametrize(
+    "extra", [{}, {"filterPushdown": "true"}], ids=["plain", "filterPushdown"]
+)
+def test_list_of_paths_reads_every_file(spark, tmp_path, extra):
+    paths = []
+    for name, lo in (("a", 0), ("b", 10)):
+        path = str(tmp_path / f"{name}.xml")
+        _write(path, "".join(f"<r><id>{i}</id></r>" for i in range(lo, lo + 3)))
+        paths.append(path)
+    schema = infer_xml_schema(spark, paths, rowTag="r", **extra)
+    assert schema.fieldNames() == ["id"]
+    for df in (
+        read_xml(spark, paths, rowTag="r", **extra),
+        read_xml(spark, paths, "id long", rowTag="r", **extra),
+    ):
+        assert sorted(r.id for r in df.collect()) == [0, 1, 2, 10, 11, 12]
+
+
+def test_read_needs_no_registered_data_source(spark, data, monkeypatch):
+    """Neither ``read_xml`` nor ``infer_xml_schema`` registers the data
+    source: registration starts Spark's data-source lookup worker the
+    first time a JVM registers one."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from spark_xml_spark.sources import api
+
+    def refuse(self, source):
+        raise AssertionError("read registered the data source")
+
+    # a session this module already registered would skip the call
+    monkeypatch.setattr(
+        api, "_REGISTERED_SESSIONS", type(api._REGISTERED_SESSIONS)()
+    )
+    monkeypatch.setattr(DataSourceRegistration, "register", refuse)
+    path = os.path.join(data, "flat")
+    assert infer_xml_schema(spark, path, rowTag="r").fieldNames()
+    assert read_xml(spark, path, rowTag="r").count() == 30
+    assert read_xml(spark, path, "id long", rowTag="r").count() == 30
+    assert read_xml(spark, path, rowTag="r", inferSchema=False).count() == 30
 
 
 def test_size_estimate_and_partitions_match_data_source(spark, data):

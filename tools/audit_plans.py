@@ -174,7 +174,6 @@ def main() -> None:
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -214,8 +213,8 @@ def main() -> None:
             pid = _re.search(r"\[plan_id=(\d+)\]", m.group(0))
             ex_ids[pid.group(1) if pid else f"line{raw_ex}:{m.group(0)}"] = 1
         n_exchanges = len(ex_ids)
-        # read_xml scans print as their mapInArrow function; only a
-        # filterPushdown=true read is a data-source BatchScan
+        # read_xml scans print as their mapInArrow function, format()
+        # reads as a data-source BatchScan
         n_scans = plan.count("MapInArrow xml_graft_scan") + plan.count(
             "BatchScan xml-graft"
         )

@@ -79,7 +79,6 @@ def main():
             os.environ.get("SPARK_GRAFT_TZ", "UTC"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .getOrCreate()
     )
     con = duckdb.connect()
