@@ -891,16 +891,7 @@ def q_xml_ddl_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DefaultSource.scala:29-38; XmlSuite.scala:178-196)."""
     register(spark)
     fp = _table_fingerprint(sf_dir, "region")
-
-    # The fingerprint-named column keeps this table's *schema* unique per
-    # sf_dir: Spark 4 doesn't deliver catalog-table options to Python data
-    # source readers, so the reader recovers them by schema fingerprint (see
-    # sources/datasource._CATALOG_STASH) — identical schemas across scale
-    # factors would be ambiguous.
-    def tag(df):
-        return df.withColumn(f"sft_{fp}", F.lit(1))
-
-    _xml_table(spark, sf_dir, "region", variant="ddl", transform=tag)
+    _xml_table(spark, sf_dir, "region", variant="ddl")
     xml_dir = os.path.join(CACHE_ROOT, f"region-ddl-{fp}", "xml")
     spark.sql("DROP TABLE IF EXISTS xml_graft_region")
     spark.sql(

@@ -202,6 +202,7 @@ def read_xml(
     ``mapInArrow`` job (``_planned_scan``). Filters run in Spark after the
     scan, as the reference's PrunedScan leaves them.
     """
+    given = options
     options = _inject_session_timezone(spark, options)
     options = _inject_parallelism(spark, options)
     xopts = XmlOptions.from_dict(options)
@@ -210,7 +211,10 @@ def read_xml(
     if schema is None and xopts.infer_schema:
         schema = infer_xml_schema(spark, path, **options)
     elif schema is None:
-        schema = XmlDataSource(_source_options(options, path)).schema()
+        # the options as given: the zone and split count do not shape an
+        # all-string schema, and the schema's metadata then matches what
+        # format("xml-graft") infers
+        schema = XmlDataSource(_source_options(given, path)).schema()
     if columns is not None:
         wanted = set(columns)
         missing = wanted - {f.name for f in schema.fields}

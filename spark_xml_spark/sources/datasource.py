@@ -21,6 +21,8 @@ XmlInputFormat.scala:32-340), built on ``pyspark.sql.datasource``:
   ``spark_xml_spark.sources.api.read_xml``, which runs the partial/final
   schema merge as a Spark job, then plans this reader's ``partitions()`` on
   the driver and runs its ``read()`` in a ``mapInArrow`` job of its own.
+  The schema carries the options in its first field's metadata: that is
+  how a catalog table's reader and writer, handed no options, get them.
 - the writer emits one complete XML document per partition
   (declaration + rootTag framing, XmlFile.scala:104-155).
 
@@ -53,21 +55,6 @@ from spark_xml_spark.options import XmlOptions
 from spark_xml_spark.xmlcore import generator, infer, parser, tokenizer
 
 FORMAT_NAME = "xml-graft"
-
-# --- catalog-table option stash -------------------------------------------
-# Spark 4.1's Python DataSource does not deliver table options to ``reader()``
-# for catalog tables (CREATE TABLE ... USING xml-graft): the read planner
-# re-instantiates the DataSource with EMPTY options. Worse, ``schema()`` (which
-# does receive the options, at CREATE TABLE time) runs in the
-# create_data_source worker process while ``reader()`` runs in the separate
-# plan_data_source_read worker — verified empirically by PID — so the bridge
-# must cross processes: a small JSON sidecar spool keyed by the schema
-# fingerprint, the one artifact both calls share. Only ``schema()`` writes the
-# stash (the CREATE TABLE path always runs it; stashing from every reader
-# would make any two datasets that merely share a schema collide). Ambiguity
-# (two catalog tables with the byte-identical schema but different paths)
-# raises instead of guessing.
-_CATALOG_STASH: dict = {}
 
 # --- tier-adoption instrumentation (env-gated; off = zero cost) -------------
 # Which parse tier actually served each record is invisible from the plan
@@ -116,95 +103,6 @@ class _TierTally:
             pass  # diagnostics must never fail the scan
 
 
-def _sidecar_dir() -> str:
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(), "xml_graft_catalog")
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _stash_key(schema: T.StructType) -> str:
-    import hashlib
-
-    # simpleString ignores nullability and metadata: the INSERT write path
-    # hands the writer the incoming data's schema, whose nullability can
-    # differ from the stashed inferred schema
-    return hashlib.sha256(schema.simpleString().encode()).hexdigest()[:32]
-
-
-def _sidecar_path(key: str) -> str:
-    return os.path.join(_sidecar_dir(), key + ".json")
-
-
-def _canon_path(p: str) -> str:
-    from spark_xml_spark.xmlcore import fs as _fs
-
-    if _fs.is_remote(p):
-        return p
-    return os.path.realpath(_strip_scheme_local(p))
-
-
-def _load_entries(key: str) -> List[dict]:
-    import json
-
-    entries = list(_CATALOG_STASH.get(key, []))
-    seen = {_canon_path(e["path"]) for e in entries}
-    try:
-        with open(_sidecar_path(key)) as fh:
-            for e in json.load(fh):
-                c = _canon_path(e.get("path", ""))
-                if c not in seen:
-                    seen.add(c)
-                    entries.append(e)
-    except (OSError, ValueError):
-        pass
-    return entries
-
-
-def _stash_options(schema: T.StructType, options: dict) -> None:
-    import json
-    import time
-
-    path = options.get("path") or options.get("location")
-    if not path:
-        return
-    key = _stash_key(schema)
-    entry = {k: v for k, v in dict(options).items() if isinstance(v, str)}
-    entry["path"] = path
-    entry["__ts"] = time.time()
-    canon = _canon_path(path)
-    # Re-stashing an existing path refreshes its options and timestamp
-    # (a re-created table with new OPTIONS must not serve the old ones);
-    # dead paths are garbage-collected here so the sidecar cannot grow
-    # without bound across sessions.
-    entries = [
-        e
-        for e in _load_entries(key)
-        if _canon_path(e.get("path", "")) != canon and _path_exists(e["path"])
-    ]
-    entries.append(entry)
-    _CATALOG_STASH[key] = entries
-    tmp = _sidecar_path(key) + f".tmp{os.getpid()}"
-    try:
-        with open(tmp, "w") as fh:
-            json.dump(entries, fh)
-        os.replace(tmp, _sidecar_path(key))
-    except OSError:
-        pass
-
-
-def _path_exists(p: str) -> bool:
-    from spark_xml_spark.xmlcore import fs as _fs
-
-    if not _fs.is_remote(p):
-        return os.path.exists(_strip_scheme_local(p))
-    try:
-        return _fs.dir_has_data(p) or _fs.size_of(p) >= 0
-    except Exception:
-        return False
-
-
 def _listing_opts(opts: dict):
     """(pathGlobFilter, recursiveFileLookup) from a case-insensitive
     option dict — Spark's standard file-source listing options."""
@@ -217,79 +115,54 @@ def _listing_opts(opts: dict):
     return gf, rl
 
 
-_IDENTITY_META = "xml_graft_path"
+# --- catalog tables --------------------------------------------------------
+# Spark 4.1 hands reader() and writer() EMPTY options for a catalog table
+# (CREATE TABLE ... USING xml-graft), for SELECT and INSERT OVERWRITE alike;
+# only schema() sees the table's OPTIONS. Field metadata that schema()
+# returns does reach reader(schema) and writer(schema), so the table's
+# options ride in its first field's metadata.
+_OPTIONS_META = "xml_graft_options"
 
 
-def _tag_schema_identity(schema: T.StructType, path: str) -> T.StructType:
-    """Embed the table's data path in the first field's metadata. Field
-    metadata survives the catalog round-trip into ``reader(schema)``
-    (verified empirically on Spark 4.1), so a catalog table recovers its
-    options EXACTLY even when another xml table has a byte-identical
-    column layout — closing the ambiguity gap the schema-fingerprint
-    stash alone cannot (simpleString ignores metadata, so the stash key
-    is unchanged). The crumb is visible in df.schema for raw
-    ``format('xml-graft')`` reads; it doubles as provenance."""
+def _tag_schema_options(schema: T.StructType, options: dict) -> T.StructType:
+    """``schema`` with ``options`` (the string-valued ones, ``path`` set) as
+    sorted-key JSON in the first field's metadata: each table carries its
+    own options, visible in df.schema for raw ``format('xml-graft')`` reads."""
+    import json
+
+    opts = {k: v for k, v in dict(options).items() if isinstance(v, str)}
+    opts["path"] = options.get("path") or options.get("location")
     first = schema.fields[0]
     meta = dict(first.metadata or {})
-    meta[_IDENTITY_META] = _canon_path(path)
+    meta[_OPTIONS_META] = json.dumps(opts, sort_keys=True)
     return T.StructType(
         [T.StructField(first.name, first.dataType, first.nullable, meta)]
         + schema.fields[1:]
     )
 
 
-def _schema_identity(schema: T.StructType) -> Optional[str]:
-    for f in schema.fields:
-        m = f.metadata or {}
-        if _IDENTITY_META in m:
-            return str(m[_IDENTITY_META])
-    return None
+def _table_options(options: dict, schema: T.StructType) -> Tuple[dict, str]:
+    """The options a reader or writer runs with, and its data path: the
+    given ones when they name a path, else a catalog table's, from the
+    schema's metadata (``_tag_schema_options``)."""
+    import json
 
-
-def _recover_options(schema: T.StructType) -> Optional[dict]:
-    entries = _load_entries(_stash_key(schema))
-    # Exact recovery first: the identity metadata names the data path
-    # outright (same-schema tables cannot collide on it; the stash holds
-    # at most one entry per canonical path).
-    ident = _schema_identity(schema)
-    if ident is not None:
-        hit = [
-            e
-            for e in entries
-            if _canon_path(e["path"]) == ident and _path_exists(e["path"])
-        ]
-        if hit:
-            return hit[-1]
-        # The crumb NAMES the right path; never degrade to the
-        # newest-live-entry guess (it could silently serve another
-        # same-schema table's rows). A missing stash entry means the
-        # sidecar was cleared or the data moved — both need the user.
+    opts = dict(options)
+    path = opts.get("path") or opts.get("location")
+    if not path:
+        for f in schema.fields:
+            if _OPTIONS_META in (f.metadata or {}):
+                opts = json.loads(f.metadata[_OPTIONS_META])
+                path = opts["path"]
+                break
+    if not path:
         raise ValueError(
-            "xml-graft: catalog table's stashed options are gone (its "
-            f"schema names data path {ident!r}, but no live stash entry "
-            "matches — sidecar cleared, or the data directory moved). "
-            "Re-read with spark.read.format('xml-graft')"
-            ".option('path', ...), or re-CREATE the table."
+            "path option is required for the xml data source; a catalog "
+            "table declared with a column list is unsupported: create it "
+            "without one (CREATE TABLE t USING `xml-graft` OPTIONS (...)), "
+            "so that the schema is inferred and the options travel with it"
         )
-    # Keep only entries whose path still exists: dropped/moved tables age out.
-    live = [e for e in entries if _path_exists(e["path"])]
-    if len(live) == 1:
-        return live[0]
-    if len(live) > 1:
-        # Stale same-schema entries survive a DROP TABLE whenever the old
-        # directory is still on disk (nothing hooks the catalog drop), so
-        # prefer the strictly newest stash — the table most recently
-        # CREATEd with this schema. Only a genuine timestamp tie (two
-        # same-schema tables created in the same instant) is ambiguous.
-        live.sort(key=lambda e: e.get("__ts", 0.0), reverse=True)
-        if live[0].get("__ts", 0.0) > live[1].get("__ts", 0.0):
-            return live[0]
-        raise ValueError(
-            "xml-graft: ambiguous catalog table (multiple xml tables share "
-            "this exact schema); re-read with "
-            "spark.read.format('xml-graft').option('path', ...) instead"
-        )
-    return None
+    return opts, path
 
 
 def _strip_scheme_local(p: str) -> str:
@@ -734,18 +607,8 @@ def decode_records(records, schema: T.StructType, xopts: XmlOptions,
 
 class XmlReader(DataSourceReader):
     def __init__(self, options: dict, schema: T.StructType):
-        self._opts_dict = dict(options)
+        self._opts_dict, self._path = _table_options(options, schema)
         self._schema = schema
-        self._path = options.get("path") or options.get("location")
-        if not self._path:
-            # catalog-table read: Spark handed us empty options (see
-            # _CATALOG_STASH); recover them by schema fingerprint
-            recovered = _recover_options(schema)
-            if recovered is not None:
-                self._opts_dict = dict(recovered)
-                self._path = self._opts_dict.get("path")
-        if not self._path:
-            raise ValueError("path option is required for the xml data source")
 
     def _opt(self, *names):
         # Spark lower-cases option keys (CaseInsensitiveDict) — look up both.
@@ -1040,18 +903,8 @@ class XmlWriter(DataSourceWriter):
     Overwrite deletes, ErrorIfExists/Ignore resolved by the caller)."""
 
     def __init__(self, options: dict, schema: T.StructType, overwrite: bool):
-        self._opts_dict = dict(options)
+        self._opts_dict, self._path = _table_options(options, schema)
         self._schema = schema
-        self._path = options.get("path") or options.get("location")
-        if not self._path:
-            # catalog-table INSERT: Spark hands the writer empty options
-            # (same gap as the reader) — recover via the schema stash
-            recovered = _recover_options(schema)
-            if recovered is not None:
-                self._opts_dict = dict(recovered)
-                self._path = self._opts_dict.get("path")
-        if not self._path:
-            raise ValueError("path option is required for the xml data source")
         from spark_xml_spark.xmlcore import fs as _fs
 
         if not _fs.is_remote(self._path):
@@ -1165,18 +1018,10 @@ class XmlDataSource(DataSource):
         if not schema.fields:
             raise ValueError(f"no XML rows with rowTag '{xopts.row_tag}' found in {path}")
         schema = pmod.append_partition_fields(schema, pcols)
-        schema = _tag_schema_identity(schema, path)
-        _stash_options(schema, dict(self.options))
-        return schema
+        return _tag_schema_options(schema, self.options)
 
     def reader(self, schema: T.StructType) -> XmlReader:
-        opts = dict(self.options)
-        if not (opts.get("path") or opts.get("location")):
-            # catalog-table read: Spark hands reader() empty options
-            recovered = _recover_options(schema)
-            if recovered is not None:
-                opts = dict(recovered)
-        return XmlReader(opts, schema)
+        return XmlReader(self.options, schema)
 
     def writer(self, schema: T.StructType, overwrite: bool) -> XmlWriter:
         return XmlWriter(self.options, schema, overwrite)

@@ -178,11 +178,13 @@ def test_register_keys_live_sessions_not_ids():
 
 
 def test_catalog_tables_with_identical_schemas_disambiguate(spark, tmp_path):
-    """Two catalog tables with byte-identical column layouts but different
-    data must each read THEIR OWN rows: the schema-identity metadata
-    embedded at CREATE TABLE time recovers the right options exactly
-    (closes the former documented ambiguity gap — the fingerprint stash
-    alone cannot tell same-schema tables apart)."""
+    """Catalog tables with byte-identical column layouts read THEIR OWN
+    rows under THEIR OWN options, also when they share a directory: each
+    table's options ride in its schema's metadata, so nothing outside the
+    catalog (a temp-dir file, say) is needed to read it."""
+    import shutil
+    import tempfile
+
     register(spark)
     dirs = {}
     for name, vals in (("xgt_a", (1, 2)), ("xgt_b", (10, 20, 30))):
@@ -193,19 +195,89 @@ def test_catalog_tables_with_identical_schemas_disambiguate(spark, tmp_path):
                 "<rs>" + "".join(f"<r><v>{v}</v></r>" for v in vals) + "</rs>"
             )
         dirs[name] = str(d)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(
-            f"CREATE TABLE {name} USING `xml-graft` "
-            f"OPTIONS (path '{dirs[name]}', rowTag 'r')"
-        )
+    shared = tmp_path / "shared"
+    shared.mkdir()
+    (shared / "data.xml").write_text(
+        "<rs><r><name>NA</name><u>x</u></r><r><name>bob</name><u>y</u></r></rs>"
+    )
+    tables = {
+        "xgt_a": f"path '{dirs['xgt_a']}', rowTag 'r'",
+        "xgt_b": f"path '{dirs['xgt_b']}', rowTag 'r'",
+        "t_plain": f"path '{shared}', rowTag 'r'",
+        "t_na": f"path '{shared}', rowTag 'r', nullValue 'NA'",
+    }
+
+    def names(table):
+        rows = spark.sql(f"SELECT name FROM {table} ORDER BY u").collect()
+        return [r.name for r in rows]
+
     try:
+        for name, opts in tables.items():
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            spark.sql(f"CREATE TABLE {name} USING `xml-graft` OPTIONS ({opts})")
+            if name == "t_plain":
+                assert names("t_plain") == ["NA", "bob"]
         a = spark.sql("SELECT v FROM xgt_a ORDER BY v").collect()
         b = spark.sql("SELECT v FROM xgt_b ORDER BY v").collect()
         assert [r.v for r in a] == [1, 2]
         assert [r.v for r in b] == [10, 20, 30]
+        assert names("t_plain") == ["NA", "bob"]
+        assert names("t_na") == [None, "bob"]
+        # no file under the temp dir is needed to read them
+        shutil.rmtree(
+            os.path.join(tempfile.gettempdir(), "xml_graft_catalog"),
+            ignore_errors=True,
+        )
+        assert names("t_plain") == ["NA", "bob"]
+        assert names("t_na") == [None, "bob"]
     finally:
-        spark.sql("DROP TABLE IF EXISTS xgt_a")
-        spark.sql("DROP TABLE IF EXISTS xgt_b")
+        for name in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_schema_inference_writes_nothing_to_temp_dir(
+    spark, tmp_path, monkeypatch
+):
+    """The data source's schema() and read_xml(inferSchema=False) leave
+    the temp dir as they found it: a table's options live in its schema."""
+    import tempfile
+
+    from spark_xml_spark.sources.api import _source_options
+    from spark_xml_spark.sources.datasource import XmlDataSource
+
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "a.xml").write_text("<rs><r><v>1</v></r><r><v>2</v></r></rs>")
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    opts = {"rowTag": "r", "inferSchema": "false"}
+    XmlDataSource(_source_options(opts, str(data))).schema()
+    df = read_xml(spark, str(data), rowTag="r", inferSchema=False)
+    assert sorted(r.v for r in df.collect()) == ["1", "2"]
+    assert list(tmp.iterdir()) == []
+
+
+def test_catalog_table_with_column_list_says_so(spark, tmp_path):
+    """A table declared with a column list never has schema() called, so
+    its reader gets neither options nor a tagged schema: the error says
+    to declare the table without one."""
+    d = tmp_path / "cl"
+    d.mkdir()
+    (d / "a.xml").write_text("<rs><r><k>1</k></r></rs>")
+    register(spark)
+    spark.sql("DROP TABLE IF EXISTS xgt_cols")
+    spark.sql(
+        f"CREATE TABLE xgt_cols (k long) USING `xml-graft` "
+        f"OPTIONS (path '{d}', rowTag 'r')"
+    )
+    try:
+        with pytest.raises(
+            Exception, match="declared with a column list is unsupported"
+        ):
+            spark.sql("SELECT k FROM xgt_cols").collect()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS xgt_cols")
 
 
 def test_from_xml_and_schema_of_xml(spark):
@@ -330,9 +402,7 @@ def test_read_xml_columns_pruning(spark):
 
 def test_sql_insert_overwrite(spark, tmp_path):
     """Reference S4/S16: INSERT OVERWRITE rewrites the table; append is
-    rejected (XmlRelation.scala:61-84, DefaultSource.scala:83-106). The
-    uniquely-named column keeps the schema fingerprint unique for the
-    catalog-option recovery (see datasource._CATALOG_STASH)."""
+    rejected (XmlRelation.scala:61-84, DefaultSource.scala:83-106)."""
     import shutil
     import hashlib
 
@@ -498,62 +568,3 @@ class TestSessionTimezone:
             assert back.collect()[0]["ts"] == dt.datetime(2024, 6, 15, 12, 0, 0)
         finally:
             spark.conf.set("spark.sql.session.timeZone", old)
-
-
-class TestCatalogOptionStash:
-    """Catalog-table option recovery (datasource.py _stash_options/
-    _recover_options): keyed by schema fingerprint, so a DROP TABLE whose
-    directory survives on disk (e.g. pytest's retained tmp dirs) leaves a
-    stale same-schema entry behind. The newest stash must win."""
-
-    def _schema(self):
-        from pyspark.sql import types as T
-
-        return T.StructType(
-            [
-                T.StructField("stash_test_only", T.LongType()),
-                T.StructField("v", T.StringType()),
-            ]
-        )
-
-    def test_newest_live_entry_wins(self, tmp_path):
-        from spark_xml_spark.sources import datasource as ds
-
-        schema = self._schema()
-        old = tmp_path / "old_tbl"
-        new = tmp_path / "new_tbl"
-        old.mkdir()
-        new.mkdir()
-        ds._stash_options(schema, {"path": str(old), "rowtag": "a"})
-        ds._stash_options(schema, {"path": str(new), "rowtag": "b"})
-        got = ds._recover_options(schema)
-        assert got is not None
-        assert got["path"] == str(new)
-        assert got["rowtag"] == "b"
-
-    def test_restash_same_path_refreshes_options(self, tmp_path):
-        from spark_xml_spark.sources import datasource as ds
-
-        schema = self._schema()
-        p = tmp_path / "tbl"
-        p.mkdir()
-        ds._stash_options(schema, {"path": str(p), "rowtag": "first"})
-        ds._stash_options(schema, {"path": str(p), "rowtag": "second"})
-        got = ds._recover_options(schema)
-        assert got is not None and got["rowtag"] == "second"
-
-    def test_dead_paths_age_out(self, tmp_path):
-        from spark_xml_spark.sources import datasource as ds
-
-        schema = self._schema()
-        gone = tmp_path / "gone"
-        live = tmp_path / "live"
-        gone.mkdir()
-        live.mkdir()
-        ds._stash_options(schema, {"path": str(gone), "rowtag": "x"})
-        ds._stash_options(schema, {"path": str(live), "rowtag": "y"})
-        import shutil
-
-        shutil.rmtree(gone)
-        got = ds._recover_options(schema)
-        assert got is not None and got["path"] == str(live)

@@ -44,8 +44,8 @@ def data(tmp_path_factory):
 
 
 def _bare(schema):
-    # the data source tags its inferred schema's first field with the
-    # data path (catalog-table provenance); the shape is what must agree
+    # the data source tags its inferred schema's first field with its
+    # options (how catalog tables get them); the shape is what must agree
     return T.StructType(
         [T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
     )
